@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -10,7 +10,7 @@ import graft.functions.TextFunctions
 import graft.lake.{LakeCatalog, LakeTable}
 import graft.multimodal.MediaPipeline
 import graft.operators.{AsOfJoin, BandJoin, Contamination, Dedup, Dsir, Funnel, GopherFilter, LexicalQuality, Mixture, NgramLm, PiiScrub, QualityClassifier, RepetitionMetrics, SaltedJoin, Sampling, SemanticDedup, SequencePacking, Sessionize, ShardPacking, SimilaritySearch, TextDedup, VectorIndex}
-import graft.pipeline.PipelineRunner
+import graft.pipeline.{GoldenFixture, PipelineRunner}
 import graft.plans.expressions.{cosine, fingerprint}
 import graft.streaming.{StreamingIngest, StreamingSessionize}
 
@@ -125,18 +125,6 @@ WHEN NOT MATCHED THEN INSERT *
     val d = Files.createTempDirectory(prefix)
     tmpDirs.add(d)
     d.toString
-  }
-
-  /** Copy the .csv files of `src` into `rawDir`, refreshing mtimes.
-    * (Files.list streams hold a directory fd — close them.) */
-  private def copyCsvsInto(src: String, rawDir: String): Unit = {
-    Files.createDirectories(Paths.get(rawDir))
-    val st = Files.list(Paths.get(src))
-    try st.filter(_.toString.endsWith(".csv")).forEach { f =>
-      val d = Paths.get(rawDir).resolve(f.getFileName)
-      Files.copy(f, d, StandardCopyOption.REPLACE_EXISTING)
-      d.toFile.setLastModified(System.currentTimeMillis())
-    } finally st.close()
   }
 
   /** Filter to docs with ≥3 tokens — shared by the n-gram query and its
@@ -2539,11 +2527,11 @@ WHEN NOT MATCHED THEN INSERT *
       val rawDir = s"$base/raw"
       val cat = new LakeCatalog(s, s"$base/warehouse")
       val runner = new PipelineRunner(s, cat, rawDir, s"$base/ckpt")
-      copyCsvsInto("/root/reference/raw/datafiles/initialsinserts", rawDir)
+      GoldenFixture.land(GoldenFixture.Inserts, rawDir)
       runner.runOnce()
       // no sleep needed: same-mtime-tick drops are disambiguated by the
       // checkpoint's boundary file names
-      copyCsvsInto("/root/reference/raw/datafiles/updates", rawDir)
+      GoldenFixture.land(GoldenFixture.Updates, rawDir)
       runner.runOnce()
       cat.loadTable("example_namespace", "silver_orders").scan()
         .select(col("invoiceid"), col("itemid"), col("category"),
@@ -2561,8 +2549,7 @@ WHEN NOT MATCHED THEN INSERT *
       // computes, now reachable by SQL-only users.
       val base = tmp("graft-gold")
       val rawDir = s"$base/raw"
-      Seq("/root/reference/raw/datafiles/initialsinserts")
-        .foreach(copyCsvsInto(_, rawDir))
+      GoldenFixture.land(GoldenFixture.Inserts, rawDir)
       val cat = new LakeCatalog(s, s"$base/warehouse")
       val runner = new PipelineRunner(s, cat, rawDir, s"$base/ckpt")
       runner.runOnce()
@@ -2576,7 +2563,7 @@ WHEN NOT MATCHED THEN INSERT *
           |GROUP BY destinationstate""".stripMargin)
       // a second drop lands, silver merges it, refresh_mv catches up —
       // the incremental loop a production mart runs on
-      copyCsvsInto("/root/reference/raw/datafiles/updates", rawDir)
+      GoldenFixture.land(GoldenFixture.Updates, rawDir)
       runner.runOnce()
       cat.sql("example_namespace", "CALL system.refresh_mv('gold_mart')")
       cat.sql("example_namespace",

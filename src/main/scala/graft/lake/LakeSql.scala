@@ -299,7 +299,7 @@ object LakeSql {
         lt.merge(src, norm, None, du)
       // NB: the CDC shape (`WHEN MATCHED AND cond THEN DELETE` before
       // the star pair) deliberately does NOT take the
-      // merge(deleteWhen=…) fast path: that API's documented contract
+      // merge(deleteWhen=…) translation: that API's documented contract
       // skips inserting unmatched delete-flagged rows, but SQL MERGE
       // semantics (Spark/Iceberg/Delta) insert them — the matched-only
       // DELETE clause cannot suppress a NOT MATCHED INSERT. The text
@@ -320,9 +320,9 @@ object LakeSql {
 
   /** General MERGE: resolve every clause's names onto the `t.`/`s.`
     * sides of the joined plan [[LakeTable.mergeClauses]] evaluates
-    * (NOT MATCHED BY SOURCE clauses resolve bare, target-only), expand
-    * `*` actions to per-column assignments, and keep Spark's
-    * first-match-wins clause order. */
+    * (NOT MATCHED BY SOURCE clauses resolve bare, target-only), map
+    * `*` actions to star clauses, and keep Spark's first-match-wins
+    * clause order. */
   private def generalMerge(cat: LakeCatalog, m: MergeIntoTable,
       lt: LakeTable, keys: Seq[String], src: DataFrame): Long = {
     val fields = lt.schema.fieldNames.toSeq
@@ -366,16 +366,12 @@ object LakeSql {
         Map[String, org.apache.spark.sql.Column] =
       as.map(a => assignTarget(a.key) -> qualify(a.value, bareToTarget))
         .toMap
-    // `SET *` / `INSERT *`: every target column from the source's
-    // same-named column (resolution fails loudly if the source lacks one)
-    val starAssigns: Map[String, org.apache.spark.sql.Column] =
-      fields.map(f => f -> expr(s"s.$f")).toMap
-
     val matched = m.matchedActions.map {
       case UpdateAction(c, as, _) =>
         MergeWhen(c.map(qualify(_, true)), Some(assignsOf(as, true)))
-      case UpdateStarAction(c) =>
-        MergeWhen(c.map(qualify(_, true)), Some(starAssigns))
+      // `SET *` / `INSERT *`: every target column from the source's
+      // same-named column (resolution fails loudly if the source lacks one)
+      case UpdateStarAction(c) => MergeWhen.star(c.map(qualify(_, true)))
       case DeleteAction(c) => MergeWhen(c.map(qualify(_, true)), None)
       case other => throw new UnsupportedOperationException(
         s"unsupported WHEN MATCHED action: $other")
@@ -383,8 +379,7 @@ object LakeSql {
     val notMatched = m.notMatchedActions.map {
       case InsertAction(c, as) =>
         MergeWhen(c.map(qualify(_, false)), Some(assignsOf(as, false)))
-      case InsertStarAction(c) =>
-        MergeWhen(c.map(qualify(_, false)), Some(starAssigns))
+      case InsertStarAction(c) => MergeWhen.star(c.map(qualify(_, false)))
       case other => throw new UnsupportedOperationException(
         s"unsupported WHEN NOT MATCHED action: $other")
     }

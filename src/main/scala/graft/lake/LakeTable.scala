@@ -1999,307 +1999,104 @@ final class LakeTable private (
     case _ => 0L
   }
 
-  /** Copy-on-write MERGE: upsert `source` into this table keyed on `keys`
-    * — `WHEN MATCHED THEN UPDATE SET * / WHEN NOT MATCHED THEN INSERT *`
-    * (≡ reference K6/J1, scripts/bronze-silver.py:209-217,254-269; key
-    * reconstructed as the dedup partition key, see SURVEY.md §2.4).
+  /** Keyed upsert — the star MERGE `WHEN MATCHED THEN UPDATE SET * WHEN
+    * NOT MATCHED THEN INSERT *` (≡ reference K6/J1,
+    * scripts/bronze-silver.py:209-217,254-269; key reconstructed as the
+    * dedup partition key, see SURVEY.md §2.4) — a clause set run by
+    * [[mergeClauses]]'s engine. The source is schema-aligned first
+    * (auto-evolve applies). The optional parts translate to clauses:
+    *   - `deleteWhen` (CDC): `WHEN MATCHED AND cond THEN DELETE` first,
+    *     and the insert becomes `WHEN NOT MATCHED AND NOT cond THEN
+    *     INSERT *` — a delete row whose key matches nothing is a no-op,
+    *     never an insert (the single-statement form of the reference's
+    *     Op = 'D' handling, SURVEY.md §2.2 K6 note). The condition is
+    *     evaluated against the RAW source (it may reference source-only
+    *     columns like a CDC Op column, which alignment drops) into a
+    *     source-side flag column before the join; null counts as
+    *     not-deleted.
+    *   - `dropUnmatchedWhen` (full sync): `WHEN NOT MATCHED BY SOURCE
+    *     AND cond THEN DELETE` (`lit(true)` for unconditional), evaluated
+    *     against TARGET rows (bare column names). The canonical use is a
+    *     dimension refresh from a full snapshot. Cost note (inherent, as
+    *     in Iceberg/Delta): under COW the drop scope is every file that
+    *     may hold a cond-satisfying row — scope the cond (e.g. to the
+    *     synced partition) so stats pruning narrows the rewrite; under
+    *     merge-on-read it costs one key+cond column scan, zero rewrites.
+    *   - `extraProperties` / `txn`: recorded IN the merge commit (the
+    *     incremental-maintenance watermark and the exactly-once
+    *     contract, same as [[mergeClauses]]) — what lets a maintainer
+    *     whose after-image is source-computable (e.g. [[ScdDimension]])
+    *     ride the zero-rewrite merge-on-read path.
     *
-    * Caller is responsible for the source being deduped to ≤1 row per key
-    * (the reference always dedups first via the ROW_NUMBER window —
-    * scripts/bronze-silver.py:258-266); rows with a null key never match
-    * and are treated as inserts (SQL join semantics).
-    */
-  def merge(source: DataFrame, keys: Seq[String]): Long =
-    merge(source, keys, None)
-
-  /** CDC-shaped MERGE: `deleteWhen` marks source rows as deletions —
-    * `WHEN MATCHED AND <cond> THEN DELETE` (the single-statement form
-    * of the reference's Op = 'D' CDC handling, which its pipeline
-    * spells as a separate keyed delete — SURVEY.md §2.2 K6 note). The
-    * condition is evaluated against the RAW source (it may reference
-    * source-only columns like a CDC Op column, which schema alignment
-    * would drop); a null condition counts as not-deleted. Delete rows
-    * whose key matches nothing are no-ops; a deduped batch has each
-    * key either deleting or upserting, never both (same caller
-    * contract as the upsert form). */
+    * Caller contract: the source is deduped to ≤1 row per key (the
+    * reference dedups first via the ROW_NUMBER window,
+    * scripts/bronze-silver.py:258-266), and a key either deletes or
+    * upserts, never both. Null-key rows never match and are inserts
+    * (SQL join semantics). */
   def merge(source: DataFrame, keys: Seq[String],
-      deleteWhen: Option[org.apache.spark.sql.Column]): Long =
-    merge(source, keys, deleteWhen, None)
-
-  /** Full-sync MERGE: the upsert (plus optional CDC `deleteWhen`)
-    * extended with `WHEN NOT MATCHED BY SOURCE [AND cond] THEN DELETE`
-    * — target rows whose key matches NO source row (and that satisfy
-    * `dropUnmatchedWhen`, `lit(true)` for unconditional) are dropped.
-    * The canonical use is a dimension refresh from a full snapshot:
-    * rows absent from today's extract disappear from the table in the
-    * same commit that upserts the rest.
-    *
-    * Cost note (inherent to the semantics, same as Iceberg/Delta): the
-    * drop scope is every file that may hold a cond-satisfying row — an
-    * UNCONDITIONAL sync rewrites cond-matched files table-wide under
-    * COW. Scope it with a condition (e.g. the partition being synced)
-    * so stats pruning can narrow the rewrite; under merge-on-read the
-    * sync costs one key+cond column scan and zero rewrites. The cond is
-    * evaluated against TARGET rows (bare column names). */
-  def merge(source: DataFrame, keys: Seq[String],
-      deleteWhen: Option[org.apache.spark.sql.Column],
-      dropUnmatchedWhen: Option[org.apache.spark.sql.Column]): Long =
-    merge(source, keys, deleteWhen, dropUnmatchedWhen, Map.empty, None)
-
-  /** [[merge]] with `extraProperties` recorded atomically IN the merge
-    * commit (the incremental-maintenance watermark contract, same as
-    * [[mergeClauses]]) and an optional `txn` exactly-once watermark —
-    * what lets a maintainer whose after-image is fully source-computable
-    * (e.g. [[ScdDimension]]) ride the STAR merge and therefore the
-    * zero-rewrite merge-on-read path, which clause-merges cannot. */
-  def merge(source: DataFrame, keys: Seq[String],
-      deleteWhen: Option[org.apache.spark.sql.Column],
-      dropUnmatchedWhen: Option[org.apache.spark.sql.Column],
-      extraProperties: Map[String, String],
-      txn: Option[(String, Long)]): Long =
-    labeled("merge")(rewriteWithRetry(() =>
-      mergeImpl(source, keys, deleteWhen, dropUnmatchedWhen,
-        extraProperties, txn)))
-
-  private def mergeImpl(sourceIn: DataFrame, keys: Seq[String],
-      deleteWhen: Option[org.apache.spark.sql.Column],
-      dropUnmatchedWhen: Option[org.apache.spark.sql.Column],
+      deleteWhen: Option[Column] = None,
+      dropUnmatchedWhen: Option[Column] = None,
       extraProperties: Map[String, String] = Map.empty,
-      txn: Option[(String, Long)] = None): Long = {
-    // an expensive source (an SCD2 refresh's windowed changelog, a CDC
-    // fold) is otherwise recomputed end-to-end by each of the up-to-4
-    // independent actions below (key-bounds agg, locating scan, rewrite
-    // join, delete-key split) — cache it for the merge's lifetime
-    // (guide §5); ∝ changed rows, never table-sized
-    val source = LakeTable.cacheIfExpensive(sourceIn)
-    try mergeImplBody(source, keys, deleteWhen, dropUnmatchedWhen,
-      extraProperties, txn)
-    finally if (source ne sourceIn) source.unpersist()
-  }
-
-  private def mergeImplBody(source: DataFrame, keys: Seq[String],
-      deleteWhen: Option[org.apache.spark.sql.Column],
-      dropUnmatchedWhen: Option[org.apache.spark.sql.Column],
-      extraProperties: Map[String, String],
-      txn: Option[(String, Long)]): Long = {
-    autoEvolveFor(source)
-    val base = current
-    // replayed exactly-once batch: the watermark re-check also runs on
-    // the rebased head inside mergeMor / on rewriteWithRetry re-runs
-    if (txn.exists { case (app, v) =>
-        base.properties.get(s"txn.$app").exists(_.toLong >= v) })
-      return base.snapshotId
-    def mergedProps: Option[Map[String, String]] =
-      if (extraProperties.isEmpty && txn.isEmpty) None
-      else Some(base.properties ++ extraProperties ++
-        txn.map { case (app, v) => s"txn.$app" -> v.toString })
-    // split on the delete condition BEFORE alignment drops CDC columns
-    val delCond = deleteWhen.map(c => coalesce(c, lit(false)))
-    val deleteKeys = delCond.map(c =>
-      source.where(c).select(keys.map(col): _*).na.drop().distinct())
-    val src = alignToSchema(
-      delCond.map(c => source.where(not(c))).getOrElse(source))
-    if (base.liveFiles.isEmpty) {
-      if (extraProperties.isEmpty && txn.isEmpty) return append(src)
-      val WriteResult(added0, stats0, info0) = writeDataFiles(
-        distributeForWrite(src))
-      return commit(base, "merge", added = added0, removed = Nil,
-        live = base.liveFiles ++ added0, addedStats = stats0,
-        addedInfo = info0, propertiesOverride = mergedProps)
-    }
-    if (properties.get(PROP_MERGE_MODE).contains("merge-on-read"))
-      return mergeMor(base, src, keys, deleteKeys, dropUnmatchedWhen,
-        txn, extraProperties)
-
-    // 1) Affected-file pruning, two stages:
-    //    (a) manifest-stats range intersection — driver-only, touches ZERO
-    //        data; at 100 TB this is what keeps a merge's cost proportional
-    //        to the key range it touches, not to table size;
-    //    (b) key-columns-only scan of the surviving files, semi-joined with
-    //        the distinct source keys (column-pruned Parquet scan; AQE
-    //        broadcasts the key set when small).
-    //    Both stages run over upsert AND delete keys.
-    val srcKeys = src.select(keys.map(col): _*).distinct()
-    val allKeys = deleteKeys match {
-      case Some(d) => srcKeys.unionByName(d).distinct()
-      case None => srcKeys
-    }
-    val candidates = pruneByStats(base, allKeys, keys)
-    val keyAffected =
-      if (candidates.isEmpty) Nil
-      else readFilesWithName(candidates)
-        .select((keys.map(col) :+ col(FILE_COL)): _*)
-        .join(allKeys, keys, "left_semi")
-        .select(FILE_COL).distinct()
-        .collect().map(r => relativize(r.getString(0))).toSeq
-    // NOT MATCHED BY SOURCE widens the rewrite to files that may hold a
-    // cond-satisfying row with a key absent from the source: stats-prune
-    // by the condition first, then a locating scan (cond columns + keys
-    // only — Catalyst prunes the read schema) anti-joined on the keys
-    val dropCond = dropUnmatchedWhen.map(c => coalesce(c, lit(false)))
-    val dropAffected = dropCond match {
-      case None => Nil
-      case Some(c) =>
-        val scope = pruneByPredicate(base, c)
-        if (scope.isEmpty) Nil
-        else readFilesWithName(scope)
-          .where(c)
-          .join(allKeys, keys, "left_anti")
-          .select(FILE_COL).distinct()
-          .collect().map(r => relativize(r.getString(0))).toSeq
-    }
-    val affected = (keyAffected ++ dropAffected).distinct
-
-    if (affected.isEmpty) {
-      // pure-insert batch: nothing to rewrite (deletes matched nothing)
-      val WriteResult(added, stats, info) = writeDataFiles(src)
-      return commit(base, "merge", added = added, removed = Nil,
-        live = base.liveFiles ++ added, addedStats = stats,
-        addedInfo = info, propertiesOverride = mergedProps)
-    }
-
-    // 2) Rewrite ONLY the affected files: full-outer join with the source;
-    //    a matched row takes every source column (UPDATE SET *), an
-    //    unmatched target row is carried through, an unmatched source row
-    //    is an insert; rows keyed by a delete row are dropped last.
-    val cols = schema.fieldNames.toSeq
-    // the drop flag is computed on the TARGET plan before the join so
-    // the condition's bare column names can never be join-ambiguous
-    val dropMark = "__graft_drop_mark"
-    val lineage = rowLineageEnabled
-    val tgt = readFilesForRewrite(base, affected)
-      .withColumn(dropMark, dropCond.getOrElse(lit(false)))
-      .alias("t")
-    val s = src.withColumn(SRC_MARK, lit(1)).alias("s")
-    // plain equality (NOT null-safe): a null key never matches, so
-    // null-key source rows are inserts and null-key target rows carry
-    // through — consistent with the semi-join pruning above and the
-    // documented contract
-    val cond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val merged = tgt.join(s, cond, "full_outer")
-      // NOT MATCHED BY SOURCE: an unmatched target row flagged by the
-      // cond drops; matched and source-only rows always pass (the mark
-      // is null on source-only rows — coalesce keeps them)
-      .where(col(SRC_MARK).isNotNull ||
-        !coalesce(col(dropMark), lit(false)))
-      .select(cols.map { c =>
-        when(col(SRC_MARK).isNotNull, col(s"s.$c"))
-          .otherwise(col(s"t.$c")).as(c)
-      } ++
-        // lineage: a matched row is an UPDATE and keeps the target's
-        // id; a source-only row is an insert — its t._row_id is null
-        // from the full-outer join and commit assigns it fresh
-        (if (lineage) Seq(col(s"t.$ROW_ID_COL").as(ROW_ID_COL))
-         else Nil): _*)
-    val result = deleteKeys match {
-      case Some(d) => merged.join(d, keys, "left_anti")
-      case None => merged
-    }
-
-    val WriteResult(added, stats, info) =
-      writeDataFiles(sizeRewrite(result, base, affected))
-    commit(base, "merge", added = added, removed = affected,
-      live = base.liveFiles.diff(affected) ++ added, addedStats = stats,
-      addedInfo = info, propertiesOverride = mergedProps)
-  }
-
-  /** Merge-on-read MERGE (≡ the `write.merge.mode=merge-on-read`
-    * capability the reference configures, scripts/raw-bronze.py:166-172):
-    * write the after-image as new data files plus ONE equality-delete
-    * file of the source keys — ZERO reads or rewrites of existing data.
-    * Cost is O(source) regardless of table size; readers pay the
-    * anti-join until [[compact]] folds the deletes in. The after-image
-    * shares the delete's sequence number, so it is never
-    * self-suppressed; null-key source rows are pure inserts (their keys
-    * are excluded from the delete file), matching the COW contract. */
-  private def mergeMor(base: Snapshot, src: DataFrame,
-      keys: Seq[String], extraDeleteKeys: Option[DataFrame] = None,
-      dropUnmatchedWhen: Option[org.apache.spark.sql.Column] = None,
-      txn: Option[(String, Long)] = None,
-      extraProperties: Map[String, String] = Map.empty): Long = {
-    val WriteResult(added, stats, info) = writeDataFiles(src)
-    // one equality-delete file covers upserts (replaced by the
-    // after-image) AND CDC delete rows (no after-image at all)
-    val srcDelKeys = src.select(keys.map(col): _*).distinct().na.drop()
-    val cdcKeys = extraDeleteKeys match {
-      case Some(d) => srcDelKeys.unionByName(d).distinct()
-      case None => srcDelKeys
-    }
-    // NOT MATCHED BY SOURCE under MOR: ONE key+cond column scan of the
-    // live table (Catalyst prunes the read schema) finds target keys
-    // absent from the source; they join the same equality-delete file —
-    // a full-table sync still rewrites ZERO data files
-    val delKeys = dropUnmatchedWhen match {
-      case None => cdcKeys
-      case Some(c) =>
-        val unmatched = readFilesAs(base, base.liveFiles)
-          .where(coalesce(c, lit(false)))
-          .select(keys.map(col): _*).na.drop().distinct()
-          .join(cdcKeys, keys, "left_anti")
-        cdcKeys.unionByName(unmatched).distinct()
-    }
-    val delPaths = writeDeleteFiles(delKeys)
-    // retry-safe against any same-schema interleaving: the re-based
-    // delete file's new sequence suppresses matching keys in EVERY
-    // current data file (including a racer's fresh appends — exactly
-    // the declarative upsert contract), and the after-image outranks it
-    commitWithRetry(base)() { b =>
-      // a replayed exactly-once batch racing its own earlier success:
-      // re-check the watermark on the REBASED head and skip rather
-      // than double-merge (the just-written files become orphans for
-      // maintenance, same as the append path)
-      if (txn.exists { case (app, v) =>
-          b.properties.get(s"txn.$app").exists(_.toLong >= v) })
-        b.snapshotId
-      else {
-        val seq = b.snapshotId + 1
-        commit(b, "merge", added = added, removed = Nil,
-          live = b.liveFiles ++ added, addedStats = stats, addedInfo = info,
-          deletesOverride = Some(b.deleteFiles ++
-            delPaths.map(p => DeleteFile(p, seq, keys, keys))),
-          propertiesOverride =
-            if (txn.isEmpty && extraProperties.isEmpty) None
-            else Some(b.properties ++ extraProperties ++
-              txn.map { case (app, v) => s"txn.$app" -> v.toString }))
-      }
-    }
-  }
+      txn: Option[(String, Long)] = None): Long =
+    labeled("merge")(rewriteWithRetry(() =>
+      starMerge(source, keys, deleteWhen, dropUnmatchedWhen,
+        extraProperties, txn)))
 
   /** Exactly-once streaming MERGE (the write-side contract behind the
     * lake streaming sink's `mergeKeys` option): [[merge]]'s upsert +
-    * CDC-delete semantics guarded by the same `txn.<appId>` snapshot
+    * CDC-delete clause set guarded by the same `txn.<appId>` snapshot
     * watermark as [[appendOnce]] — a micro-batch replayed after a
     * crash between table commit and streaming-offset commit finds its
     * own (appId, batchId) watermark and skips. Merge-on-read tables
     * only: per-batch COW would rewrite data files every trigger, while
-    * the MOR path costs one data file + one equality-delete file per
-    * batch regardless of table size — the only merge shape that
-    * survives a continuous 100-TB silver layer. */
+    * the merge-on-read artifact costs one data file + one
+    * equality-delete file per batch regardless of table size — the
+    * only merge shape that survives a continuous 100-TB silver layer. */
   def mergeOnce(source: DataFrame, keys: Seq[String], appId: String,
-      version: Long,
-      deleteWhen: Option[org.apache.spark.sql.Column] = None): Long = {
+      version: Long, deleteWhen: Option[Column] = None): Long = {
     require(properties.get(PROP_MERGE_MODE).contains("merge-on-read"),
       s"mergeOnce needs $PROP_MERGE_MODE=merge-on-read — a per-batch " +
         "COW rewrite is not a streaming-viable plan")
-    autoEvolveFor(source)
-    val base = current
-    if (base.properties.get(s"txn.$appId").exists(_.toLong >= version))
-      return base.snapshotId
-    val delCond = deleteWhen.map(c => coalesce(c, lit(false)))
-    val deleteKeys = delCond.map(c =>
-      source.where(c).select(keys.map(col): _*).na.drop().distinct())
-    val src = alignToSchema(
-      delCond.map(c => source.where(not(c))).getOrElse(source))
-    mergeMor(base, src, keys, deleteKeys, None,
-      txn = Some(appId -> version))
+    starMerge(source, keys, deleteWhen, None, Map.empty,
+      Some(appId -> version), morOnly = true)
   }
 
-  /** General MERGE with per-clause conditions and assignments — the
-    * full Iceberg-Spark surface beyond the reference's star-only text:
-    * `WHEN MATCHED [AND c] THEN UPDATE SET col = expr, … | DELETE`,
-    * `WHEN NOT MATCHED [AND c] THEN INSERT (cols) VALUES (exprs)`,
-    * `WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE … | DELETE`,
-    * each list evaluated FIRST-MATCH-WINS (Spark semantics).
+  /** [[merge]]'s translation into the engine's clause set. */
+  private def starMerge(source: DataFrame, keys: Seq[String],
+      deleteWhen: Option[Column], dropUnmatchedWhen: Option[Column],
+      extraProperties: Map[String, String],
+      txn: Option[(String, Long)], morOnly: Boolean = false): Long = {
+    // the delete condition's source-only inputs (a CDC Op column) are
+    // consumed by the flag, never evolved into the table
+    val inSchema = schema.fieldNames.map(resolveKey).toSet
+    autoEvolveFor(deleteWhen.fold(source)(c => source.drop(
+      source.select(c).queryExecution.analyzed.references.toSeq
+        .map(_.name).filterNot(n => inSchema(resolveKey(n))): _*)))
+    val flag = col(s"s.$SRC_DELETE_FLAG")
+    val src = deleteWhen match {
+      case None => alignToSchema(source)
+      case Some(c) => alignToSchema(
+        source.withColumn(SRC_DELETE_FLAG, coalesce(c, lit(false))),
+        keep = Seq(SRC_DELETE_FLAG))
+    }
+    mergeClausesImpl(src, keys,
+      matched = deleteWhen.map(_ => MergeWhen(Some(flag), None)).toSeq :+
+        MergeWhen.star(),
+      notMatched = Seq(MergeWhen.star(deleteWhen.map(_ => !flag))),
+      notMatchedBySource =
+        dropUnmatchedWhen.map(c => MergeWhen(Some(c), None)).toSeq,
+      extraProperties, txn, morOnly)
+  }
+
+  /** General MERGE — the one keyed row-level write engine; [[merge]],
+    * [[mergeOnce]] and [[deleteByKeys]] are clause sets run through it.
+    * Per-clause conditions and assignments, the full Iceberg-Spark
+    * surface beyond the reference's star-only text:
+    * `WHEN MATCHED [AND c] THEN UPDATE SET col = expr, … | UPDATE SET *
+    * | DELETE`, `WHEN NOT MATCHED [AND c] THEN INSERT (cols) VALUES
+    * (exprs) | INSERT *`, `WHEN NOT MATCHED BY SOURCE [AND c] THEN
+    * UPDATE … | DELETE`, each list evaluated FIRST-MATCH-WINS (Spark
+    * semantics).
     *
     * Name resolution contract (the SQL front-end pre-resolves to it):
     * `matched` / `notMatched` conditions and values reference the
@@ -2308,16 +2105,30 @@ final class LakeTable private (
     * TARGET plan BEFORE the join (no source row exists) and use BARE
     * target column names. Assignment keys are bare target column
     * names; columns a matched/NMBS update leaves unassigned keep their
-    * target value, columns an insert leaves unassigned become null.
+    * target value, columns an insert leaves unassigned become null; a
+    * star clause assigns every column from the source's same-named one.
     *
-    * Scale shape (identical to the star merge): affected files =
-    * stats-pruned ∩ key-semi-join for the matched side, plus a
-    * cond-pruned anti-join scan for the NMBS side; only those files
-    * rewrite. A matched row no clause applies to carries through.
-    * Same caller contract as [[merge]]: the source is deduped to ≤1
-    * row per key. COW only — a merge-on-read table takes the star
-    * paths; general assignments must read matched rows to compute the
-    * after-image, so MOR would save nothing here. */
+    * One pipeline: the source is cached once when recomputing it is
+    * expensive, then the clause set picks the physical plan —
+    *   - merge-on-read artifact: the star upsert, its CDC form (the
+    *     delete condition a source flag, see [[merge]]) and the key
+    *     delete `MATCHED DELETE` are decided by each source row alone,
+    *     so on a table whose `write.merge.mode` (`write.delete.mode`
+    *     for the key delete) is `merge-on-read` they write the insert
+    *     rows as new data files plus ONE equality-delete file of the
+    *     source keys (and, for NMBS deletes, of the unmatched target
+    *     keys one key+cond scan finds) — zero reads or rewrites of
+    *     existing data; readers pay the anti-join until [[compact]];
+    *   - copy-on-write rewrite, every other case: affected files =
+    *     stats → partition → Bloom pruning ∩ a key-columns-only
+    *     locating scan, plus a cond-pruned anti-join scan for NMBS
+    *     clauses; only those files rewrite, joined with the source
+    *     full-outer (left-outer without NOT MATCHED clauses, an
+    *     anti-join when every matched row deletes). A matched row no
+    *     clause applies to carries through;
+    * then one commit. The key delete commits a `delete` snapshot (none
+    * when it removes nothing), every other set a `merge`. Same caller
+    * contract as [[merge]]: the source is deduped to ≤1 row per key. */
   def mergeClauses(source: DataFrame, keys: Seq[String],
       matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
       notMatchedBySource: Seq[MergeWhen] = Nil,
@@ -2327,11 +2138,14 @@ final class LakeTable private (
       mergeClausesImpl(source, keys, matched,
         notMatched, notMatchedBySource, extraProperties, txn)))
 
+  /** `morOnly` ([[mergeOnce]]): the merge-on-read artifact even on an
+    * empty table — its equality-delete file is what keeps a rebase past
+    * a racing writer an upsert. */
   private def mergeClausesImpl(sourceIn: DataFrame, keys: Seq[String],
       matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
       notMatchedBySource: Seq[MergeWhen],
       extraProperties: Map[String, String],
-      txn: Option[(String, Long)]): Long = {
+      txn: Option[(String, Long)], morOnly: Boolean = false): Long = {
     // the source plan is consumed by up to FOUR independent actions
     // below (key-bounds agg, Bloom-hash agg, the locating scan, the
     // rewrite join) — an expensive source (an MV refresh's folded
@@ -2347,17 +2161,17 @@ final class LakeTable private (
     // the cache's materialization + count cost MORE than the reruns.
     val cached = LakeTable.cacheIfExpensive(sourceIn)
     val cacheSource = cached ne sourceIn
-    // WRITE-side view of the source, computed lazily AFTER the first
-    // consumer (the key-bounds agg, usually) has materialized the
-    // cache: narrow the cached plan to its SIZE-appropriate width — the
-    // cache pins the delta aggregation's shuffle width, and a
-    // broadcast-hash rewrite join streams that width straight into the
-    // written file count (a tiny delta would fan out one file per
-    // partition). coalesce by measured in-memory bytes — a large source
-    // keeps its parallelism (guide §6 output sizing). Deferring the
-    // sizing drops the dedicated count() job the old shape paid per
-    // merge; the count only runs when NO prior action touched the cache
-    // (the empty-table insert path).
+    // WRITE-side view of the source for the copy-on-write plans,
+    // computed lazily AFTER the first consumer (the key-bounds agg,
+    // usually) has materialized the cache: narrow the cached plan to
+    // its SIZE-appropriate width — the cache pins the delta
+    // aggregation's shuffle width, and a broadcast-hash rewrite join
+    // streams that width straight into the written file count (a tiny
+    // delta would fan out one file per partition). coalesce by
+    // measured in-memory bytes — a large source keeps its parallelism
+    // (output sizing). Deferred, the sizing needs its own
+    // count() only when NO prior action touched the cache (the
+    // empty-table insert path).
     lazy val sizedSource: DataFrame =
       if (!cacheSource) cached
       else {
@@ -2374,7 +2188,7 @@ final class LakeTable private (
         cached.coalesce(n)
       }
     try mergeClausesBody(cached, sizedSource, keys, matched, notMatched,
-      notMatchedBySource, extraProperties, txn)
+      notMatchedBySource, extraProperties, txn, morOnly)
     finally if (cacheSource) cached.unpersist()
   }
 
@@ -2383,7 +2197,7 @@ final class LakeTable private (
       matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
       notMatchedBySource: Seq[MergeWhen],
       extraProperties: Map[String, String],
-      txn: Option[(String, Long)]): Long = {
+      txn: Option[(String, Long)], morOnly: Boolean): Long = {
     // extraProperties land IN the merge's own commit — a watermark
     // recorded atomically with the change it describes (the
     // incremental-MV refresh contract: no crash window where the delta
@@ -2404,19 +2218,43 @@ final class LakeTable private (
     def propsFor(b: Snapshot): Option[Map[String, String]] =
       if (extraProperties.isEmpty && txnProps.isEmpty) None
       else Some(b.properties ++ extraProperties ++ txnProps)
+    // the clause set picks the plan: the key delete and the star shapes
+    // (CDC delete condition = the source flag) are decided by each
+    // source row alone, so a merge-on-read table takes them without
+    // reading the target
+    val flag = col(s"s.$SRC_DELETE_FLAG")
+    val keyDelete = notMatched.isEmpty && notMatchedBySource.isEmpty &&
+      matched == Seq(MergeWhen(None, None))
+    val sourceDecided = keyDelete ||
+      notMatchedBySource.forall(_.assignments.isEmpty) &&
+      ((matched, notMatched) match {
+        case (Seq(u), Seq(i)) => u == MergeWhen.star() && i == u
+        case (Seq(d, u), Seq(i)) => d == MergeWhen(Some(flag), None) &&
+          u == MergeWhen.star() && i == MergeWhen.star(Some(!flag))
+        case _ => false
+      })
+    val base = current
+    // an empty table takes the plain insert, except under mergeOnce
+    val artifact = sourceDecided && properties.get(
+      if (keyDelete) PROP_DELETE_MODE else PROP_MERGE_MODE)
+      .contains("merge-on-read") && (morOnly || base.liveFiles.nonEmpty)
+    val op = if (keyDelete) "delete" else "merge"
     val fields = schema.fieldNames.toSeq
     def normName(n: String): String =
       fields.find(_.equalsIgnoreCase(n)).getOrElse(throw
         new IllegalArgumentException(s"MERGE assigns unknown column $n"))
     def normAssigns(w: MergeWhen): MergeWhen =
-      w.copy(assignments = w.assignments.map(_.map { case (k, v) =>
+      if (w.star) w.copy(assignments =
+        Some(fields.map(f => f -> col(s"s.$f")).toMap))
+      else w.copy(assignments = w.assignments.map(_.map { case (k, v) =>
         normName(k) -> v }))
     val m = matched.map(normAssigns)
     val nm = notMatched.map(normAssigns)
-    val nmbs = notMatchedBySource.map(normAssigns)
     require(nm.forall(_.assignments.nonEmpty),
       "WHEN NOT MATCHED supports only INSERT")
-    val base = current
+    require(!notMatchedBySource.exists(_.star),
+      "WHEN NOT MATCHED BY SOURCE has no source row to take * from")
+    val nmbs = notMatchedBySource.map(normAssigns)
     // index-of-first-applying-clause cascade; when() treats a null
     // condition as not-applying, matching SQL's WHEN … AND semantics
     def firstIdx(clauses: Seq[MergeWhen]): Column =
@@ -2438,137 +2276,181 @@ final class LakeTable private (
         val v = w.assignments.flatMap(_.get(c)).getOrElse(default)
         when(idx === lit(i), v).otherwise(rest)
       }
-
-    if (base.liveFiles.isEmpty) {
-      // every source row is NOT MATCHED: run the insert cascade alone
-      val s = sizedSrc.alias("s")
+    // the NOT MATCHED cascade over the source alone: the insert rows
+    def inserted(src: DataFrame): DataFrame = {
       val idx = firstIdx(nm)
-      val inserted = s.where(idx =!= -1).select(fields.map { c =>
-        valueFor(nm, idx, c, lit(null))
-          .cast(schema(c).dataType).as(c)
+      src.alias("s").where(idx =!= -1).select(fields.map { c =>
+        valueFor(nm, idx, c, lit(null)).cast(schema(c).dataType).as(c)
       }: _*)
-      if (extraProperties.isEmpty && txn.isEmpty) return append(inserted)
-      val WriteResult(added, stats, info) =
-        writeDataFiles(distributeForWrite(alignToSchema(inserted)))
-      return commitWithRetry(base)() { b =>
-        // re-check the txn watermark against the snapshot actually
-        // being committed on — the up-front check is check-then-act;
-        // a concurrent replay of the same (appId, version) landing
-        // between it and this commit must turn this attempt into a
-        // no-op, not a double-apply
+    }
+    // the one commit: the txn watermark re-checks on the snapshot
+    // actually committed on (the up-front check is check-then-act; a
+    // concurrent replay landing in between turns this attempt into a
+    // no-op, not a double-apply). Merge-on-read artifacts rebase onto a
+    // racing head — the re-based delete sequence applies the keys to a
+    // racer's rows too, the declarative upsert contract, and the
+    // after-image outranks it — and so does a general clause set's
+    // insert into an empty table. Everything else derives from the
+    // base's data (or, for the star shapes, must not duplicate a
+    // racer's keys): it never rebases, rewriteWithRetry recomputes it.
+    def commitMerge(w: WriteResult, removed: Seq[String],
+        eqDeletes: Seq[String]): Long = {
+      def attempt(b: Snapshot): Long =
         if (txnWatermarked(b)) b.snapshotId
-        else commit(b, "merge", added = added, removed = Nil,
-          live = b.liveFiles ++ added, addedStats = stats,
-          addedInfo = info, propertiesOverride = propsFor(b))
-      }
+        else commit(b, op, added = w.files, removed = removed,
+          live = b.liveFiles.diff(removed) ++ w.files,
+          addedStats = w.stats, addedInfo = w.info,
+          deletesOverride =
+            if (eqDeletes.isEmpty) None
+            else Some(b.deleteFiles ++ eqDeletes.map(p =>
+              DeleteFile(p, b.snapshotId + 1, keys, keys))),
+          propertiesOverride = propsFor(b))
+      if (artifact || base.liveFiles.isEmpty && !sourceDecided)
+        commitWithRetry(base)()(attempt)
+      else attempt(base)
+    }
+    if (base.liveFiles.isEmpty && !artifact) {
+      // every source row is NOT MATCHED: the insert cascade alone (a
+      // delete has nothing to remove and commits nothing)
+      if (keyDelete) return base.snapshotId
+      val rows = inserted(sizedSrc)
+      if (extraProperties.isEmpty && txn.isEmpty) return append(rows)
+      return commitMerge(
+        writeDataFiles(distributeForWrite(alignToSchema(rows))), Nil, Nil)
     }
 
-    // affected files: (a) any file that may hold a source key —
-    // manifest-stats pruning then a key-columns-only locating scan;
-    // (b) for NMBS clauses, files that may hold a cond-satisfying row
-    // whose key is absent from the source
     val srcKeys = source.select(keys.map(col): _*).distinct()
-    val candidates = pruneByStats(base, srcKeys, keys)
-    val keyAffected =
-      if (candidates.isEmpty) Nil
-      else readFilesWithName(candidates)
-        .select((keys.map(col) :+ col(FILE_COL)): _*)
-        .join(srcKeys, keys, "left_semi")
-        .select(FILE_COL).distinct()
-        .collect().map(r => relativize(r.getString(0))).toSeq
     val nmbsCond = nmbs match {
       case Nil => None
       case ws => Some(ws.map(w =>
         coalesce(w.condition.getOrElse(lit(true)), lit(false)))
         .reduce(_ || _))
     }
+
+    if (artifact) {
+      // merge-on-read (≡ the `write.merge.mode=merge-on-read` capability
+      // the reference configures, scripts/raw-bronze.py:166-172): the
+      // insert rows as new data files and ONE equality-delete file of
+      // every non-null source key — upserts are replaced by their
+      // after-image, which shares the delete's sequence and is never
+      // self-suppressed; delete rows have no after-image. Cost O(source)
+      // whatever the table size.
+      val after =
+        if (nm.isEmpty) NoWrite else writeDataFiles(inserted(source))
+      val srcDel = srcKeys.na.drop()
+      // NOT MATCHED BY SOURCE: ONE key+cond column scan of the live
+      // table (Catalyst prunes the read schema) finds target keys absent
+      // from the source; they join the same equality-delete file — a
+      // full-table sync still rewrites ZERO data files
+      val delKeys = nmbsCond match {
+        case None => srcDel
+        case Some(c) => srcDel.unionByName(readFilesAs(base, base.liveFiles)
+          .where(c).select(keys.map(col): _*).na.drop().distinct()
+          .join(srcDel, keys, "left_anti"))
+      }
+      if (keyDelete && delKeys.isEmpty) return base.snapshotId
+      return commitMerge(after, Nil, writeDeleteFiles(delKeys))
+    }
+
+    // copy-on-write. Affected files: (a) any file that may hold a
+    // source key — manifest-stats pruning (metadata only, zero data read:
+    // what keeps a merge's cost proportional to the key range it
+    // touches, not to table size), then a key-columns-only locating
+    // scan semi-joined with the distinct source keys; (b) for NMBS
+    // clauses, files that may hold a cond-satisfying row whose key is
+    // absent from the source (cond-pruned, then a cond+key scan)
+    val candidates = pruneByStats(base, srcKeys, keys)
+    val keyAffected =
+      if (candidates.isEmpty) Nil
+      else filesOf(readFilesWithName(candidates)
+        .select((keys.map(col) :+ col(FILE_COL)): _*)
+        .join(srcKeys, keys, "left_semi"))
     val nmbsAffected = nmbsCond match {
       case None => Nil
       case Some(c) =>
         val scope = pruneByPredicate(base, c)
         if (scope.isEmpty) Nil
-        else readFilesWithName(scope)
-          .where(c)
-          .join(srcKeys, keys, "left_anti")
-          .select(FILE_COL).distinct()
-          .collect().map(r => relativize(r.getString(0))).toSeq
+        else filesOf(readFilesWithName(scope).where(c)
+          .join(srcKeys, keys, "left_anti"))
     }
     val affected = (keyAffected ++ nmbsAffected).distinct
 
     if (affected.isEmpty) {
-      val s = sizedSrc.alias("s")
-      val idx = firstIdx(nm)
-      val inserted = s.where(idx =!= -1).select(fields.map { c =>
-        valueFor(nm, idx, c, lit(null))
-          .cast(schema(c).dataType).as(c)
-      }: _*)
-      val WriteResult(added, stats, info) = writeDataFiles(inserted)
-      return commit(base, "merge", added = added, removed = Nil,
-        live = base.liveFiles ++ added, addedStats = stats,
-        addedInfo = info, propertiesOverride = propsFor(base))
+      // nothing to rewrite: the insert rows alone (a delete commits
+      // nothing)
+      if (keyDelete) return base.snapshotId
+      return commitMerge(writeDataFiles(inserted(sizedSrc)), Nil, Nil)
     }
 
-    // NMBS clauses see only the target: compute their clause index and
-    // assigned values on the pre-join plan, where bare names resolve
+    // rewrite ONLY the affected files. NMBS clauses see only the target:
+    // compute their clause index and assigned values on the pre-join
+    // plan, where bare names resolve
     val nmbsIdxCol = "__graft_nmbs_idx"
     val nmbsVal = (i: Int, c: String) => s"__graft_nmbs_${i}_$c"
     val nmbsAssignedCols: Seq[(Int, String)] = nmbs.zipWithIndex.flatMap {
       case (w, i) => w.assignments.toSeq.flatMap(_.keys).map(c => (i, c))
     }
-    val clauseLineage = rowLineageEnabled
     val tgtBase = readFilesForRewrite(base, affected)
       .withColumn(TGT_MARK, lit(1))
-      .withColumn(nmbsIdxCol,
-        if (nmbs.isEmpty) lit(-1) else firstIdx(nmbs))
-    val tgtPre = nmbsAssignedCols.foldLeft(tgtBase) { case (df, (i, c)) =>
+      .withColumn(nmbsIdxCol, firstIdx(nmbs))
+    val tgt = nmbsAssignedCols.foldLeft(tgtBase) { case (df, (i, c)) =>
       df.withColumn(nmbsVal(i, c),
         nmbs(i).assignments.flatMap(_.get(c)).get)
-    }
-    val tgt = tgtPre.alias("t")
+    }.alias("t")
     val s = sizedSrc.withColumn(SRC_MARK, lit(1)).alias("s")
+    // plain equality (NOT null-safe): a null key never matches, so
+    // null-key source rows are inserts and null-key target rows carry
+    // through — consistent with the semi-join locate above
     val cond = keys.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
-    val joined = tgt.join(s, cond, "full_outer")
-
-    val isMatched = col(s"t.$TGT_MARK").isNotNull &&
-      col(SRC_MARK).isNotNull
-    val isSrcOnly = col(s"t.$TGT_MARK").isNull
-    val mIdx = firstIdx(m)
-    val iIdx = firstIdx(nm)
     val nIdx = col(s"t.$nmbsIdxCol")
-    val nmbsKeep = nmbs.zipWithIndex.filter(_._1.assignments.isEmpty) match {
-      case Nil => lit(true)
-      case dels => !dels.map { case (_, i) => nIdx === lit(i) }
-        .reduce(_ || _)
-    }
+    val nmbsKeep = keepFor(nmbs, nIdx)
     def nmbsValueFor(c: String): Column =
       nmbs.zipWithIndex.foldRight(col(s"t.$c")) { case ((w, i), rest) =>
         if (w.assignments.exists(_.contains(c)))
           when(nIdx === lit(i), col(s"t.${nmbsVal(i, c)}")).otherwise(rest)
         else rest
       }
-
-    val keep =
-      (isMatched && keepFor(m, mIdx)) ||
-      (isSrcOnly && iIdx =!= -1) ||
-      (!isMatched && !isSrcOnly && nmbsKeep)
-    val result = joined.where(keep).select(fields.map { c =>
-      when(isMatched, valueFor(m, mIdx, c, col(s"t.$c")))
-        .when(isSrcOnly, valueFor(nm, iIdx, c, lit(null)))
-        .otherwise(nmbsValueFor(c))
-        .cast(schema(c).dataType).as(c)
-    } ++
-      // lineage: matched/NMBS-updated rows keep the target id;
-      // source-only inserts are null → assigned fresh at commit
-      (if (clauseLineage) Seq(col(s"t.$ROW_ID_COL").as(ROW_ID_COL))
-       else Nil): _*)
-
-    val WriteResult(added, stats, info) =
-      writeDataFiles(sizeRewrite(result, base, affected))
-    commit(base, "merge", added = added, removed = affected,
-      live = base.liveFiles.diff(affected) ++ added,
-      addedStats = stats, addedInfo = info,
-      propertiesOverride = propsFor(base))
+    // lineage: matched/NMBS-updated rows keep the target id; source-only
+    // inserts are null → assigned fresh at commit
+    val lineage =
+      if (rowLineageEnabled) Seq(col(s"t.$ROW_ID_COL").as(ROW_ID_COL))
+      else Nil
+    val result =
+      if (nm.isEmpty && m.headOption.contains(MergeWhen(None, None)))
+        // every matched row deletes and nothing inserts: only the
+        // unmatched target rows survive, through the NMBS cascade
+        tgt.join(s, cond, "left_anti").where(nmbsKeep)
+          .select(fields.map(c =>
+            nmbsValueFor(c).cast(schema(c).dataType).as(c)) ++ lineage: _*)
+      else {
+        // source-only rows exist only for NOT MATCHED clauses
+        val joined = tgt.join(s, cond,
+          if (nm.isEmpty) "left_outer" else "full_outer")
+        val isMatched = col(s"t.$TGT_MARK").isNotNull &&
+          col(SRC_MARK).isNotNull
+        val isSrcOnly = col(s"t.$TGT_MARK").isNull
+        val mIdx = firstIdx(m)
+        val iIdx = firstIdx(nm)
+        val keep =
+          (isMatched && keepFor(m, mIdx)) ||
+          (isSrcOnly && iIdx =!= -1) ||
+          (!isMatched && !isSrcOnly && nmbsKeep)
+        joined.where(keep).select(fields.map { c =>
+          when(isMatched, valueFor(m, mIdx, c, col(s"t.$c")))
+            .when(isSrcOnly, valueFor(nm, iIdx, c, lit(null)))
+            .otherwise(nmbsValueFor(c))
+            .cast(schema(c).dataType).as(c)
+        } ++ lineage: _*)
+      }
+    commitMerge(writeDataFiles(sizeRewrite(result, base, affected)),
+      affected, Nil)
   }
+
+  /** The distinct table-relative files a `FILE_COL`-carrying locating
+    * scan returns. */
+  private def filesOf(located: DataFrame): Seq[String] =
+    located.select(FILE_COL).distinct()
+      .collect().map(r => relativize(r.getString(0))).toSeq
 
   /** Scale-adaptive REWRITE output sizing (guide §6): the rewrite of
     * `affected` produces ≈ their manifest-recorded bytes (plus the
@@ -2729,156 +2611,129 @@ final class LakeTable private (
     files
   }
 
-  /** Key-based copy-on-write DELETE: remove every row whose key appears
-    * in `keys` (a DataFrame carrying the key columns) — the CDC-delete
-    * primitive. Same affected-file pruning as [[merge]]: a key-column-
-    * only scan semi-joined with the distinct keys locates the files to
-    * rewrite; the rewrite anti-joins them away. Null keys never match. */
+  /** Key-based DELETE: remove every row whose key appears in `keys` (a
+    * DataFrame carrying the key columns) — the CDC-delete primitive,
+    * the clause set `WHEN MATCHED THEN DELETE` run by [[mergeClauses]]'s
+    * engine: copy-on-write locates the files holding a key and
+    * anti-joins them away; `write.delete.mode=merge-on-read` commits
+    * one equality-delete file of the distinct keys — no scan, no
+    * rewrite. Null keys never match; a delete that removes nothing
+    * commits nothing. */
   def deleteByKeys(keys: DataFrame, keyCols: Seq[String]): Long =
-    labeled("deleteByKeys")(
-      rewriteWithRetry(() => deleteByKeysImpl(keys, keyCols)))
-
-  private def deleteByKeysImpl(keysIn: DataFrame,
-      keyCols: Seq[String]): Long = {
-    // expensive key frames (a changelog fold's delete side) are
-    // consumed by distinct + bounds agg + locating scan + the rewrite
-    // anti-join — cache for the delete's lifetime (guide §5)
-    val keys = LakeTable.cacheIfExpensive(keysIn)
-    try deleteByKeysBody(keys, keyCols)
-    finally if (keys ne keysIn) keys.unpersist()
-  }
-
-  private def deleteByKeysBody(keys: DataFrame,
-      keyCols: Seq[String]): Long = {
-    val base = current
-    if (base.liveFiles.isEmpty) return base.snapshotId
-    if (properties.get(PROP_DELETE_MODE).contains("merge-on-read")) {
-      // MOR: commit just the equality-delete file — no scan, no rewrite
+    labeled("deleteByKeys")(rewriteWithRetry { () =>
       val types = schema.fields.map(f => f.name -> f.dataType).toMap
-      val k = keys
-        .select(keyCols.map(c => col(c).cast(types(c)).as(c)): _*)
-        .distinct().na.drop()
-      if (k.isEmpty) return base.snapshotId
-      val delPaths = writeDeleteFiles(k)
-      // retry-safe like mergeMor: "delete these keys" is declarative —
-      // the re-based sequence applies it to a racer's fresh rows too
-      return commitWithRetry(base)() { b =>
-        val seq = b.snapshotId + 1
-        commit(b, "delete", added = Nil, removed = Nil,
-          live = b.liveFiles,
-          deletesOverride = Some(b.deleteFiles ++
-            delPaths.map(p => DeleteFile(p, seq, keyCols, keyCols))))
-      }
-    }
-    val k = keys.select(keyCols.map(col): _*).distinct()
-    val candidates = pruneByStats(base, k, keyCols)
-    if (candidates.isEmpty) return base.snapshotId
-    val affected = readFilesWithName(candidates)
-      .select((keyCols.map(col) :+ col(FILE_COL)): _*)
-      .join(k, keyCols, "left_semi")
-      .select(FILE_COL).distinct()
-      .collect().map(r => relativize(r.getString(0))).toSeq
-    if (affected.isEmpty) return base.snapshotId
-    val kept = readFilesForRewrite(base, affected)
-      .join(k, keyCols, "left_anti")
-    val WriteResult(added, stats, info) =
-      writeDataFiles(sizeRewrite(kept, base, affected))
-    commit(base, "delete", added = added, removed = affected,
-      live = base.liveFiles.diff(affected) ++ added, addedStats = stats, addedInfo = info)
-  }
+      mergeClausesImpl(
+        keys.select(keyCols.map(c => col(c).cast(types(c)).as(c)): _*),
+        keyCols, matched = Seq(MergeWhen(None, None)), notMatched = Nil,
+        notMatchedBySource = Nil, Map.empty, None)
+    })
 
-  /** Copy-on-write DELETE: rewrite only the files containing rows that
-    * match `predicate`, keeping their non-matching rows; untouched files
-    * carry forward by manifest reference (same pruning shape as MERGE —
-    * the scan that locates affected files reads only the predicate's
-    * columns). ≡ the `write.delete.mode=copy-on-write` capability the
-    * reference configures (scripts/raw-bronze.py:161-165).
-    *
-    * With `write.delete.mode=merge-on-read` the delete instead commits
-    * POSITION-delete files (≡ Iceberg v2): the locating scan captures
-    * each matching row's (file, row-ordinal) — ZERO data rewrite; readers
-    * anti-join the positions until [[compact]] folds them in. */
-  def delete(predicate: org.apache.spark.sql.Column): Long =
-    labeled("delete")(rewriteWithRetry(() => deleteImpl(predicate)))
+  /** Predicate DELETE: remove the rows where `predicate` is true. ≡ the
+    * `write.delete.mode` capability the reference configures
+    * (scripts/raw-bronze.py:161-165); see [[rowLevelByPredicate]] for
+    * the copy-on-write and merge-on-read plans. */
+  def delete(predicate: Column): Long =
+    labeled("delete")(rewriteWithRetry(() =>
+      rowLevelByPredicate(predicate, None)))
 
-  private def deleteImpl(predicate: org.apache.spark.sql.Column): Long = {
+  /** Predicate DELETE (`assignments` None) and UPDATE (`SET col = expr`
+    * for the matching rows) — one path for both write modes:
+    *   1. manifest-stats pruning (metadata only, zero data read): a
+    *      partition-equality or range predicate narrows the scan to the
+    *      files whose recorded bounds can satisfy it;
+    *   2. metadata delete (≡ Iceberg, delete only): files whose stats
+    *      PROVE every row matches drop from the manifest with zero data
+    *      I/O — a retention `DELETE WHERE ts < cutoff` on a time-sorted
+    *      table is a pure metadata commit. Under merge-on-read too: rows
+    *      of a covered file already hidden by outstanding deletes match
+    *      like every other row, so dropping the file changes nothing
+    *      they'd produce;
+    *   3. the rest is located by a scan of the predicate's columns and
+    *      - copy-on-write (the default): the files holding a match
+    *        rewrite, keeping the rows where the predicate is NOT TRUE
+    *        (false or null — SQL removes only true) for a delete, or
+    *        with the assignments applied to the matching rows for an
+    *        update; untouched files carry forward by reference;
+    *      - `write.delete.mode` / `write.update.mode` = merge-on-read
+    *        (≡ Iceberg v2): each matching live row's (file, ordinal)
+    *        goes into ONE position-delete file, and an update appends
+    *        the matched rows' after-image as new data files (the
+    *        position deletes cannot name them, and their fresh sequence
+    *        outranks every outstanding equality delete) — zero rewrite,
+    *        cost ∝ matched rows; readers anti-join the positions until
+    *        [[compact]]. Rows already suppressed are not re-captured;
+    *        the position capture and the after-image scan the same
+    *        immutable files with the same plan, so they agree. */
+  private def rowLevelByPredicate(predicate: Column,
+      assignments: Option[Map[String, Column]]): Long = {
+    val op = if (assignments.isEmpty) "delete" else "update"
     val base = current
     if (base.liveFiles.isEmpty) return base.snapshotId
-    if (properties.get(PROP_DELETE_MODE).contains("merge-on-read"))
-      return morDeleteByPredicate(base, predicate)
-    // manifest-stats pruning first (driver-only, zero data read): a
-    // partition-equality or range predicate narrows the locating scan to
-    // the files whose recorded bounds can satisfy it — at 100 TB the
-    // difference between a full-table predicate-column scan per DELETE
-    // and one proportional to the touched key range
     val candidates = pruneByPredicate(base, predicate)
     if (candidates.isEmpty) return base.snapshotId
-    // metadata delete (≡ Iceberg): files whose stats PROVE every row
-    // matches drop from the manifest with zero data I/O — a retention
-    // `DELETE WHERE ts < cutoff` on a time-sorted table is a pure
-    // metadata commit. Only files the proof can't cover are scanned
-    // and rewritten.
-    val covered = analyzedCond(predicate)
-      .map(c => fullyCovered(base, c, candidates)).getOrElse(Nil)
+    val covered =
+      if (assignments.nonEmpty) Nil
+      else analyzedCond(predicate)
+        .map(c => fullyCovered(base, c, candidates)).getOrElse(Nil)
     val rest = candidates.diff(covered)
-    val affected =
-      if (rest.isEmpty) Nil
-      else readFilesWithName(rest)
-        .where(predicate)
-        .select(FILE_COL).distinct()
-        .collect().map(r => relativize(r.getString(0))).toSeq
-    if (covered.isEmpty && affected.isEmpty) return base.snapshotId
-    // keep rows where the predicate is NOT TRUE (false or null) — SQL
-    // DELETE only removes rows where it evaluates to true
-    val WriteResult(added, stats, info) =
-      if (affected.isEmpty) WriteResult(Nil, Map.empty, Map.empty)
-      else writeDataFiles(sizeRewrite(readFilesForRewrite(base, affected)
-        .where(!coalesce(predicate, lit(false))), base, affected))
-    val removed = covered ++ affected
-    commit(base, "delete", added = added, removed = removed,
-      live = base.liveFiles.diff(removed) ++ added, addedStats = stats,
-      addedInfo = info)
-  }
-
-  /** Merge-on-read predicate DELETE via position-delete files: the
-    * stats-pruned locating scan (predicate columns only) captures each
-    * matching live row's (scan URI, row ordinal); the commit adds ONE
-    * tiny delete artifact and rewrites nothing. Cost ∝ matched rows —
-    * at 100 TB a predicate delete touches no data files at all. Rows
-    * already suppressed (equality or position) are not re-captured. */
-  private def morDeleteByPredicate(base: Snapshot,
-      predicate: org.apache.spark.sql.Column): Long = {
-    val candidates = pruneByPredicate(base, predicate)
-    if (candidates.isEmpty) return base.snapshotId
-    // metadata delete applies under MOR too — and is even better than a
-    // position-delete artifact: a fully-covered file leaves the
-    // manifest outright (no per-row capture, no anti-join for readers).
-    // Suppressed-row caveat: rows of a covered file already hidden by
-    // outstanding deletes match the predicate like every other row
-    // (allRowsMatch is a per-FILE proof), so dropping the file changes
-    // nothing they'd produce.
-    val covered = analyzedCond(predicate)
-      .map(c => fullyCovered(base, c, candidates)).getOrElse(Nil)
-    val rest = candidates.diff(covered)
-    val delPaths =
-      if (rest.isEmpty) Nil
-      else {
-        val positions = readFilesAs(base, rest, withPos = true)
-          .where(predicate)
-          .select(col(PFILE_COL).as(POS_FILE_FIELD),
-            col(PIDX_COL).as(POS_POS_FIELD))
-        if (positions.isEmpty) Nil else writeDeleteFiles(positions)
+    val sch = schema
+    val mor = properties.get(
+      if (assignments.isEmpty) PROP_DELETE_MODE else PROP_UPDATE_MODE)
+      .contains("merge-on-read")
+    if (mor) {
+      lazy val matched =
+        readFilesAs(base, rest, withPos = true).where(predicate)
+      val found = rest.nonEmpty && !matched.isEmpty
+      if (covered.isEmpty && !found) return base.snapshotId
+      val delPaths =
+        if (!found) Nil
+        else writeDeleteFiles(matched.select(col(PFILE_COL).as(POS_FILE_FIELD),
+          col(PIDX_COL).as(POS_POS_FIELD)))
+      val after = assignments match {
+        case Some(a) if found => writeDataFiles(matched.select(
+          sch.fields.map(f => a.get(f.name) match {
+            case Some(e) => e.cast(f.dataType).as(f.name)
+            case None => col(f.name)
+          }).toIndexedSeq: _*))
+        case _ => NoWrite
       }
-    if (covered.isEmpty && delPaths.isEmpty) return base.snapshotId
-    // retry-safe iff every file we captured positions from is STILL live
-    // (a racing compact/rewrite would have re-homed the matching rows);
-    // a racer's pure appends serialize AFTER this delete, untouched
-    commitWithRetry(base)(posRetrySafe) { b =>
-      val seq = b.snapshotId + 1
-      commit(b, "delete", added = Nil, removed = covered,
-        live = b.liveFiles.diff(covered),
-        posDeletesOverride = Some(b.posDeleteFiles ++
-          delPaths.map(p => PosDeleteFile(p, seq))))
+      // retry-safe iff every file we captured positions from is STILL
+      // live (a racing compact/rewrite would have re-homed the matching
+      // rows); a racer's pure appends serialize AFTER this op, and the
+      // after-image is new files, racer-independent
+      commitWithRetry(base)(posRetrySafe) { b =>
+        commit(b, op, added = after.files, removed = covered,
+          live = b.liveFiles.diff(covered) ++ after.files,
+          addedStats = after.stats, addedInfo = after.info,
+          posDeletesOverride = Some(b.posDeleteFiles ++
+            delPaths.map(p => PosDeleteFile(p, b.snapshotId + 1))))
+      }
+    } else {
+      val affected =
+        if (rest.isEmpty) Nil
+        else filesOf(readFilesWithName(rest).where(predicate))
+      if (covered.isEmpty && affected.isEmpty) return base.snapshotId
+      val read = readFilesForRewrite(base, affected)
+      val rewritten = assignments match {
+        case None => read.where(!coalesce(predicate, lit(false)))
+        case Some(a) => read.select((sch.fields.map { f =>
+          a.get(f.name) match {
+            case Some(e) =>
+              when(predicate, e.cast(f.dataType)).otherwise(col(f.name))
+                .as(f.name)
+            case None => col(f.name)
+          }
+        }.toIndexedSeq ++
+          // lineage: an UPDATE keeps every row's id
+          (if (rowLineageEnabled) Seq(col(ROW_ID_COL)) else Nil)): _*)
+      }
+      val w =
+        if (affected.isEmpty) NoWrite
+        else writeDataFiles(sizeRewrite(rewritten, base, affected))
+      val removed = covered ++ affected
+      commit(base, op, added = w.files, removed = removed,
+        live = base.liveFiles.diff(removed) ++ w.files,
+        addedStats = w.stats, addedInfo = w.info)
     }
   }
 
@@ -3018,91 +2873,16 @@ final class LakeTable private (
     }
   }
 
-  /** Copy-on-write UPDATE: `SET col = expr` for rows matching
-    * `predicate`, file-pruned exactly like [[delete]]. ≡ the
-    * `write.update.mode=copy-on-write` capability the reference
-    * configures (scripts/raw-bronze.py:161-165).
-    *
-    * With `write.update.mode=merge-on-read` the update instead commits
-    * position-delete files for the matched rows plus their updated
-    * after-image as new data files (≡ Iceberg v2 MOR UPDATE = position
-    * delete + insert) — zero rewrite of existing files. */
-  def update(predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column]): Long =
-    labeled("update")(
-      rewriteWithRetry(() => updateImpl(predicate, assignments)))
-
-  private def updateImpl(predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column]): Long = {
-    val bad = assignments.keySet.diff(schema.fieldNames.toSet)
-    require(bad.isEmpty, s"unknown columns in SET: ${bad.mkString(", ")}")
-    val base = current
-    if (base.liveFiles.isEmpty) return base.snapshotId
-    if (properties.get(PROP_UPDATE_MODE).contains("merge-on-read"))
-      return morUpdateByPredicate(base, predicate, assignments)
-    // same manifest-stats pruning as [[delete]]
-    val candidates = pruneByPredicate(base, predicate)
-    if (candidates.isEmpty) return base.snapshotId
-    val affected = readFilesWithName(candidates)
-      .where(predicate)
-      .select(FILE_COL).distinct()
-      .collect().map(r => relativize(r.getString(0))).toSeq
-    if (affected.isEmpty) return base.snapshotId
-    val sch = schema
-    val rewritten = readFilesForRewrite(base, affected)
-      .select((sch.fields.map { f =>
-        assignments.get(f.name) match {
-          case Some(e) =>
-            when(predicate, e.cast(f.dataType)).otherwise(col(f.name))
-              .as(f.name)
-          case None => col(f.name)
-        }
-      }.toIndexedSeq ++
-        // lineage: an UPDATE keeps every row's id
-        (if (rowLineageEnabled) Seq(col(ROW_ID_COL)) else Nil)): _*)
-    val WriteResult(added, stats, info) =
-      writeDataFiles(sizeRewrite(rewritten, base, affected))
-    commit(base, "update", added = added, removed = affected,
-      live = base.liveFiles.diff(affected) ++ added, addedStats = stats, addedInfo = info)
-  }
-
-  /** Merge-on-read predicate UPDATE: position-delete the matched rows
-    * and append their updated after-image — no rewrite of existing
-    * files. The after-image lands in NEW files the position deletes
-    * cannot name, so it is never self-suppressed; its fresh sequence
-    * also outranks every outstanding equality delete. Both passes scan
-    * the same immutable pruned files with the same plan, so the captured
-    * ordinals and the after-image rows agree deterministically. */
-  private def morUpdateByPredicate(base: Snapshot,
-      predicate: org.apache.spark.sql.Column,
-      assignments: Map[String, org.apache.spark.sql.Column]): Long = {
-    val candidates = pruneByPredicate(base, predicate)
-    if (candidates.isEmpty) return base.snapshotId
-    val matched = readFilesAs(base, candidates, withPos = true)
-      .where(predicate)
-    if (matched.isEmpty) return base.snapshotId
-    val positions = matched
-      .select(col(PFILE_COL).as(POS_FILE_FIELD),
-        col(PIDX_COL).as(POS_POS_FIELD))
-    val sch = schema
-    val after = matched.select(sch.fields.map { f =>
-      assignments.get(f.name) match {
-        case Some(e) => e.cast(f.dataType).as(f.name)
-        case None => col(f.name)
-      }
-    }.toIndexedSeq: _*)
-    val delPaths = writeDeleteFiles(positions)
-    val WriteResult(added, stats, info) = writeDataFiles(after)
-    // same retry window as morDeleteByPredicate (captured ordinals must
-    // still be live); the after-image is new files, racer-independent
-    commitWithRetry(base)(posRetrySafe) { b =>
-      val seq = b.snapshotId + 1
-      commit(b, "update", added = added, removed = Nil,
-        live = b.liveFiles ++ added, addedStats = stats, addedInfo = info,
-        posDeletesOverride = Some(b.posDeleteFiles ++
-          delPaths.map(p => PosDeleteFile(p, seq))))
-    }
-  }
+  /** Predicate UPDATE: `SET col = expr` for rows matching `predicate`,
+    * file-pruned exactly like [[delete]] (see [[rowLevelByPredicate]]).
+    * ≡ the `write.update.mode` capability the reference configures
+    * (scripts/raw-bronze.py:161-165). */
+  def update(predicate: Column, assignments: Map[String, Column]): Long =
+    labeled("update")(rewriteWithRetry { () =>
+      val bad = assignments.keySet.diff(schema.fieldNames.toSet)
+      require(bad.isEmpty, s"unknown columns in SET: ${bad.mkString(", ")}")
+      rowLevelByPredicate(predicate, Some(assignments))
+    })
 
   // ------------------------------------------------ CHECK constraints
 
@@ -4564,8 +4344,9 @@ final class LakeTable private (
     * so the data commit lands on the evolved schema instead of
     * tripping the retry loop's evolution refusal. Off by default: with
     * it on, a producer's typo'd column silently becomes table schema —
-    * and a CDC pipeline's bookkeeping columns (Op, etc.) would too, so
-    * CDC callers should pre-drop them or leave this off. */
+    * and a CDC pipeline's bookkeeping columns (Op, etc.) would too:
+    * [[merge]] leaves out the ones its `deleteWhen` reads, other CDC
+    * callers should pre-drop them or leave this off. */
   /** Column-name key under the session's resolution rules —
     * `spark.sql.caseSensitive` is false by default, so `ID` and `id`
     * are the SAME column and schema matching must agree with the
@@ -4603,7 +4384,11 @@ final class LakeTable private (
     }
   }
 
-  private def alignToSchema(df: DataFrame): DataFrame = {
+  /** `df` as the table's columns (CURRENT_DEFAULT or null for the ones
+    * it lacks, cast to the table types), plus the `keep` columns
+    * unchanged. */
+  private def alignToSchema(df: DataFrame,
+      keep: Seq[String] = Nil): DataFrame = {
     val want = schema
     val have: Map[String, String] =
       df.columns.map(n => resolveKey(n) -> n).toMap
@@ -4627,7 +4412,7 @@ final class LakeTable private (
             case None => lit(null).cast(f.dataType).as(f.name)
           }
       }
-    }.toIndexedSeq: _*)
+    }.toIndexedSeq ++ keep.map(col): _*)
   }
 
   /** Write df's rows as new Parquet data files (hive-partitioned when the
@@ -5137,9 +4922,19 @@ final class LakeTable private (
 /** One `WHEN` clause of a general MERGE ([[LakeTable.mergeClauses]]):
   * `condition` is the optional `AND <cond>` guard (absent = always
   * applies), `assignments` maps bare target column names to value
-  * expressions for UPDATE/INSERT, or is None for DELETE. */
+  * expressions for UPDATE/INSERT, or is None for DELETE. `star` is
+  * `UPDATE SET *` / `INSERT *`: every target column takes the source's
+  * same-named column (see [[MergeWhen.star]]). */
 case class MergeWhen(condition: Option[org.apache.spark.sql.Column],
-    assignments: Option[Map[String, org.apache.spark.sql.Column]])
+    assignments: Option[Map[String, org.apache.spark.sql.Column]],
+    star: Boolean = false)
+
+object MergeWhen {
+  /** `[AND condition] THEN UPDATE SET *` (matched) or `INSERT *` (not
+    * matched). */
+  def star(condition: Option[org.apache.spark.sql.Column] = None)
+      : MergeWhen = MergeWhen(condition, Some(Map.empty), star = true)
+}
 
 object LakeTable {
 
@@ -5325,6 +5120,9 @@ object LakeTable {
   private val FILE_COL = "__graft_file"
   private val SRC_MARK = "__graft_is_src"
   private val TGT_MARK = "__graft_is_tgt"
+  /** Source-side flag of [[LakeTable.merge]]'s `deleteWhen`, evaluated
+    * on the raw source before alignment and the join. */
+  private val SRC_DELETE_FLAG = "__graft_src_delete"
   private val ERA_COL = "__graft_era"
   private val DERA_COL = "__graft_del_era"
   /** Row-provenance columns a position-aware scan carries (from
@@ -5350,6 +5148,7 @@ object LakeTable {
       files: Seq[String],
       stats: Map[String, Map[String, ColStat]],
       info: Map[String, FileInfo])
+  private[lake] val NoWrite = WriteResult(Nil, Map.empty, Map.empty)
   /** Physical-name prefix guaranteed never to be written by this engine:
     * addColumn maps the new column here for pre-existing files, so they
     * read NULL even if they carry dead bytes under the same name. */

@@ -19,8 +19,10 @@ import graft.schema.AvroSchemaConverter
   *   - dedup to the latest row per `invoiceid` by `processed_time`
   *     (ROW_NUMBER window), align to the Avro-declared silver schema
   *     (dropping `Op` + audit columns — SURVEY.md wart #1);
-  *   - MERGE INTO silver on `invoiceid` (COW), creating the table from
-  *     the Avro schema on first run, partitioned by `destinationstate`;
+  *   - ONE MERGE INTO silver on `invoiceid` (COW) per drop, whose CDC
+  *     `deleteWhen` removes the keys whose latest op is D, creating the
+  *     table from the Avro schema on first run, partitioned by
+  *     `destinationstate`;
   *   - only then save the snapshot checkpoint.
   */
 final class BronzeToSilverJob(
@@ -81,27 +83,25 @@ final class BronzeToSilverJob(
 
     // full CDC semantics: a key whose latest op is D is removed from
     // silver (the reference's MERGE would upsert the delete image —
-    // row resurrection; we have a key-delete primitive, so use it)
+    // row resurrection), in the same single merge commit that upserts
+    // the rest; the merge's schema alignment drops Op after the split
     val hasOp = cols("Op")
-    val (deletes, upserts) =
-      if (hasOp)
-        (deduped.where(col("Op") === "D"),
-          deduped.where(col("Op") =!= "D" || col("Op").isNull))
-      else (null: DataFrame, deduped)
+    val batch = deduped.select(
+      (silverSchema.fieldNames.toSeq ++ Seq("Op").filter(cols)).map(col): _*)
+    val upserts =
+      if (hasOp) batch.where(col("Op") =!= "D" || col("Op").isNull)
+      else batch
 
-    // persist the deduped batch: count + merge's prune scan + the rewrite
-    // join + deleteByKeys each re-evaluate the incremental-scan→dedup
-    // subtree otherwise (4 evaluations); spillable MEMORY_AND_DISK caps
-    // the memory risk at any batch size
+    // persist the deduped batch: the count + merge's prune scan and
+    // rewrite join each re-evaluate the incremental-scan→dedup subtree
+    // otherwise; spillable MEMORY_AND_DISK caps the memory risk at any
+    // batch size
     val dedupedP =
       deduped.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val aligned = upserts.select(
-        silverSchema.fieldNames.map(col).toIndexedSeq: _*)
-      val n = aligned.count()
-      silver.merge(aligned, Seq(mergeKey))
-      if (hasOp && !deletes.isEmpty)
-        silver.deleteByKeys(deletes.select(mergeKey), Seq(mergeKey))
+      val n = upserts.count()
+      silver.merge(batch, Seq(mergeKey),
+        deleteWhen = if (hasOp) Some(col("Op") === "D") else None)
 
       Checkpoint.save(checkpointPath, Map(CKPT_KEY -> latest.toString))
       n

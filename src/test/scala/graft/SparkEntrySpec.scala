@@ -19,13 +19,16 @@ class SparkEntrySpec extends AnyFunSuite {
   test("all queries run on sf0.001 and produce schemas") {
     // a cheap structural smoke: every query's plan analyzes (no
     // unresolved columns) — full execution is Verify/Bench territory
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try {
+    val failed = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) => try {
         val df = fn(spark, "/root/testdata/sf0.001")
-        assert(df.schema.fields.nonEmpty, name)
+        if (df.schema.fields.isEmpty) Some(s"$name: empty schema")
+        else None
       } catch {
-        case e: Throwable => fail(s"$name failed to build: ${e.getMessage}")
+        case e: Throwable => Some(s"$name failed to build: ${e.getMessage}")
       }
     }
+    assert(failed.isEmpty,
+      s"${failed.size} queries failed:\n${failed.mkString("\n")}")
   }
 }

@@ -194,19 +194,25 @@ class MergeFuzzSpec extends AnyFunSuite {
   }
 
   // ---- star-shape fuzz across BOTH write modes -----------------------
+  // Three forms of the same clause shapes: the SQL text (SQL semantics —
+  // a delete-flagged unmatched row still inserts), the direct
+  // merge(src, keys, deleteWhen, dropUnmatchedWhen) API (its
+  // skip-insert contract) and deleteByKeys (`WHEN MATCHED THEN DELETE`).
 
-  private val starCaseGen = for {
+  private def starCaseGen(forms: Gen[Int]) = for {
     tgt <- Gen.listOf(rowGen).map(dedup)
     src <- Gen.listOf(rowGen).map(dedup)
     mor <- Gen.oneOf(false, true)
+    form <- forms // 0 SQL text, 1 merge API, 2 deleteByKeys
     del <- Gen.oneOf(0, 1) // 0 none, 1 "s.b >= 900"
     bs <- Gen.oneOf(0, 1, 2) // 0 none, 1 unconditional, 2 "b > 300"
-  } yield (tgt, src, mor, del, bs)
+  } yield (tgt, src, mor, form, del, bs)
 
   test("property: star MERGE shapes (COW and MOR) ≡ reference, 60+ cases") {
     var n = 0
-    check(Prop.forAllNoShrink(starCaseGen) {
-      case (tgt, src, mor, del, bs) =>
+    // 60 cases of the SQL text, then 40 of the two direct-API forms
+    def prop(forms: Gen[Int]) = Prop.forAllNoShrink(starCaseGen(forms)) {
+      case (tgt, src, mor, form, del, bs) =>
         n += 1
         val base = TestSpark.tmpDir(s"merge-star-$n")
         val cat = new LakeCatalog(spark, base)
@@ -214,50 +220,78 @@ class MergeFuzzSpec extends AnyFunSuite {
         val tdf = tgt.toDF()
         val sdf = src.toDF()
         cat.createTable("f", "t_star", tdf.schema, properties =
-          if (mor) Map(LakeTable.PROP_MERGE_MODE -> "merge-on-read")
+          if (mor) Map(LakeTable.PROP_MERGE_MODE -> "merge-on-read",
+            LakeTable.PROP_DELETE_MODE -> "merge-on-read")
           else Map.empty)
         val t = cat.loadTable("f", "t_star")
         t.append(tdf)
         sdf.createOrReplaceTempView("fuzz_star_src")
-        val text = Seq(
-          Some("MERGE INTO t_star t USING fuzz_star_src s " +
-            "ON t.id = s.id"),
-          if (del == 1) Some("WHEN MATCHED AND s.b >= 900 THEN DELETE")
-          else None,
-          Some("WHEN MATCHED THEN UPDATE SET *"),
-          Some("WHEN NOT MATCHED THEN INSERT *"),
-          bs match {
-            case 1 => Some("WHEN NOT MATCHED BY SOURCE THEN DELETE")
-            case 2 => Some("WHEN NOT MATCHED BY SOURCE AND b > 300 " +
-              "THEN DELETE")
-            case _ => None
-          }).flatten.mkString(" ")
-        cat.sql("f", text)
+        val text = form match {
+          case 0 => Seq(
+            Some("MERGE INTO t_star t USING fuzz_star_src s " +
+              "ON t.id = s.id"),
+            if (del == 1) Some("WHEN MATCHED AND s.b >= 900 THEN DELETE")
+            else None,
+            Some("WHEN MATCHED THEN UPDATE SET *"),
+            Some("WHEN NOT MATCHED THEN INSERT *"),
+            bs match {
+              case 1 => Some("WHEN NOT MATCHED BY SOURCE THEN DELETE")
+              case 2 => Some("WHEN NOT MATCHED BY SOURCE AND b > 300 " +
+                "THEN DELETE")
+              case _ => None
+            }).flatten.mkString(" ")
+          case 1 => s"merge(deleteWhen=${del == 1}, dropUnmatchedWhen=$bs)"
+          case _ => "deleteByKeys"
+        }
+        form match {
+          case 0 => cat.sql("f", text)
+          case 1 => t.merge(sdf, Seq("id"),
+            deleteWhen = if (del == 1) Some(col("b") >= 900) else None,
+            dropUnmatchedWhen = bs match {
+              case 1 => Some(lit(true))
+              case 2 => Some(col("b") > 300)
+              case _ => None
+            })
+          case _ => t.deleteByKeys(sdf.select("id"), Seq("id"))
+        }
 
-        def delCond(s: R) = del == 1 && s.b >= 900
-        def bsCond(t0: R) = bs match {
+        def delCond(s: R) = form == 2 || del == 1 && s.b >= 900
+        def bsCond(t0: R) = form != 2 && (bs match {
           case 1 => true
           case 2 => t0.b > 300
           case _ => false
-        }
+        })
         val srcById = src.map(s => s.id -> s).toMap
         val tgtIds = tgt.map(_.id).toSet
+        val inserted = form match {
+          case 0 => src.filterNot(s => tgtIds(s.id))
+          case 1 => src.filterNot(s => tgtIds(s.id) || delCond(s))
+          case _ => Nil
+        }
         val expect = (tgt.flatMap { t0 =>
           srcById.get(t0.id) match {
             case Some(s) => if (delCond(s)) None else Some(s)
             case None => if (bsCond(t0)) None else Some(t0)
           }
-        } ++ src.filterNot(s => tgtIds(s.id)))
-          .map(r => (r.id, r.a, r.b)).sorted
+        } ++ inserted).map(r => (r.id, r.a, r.b)).sorted
         val got = t.scan().collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
           .sorted.toSeq
-        val ok = got == expect
+        // merge-on-read really ran: no merge/delete rewrote a file (the
+        // SQL CDC text is a general clause merge, which rewrites)
+        val rewrote = t.snapshots.filter(sn =>
+          (sn.operation == "merge" || sn.operation == "delete") &&
+            sn.removedFiles.nonEmpty)
+        val ok = got == expect &&
+          (!mor || form == 0 && del == 1 || rewrote.isEmpty)
         if (!ok) info(s"STAR CASE $n FAILED mode=${if (mor) "mor"
           else "cow"}\n text=$text\n tgt=$tgt\n src=$src" +
-          s"\n expect=$expect\n got=$got")
+          s"\n expect=$expect\n got=$got\n rewrote=" +
+          rewrote.map(_.removedFiles))
         ok
-    }, 60)
+    }
+    check(prop(Gen.const(0)), 60)
+    check(prop(Gen.oneOf(1, 2)), 40)
     info(s"$n star merge fuzz cases executed")
   }
 }

@@ -276,6 +276,49 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(t3.scan().count() == 101) // 100 + 500L insert, key 10 deduped
   }
 
+  test("first mergeOnce into an empty MOR table upserts past a racer") {
+    // no live files yet, but mergeOnce still writes its equality-delete
+    // file: the rebased commit suppresses the racer's row for the key
+    val root = TestSpark.tmpDir("mor-race-empty") + "/t"
+    val t1 = LakeTable.create(spark, root,
+      Seq((0L, "")).toDF("id", "v").schema, properties = morProps)
+    val t2 = LakeTable.load(spark, root)
+    var fired = false
+    t1.beforeCommitHook = () => if (!fired) {
+      fired = true
+      t2.append(Seq((10L, "racer"), (500L, "racer-new")).toDF("id", "v"))
+    }
+    try t1.mergeOnce(Seq((10L, "UPD")).toDF("id", "v"), Seq("id"),
+      "app", 1L)
+    finally t1.beforeCommitHook = () => ()
+    assert(fired)
+    val t3 = LakeTable.load(spark, root)
+    assert(t3.scan().orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((10L, "UPD"), (500L, "racer-new")))
+    assert(t3.currentSnapshot.get.properties.get("txn.app").contains("1"))
+  }
+
+  test("star merge with txn into an empty table never rebases") {
+    // an insert-only commit rebased past a racer would duplicate its
+    // keys: the conflict surfaces instead
+    val root = TestSpark.tmpDir("mor-race-empty-txn") + "/t"
+    val t1 = LakeTable.create(spark, root,
+      Seq((0L, "")).toDF("id", "v").schema, properties = morProps)
+    val t2 = LakeTable.load(spark, root)
+    var fired = false
+    t1.beforeCommitHook = () => if (!fired) {
+      fired = true
+      t2.append(Seq((10L, "racer")).toDF("id", "v"))
+    }
+    try intercept[java.util.ConcurrentModificationException] {
+      t1.merge(Seq((10L, "UPD")).toDF("id", "v"), Seq("id"),
+        txn = Some("app" -> 1L))
+    } finally t1.beforeCommitHook = () => ()
+    assert(fired)
+    assert(LakeTable.load(spark, root).scan().as[(Long, String)]
+      .collect().toSeq == Seq((10L, "racer")))
+  }
+
   test("MOR deleteByKeys retries past a racing append") {
     val root = TestSpark.tmpDir("mor-race-del") + "/t"
     val t1 = morTable(root)

@@ -322,6 +322,18 @@ class SchemaEvolutionSpec extends AnyFunSuite {
       .collect().head.toSeq == Seq("b", "fr"))
   }
 
+  test("auto-evolve: a CDC merge's delete-condition column stays out") {
+    val root = freshRoot
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val t = LakeTable.create(spark, root, df.schema,
+      properties = Map(LakeTable.PROP_AUTO_EVOLVE -> "true"))
+    t.append(df)
+    t.merge(Seq((1L, "A", "U"), (2L, "b", "D")).toDF("id", "v", "Op"),
+      Seq("id"), deleteWhen = Some(col("Op") === "D"))
+    assert(t.schema.fieldNames.toSeq == Seq("id", "v"))
+    assert(t.scan().as[(Long, String)].collect().toSeq == Seq((1L, "A")))
+  }
+
   test("auto-evolve off: extra source columns are dropped, not added") {
     val root = freshRoot
     val df = Seq((1L, "a")).toDF("id", "v")

@@ -1,15 +1,15 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.lake.LakeCatalog
 
-/** Golden end-to-end: replay the reference's own two-drop fixture
-  * (reference: README.md:147-229 demo protocol; data at
-  * raw/datafiles/initialsinserts + updates CSVs) and assert the exact
+/** Golden end-to-end: replay the reference's two-drop fixture
+  * (reference: README.md:147-229 demo protocol; drops loaded by
+  * [[GoldenFixture]]: initialsinserts + updates CSVs) and assert the exact
   * end-state from SURVEY.md §3.3: bronze 7 rows append-only; silver 5
   * rows with invoices 40994/83597 carrying the `####`-suffixed categories
   * after the update drop.
@@ -17,26 +17,7 @@ import graft.lake.LakeCatalog
 class GoldenPipelineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private val refInserts =
-    "/root/reference/raw/datafiles/initialsinserts"
-  private val refUpdates =
-    "/root/reference/raw/datafiles/updates"
-
-  private def copyCsvs(fromDir: String, toDir: String): Unit = {
-    val to = Paths.get(toDir)
-    Files.createDirectories(to)
-    val st = Files.list(Paths.get(fromDir))
-    try st.filter(_.toString.endsWith(".csv"))
-      .forEach { f =>
-        val dest = to.resolve(f.getFileName)
-        Files.copy(f, dest, StandardCopyOption.REPLACE_EXISTING)
-        dest.toFile.setLastModified(System.currentTimeMillis())
-      }
-    finally st.close()
-  }
-
   test("cold start: BOTH drops in one run → updates still win (Op tie-break)") {
-    assume(Files.exists(Paths.get(refInserts)), "reference data not present")
     val base = TestSpark.tmpDir("golden-cold")
     val rawDir = s"$base/raw"
     val cat = new LakeCatalog(spark, s"$base/warehouse")
@@ -44,8 +25,8 @@ class GoldenPipelineSpec extends AnyFunSuite {
 
     // both drops land before the first pipeline run: every row shares one
     // processed_time, so last-writer-wins must fall through to Op desc
-    copyCsvs(refInserts, rawDir)
-    copyCsvs(refUpdates, rawDir)
+    GoldenFixture.land(GoldenFixture.Inserts, rawDir)
+    GoldenFixture.land(GoldenFixture.Updates, rawDir)
     val (b, s) = runner.runOnce()
     assert(b == 7 && s == 5)
     val cats = cat.loadTable("example_namespace", "silver_orders").scan()
@@ -56,18 +37,17 @@ class GoldenPipelineSpec extends AnyFunSuite {
   }
 
   test("CDC delete: a D row removes its key from silver") {
-    assume(Files.exists(Paths.get(refInserts)), "reference data not present")
     val base = TestSpark.tmpDir("golden-del")
     val rawDir = s"$base/raw"
     val cat = new LakeCatalog(spark, s"$base/warehouse")
     val runner = new PipelineRunner(spark, cat, rawDir, s"$base/checkpoints")
 
-    copyCsvs(refInserts, rawDir)
+    GoldenFixture.land(GoldenFixture.Inserts, rawDir)
     runner.runOnce()
 
     // drop 2: delete invoice 24137 (a D row mirroring its insert image)
-    val insertCsv = Files.readString(Files.list(Paths.get(refInserts))
-      .filter(_.toString.endsWith(".csv")).findFirst().get())
+    val insertCsv =
+      Files.readString(GoldenFixture.csvs(GoldenFixture.Inserts).head)
     val lines = insertCsv.linesIterator.toSeq
     val deleteRow = lines.find(_.contains("\t24137\t")).get
       .replaceFirst("^I\t", "D\t")
@@ -83,7 +63,6 @@ class GoldenPipelineSpec extends AnyFunSuite {
   }
 
   test("reference fixture: two drops → bronze 7 rows, silver 5, updates win") {
-    assume(Files.exists(Paths.get(refInserts)), "reference data not present")
     val base = TestSpark.tmpDir("golden")
     val rawDir = s"$base/raw"
     val wh = s"$base/warehouse"
@@ -92,7 +71,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
     val runner = new PipelineRunner(spark, cat, rawDir, ckpt)
 
     // drop 1: initial inserts
-    copyCsvs(refInserts, rawDir)
+    GoldenFixture.land(GoldenFixture.Inserts, rawDir)
     val (b1, s1) = runner.runOnce()
     assert(b1 == 5 && s1 == 5)
     assert(cat.loadTable("example_namespace", "bronze_orders").scan().count() == 5)
@@ -103,7 +82,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
 
     // drop 2: updates — no sleep: the checkpoint's boundary-file names
     // disambiguate drops landing in the same mtime tick
-    copyCsvs(refUpdates, rawDir)
+    GoldenFixture.land(GoldenFixture.Updates, rawDir)
     val (b2, s2) = runner.runOnce()
     assert(b2 == 2 && s2 == 2)
 
@@ -134,7 +113,6 @@ class GoldenPipelineSpec extends AnyFunSuite {
   }
 
   test("MOR silver (reference table_type='MOR'): same golden end state, zero rewrites") {
-    assume(Files.exists(Paths.get(refInserts)), "reference data not present")
     val base = TestSpark.tmpDir("golden-mor")
     val rawDir = s"$base/raw"
     val cat = new LakeCatalog(spark, s"$base/warehouse")
@@ -147,9 +125,9 @@ class GoldenPipelineSpec extends AnyFunSuite {
         tableProperties = PipelineDefaults.tablePropertiesMor).run()
       (b, s)
     }
-    copyCsvs(refInserts, rawDir)
+    GoldenFixture.land(GoldenFixture.Inserts, rawDir)
     assert(run() == ((5L, 5L)))
-    copyCsvs(refUpdates, rawDir)
+    GoldenFixture.land(GoldenFixture.Updates, rawDir)
     assert(run() == ((2L, 2L)))
 
     val silverT = cat.loadTable("example_namespace", "silver_orders")

@@ -1,34 +1,22 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.lake.LakeCatalog
+import graft.pipeline.GoldenFixture
 
 class StreamingRawToBronzeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def copyCsvs(from: String, to: String): Unit = {
-    Files.createDirectories(Paths.get(to))
-    val st = Files.list(Paths.get(from))
-    try st.filter(_.toString.endsWith(".csv"))
-      .forEach(f => Files.copy(f, Paths.get(to).resolve(f.getFileName),
-        StandardCopyOption.REPLACE_EXISTING))
-    finally st.close()
-  }
-
   test("streaming ingest: Spark's file tracking picks up only new drops") {
-    assume(Files.exists(Paths.get(
-      "/root/reference/raw/datafiles/initialsinserts")))
     val base = TestSpark.tmpDir("stream-bronze")
     val raw = s"$base/raw"
     val cat = new LakeCatalog(spark, s"$base/wh")
     val job = new StreamingRawToBronze(spark, cat, raw,
       s"$base/ckpt", "ns", "bronze")
 
-    copyCsvs("/root/reference/raw/datafiles/initialsinserts", raw)
+    GoldenFixture.land(GoldenFixture.Inserts, raw)
     assert(job.run() == 5)
     assert(cat.loadTable("ns", "bronze").scan().count() == 5)
 
@@ -37,7 +25,7 @@ class StreamingRawToBronzeSpec extends AnyFunSuite {
 
     // update drop: only the new file is read (no mtime bookkeeping here —
     // the streaming checkpoint tracks seen files)
-    copyCsvs("/root/reference/raw/datafiles/updates", raw)
+    GoldenFixture.land(GoldenFixture.Updates, raw)
     assert(job.run() == 2)
     val bronze = cat.loadTable("ns", "bronze").scan()
     assert(bronze.count() == 7)
