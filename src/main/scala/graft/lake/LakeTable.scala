@@ -99,7 +99,8 @@ final class LakeTable private (
       if (chunkCache.putIfAbsent(n, e) == null)
         chunkLoads.incrementAndGet()
     }
-    val s = ManifestIO.snapshotFromJson(json, loadChunk)
+    val s = ManifestIO.snapshotFromJson(json, loadChunk,
+      chunkCache.containsKey)
     if (currentSnapshotId.exists(id <= _)) {
       // coarse bound: the access pattern is HEAD plus a few historical
       // reads; wholesale clear keeps the cache O(1)-ish without LRU
@@ -162,7 +163,7 @@ final class LakeTable private (
               readString(fs, new Path(metaDir, s"v$vid.json")), n)
             .getOrElse(throw new IllegalStateException(
               s"chunk $n absent from both $metaDir and v$vid.json"))
-        case _ => ManifestIO.chunkFromJson(readString(fs, p))
+        case _ => ManifestIO.readChunk(fs, p)
       }
     })
 
@@ -335,7 +336,8 @@ final class LakeTable private (
     // driver-side row materialization. At 10⁶ files that is a few
     // thousand chunk files read in parallel, not a 300 MB driver list.
     if (snap.manifests.isEmpty) return filesLegacy(snap)
-    // file-backed chunks scan DISTRIBUTED as before; inline chunks
+    // file-backed chunks scan DISTRIBUTED (Spark gunzips the
+    // `m-*.json.gz` chunk files by their extension); inline chunks
     // (small by the commit-path bound) parse driver-side from their
     // host docs and union in through the same JSON reader
     val (inline, backed) = snap.manifests.partition(n =>
@@ -555,7 +557,8 @@ final class LakeTable private (
             val kept = PredicatePruning.candidateFiles(cond, sch,
               skel.manifests, skel.manifestSummaries)
             if (kept.sizeIs >= skel.manifests.size) snapshot(id)
-            else ManifestIO.materializePartial(skel, kept, loadChunk)
+            else ManifestIO.materializePartial(skel, kept, loadChunk,
+              chunkCache.containsKey)
           case None => snapshot(id)
         }
       case _ => snapshot(id)
@@ -941,7 +944,7 @@ final class LakeTable private (
     n.put("schema_json", base.schemaJson)
     n.put("spec_id", base.currentSpecId)
     n.set[com.fasterxml.jackson.databind.JsonNode]("chunk",
-      m.readTree(ManifestIO.chunkToJson(entries)))
+      ManifestIO.chunkNode(entries))
     fs.mkdirs(stagedDir)
     writeStringExclusive(fs, stagedPath(wapId), m.writeValueAsString(n))
   }
@@ -967,7 +970,7 @@ final class LakeTable private (
         .toMap
     }.getOrElse(Map.empty)
     (n.path("schema_json").asText(), n.path("spec_id").asLong(),
-      ManifestIO.chunkFromJson(m.writeValueAsString(n.get("chunk"))),
+      ManifestIO.chunkFromNode(n.get("chunk")),
       sources)
   }
 
@@ -1690,7 +1693,7 @@ final class LakeTable private (
     marker.put("schema_json", base.schemaJson)
     marker.put("spec_id", base.currentSpecId)
     marker.set[com.fasterxml.jackson.databind.JsonNode]("chunk",
-      m.readTree(ManifestIO.chunkToJson(entries)))
+      ManifestIO.chunkNode(entries))
     // dest → source map: files arrive by RENAME, so after a crash each
     // one exists at exactly one of the two paths — recovery
     // (publish_staged / discard_staged) must know the other endpoint to
@@ -4307,14 +4310,13 @@ final class LakeTable private (
       }
     }
     // manifest chunks stranded by a lost race or crashed commit: named
-    // m-<uuid>.json, referenced by no RETAINED snapshot (a beyond-HEAD
+    // m-<uuid>.json.gz, referenced by no RETAINED snapshot (a beyond-HEAD
     // crashed commit's JSON is itself dead — commit() reclaims it on the
     // next attempt of that version, never reusing its chunks)
     if (fs.exists(metaDir)) {
       fs.listStatus(metaDir).foreach { st =>
         val name = st.getPath.getName
-        if (st.isFile && name.endsWith(".json") &&
-            (name.startsWith("m-") ||
+        if (st.isFile && (ManifestIO.isChunkFile(name) ||
               InlineChunkRe.matches(name)) && // promoted-then-stranded
             !referencedChunks(name) && st.getModificationTime < cutoff) {
           chunkCache.remove(name)
@@ -4780,9 +4782,7 @@ final class LakeTable private (
           chunkCache.put(name, entries)
           name
         } else {
-          val name = s"m-${UUID.randomUUID()}.json"
-          writeStringExclusive(fs, new Path(metaDir, name),
-            ManifestIO.chunkToJson(entries))
+          val name = ManifestIO.writeChunk(fs, metaDir, entries)
           chunkCache.put(name, entries)
           name
         }
@@ -4806,7 +4806,7 @@ final class LakeTable private (
     // same-named chunk; file-backed ones are deleted like before
     def dropNewChunks(): Unit = newChunks.foreach { n =>
       chunkCache.remove(n)
-      if (n.startsWith("m-")) fs.delete(new Path(metaDir, n), false)
+      if (ManifestIO.isChunkFile(n)) fs.delete(new Path(metaDir, n), false)
     }
     // crash recovery: a v<id>.json left by a commit that died before its
     // HEAD swap (HEAD still == our base) is an orphan — remove it, or the

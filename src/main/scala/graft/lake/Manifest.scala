@@ -1,6 +1,12 @@
 package graft.lake
 
+import java.nio.charset.StandardCharsets
+import java.util.UUID
+import java.util.zip.{GZIPInputStream, GZIPOutputStream}
+
+import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import scala.jdk.CollectionConverters._
 
@@ -32,18 +38,20 @@ final case class ManifestEntry(
   * Why: serializing the ENTIRE live-file manifest into every snapshot
   * JSON is O(table) metadata written per commit — invisible at test
   * scale, the metadata layer's bottleneck at 100 TB (~10⁶ files ×
-  * ~300 B of stats each ⇒ ~300 MB rewritten per append). Iceberg's
+  * ~1 KB of JSON stats each ⇒ ~1 GB rewritten per append). Iceberg's
   * answer is manifest files + a manifest list that REUSES the parent
   * snapshot's manifests; this is the same shape:
   *
   *   - per-file state lives in immutable chunk files
-  *     (`metadata/m-<uuid>.json`, ≤ [[ChunkTargetEntries]] entries);
+  *     (`metadata/m-<uuid>.json.gz`, ≤ [[ChunkTargetEntries]] entries,
+  *     compact JSON, gzip-compressed);
   *   - each snapshot JSON carries only scalars, the commit's file
   *     DELTA, the (small) delete-file lists, and the NAMES of the
   *     chunks covering its live files;
   *   - a commit reuses every parent chunk whose entries are unchanged,
-  *     rewrites (shrinks) only chunks that lost or changed entries
-  *     (cost ≤ one chunk, never the table), and writes the added
+  *     rewrites (shrinks), whole, every chunk that lost or changed an
+  *     entry (below [[ChunkTargetEntries]] files that one chunk is the
+  *     table's whole manifest), and writes the added
   *     entries as fresh chunks — O(delta + affected chunks) metadata
   *     bytes per commit;
   *   - small chunks are folded together LSM-style by size class
@@ -55,7 +63,10 @@ final case class ManifestEntry(
 object ManifestIO {
 
   /** Max entries a planned chunk may hold (≈ Iceberg's manifest target
-    * size). At ~300 B/entry a full chunk is ~150 KB of JSON. */
+    * size). Measured on the medallion silver table (11 columns, stats on
+    * each): an entry is ~1.8 KB of pretty-printed JSON, ~1.0 KB compact,
+    * ~49 B compact and gzip-compressed — a 200-entry chunk is 364 KB
+    * pretty, 9.7 KB as written, so a full chunk is ~25 KB on disk. */
   val ChunkTargetEntries: Int = 512
 
   /** Size-class fanout for the small-chunk fold: when a class
@@ -228,11 +239,41 @@ object ManifestIO {
 
   // ------------------------------------------------------------------ codec
 
-  /** Chunk file JSON: `{"entries": [{path, seq, stats, renames, bytes,
-    * rows}, …]}`. Immutable once written; named `m-<uuid>.json`. */
-  def chunkToJson(entries: Seq[ManifestEntry]): String = {
-    val m = Snapshot.mapper
-    val n = m.createObjectNode()
+  /** A file-backed chunk is `m-<uuid>.json.gz`: compact JSON, gzip-
+    * compressed (Iceberg's manifests default to gzip-compressed Avro).
+    * Spark's JSON reader decompresses by the same extension, so the
+    * distributed `.files` scan reads these files as they are. */
+  def isChunkFile(name: String): Boolean =
+    name.startsWith("m-") && name.endsWith(".json.gz")
+
+  /** Write `entries` as a fresh file-backed chunk in `dir` (exclusive
+    * create) and return its name. */
+  def writeChunk(fs: FileSystem, dir: Path,
+      entries: Seq[ManifestEntry]): String = {
+    val name = s"m-${UUID.randomUUID()}.json.gz"
+    val out = new GZIPOutputStream(fs.create(new Path(dir, name), false))
+    try out.write(chunkToJson(entries).getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+    name
+  }
+
+  /** Read one chunk file: gzip-compressed when named `*.gz` (every
+    * [[writeChunk]] file), plain JSON otherwise (an inline chunk that
+    * expiry promoted to a file keeps its `iv<id>-<k>.json` form). */
+  def readChunk(fs: FileSystem, p: Path): Seq[ManifestEntry] = {
+    val raw = fs.open(p)
+    val in = if (p.getName.endsWith(".gz")) new GZIPInputStream(raw) else raw
+    try chunkFromNode(Snapshot.mapper.readTree(in))
+    finally in.close()
+  }
+
+  /** Chunk JSON: `{"entries": [{path, seq, stats, renames, bytes,
+    * rows}, …]}`, compact. Immutable once written. */
+  def chunkToJson(entries: Seq[ManifestEntry]): String =
+    Snapshot.mapper.writeValueAsString(chunkNode(entries))
+
+  private[lake] def chunkNode(entries: Seq[ManifestEntry]): ObjectNode = {
+    val n = Snapshot.mapper.createObjectNode()
     val arr = n.putArray("entries")
     entries.foreach { e =>
       val o = arr.addObject()
@@ -255,11 +296,10 @@ object ManifestIO {
       }
       if (e.specId != 0L) o.put("spec", e.specId)
     }
-    m.writerWithDefaultPrettyPrinter().writeValueAsString(n)
+    n
   }
 
-  def chunkFromJson(json: String): Seq[ManifestEntry] = {
-    val n = Snapshot.mapper.readTree(json)
+  private[lake] def chunkFromNode(n: JsonNode): Seq[ManifestEntry] =
     n.path("entries").elements().asScala.map { o =>
       ManifestEntry(
         path = o.path("path").asText(),
@@ -283,7 +323,6 @@ object ManifestIO {
           else None,
         specId = if (o.has("spec")) o.path("spec").asLong() else 0L)
     }.toSeq
-  }
 
   /** Manifest-list snapshot JSON (`"manifests"` key marks the format;
     * legacy inline snapshots carry `"live_files"` instead): scalars,
@@ -303,8 +342,7 @@ object ManifestIO {
     if (inline.nonEmpty) {
       val io = n.putObject("inline_chunks")
       inline.toSeq.sortBy(_._1).foreach { case (name, entries) =>
-        io.set[ObjectNode](name, m.readTree(chunkToJson(entries))
-          .asInstanceOf[ObjectNode])
+        io.set[ObjectNode](name, chunkNode(entries))
       }
     }
     n.put("snapshot_id", s.snapshotId)
@@ -362,7 +400,7 @@ object ManifestIO {
         }
       }
     }
-    m.writerWithDefaultPrettyPrinter().writeValueAsString(n)
+    m.writeValueAsString(n)
   }
 
   /** One embedded delta chunk of a snapshot doc (written by
@@ -372,8 +410,7 @@ object ManifestIO {
       : Option[Seq[ManifestEntry]] = {
     val n = Snapshot.mapper.readTree(listJson).path("inline_chunks")
     if (!n.has(name)) None
-    else Some(chunkFromJson(
-      Snapshot.mapper.writeValueAsString(n.get(name))))
+    else Some(chunkFromNode(n.get(name)))
   }
 
   /** Every embedded delta chunk of a snapshot doc — loading a doc
@@ -382,20 +419,20 @@ object ManifestIO {
   def inlineChunksOf(listJson: String): Map[String, Seq[ManifestEntry]] = {
     val n = Snapshot.mapper.readTree(listJson).path("inline_chunks")
     n.properties().asScala.map(e =>
-      e.getKey -> chunkFromJson(
-        Snapshot.mapper.writeValueAsString(e.getValue))).toMap
+      e.getKey -> chunkFromNode(e.getValue)).toMap
   }
 
   /** Parse a snapshot JSON of EITHER format. For the manifest-list
     * format, `loadChunk` resolves chunk name → entries (callers route
-    * through an immutable-chunk cache); legacy inline JSONs parse
-    * without touching it. */
+    * through an immutable-chunk cache, which `cached` answers for);
+    * legacy inline JSONs parse without touching it. */
   def snapshotFromJson(json: String,
-      loadChunk: String => Seq[ManifestEntry]): Snapshot =
+      loadChunk: String => Seq[ManifestEntry],
+      cached: String => Boolean): Snapshot =
     listSkeleton(json) match {
       case None => Snapshot.fromJson(json)
       case Some(skel) =>
-        materialize(skel, loadChunks(skel.manifests, loadChunk))
+        materialize(skel, loadChunks(skel.manifests, loadChunk, cached))
     }
 
   /** Materialize only the named chunks of a skeleton — the pruned-scan
@@ -405,8 +442,9 @@ object ManifestIO {
     * whose predicate implied the skipped chunks are irrelevant; never
     * cached as the full snapshot. */
   def materializePartial(skel: Snapshot, names: Seq[String],
-      loadChunk: String => Seq[ManifestEntry]): Snapshot =
-    materialize(skel, loadChunks(names, loadChunk))
+      loadChunk: String => Seq[ManifestEntry],
+      cached: String => Boolean): Snapshot =
+    materialize(skel, loadChunks(names, loadChunk, cached))
 
   /** Parse a manifest-list snapshot JSON WITHOUT loading any chunk:
     * every scalar field plus chunk names and summaries, with the
@@ -474,11 +512,13 @@ object ManifestIO {
   /** Fetch chunks with bounded parallelism, preserving order. Object
     * stores are latency-bound per GET: a 10⁶-file table is ~2k chunks,
     * which serial loading turns into minutes of driver wait; 16
-    * concurrent fetches make it seconds. Single-chunk (and cache-warm)
-    * loads skip the pool. */
+    * concurrent fetches make it seconds. Single-chunk and cache-warm
+    * loads (every named chunk `cached`) skip the pool. */
   private def loadChunks(names: Seq[String],
-      loadChunk: String => Seq[ManifestEntry]): Seq[ManifestEntry] = {
-    if (names.sizeIs <= 1) return names.flatMap(loadChunk)
+      loadChunk: String => Seq[ManifestEntry],
+      cached: String => Boolean): Seq[ManifestEntry] = {
+    if (names.sizeIs <= 1 || names.forall(cached))
+      return names.flatMap(loadChunk)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(16, names.size))
     try {

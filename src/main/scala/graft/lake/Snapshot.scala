@@ -77,7 +77,8 @@ final case class Snapshot(
       * report and size-aware maintenance plans against. Absent file
       * (legacy manifest) = unknown. */
     fileInfo: Map[String, FileInfo] = Map.empty,
-    /** Names of the immutable manifest CHUNK files (`metadata/m-*.json`)
+    /** Names of the immutable manifest CHUNKS (`metadata/m-*.json.gz`
+      * files, or `iv<id>-<k>.json` delta chunks inline in a snapshot doc)
       * whose entries back this snapshot's per-file state — the manifest
       * list (see [[ManifestIO]]). Empty for a snapshot parsed from the
       * legacy inline format (or not yet planned at commit time); the

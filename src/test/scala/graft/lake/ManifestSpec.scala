@@ -189,17 +189,59 @@ class ManifestSpec extends AnyFunSuite {
     val df = Seq((1L, "a")).toDF("id", "v")
     val t = LakeTable.create(spark, root, df.schema)
     t.append(df.repartition(1))
-    // plant a fake orphan chunk (as a crashed commit would strand)
+    // plant an orphan chunk through the commit path's own writer, under
+    // its real name, as a commit that crashed after the chunk write
+    // would strand it
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val orphan = s"m-deadbeef-0000.json"
-    LakeTable.writeStringExclusive(fs,
-      new Path(root, s"${LakeTable.METADATA_DIR}/$orphan"),
-      ManifestIO.chunkToJson(Seq(ManifestEntry("data/x.parquet", 9L,
-        Map.empty, Map.empty, None))))
+    val metaDir = new Path(root, LakeTable.METADATA_DIR)
+    val orphan = ManifestIO.writeChunk(fs, metaDir,
+      Seq(ManifestEntry("data/x.parquet", 9L, Map.empty, Map.empty, None)))
+    assert(orphan.startsWith("m-") && orphan.endsWith(".json.gz"), orphan)
     val removed = t.removeOrphanFiles(olderThanMs = 0L)
     assert(removed.contains(s"${LakeTable.METADATA_DIR}/$orphan"),
       s"orphan chunk not swept: $removed")
+    assert(!fs.exists(new Path(metaDir, orphan)))
     assert(t.scan().count() == 1)
+  }
+
+  test("one-partition COW delete on a 200-file table writes one compressed chunk") {
+    import org.apache.spark.sql.functions.sum
+    val root = freshRoot
+    // rows ordered by partition and round-robined over 4 tasks: every
+    // task writes every one of the 50 partitions, ~200 files in ONE
+    // file-backed chunk (above the inline bound, below the target)
+    val df = (0 until 1000).map(i => (i.toLong, s"v$i", i / 20))
+      .toDF("id", "v", "p")
+    val t = LakeTable.create(spark, root, df.schema, Seq("p"))
+    t.append(df.repartition(4))
+    val base = t.currentSnapshot.get
+    assert(base.liveFiles.size > LakeTable.INLINE_CHUNK_MAX_ENTRIES &&
+      base.liveFiles.size <= ManifestIO.ChunkTargetEntries,
+      s"${base.liveFiles.size} files")
+    assert(base.manifests.size == 1 &&
+      ManifestIO.isChunkFile(base.manifests.head), base.manifests)
+    // a row-level delete in partition 7 rewrites that chunk whole; its
+    // compact gzip form is a few KiB
+    val before = metaFiles(root)
+    t.delete($"p" === 7 && $"id" % 2 === 0)
+    val written = metaFiles(root).collect {
+      case (n, len) if !before.get(n).contains(len) => len
+    }.sum
+    assert(written < 16 * 1024,
+      s"a one-partition delete wrote $written B of metadata")
+    val snap = t.currentSnapshot.get
+    assert(snap.removedFiles.nonEmpty && snap.addedFiles.nonEmpty,
+      "expected a copy-on-write rewrite")
+    val rows = 1000L - 10L
+    def readBack(h: LakeTable): (Long, Long, Long) =
+      (h.scan().count(), h.files.count(),
+        h.manifestsTable.agg(sum("entry_count")).first().getLong(0))
+    val expected = (rows, snap.liveFiles.size.toLong,
+      snap.liveFiles.size.toLong)
+    assert(readBack(t) == expected)
+    assert(readBack(LakeTable.load(spark, root)) == expected)
+    t.expireSnapshots(keepLast = 1)
+    assert(readBack(LakeTable.load(spark, root)) == expected)
   }
 
   test("expiry of a ~1k-file snapshot completes and reclaims everything dead") {
@@ -258,8 +300,11 @@ class ManifestSpec extends AnyFunSuite {
       ManifestEntry("data/f2.parquet", 0L, Map.empty, Map.empty, None),
       ManifestEntry("data/f3.parquet", 7L, Map.empty, Map.empty,
         Some(FileInfo(10L, -1L))))
-    assert(ManifestIO.chunkFromJson(ManifestIO.chunkToJson(entries))
-      == entries)
+    val dir = new Path(TestSpark.tmpDir("chunk-codec"))
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val name = ManifestIO.writeChunk(fs, dir, entries)
+    assert(ManifestIO.isChunkFile(name))
+    assert(ManifestIO.readChunk(fs, new Path(dir, name)) == entries)
   }
 
   test("summary-pruned scan loads strictly fewer chunks than exist") {
