@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Prints ONE compact JSON line (bracketed around a full
   * per-query line) on stdout.
@@ -11,51 +10,18 @@ import org.apache.spark.sql.SparkSession
   *   SPARK_GRAFT_REPS     runs per query; best (min) time is reported
   *                        (default 2 — one co-tenant CPU spike can no
   *                        longer masquerade as a plan regression)
+  *   SPARK_GRAFT_CONF     extra session confs, `k=v;k=v` (A/B runs; see
+  *                        [[GraftSession]], whose session shape this runs)
+  *   SPARK_GRAFT_TIMERS   1 = print the lake commit-path timer totals
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
     val subset = sys.env.get("SPARK_GRAFT_QUERIES")
       .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // no-fork local fs: without libhadoop, Hadoop's local fs forks a
-      // `chmod` per created file/dir (~20 ms each) — see
-      // graft.lake.FastLocalFs; file:// only, no semantic change.
-      // SPARK_GRAFT_FS overrides (A/B harness; unset = the fix).
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_FS",
-          classOf[graft.lake.NoForkLocalFileSystem].getName))
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_AFS",
-          classOf[graft.lake.NoForkLocalFs].getName))
-      // serialized (single-file) shuffle writer for EVERY shuffle: the
-      // default bypass-merge writer opens + concatenates R per-partition
-      // files per map task, which at R=32 and small blocks is ~40% of
-      // task CPU (stack-sampled, r19). Production partition counts
-      // (thousands) sit above the 200-partition bypass threshold and
-      // never take that path — this pins the local regime to the same
-      // writer large scale uses. SPARK_GRAFT_CONF overrides (A/B).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // JVM case mapping (the pre-Spark-4 semantics): Spark 4 routes
-      // lower()/upper() through ICU full casing by default, which has
-      // NO all-ASCII fast path — stack-sampled at ~24% of task CPU on
-      // the tokenize/shingle-heavy dedup family over an ASCII corpus.
-      // The JVM path lowercases ASCII byte-wise and matches ICU on it
-      // exactly. SPARK_GRAFT_CONF overrides (A/B).
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config(new org.apache.spark.SparkConf(false).setAll(
-        // A/B harness: SPARK_GRAFT_CONF="k=v;k=v" extra session confs
-        sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';'))
-          .map(_.split("=", 2)).collect { case Array(k, v) => (k, v) }))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench", cpus)
     // JVM/codegen warmup OUTSIDE the measurements: without it the
     // alphabetically-first query absorbs classloading + JIT + first
     // codegen compile (~3-5 s of one-time cost booked against an

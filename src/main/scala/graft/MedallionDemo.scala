@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.lake.LakeCatalog
 import graft.pipeline.PipelineRunner
 
@@ -18,22 +16,8 @@ import graft.pipeline.PipelineRunner
 object MedallionDemo {
   def main(args: Array[String]): Unit = {
     val workDir = args.headOption.getOrElse("/tmp/graft-demo")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-medallion-demo")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // no-fork local fs: without libhadoop, Hadoop's local fs forks a
-      // `chmod` per created file/dir (~20 ms each) — see
-      // graft.lake.FastLocalFs; file:// only, no semantic change
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.lake.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.lake.NoForkLocalFs].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-medallion-demo",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
 
     val rawDir = s"$workDir/raw"
     // optional: seed the raw dir from a source dir of CSVs

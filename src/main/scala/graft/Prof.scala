@@ -1,16 +1,19 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: attribute one query's wall time (optimization guide §1).
   *
-  * Per query it prints, after a noop-sink run under the Bench session
-  * shape: total wall seconds, every Spark job's duration with its
-  * call-site (which action inside the query paid), and the LakeTable
-  * commit-path timer profile (c.* / af.* labels). The gap between the
-  * job-sum and the wall is driver-side work (planning, fs metadata,
-  * commit protocol outside jobs).
+  * Per query it prints, after a noop-sink run under [[GraftSession]]:
+  * total wall seconds, every Spark job's duration with its call-site
+  * (which action inside the query paid), and the LakeTable commit-path
+  * timer profile (c.* / af.* labels). The gap between the job-sum and
+  * the wall is driver-side work (planning, fs metadata, commit protocol
+  * outside jobs).
+  *
+  * `SPARK_GRAFT_SAMPLE=tasks` (executor task threads) or `=driver` (the
+  * query-driving thread) also stack-samples the run every 20 ms and
+  * prints the hottest frames; unset = no sampler.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *        runMain graft.Prof <queryName> [queryName...]
@@ -18,33 +21,11 @@ import org.apache.spark.sql.SparkSession
 object Prof {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt.max(1)
     val names = if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // no-fork local fs: without libhadoop, Hadoop's local fs forks a
-      // `chmod` per created file/dir (~20 ms each) — see
-      // graft.lake.FastLocalFs; file:// only, no semantic change
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.lake.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.lake.NoForkLocalFs].getName)
-      // match the Bench session's tuned defaults (see Bench.scala);
-      // SPARK_GRAFT_CONF still overrides for A/B
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config(new org.apache.spark.SparkConf(false).setAll(
-        // A/B harness: SPARK_GRAFT_CONF="k=v;k=v" extra session confs
-        sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';'))
-          .map(_.split("=", 2)).collect { case Array(k, v) => (k, v) }))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-prof", cpus)
     // same warmup as Bench so the first profiled query is not charged
     // classloading + first codegen
     spark.range(1000000).selectExpr("sum(id) AS s", "count(*) AS n")
@@ -78,11 +59,18 @@ object Prof {
       }
     })
 
+    val sampler = sys.env.get("SPARK_GRAFT_SAMPLE").map {
+      case "driver" => new StackSampler(driver = true)
+      case "tasks" => new StackSampler(driver = false)
+      case m => sys.error(s"SPARK_GRAFT_SAMPLE=$m: expected driver or tasks")
+    }
+
     import graft.lake.LakeTable.{timers, timersEnabled}
     import scala.jdk.CollectionConverters._
     names.foreach { n =>
       (1 to reps).foreach { rep =>
         jobs.clear(); stages.clear(); timers.clear(); timersEnabled.set(true)
+        sampler.foreach(_.start())
         val t0 = System.nanoTime()
         try SparkEntry.queries(n)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
@@ -90,6 +78,7 @@ object Prof {
           println(s"[$n] FAILED: ${e.getMessage.take(300)}") }
         val wall = (System.nanoTime() - t0) / 1e9
         timersEnabled.set(false)
+        sampler.foreach(_.stop())
         spark.catalog.clearCache()
         // let the async listener bus drain before reading the queues
         Thread.sleep(300)
@@ -116,8 +105,48 @@ object Prof {
         if (prof.nonEmpty)
           println("  lake timers: " + prof.map { case (k, ms) =>
             f"$k=$ms%.0f ms" }.mkString(", "))
+        sampler.foreach(_.report())
       }
     }
     spark.stop()
+  }
+
+  /** Stack sampler: every 20 ms while started, histograms the first
+    * non-JDK/Scala frame of each RUNNABLE executor task thread (local
+    * mode: "Executor task launch worker-*"), or of the thread that
+    * built it when `driver`. */
+  private final class StackSampler(driver: Boolean) {
+    private val target = Thread.currentThread()
+    private val hist = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    @volatile private var on = false
+    private val thread = new Thread(() => while (true) {
+      if (on) Thread.getAllStackTraces.forEach { (t, stack) =>
+        if ((if (driver) t eq target
+             else t.getName.startsWith("Executor task launch")) &&
+            t.getState == Thread.State.RUNNABLE && stack.nonEmpty) {
+          val key = stack.take(24).find { f =>
+              val c = f.getClassName
+              !c.startsWith("java.") && !c.startsWith("jdk.") &&
+                !c.startsWith("scala.") && !c.startsWith("sun.")
+            }.getOrElse(stack.head).toString
+          hist.merge(key, 1, (a, b) => a + b)
+        }
+      }
+      Thread.sleep(20)
+    })
+    thread.setDaemon(true)
+    thread.start()
+
+    def start(): Unit = { hist.clear(); on = true }
+    def stop(): Unit = on = false
+
+    def report(): Unit = {
+      import scala.jdk.CollectionConverters._
+      val n = hist.asScala.values.map(_.intValue).sum
+      println(s"  sampler: $n samples of RUNNABLE " +
+        (if (driver) "driver" else "task") + " threads; hottest:")
+      hist.asScala.toSeq.sortBy(-_._2).take(30).foreach { case (f, c) =>
+        println(f"    ${c.intValue * 100.0 / n}%5.1f%% $f") }
+    }
   }
 }

@@ -136,22 +136,7 @@ object ScaleSmoke {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val workDir = args.lift(1).getOrElse(
       Files.createTempDirectory("graft-scale").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-smoke")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // no-fork local fs: without libhadoop, Hadoop's local fs forks a
-      // `chmod` per created file/dir (~20 ms each) — see
-      // graft.lake.FastLocalFs; file:// only, no semantic change
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.lake.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.lake.NoForkLocalFs].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = smokeSession("graft-scale-smoke")
 
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
     val n = orders.count()
@@ -233,25 +218,11 @@ object ScaleSmoke {
     * the manifest fold alone. Asserts the plan holds no file scan and
     * reports wall time + driver-heap delta per run. */
   private def metadataAggSmoke(sfDir: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-magg-smoke")
-      .config("spark.sql.shuffle.partitions", "512")
-      // AQE would helpfully coalesce the deliberate 512-way round-robin
-      // and shrink the file count this smoke exists to create
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // no-fork local fs: without libhadoop, Hadoop's local fs forks a
-      // `chmod` per created file/dir (~20 ms each) — see
-      // graft.lake.FastLocalFs; file:// only, no semantic change
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.lake.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.lake.NoForkLocalFs].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = smokeSession("graft-magg-smoke")
+    spark.conf.set("spark.sql.shuffle.partitions", "512")
+    // AQE would helpfully coalesce the deliberate 512-way round-robin
+    // and shrink the file count this smoke exists to create
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     val work = Files.createTempDirectory("graft-magg-scale").toString
 
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
@@ -340,24 +311,13 @@ object ScaleSmoke {
     spark.stop()
   }
 
-  private def smokeSession(name: String): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(name)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // no-fork local fs: without libhadoop, Hadoop's local fs forks a
-      // `chmod` per created file/dir (~20 ms each) — see
-      // graft.lake.FastLocalFs; file:// only, no semantic change
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.lake.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.lake.NoForkLocalFs].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+  private def smokeSession(name: String): SparkSession =
+    GraftSession(name, sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+
+  /** Wall seconds of `f`, with its result. */
+  private def timed[T](f: => T): (Double, T) = {
+    val t0 = System.nanoTime(); val r = f
+    ((System.nanoTime() - t0) / 1e9, r)
   }
 
   /** `add-files [sfDir] [nFiles]`: import cost at file-count scale —
@@ -673,10 +633,6 @@ object ScaleSmoke {
       f"(${metaBytes / commits}%d bytes/commit)")
     require(last <= first * 3.0,
       f"commit cost grew with history: $first%.4f -> $last%.4f s")
-    def timed(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime(); val r = f
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
     val (planSec, hit) = timed(lt.scan(col("id") === (commits / 2).toLong)
       .count())
     // first metadata view pays the one-time snaplog reconciliation
@@ -1429,10 +1385,6 @@ object ScaleSmoke {
     val ceiling = 1000L
     val overCeiling = nBatch > ceiling
     require(overCeiling, s"smoke needs an over-threshold batch ($nBatch)")
-    def timed[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
     val (tGated, gated) = timed(IncrementalDedup.admit(idx, corpus,
       batch, bands = 64, threshold = 0.5,
       broadcastBatch = !overCeiling))
@@ -1514,10 +1466,6 @@ object ScaleSmoke {
     spark.catalog.clearCache()
     println(s"[dedup-corpus] base: ${raw.count()} docs, " +
       s"${docs.count()} after removing intrinsic dup participants")
-    def timed[T](f: => T): (Double, T) = {
-      val t0 = System.nanoTime(); val r = f
-      ((System.nanoTime() - t0) / 1e9, r)
-    }
     def runAt(m: Int): (Double, Double, Double) = {
       val corpus = dedupCorpus(docs, m)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1648,10 +1596,7 @@ object ScaleSmoke {
         col("invoiceid") >= i * (maxKey + 1) / 10 &&
           col("invoiceid") < (i + 1) * (maxKey + 1) / 10))
     }
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    val tInit = timed(job.runIncremental())
+    val (tInit, _) = timed(job.runIncremental())
     println(f"[gold-inc] initial refresh: $tInit%.2f s ($n silver rows)")
     val preHead = silver.currentSnapshotId.get
     // 0.5% of keys, CONTIGUOUS range (the sort order makes it prune)
@@ -1660,7 +1605,7 @@ object ScaleSmoke {
     val head = silver.currentSnapshotId.get
     val changed = silver.changes(preHead, head).count()
     val nUpd = silverDf.where(col("invoiceid") <= n / 200 * 5).count()
-    val tDelta = timed(job.runIncremental())
+    val (tDelta, _) = timed(job.runIncremental())
     println(f"[gold-inc] delta refresh: $tDelta%.2f s " +
       f"($changed change rows for $nUpd updated keys)")
     // (a) the changelog the refresh consumed is the DELTA, not silver:
@@ -1684,7 +1629,7 @@ object ScaleSmoke {
     // (c) exactness vs the from-scratch mart
     val gotInc = cat.loadTable("m", "gold").scan()
       .collect().map(_.toString).sorted.toSeq
-    val tFull = timed(job.run())
+    val (tFull, _) = timed(job.run())
     val gotFull = cat.loadTable("m", "gold").scan()
       .collect().map(_.toString).sorted.toSeq
     println(f"[gold-inc] full recompute for comparison: $tFull%.2f s")
@@ -1762,19 +1707,14 @@ object ScaleSmoke {
         new org.apache.hadoop.fs.Path(
           f"$work/delta/_delta_log/$v%020d.json"))
         .split('\n').count(_.contains("\"cdc\""))
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e6)
-    }
     def curVersion: Long =
       DeltaImport.state(spark, s"$work/delta", None).version
     // leg A: insert-only — the publish must emit NO cdc
     lt.append(orders.limit(2000).repartition(1))
-    val (_, tIns) = timed(DeltaExport.publish(lt, s"$work/delta"))
+    val (tIns, _) = timed(DeltaExport.publish(lt, s"$work/delta"))
     require(cdcActions(curVersion) == 0,
       "insert-only publish emitted cdc")
-    println(f"[cdf-publish] insert-only publish: $tIns%.0f ms, 0 cdc " +
+    println(f"[cdf-publish] insert-only publish: ${tIns * 1000}%.0f ms, 0 cdc " +
       "actions (file-action synthesis is the feed)")
     // untimed warm-up so the timed legs below compare codegen-warm
     // jobs, not first-run JIT
@@ -1786,7 +1726,7 @@ object ScaleSmoke {
     lt.update(col("o_orderpriority") === "1-URGENT" &&
       col("o_orderkey") % 10 === 0,
       Map("o_totalprice" -> (col("o_totalprice") + 1)))
-    val (_, tOne) = timed(DeltaExport.publish(lt, s"$work/delta"))
+    val (tOne, _) = timed(DeltaExport.publish(lt, s"$work/delta"))
     val vOne = curVersion
     val nOne = DeltaImport.changeScan(spark, s"$work/delta", vOne - 1,
       Some(vOne)).count()
@@ -1794,12 +1734,12 @@ object ScaleSmoke {
     // leg C: the same per-row update across ALL partitions
     lt.update(col("o_orderkey") % 10 === 1,
       Map("o_totalprice" -> (col("o_totalprice") + 1)))
-    val (_, tAll) = timed(DeltaExport.publish(lt, s"$work/delta"))
+    val (tAll, _) = timed(DeltaExport.publish(lt, s"$work/delta"))
     val vAll = curVersion
     val nAll = DeltaImport.changeScan(spark, s"$work/delta", vAll - 1,
       Some(vAll)).count()
-    println(f"[cdf-publish] one-partition update: $tOne%.0f ms " +
-      f"($nOne change rows); all-partition update: $tAll%.0f ms " +
+    println(f"[cdf-publish] one-partition update: ${tOne * 1000}%.0f ms " +
+      f"($nOne change rows); all-partition update: ${tAll * 1000}%.0f ms " +
       f"($nAll change rows) — cost follows REWRITTEN data")
     // end-to-end: the whole produced feed reads back consistently
     val nWarm = DeltaImport.changeScan(spark, s"$work/delta", vOne - 2,

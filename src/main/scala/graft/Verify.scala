@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,29 +9,8 @@ object Verify {
     // optional trailing query names: dump only that subset (local
     // iteration); the driver always runs the full set
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // no-fork local fs: without libhadoop, Hadoop's local fs forks a
-      // `chmod` per created file/dir (~20 ms each) — see
-      // graft.lake.FastLocalFs; file:// only, no semantic change
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.lake.NoForkLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.lake.NoForkLocalFs].getName)
-      // serialized (single-file) shuffle writer — see Bench.scala: the
-      // bypass-merge writer's R-files-per-map-task overhead dominates
-      // small shuffles; production partition counts never take it.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // JVM case mapping — see Bench.scala: ICU full casing (the Spark
-      // 4 default) has no all-ASCII fast path; identical on ASCII.
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession("graft-verify", cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -19,10 +19,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * On a local filesystem the JVM already creates files/dirs honoring
   * the process umask, so the follow-up chmod to the SAME umask-derived
   * mode is a no-op; skipping it changes nothing observable (verified
-  * by the unchanged oracle/golden runs). Sessions opt in with
-  *
-  *   .config("spark.hadoop.fs.file.impl",
-  *           classOf[graft.lake.NoForkLocalFileSystem].getName)
+  * by the unchanged oracle/golden runs). [[graft.GraftSession]] installs
+  * it (`spark.hadoop.fs.file.impl`) for every session the engine builds.
   *
   * Production deployments on HDFS/S3 never hit this path (different
   * scheme), and a deployment WITH libhadoop native IO never forks in

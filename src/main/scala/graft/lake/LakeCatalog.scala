@@ -119,7 +119,7 @@ final class LakeCatalog(val spark: SparkSession, val warehouse: String) {
   // could lose every stored view), and in-process mutations serialize on
   // one lock so concurrent createView/dropView can't lose updates
   private def viewsPointer: PointerStore =
-    PointerStore.forTable(spark, fs, whPath.toUri, hconf)
+    PointerStore.forTable(fs)
   private val viewsLock = new Object
 
   /** Stored views of `ns` in CREATION ORDER (a later view may reference

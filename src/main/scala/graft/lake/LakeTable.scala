@@ -40,8 +40,9 @@ import scala.jdk.CollectionConverters._
   *     snapshot range — no re-scan of history (the reference's core trick,
   *     scripts/bronze-silver.py:149-152).
   *   - Commits are optimistic single-writer: exclusive-create of the new
-  *     metadata file detects racing committers; HEAD swap is an atomic
-  *     rename. (The reference's orchestration is strictly sequential,
+  *     metadata file detects racing committers; the HEAD swap is a
+  *     generation pointer's conditional create ([[PointerStore]]). (The
+  *     reference's orchestration is strictly sequential,
   *     aws-step-function/step-function.json.)
   */
 final class LakeTable private (
@@ -53,11 +54,10 @@ final class LakeTable private (
   // sessionState.newHadoopConf() folds runtime `spark.conf.set("fs...")`
   // entries on top of the core conf (same resolution as Spark's sources)
   private val hconf = spark.sessionState.newHadoopConf()
-  // session-wide, once: fixes the parquet-pushdown -0.0 equality hole
-  // (see NormalizeZeroComparisonLiterals) for every scan in the session
-  NormalizeZeroComparisonLiterals.ensure(spark)
-  // metadata-only COUNT(*) rewrite for manifest-backed scans
-  ManifestAggRule.ensure(spark)
+  // session-wide, once: the engine's optimizer rules (see
+  // [[OptimizerRules]]) must reach every session that opens a table,
+  // including sessions built outside [[graft.GraftSession]]
+  OptimizerRules.install(spark)
 
   private val rootPath = new Path(root)
   private def fs: FileSystem = rootPath.getFileSystem(hconf)
@@ -70,11 +70,8 @@ final class LakeTable private (
   def currentSnapshotId: Option[Long] =
     readPointer(headPath).map(_.trim.toLong)
 
-  /** Pointer swap/read protocol, selected per session (see
-    * [[PointerStore]]): rename-based by default, generation files for
-    * object stores without atomic rename. */
-  private val pointerStore: PointerStore =
-    PointerStore.forTable(spark, fs, rootPath.toUri, hconf)
+  /** Pointer swap/read protocol (see [[PointerStore]]). */
+  private val pointerStore: PointerStore = PointerStore.forTable(fs)
 
   private def readPointer(p: Path): Option[String] = pointerStore.read(p)
 
@@ -129,7 +126,7 @@ final class LakeTable private (
     require(fs.exists(p),
       s"snapshot $id not found in $root (expired or never committed)")
     val json = readString(fs, p)
-    val s = ManifestIO.listSkeleton(json).getOrElse(Snapshot.fromJson(json))
+    val s = ManifestIO.listSkeleton(json)
     if (currentSnapshotId.exists(id <= _)) {
       if (skelCache.size >= 256) skelCache.clear()
       skelCache.put(id, s)
@@ -335,7 +332,6 @@ final class LakeTable private (
     // inventory, so `.files` is a distributed JSON scan + explode — no
     // driver-side row materialization. At 10⁶ files that is a few
     // thousand chunk files read in parallel, not a 300 MB driver list.
-    if (snap.manifests.isEmpty) return filesLegacy(snap)
     // file-backed chunks scan DISTRIBUTED (Spark gunzips the
     // `m-*.json.gz` chunk files by their extension); inline chunks
     // (small by the commit-path bound) parse driver-side from their
@@ -347,14 +343,13 @@ final class LakeTable private (
       else Some(spark.read.option("multiLine", "true")
         .schema(CHUNK_READ_SCHEMA)
         .json(backed.map(n => new Path(metaDir, n).toString): _*))
+    // an empty table (zero chunks) reads an empty inline set: same schema
     val inlineDf =
-      if (inline.isEmpty) None
-      else {
-        val enc = org.apache.spark.sql.Encoders.STRING
-        Some(spark.read.schema(CHUNK_READ_SCHEMA).json(
-          spark.createDataset(inline.map(n =>
-            ManifestIO.chunkToJson(loadChunk(n))))(enc)))
-      }
+      if (inline.isEmpty && backed.nonEmpty) None
+      else Some(spark.read.schema(CHUNK_READ_SCHEMA).json(
+        spark.createDataset(inline.map(n =>
+          ManifestIO.chunkToJson(loadChunk(n))))(
+          org.apache.spark.sql.Encoders.STRING)))
     val parts = split(col("e.path"), "/")
     (backedDf.toSeq ++ inlineDf.toSeq).reduce(_ unionByName _)
       .select(explode(col("entries")).as("e"))
@@ -370,30 +365,6 @@ final class LakeTable private (
         map_filter(coalesce(col("e.stats"), map().cast(BOUNDS_TYPE)),
           (k, _) => !k.startsWith(BloomStats.Prefix) &&
             !k.startsWith(FileStats.NullsPrefix)).as("bounds"))
-  }
-
-  /** Driver-side `.files` for tables still on the legacy inline
-    * manifest (or empty tables — zero chunks to scan). */
-  private def filesLegacy(snap: Snapshot): DataFrame = {
-    val sch = StructType(Seq(
-      StructField("file_path", StringType, nullable = false),
-      StructField("partition", StringType, nullable = false),
-      StructField("seq", LongType, nullable = false),
-      StructField("size_bytes", LongType), // null = legacy manifest
-      StructField("record_count", LongType),
-      StructField("bounds", BOUNDS_TYPE, nullable = false)))
-    val rows = snap.liveFiles.sorted.map { f =>
-      val partition = f.split('/').drop(1).dropRight(1).mkString("/")
-      val bounds = snap.fileStats.getOrElse(f, Map.empty)
-        .filterNot { case (c, _) => FileStats.isInternalKey(c) }
-        .map { case (c, cs) => c -> Row(cs.min, cs.max) }
-      val fi = snap.fileInfo.get(f)
-      Row(f, partition, snap.fileSeq.getOrElse(f, 0L),
-        fi.map(i => Long.box(i.bytes)).orNull,
-        fi.filter(_.rows >= 0).map(i => Long.box(i.rows)).orNull,
-        bounds)
-    }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), sch)
   }
 
   /** Metadata view ≡ Iceberg's `<table>.snapshots`: one row per retained
@@ -422,8 +393,7 @@ final class LakeTable private (
   def partitions: DataFrame = {
     // executor-side aggregation over the chunk-backed `.files` view —
     // a sum over null is kept null-propagating (a partition with ANY
-    // file of unknown size/rows reports unknown totals, same contract
-    // as the legacy driver synthesis)
+    // file of unknown size/rows reports unknown totals)
     files.groupBy(col("partition")).agg(
       count(lit(1)).as("file_count"),
       min(col("seq")).as("min_seq"),
@@ -537,7 +507,7 @@ final class LakeTable private (
     * O(surviving chunks) instead of O(live files) — the 10⁸-file
     * analogue of Iceberg planning from manifest-list partition
     * summaries. Falls back to the fully-materialized snapshot when it
-    * is already cached (free), the format predates summaries, or the
+    * is already cached (free), carries no chunk summaries, or the
     * predicate does not analyze; a partial snapshot is never cached. */
   private def currentPrunedFor(
       predicate: org.apache.spark.sql.Column): Snapshot = {
@@ -548,20 +518,17 @@ final class LakeTable private (
     val p = new Path(metaDir, s"v$id.json")
     require(fs.exists(p),
       s"snapshot $id not found in $root (expired or never committed)")
-    val json = readString(fs, p)
-    ManifestIO.listSkeleton(json) match {
-      case Some(skel) if skel.manifestSummaries.nonEmpty =>
-        val sch = DataType.fromJson(skel.schemaJson).asInstanceOf[StructType]
-        analyzedCond(predicate, sch) match {
-          case Some(cond) =>
-            val kept = PredicatePruning.candidateFiles(cond, sch,
-              skel.manifests, skel.manifestSummaries)
-            if (kept.sizeIs >= skel.manifests.size) snapshot(id)
-            else ManifestIO.materializePartial(skel, kept, loadChunk,
-              chunkCache.containsKey)
-          case None => snapshot(id)
-        }
-      case _ => snapshot(id)
+    val skel = ManifestIO.listSkeleton(readString(fs, p))
+    if (skel.manifestSummaries.isEmpty) return snapshot(id)
+    val sch = DataType.fromJson(skel.schemaJson).asInstanceOf[StructType]
+    analyzedCond(predicate, sch) match {
+      case Some(cond) =>
+        val kept = PredicatePruning.candidateFiles(cond, sch,
+          skel.manifests, skel.manifestSummaries)
+        if (kept.sizeIs >= skel.manifests.size) snapshot(id)
+        else ManifestIO.materializePartial(skel, kept, loadChunk,
+          chunkCache.containsKey)
+      case None => snapshot(id)
     }
   }
 
@@ -4678,10 +4645,7 @@ final class LakeTable private (
       renamesOverride.isEmpty && seqOverride.isEmpty &&
       infoOverride.isEmpty && reuseChunksFrom.isEmpty &&
       fileSpecOverride.isEmpty &&
-      live.length == base.liveFiles.length + added.length &&
-      // a legacy inline base has files but no chunks — the slow path
-      // chunks its whole carried state (the upgrade commit)
-      (base.manifests.nonEmpty || base.liveFiles.isEmpty)
+      live.length == base.liveFiles.length + added.length
     lazy val liveSet = live.toSet
     val stats = statsOverride.getOrElse(
       if (appendShaped) base.fileStats ++ addedStats
@@ -5287,8 +5251,8 @@ object LakeTable {
     }
 
   def exists(spark: SparkSession, root: String): Boolean =
-    // resolved through the session's pointer store: a generation-store
-    // table has no literal HEAD file, only HEAD.gen-<n> entries
+    // resolved through the pointer store: HEAD is its generation files
+    // (`.ptr-HEAD/gen-<n>`), never a literal HEAD file
     new LakeTable(spark, root).currentSnapshotId.isDefined
 
   /** DDL create with an explicit schema (≡ reference K5,

@@ -324,10 +324,9 @@ object ManifestIO {
         specId = if (o.has("spec")) o.path("spec").asLong() else 0L)
     }.toSeq
 
-  /** Manifest-list snapshot JSON (`"manifests"` key marks the format;
-    * legacy inline snapshots carry `"live_files"` instead): scalars,
-    * the commit's file delta, chunk names, and the delete-file lists —
-    * O(delta) bytes, never O(table).
+  /** Manifest-list snapshot JSON: scalars, the commit's file delta,
+    * chunk names, and the delete-file lists — O(delta) bytes, never
+    * O(table).
     *
     * `inline` carries this commit's NEW delta chunks embedded in the
     * snapshot doc itself (named `iv<id>-<k>.json`) — one exclusive
@@ -422,18 +421,15 @@ object ManifestIO {
       e.getKey -> chunkFromNode(e.getValue)).toMap
   }
 
-  /** Parse a snapshot JSON of EITHER format. For the manifest-list
-    * format, `loadChunk` resolves chunk name → entries (callers route
-    * through an immutable-chunk cache, which `cached` answers for);
-    * legacy inline JSONs parse without touching it. */
+  /** Parse a snapshot JSON and materialize its per-file state:
+    * `loadChunk` resolves chunk name → entries (callers route through an
+    * immutable-chunk cache, which `cached` answers for). */
   def snapshotFromJson(json: String,
       loadChunk: String => Seq[ManifestEntry],
-      cached: String => Boolean): Snapshot =
-    listSkeleton(json) match {
-      case None => Snapshot.fromJson(json)
-      case Some(skel) =>
-        materialize(skel, loadChunks(skel.manifests, loadChunk, cached))
-    }
+      cached: String => Boolean): Snapshot = {
+    val skel = listSkeleton(json)
+    materialize(skel, loadChunks(skel.manifests, loadChunk, cached))
+  }
 
   /** Materialize only the named chunks of a skeleton — the pruned-scan
     * path: callers pass the chunk subset whose [[Snapshot
@@ -448,14 +444,14 @@ object ManifestIO {
 
   /** Parse a manifest-list snapshot JSON WITHOUT loading any chunk:
     * every scalar field plus chunk names and summaries, with the
-    * per-file maps left empty. None for a legacy inline JSON. */
-  def listSkeleton(json: String): Option[Snapshot] = {
+    * per-file maps left empty. */
+  def listSkeleton(json: String): Snapshot = {
     val n = Snapshot.mapper.readTree(json)
-    if (!n.has("manifests")) return None
+    require(n.has("manifests"),
+      "snapshot doc carries no manifest list (not a graft-lake snapshot)")
     def arr(name: String): Seq[String] =
       n.path(name).elements().asScala.map(_.asText()).toSeq
-    val manifests = arr("manifests")
-    val skeleton = Snapshot(
+    Snapshot(
       snapshotId = n.path("snapshot_id").asLong(),
       parentId =
         if (n.has("parent_id")) Some(n.path("parent_id").asLong()) else None,
@@ -488,7 +484,7 @@ object ManifestIO {
           DvFile(o.path("path").asText(), o.path("seq").asLong(),
             o.path("bytes").asLong())
         }.toSeq,
-      manifests = manifests,
+      manifests = arr("manifests"),
       partitionSpecs =
         if (!n.has("partition_specs")) Map.empty
         else n.path("partition_specs").properties().asScala.map { e =>
@@ -506,7 +502,6 @@ object ManifestIO {
               ce.getValue.path("max").asText())
           }.toMap
         }.toMap)
-    Some(skeleton)
   }
 
   /** Fetch chunks with bounded parallelism, preserving order. Object

@@ -1,6 +1,5 @@
 package graft.lake
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, EvalMode, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
@@ -648,14 +647,5 @@ object ManifestAggRule extends Rule[LogicalPlan] {
       else filteredRewrite(agg).getOrElse(agg)
     case agg: Aggregate if agg.aggregateExpressions.nonEmpty =>
       groupedRewrite(agg).getOrElse(agg)
-  }
-
-  /** Idempotent per-session registration (same hook as
-    * [[NormalizeZeroComparisonLiterals]]). */
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental
-    if (!exp.extraOptimizations.contains(this))
-      exp.extraOptimizations = exp.extraOptimizations :+ this
   }
 }

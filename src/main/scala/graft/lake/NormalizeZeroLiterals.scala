@@ -1,6 +1,5 @@
 package graft.lake
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, Expression, GreaterThanOrEqual, In, IsNotNull, LessThanOrEqual, Literal, Or}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -85,12 +84,4 @@ object NormalizeZeroComparisonLiterals extends Rule[LogicalPlan] {
         val z = zeroRange(a, vs.find(isFpZero).get.asInstanceOf[Literal])
         if (rest.isEmpty) z else Or(In(a, rest), z)
     }
-
-  /** Idempotent per-session registration. */
-  def ensure(spark: SparkSession): Unit = synchronized {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental
-    if (!exp.extraOptimizations.contains(this))
-      exp.extraOptimizations = exp.extraOptimizations :+ this
-  }
 }

@@ -1,40 +1,28 @@
 package graft.lake
 
-import java.util.UUID
+import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-
-/** Storage strategy for the table's swap-replaced POINTER files (HEAD,
+/** Storage protocol for the table's swap-replaced POINTER files (HEAD,
   * refs.json) — the one commit-protocol piece whose correct shape
-  * depends on the filesystem's atomicity guarantees, extracted so each
-  * backend can pick a protocol it can actually honor:
+  * depends on the filesystem's atomicity guarantees. The engine uses
+  * [[GenerationPointerStore]] (see [[PointerStore.forTable]] for why):
+  * no rename at all — each swap exclusively creates
+  * `.ptr-<name>/gen-<n+1>` and readers take the highest generation.
+  * This is the OBJECT-STORE shape: S3 has no atomic rename, but
+  * exclusive create maps directly onto a conditional
+  * `PUT If-None-Match:*`, and readers never observe absence mid-swap
+  * because the previous generation outlives the swap. (The remaining
+  * alternative, pointer-in-catalog — e.g. a DynamoDB/Glue conditional
+  * update, which is how Iceberg's S3 catalogs commit — swaps the same
+  * logical pointer outside the filesystem entirely; same `read`/`write`
+  * contract, not needed in this environment.)
   *
-  *   - [[RenamePointerStore]]: exclusive tmp create +
-  *     `FileContext.rename(OVERWRITE)`. Correct on HDFS (native atomic
-  *     overwrite) and on local filesystems (delete-then-rename with a
-  *     µs-scale visibility window the reader rides out).
-  *   - [[GenerationPointerStore]] (default — see
-  *     [[PointerStore.forTable]] for why): no rename at all — each
-  *     swap exclusively creates `.ptr-<name>/gen-<n+1>` and readers
-  *     take the highest generation. This is the OBJECT-STORE shape:
-  *     S3 has no
-  *     atomic rename, but exclusive create maps directly onto a
-  *     conditional `PUT If-None-Match:*`, and readers never observe
-  *     absence mid-swap because the previous generation outlives the
-  *     swap. (The remaining alternative, pointer-in-catalog — e.g. a
-  *     DynamoDB/Glue conditional update, which is how Iceberg's S3
-  *     catalogs commit — swaps the same logical pointer outside the
-  *     filesystem entirely; same `read`/`write` contract, not needed
-  *     in this environment.)
-  *
-  * Contract both implementations honor, which the commit protocol
-  * relies on ([[LakeTable]]): `write` is complete-at-swap (a reader
-  * sees the OLD value or the NEW value, never a torn prefix), and
-  * `read` returning None means the pointer was never created — not
-  * that a swap was in flight. Race DETECTION lives one level up
-  * (exclusive create of `v<id>.json`); the pointer swap only ever
-  * publishes an already-won commit. */
+  * Contract the commit protocol relies on ([[LakeTable]]): `write` is
+  * complete-at-swap (a reader sees the OLD value or the NEW value, never
+  * a torn prefix), and `read` returning None means the pointer was never
+  * created — not that a swap was in flight. Race DETECTION lives one
+  * level up (exclusive create of `v<id>.json`); the pointer swap only
+  * ever publishes an already-won commit. */
 sealed trait PointerStore {
   /** Current pointer value; None = never created. Rides out any
     * transient mid-swap state rather than surfacing it. */
@@ -42,103 +30,6 @@ sealed trait PointerStore {
 
   /** Replace the pointer value, complete-at-swap. */
   def write(p: Path, value: String): Unit
-}
-
-/** Exclusive-tmp-create + atomic-overwrite-rename pointer store (the
-  * HDFS/local protocol). `AbstractFileSystem.renameInternal`'s default
-  * OVERWRITE path deletes the target before renaming on filesystems
-  * without a native atomic overwrite, so a concurrent reader can
-  * briefly see the pointer absent (or, on a checksummed local fs, a
-  * stale crc) mid-swap. The reader distinguishes that window from a
-  * never-created pointer by EVIDENCE: retries happen only while a
-  * sibling `.{name}-*.tmp` swap file exists (a swap is in flight) or
-  * after an open/read failure — a genuinely absent pointer with no
-  * in-flight tmp returns None on the first probe with zero sleeps. */
-final class RenamePointerStore(fs: FileSystem, rootUri: java.net.URI,
-    conf: Configuration) extends PointerStore {
-
-  /** How long a reader rides out SUSTAINED swap evidence before
-    * concluding the pointer is genuinely unreadable. Every probe that
-    * sees either the pointer or a fresh in-flight tmp re-arms the
-    * wait, so only a pathological case (a swap window on every single
-    * probe for this long) exhausts it. */
-  private val SwapDeadlineNanos = 10_000_000_000L
-
-  /** Tmp files older than this are crash leftovers, not evidence of an
-    * in-flight swap — without the cutoff a writer that died between
-    * create-tmp and rename would pin every absent-pointer read into
-    * the retry loop forever. */
-  private val StaleTmpMillis = 60_000L
-
-  private def swapInFlight(p: Path): Boolean = {
-    val prefix = s".${p.getName}-"
-    val now = System.currentTimeMillis()
-    try fs.listStatus(p.getParent).exists { s =>
-      val n = s.getPath.getName
-      n.startsWith(prefix) && n.endsWith(".tmp") &&
-        (now - s.getModificationTime) < StaleTmpMillis
-    } catch { case _: java.io.IOException => false }
-  }
-
-  override def read(p: Path): Option[String] = {
-    // A bounded ATTEMPT count is not enough: under back-to-back swaps
-    // (a commit storm) every probe can land inside some writer's
-    // delete-then-rename window, so the loop keys on EVIDENCE — retry
-    // while the pointer or a fresh swap tmp is observable, give up
-    // (None) only after two consecutive evidence-free probes, and fail
-    // loudly rather than answer a false "no table" if evidence
-    // persists past the deadline.
-    val deadline = System.nanoTime() + SwapDeadlineNanos
-    var noEvidenceRuns = 0
-    while (System.nanoTime() < deadline) {
-      if (fs.exists(p)) {
-        noEvidenceRuns = 0
-        try return Some(LakeTable.readString(fs, p))
-        catch { case _: java.io.IOException => Thread.sleep(1L) /* mid-swap */ }
-      } else if (!swapInFlight(p) && !fs.exists(p)) {
-        // absent with no tmp in flight and still absent on re-probe.
-        // One confirmation round guards the sampling race where an
-        // entire swap completes between the two probes (the tmp is
-        // gone AND the target was re-deleted by the next swap); a
-        // never-created pointer answers in ~1 ms, not the old ~30.
-        noEvidenceRuns += 1
-        if (noEvidenceRuns >= 2) return None
-        Thread.sleep(1L)
-      } else {
-        noEvidenceRuns = 0
-        Thread.sleep(1L)
-      }
-    }
-    if (fs.exists(p)) Some(LakeTable.readString(fs, p))
-    else throw new java.io.IOException(
-      s"pointer $p unreadable: swap evidence persisted for " +
-        s"${SwapDeadlineNanos / 1000000000L}s without a complete value")
-  }
-
-  // FileContext is built once (unlike FileSystem, Hadoop does not cache
-  // FileContext instances — constructing one per swap costs more than
-  // the swap) and only USED where it buys something: on a filesystem
-  // with a native atomic overwrite (HDFS), fc.rename(OVERWRITE) is the
-  // true atomic pointer swap. On the local filesystem FileContext's
-  // OVERWRITE path is itself delete-then-rename — the identical
-  // visibility window as a plain delete+rename, at ~500× the cost
-  // (measured 26.6 ms vs 0.05 ms per swap: it dominates the whole
-  // commit) — so local pointers swap with plain FileSystem calls and
-  // readers ride out the window exactly as before.
-  private lazy val fc = FileContext.getFileContext(rootUri, conf)
-  private val localFs =
-    rootUri == null || rootUri.getScheme == null ||
-      rootUri.getScheme == "file"
-
-  override def write(p: Path, value: String): Unit = {
-    val tmp = new Path(p.getParent, s".${p.getName}-${UUID.randomUUID()}.tmp")
-    LakeTable.writeStringExclusive(fs, tmp, value)
-    if (localFs) {
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p))
-        throw new java.io.IOException(s"pointer swap $tmp -> $p failed")
-    } else fc.rename(tmp, p, Options.Rename.OVERWRITE)
-  }
 }
 
 /** HTTP-412 class: a conditional PUT lost to an existing key. The one
@@ -170,8 +61,8 @@ trait ConditionalPut {
   /** Full value of `p`; None = absent or not yet readable. */
   def read(p: Path): Option[String]
 
-  /** The children of `dir` (shallow). Absent dir = Nil. */
-  def list(dir: Path): Seq[Path]
+  /** The children of `dir` (shallow); None = `dir` absent. */
+  def list(dir: Path): Option[Seq[Path]]
 
   /** Best-effort delete (used only for unreachable old generations). */
   def delete(p: Path): Unit
@@ -192,9 +83,9 @@ final class FsConditionalPut(fs: FileSystem) extends ConditionalPut {
   override def read(p: Path): Option[String] =
     try Some(LakeTable.readString(fs, p))
     catch { case _: java.io.IOException => None }
-  override def list(dir: Path): Seq[Path] =
-    try fs.listStatus(dir).toSeq.map(_.getPath)
-    catch { case _: java.io.IOException => Nil }
+  override def list(dir: Path): Option[Seq[Path]] =
+    try Some(fs.listStatus(dir).toSeq.map(_.getPath))
+    catch { case _: java.io.FileNotFoundException => None }
   override def delete(p: Path): Unit =
     try fs.delete(p, false)
     catch { case _: java.io.IOException => () }
@@ -235,35 +126,21 @@ final class GenerationPointerStore(backend: ConditionalPut)
   private def genDir(p: Path): Path =
     new Path(p.getParent, s".ptr-${p.getName}")
 
-  private def gens(p: Path): Seq[(Long, Path)] = {
+  /** Generations of `p`; None = never created (no generation dir).
+    * `Some(Nil)` is a listing that RACED swaps, not an absent pointer:
+    * the directory outlives every swap and always holds the newest
+    * generation, but a local-filesystem listing names the entries and
+    * then stats each one, dropping any a concurrent swap deleted in
+    * between — two quick swaps can hide every generation. Callers
+    * re-list. */
+  private def gens(p: Path): Option[Seq[(Long, Path)]] = {
     val prefix = "gen-"
-    backend.list(genDir(p)).flatMap { path =>
+    backend.list(genDir(p)).map(_.flatMap { path =>
       val n = path.getName
       if (!n.startsWith(prefix)) None
       else scala.util.Try(n.substring(prefix.length).toLong).toOption
         .map(_ -> path)
-    }
-  }
-
-  /** Migration reads for pointers written by OLDER protocols, tried
-    * only when the subdir has no generations: (a) round-17 generation
-    * layout (`<name>.gen-<n>` beside the pointer), (b) the rename
-    * store's plain `<name>` file. A first generation-store WRITE on
-    * such a table starts the subdir at gen-1, which readers prefer
-    * from then on (mixed-protocol CONCURRENT writers were never
-    * supported; this covers reopening existing tables). */
-  private def legacyRead(p: Path): Option[String] = {
-    val prefix = s"${p.getName}.gen-"
-    val legacyGens = backend.list(p.getParent).flatMap { path =>
-      val n = path.getName
-      if (!n.startsWith(prefix)) None
-      else scala.util.Try(n.substring(prefix.length).toLong).toOption
-        .map(_ -> path)
-    }
-    legacyGens.sortBy(-_._1).iterator
-      .flatMap { case (_, path) => readComplete(path) }
-      .nextOption()
-      .orElse(backend.read(p))
+    })
   }
 
   /** None = file absent/unreadable OR frame incomplete (in-flight). */
@@ -286,8 +163,7 @@ final class GenerationPointerStore(backend: ConditionalPut)
     // fall back to the next-highest, re-listing a few times
     var attempt = 0
     while (attempt < 5) {
-      val current = gens(p).sortBy(-_._1)
-      if (current.isEmpty) return legacyRead(p)
+      val current = gens(p).getOrElse(return None).sortBy(-_._1)
       current.foreach { case (_, path) =>
         readComplete(path) match {
           case Some(v) => return Some(v)
@@ -310,71 +186,42 @@ final class GenerationPointerStore(backend: ConditionalPut)
     val framed = s"${bytes.length}\n$value"
     var attempt = 0
     while (true) {
-      val known = gens(p).map(_._1)
-      val next = known.maxOption.getOrElse(0L) + 1
-      val target = new Path(genDir(p), f"gen-$next%019d")
-      try {
-        backend.putIfAbsent(target, framed)
-        // keep the immediately-previous generation alive for in-flight
-        // readers; everything older is unreachable and sweeps away
-        gens(p).filter(_._1 < next - 1)
-          .foreach { case (_, old) => backend.delete(old) }
-        // FIRST subdir write on a migrated table: retire the
-        // legacy-layout artifacts (plain pointer file /
-        // beside-the-pointer generations) once the subdir holds the
-        // truth. A reader still configured for the RENAME protocol
-        // would otherwise keep resolving the stale plain file
-        // SILENTLY — after this sweep it sees no pointer and fails
-        // loudly instead. Guarded to generation 1 so steady-state
-        // writes never pay the O(metadata-dir) parent listing.
-        // Mixed-protocol CONCURRENT writers remain unsupported
-        // (documented at [[legacyRead]]).
-        if (next == 1L) {
-          val legacyPrefix = s"${p.getName}.gen-"
-          backend.list(p.getParent).foreach { path =>
-            val n = path.getName
-            if (n == p.getName || n.startsWith(legacyPrefix))
-              backend.delete(path)
-          }
-        }
-        return
-      } catch {
-        case _: PreconditionFailed =>
+      val known = gens(p)
+      // a raced listing (Some(Nil)) must not restart the pointer at
+      // generation 1, below the live one: re-list
+      if (!known.contains(Nil)) {
+        val next = known.getOrElse(Nil).map(_._1).maxOption.getOrElse(0L) + 1
+        val target = new Path(genDir(p), f"gen-$next%019d")
+        try {
+          backend.putIfAbsent(target, framed)
+          // keep the immediately-previous generation alive for in-flight
+          // readers; everything older is unreachable and sweeps away
+          gens(p).getOrElse(Nil).filter(_._1 < next - 1)
+            .foreach { case (_, old) => backend.delete(old) }
+          return
+        } catch {
           // lost the conditional PUT to a racing swap: re-list, retry
-          attempt += 1
-          if (attempt > 50)
-            throw new java.util.ConcurrentModificationException(
-              s"pointer swap of $p contended beyond $attempt attempts")
+          case _: PreconditionFailed => ()
+        }
       }
+      attempt += 1
+      if (attempt > 50)
+        throw new java.util.ConcurrentModificationException(
+          s"pointer swap of $p contended beyond $attempt attempts")
     }
   }
 }
 
 object PointerStore {
-  /** Session-selected strategy: `spark.graft.lake.pointer-store` =
-    * `generation` (default) | `rename`.
-    *
-    * Generation is the default because the rename protocol has a
-    * RESIDUAL stall window the generation protocol structurally
-    * lacks: a writer stalled >60 s (the orphan grace) between its
-    * HEAD existence check and its rename can, on waking, transiently
-    * regress HEAD past a reclaimer's newer swap — rename REPLACES the
-    * pointer, so a stale writer can clobber a newer value. A
-    * generation swap never replaces anything: the stale writer's
-    * conditional create lands at a LOWER generation than the
+  /** The table's pointer store: the generation protocol. It is the one
+    * protocol because a rename-based swap has a RESIDUAL stall window
+    * this one structurally lacks: a writer stalled >60 s (the orphan
+    * grace) between its HEAD existence check and its rename can, on
+    * waking, transiently regress HEAD past a reclaimer's newer swap —
+    * rename REPLACES the pointer, so a stale writer can clobber a newer
+    * value. A generation swap never replaces anything: the stale
+    * writer's conditional create lands at a LOWER generation than the
     * reclaimer's (or loses the create outright), and readers take the
-    * highest, so a delayed swap is inert rather than a regression.
-    * Generation reads also migrate: a table whose pointer was written
-    * by the rename store (or the round-17 beside-the-pointer
-    * generation layout) reads through a legacy fallback, and the
-    * first write starts the subdir generations that take precedence.
-    * The rename store remains selectable for HDFS deployments that
-    * want the native atomic rename. */
-  def forTable(spark: org.apache.spark.sql.SparkSession, fs: FileSystem,
-      rootUri: java.net.URI, conf: Configuration): PointerStore =
-    spark.conf.getOption("spark.graft.lake.pointer-store")
-        .getOrElse("generation") match {
-      case "rename" => new RenamePointerStore(fs, rootUri, conf)
-      case _ => new GenerationPointerStore(fs)
-    }
+    * highest, so a delayed swap is inert rather than a regression. */
+  def forTable(fs: FileSystem): PointerStore = new GenerationPointerStore(fs)
 }

@@ -1,9 +1,6 @@
 package graft.lake
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.fasterxml.jackson.databind.node.ObjectNode
-
-import scala.jdk.CollectionConverters._
 
 /** One committed version of a [[LakeTable]].
   *
@@ -18,8 +15,8 @@ import scala.jdk.CollectionConverters._
   * materialized; ON DISK it lives in immutable manifest chunk files
   * referenced by name from the snapshot JSON (see [[ManifestIO]] — the
   * Iceberg manifest-list shape), so a commit writes O(delta) metadata,
-  * never O(table). `toJson`/`fromJson` here are the LEGACY inline format,
-  * kept for reading tables written before the chunked layer.
+  * never O(table). The on-disk codec is [[ManifestIO]]'s
+  * (`listToJson` / `snapshotFromJson`).
   */
 final case class Snapshot(
     snapshotId: Long,
@@ -80,9 +77,8 @@ final case class Snapshot(
     /** Names of the immutable manifest CHUNKS (`metadata/m-*.json.gz`
       * files, or `iv<id>-<k>.json` delta chunks inline in a snapshot doc)
       * whose entries back this snapshot's per-file state — the manifest
-      * list (see [[ManifestIO]]). Empty for a snapshot parsed from the
-      * legacy inline format (or not yet planned at commit time); the
-      * per-file maps above are always fully materialized either way. */
+      * list (see [[ManifestIO]]). Empty for a table with no files, or
+      * before the commit plans its chunks. */
     manifests: Seq[String] = Nil,
     /** Partition-spec id each live file was WRITTEN under (absent = 0,
       * the creation spec) — what lets a scan read files of different
@@ -110,164 +106,10 @@ final case class Snapshot(
   def specsOrDefault: Map[Long, Seq[String]] =
     if (partitionSpecs.isEmpty) Map(0L -> partitionColumns)
     else partitionSpecs
-
-  def toJson: String = {
-    val m = Snapshot.mapper
-    val n: ObjectNode = m.createObjectNode()
-    n.put("snapshot_id", snapshotId)
-    parentId.foreach(p => n.put("parent_id", p))
-    n.put("timestamp_ms", timestampMs)
-    n.put("operation", operation)
-    def arr(name: String, xs: Seq[String]): Unit = {
-      val a = n.putArray(name); xs.foreach(a.add)
-    }
-    arr("added_files", addedFiles)
-    arr("removed_files", removedFiles)
-    arr("live_files", liveFiles)
-    n.put("schema", schemaJson)
-    arr("partition_columns", partitionColumns)
-    val p = n.putObject("properties")
-    properties.foreach { case (k, v) => p.put(k, v) }
-    if (fileStats.nonEmpty) {
-      val so = n.putObject("stats")
-      // manifest order follows liveFiles for stable, diffable metadata
-      liveFiles.foreach { f =>
-        fileStats.get(f).filter(_.nonEmpty).foreach { cols =>
-          val fo = so.putObject(f)
-          cols.toSeq.sortBy(_._1).foreach { case (c, cs) =>
-            val co = fo.putObject(c)
-            co.put("min", cs.min)
-            co.put("max", cs.max)
-          }
-        }
-      }
-    }
-    if (fileRenames.nonEmpty) {
-      val ro = n.putObject("renames")
-      liveFiles.foreach { f =>
-        fileRenames.get(f).filter(_.nonEmpty).foreach { cols =>
-          val fo = ro.putObject(f)
-          cols.toSeq.sortBy(_._1).foreach { case (cur, phys) =>
-            fo.put(cur, phys)
-          }
-        }
-      }
-    }
-    if (fileSeq.nonEmpty) {
-      val qo = n.putObject("seq")
-      liveFiles.foreach(f => fileSeq.get(f).foreach(s => qo.put(f, s)))
-    }
-    if (deleteFiles.nonEmpty) {
-      val da = n.putArray("delete_files")
-      deleteFiles.foreach { d =>
-        val o = da.addObject()
-        o.put("path", d.path)
-        o.put("seq", d.seq)
-        val ka = o.putArray("keys"); d.keys.foreach(ka.add)
-        val pa = o.putArray("physical_keys"); d.physicalKeys.foreach(pa.add)
-      }
-    }
-    if (posDeleteFiles.nonEmpty) {
-      val pa = n.putArray("pos_delete_files")
-      posDeleteFiles.foreach { d =>
-        val o = pa.addObject()
-        o.put("path", d.path)
-        o.put("seq", d.seq)
-      }
-    }
-    if (dvFiles.nonEmpty) {
-      val va = n.putArray("dv_files")
-      dvFiles.foreach { d =>
-        val o = va.addObject()
-        o.put("path", d.path)
-        o.put("seq", d.seq)
-        if (d.bytes > 0L) o.put("bytes", d.bytes)
-      }
-    }
-    if (fileInfo.nonEmpty) {
-      val io = n.putObject("file_info")
-      liveFiles.foreach { f =>
-        fileInfo.get(f).foreach { fi =>
-          val o = io.putObject(f)
-          o.put("bytes", fi.bytes)
-          o.put("rows", fi.rows)
-          fi.firstRowId.foreach(o.put("first_row_id", _))
-        }
-      }
-    }
-    m.writerWithDefaultPrettyPrinter().writeValueAsString(n)
-  }
 }
 
 object Snapshot {
   private[lake] val mapper = new ObjectMapper()
-
-  def fromJson(json: String): Snapshot = {
-    val n = mapper.readTree(json)
-    def arr(name: String): Seq[String] =
-      n.path(name).elements().asScala.map(_.asText()).toSeq
-    Snapshot(
-      snapshotId = n.path("snapshot_id").asLong(),
-      parentId =
-        if (n.has("parent_id")) Some(n.path("parent_id").asLong()) else None,
-      timestampMs = n.path("timestamp_ms").asLong(),
-      operation = n.path("operation").asText(),
-      addedFiles = arr("added_files"),
-      removedFiles = arr("removed_files"),
-      liveFiles = arr("live_files"),
-      schemaJson = n.path("schema").asText(),
-      partitionColumns = arr("partition_columns"),
-      properties = n.path("properties").properties().asScala
-        .map(e => e.getKey -> e.getValue.asText()).toMap,
-      fileStats =
-        if (!n.has("stats")) Map.empty
-        else n.path("stats").properties().asScala.map { fe =>
-          fe.getKey -> fe.getValue.properties().asScala.map { ce =>
-            ce.getKey -> ColStat(ce.getValue.path("min").asText(),
-              ce.getValue.path("max").asText())
-          }.toMap
-        }.toMap,
-      fileRenames =
-        if (!n.has("renames")) Map.empty
-        else n.path("renames").properties().asScala.map { fe =>
-          fe.getKey -> fe.getValue.properties().asScala.map { ce =>
-            ce.getKey -> ce.getValue.asText()
-          }.toMap
-        }.toMap,
-      fileSeq =
-        if (!n.has("seq")) Map.empty
-        else n.path("seq").properties().asScala
-          .map(e => e.getKey -> e.getValue.asLong()).toMap,
-      deleteFiles =
-        if (!n.has("delete_files")) Nil
-        else n.path("delete_files").elements().asScala.map { o =>
-          DeleteFile(
-            o.path("path").asText(),
-            o.path("seq").asLong(),
-            o.path("keys").elements().asScala.map(_.asText()).toSeq,
-            o.path("physical_keys").elements().asScala.map(_.asText()).toSeq)
-        }.toSeq,
-      posDeleteFiles =
-        if (!n.has("pos_delete_files")) Nil
-        else n.path("pos_delete_files").elements().asScala.map { o =>
-          PosDeleteFile(o.path("path").asText(), o.path("seq").asLong())
-        }.toSeq,
-      dvFiles =
-        if (!n.has("dv_files")) Nil
-        else n.path("dv_files").elements().asScala.map { o =>
-          DvFile(o.path("path").asText(), o.path("seq").asLong(),
-            o.path("bytes").asLong())
-        }.toSeq,
-      fileInfo =
-        if (!n.has("file_info")) Map.empty
-        else n.path("file_info").properties().asScala.map { e =>
-          e.getKey -> FileInfo(e.getValue.path("bytes").asLong(),
-            e.getValue.path("rows").asLong(),
-            if (e.getValue.hasNonNull("first_row_id"))
-              Some(e.getValue.path("first_row_id").asLong()) else None)
-        }.toMap
-    )
-  }
 }
 
 /** Size and row count of one data file (manifest bookkeeping).

@@ -1,7 +1,5 @@
 package graft.lake
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-process entry for [[CrossProcessRaceSpec]]: opens the table at
   * `root` in its OWN JVM/SparkSession and runs `n` single-row appends.
   * Each appended key is `writerId * 1000 + i`, so the parent can verify
@@ -9,15 +7,8 @@ import org.apache.spark.sql.SparkSession
   * on any failure (the spec asserts on the exit code). */
 object CrossProcessAppendMain {
   def main(args: Array[String]): Unit = {
-    val Array(root, writerId, nStr, store) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-race-$writerId")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.lake.pointer-store", store)
-      .getOrCreate()
+    val Array(root, writerId, nStr) = args
+    val spark = graft.GraftSession(s"graft-race-$writerId", 2)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     try {

@@ -13,8 +13,8 @@ import graft.TestSpark
   * for the reference's S3-table-bucket multi-writer story — the
   * in-process racing cases in LakeTableSpec share a JVM and could in
   * principle be saved by JVM-level memory effects; these writers
-  * cannot. Runs once per PointerStore strategy (`rename` = HDFS/local
-  * shape, `generation` = object-store conditional-PUT shape). */
+  * cannot. The pointer swap is the generation store's conditional
+  * create (the object-store conditional-PUT shape). */
 class CrossProcessRaceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -36,13 +36,12 @@ class CrossProcessRaceSpec extends AnyFunSuite {
     "java.base/sun.security.action", "java.base/sun.util.calendar",
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
-  private def spawn(root: String, writerId: Int,
-      store: String): (Process, java.io.File) = {
+  private def spawn(root: String, writerId: Int): (Process, java.io.File) = {
     val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
       "-Xmx2g", "-Duser.timezone=UTC",
       "-cp", sys.props("java.class.path"),
       "graft.lake.CrossProcessAppendMain",
-      root, writerId.toString, AppendsPerWriter.toString, store))
+      root, writerId.toString, AppendsPerWriter.toString))
     val log = java.io.File.createTempFile(s"xproc-w$writerId-", ".log")
     val p = new ProcessBuilder(cmd: _*)
       .redirectErrorStream(true)
@@ -50,40 +49,29 @@ class CrossProcessRaceSpec extends AnyFunSuite {
     (p, log)
   }
 
-  private def race(store: String): Unit = {
-    val root = TestSpark.tmpDir(s"xproc-$store") + "/t"
-    spark.conf.set("spark.graft.lake.pointer-store", store)
-    try {
-      val init = Seq((0L, "0")).toDF("k", "w")
-      LakeTable.create(spark, root, init.schema).append(init)
-      val children = Seq(spawn(root, 1, store), spawn(root, 2, store))
-      val codes = children.map { case (p, log) =>
-        val code = p.waitFor()
-        if (code != 0) System.err.println(
-          s"child ${log.getName} failed ($code):\n" +
-            new String(java.nio.file.Files.readAllBytes(log.toPath)))
-        log.delete()
-        code
-      }
-      assert(codes.forall(_ == 0), s"child exit codes: $codes")
-      // fresh handle: read the post-race state from disk, not a cache
-      val t = LakeTable.load(spark, root)
-      val keys = t.scan().select("k").collect().map(_.getLong(0)).sorted
-      val expected = (Seq(0L) ++
-        (0 until AppendsPerWriter).map(i => 1000L + i) ++
-        (0 until AppendsPerWriter).map(i => 2000L + i)).sorted
-      assert(keys.toSeq == expected,
-        s"lost or doubled commits: ${keys.mkString(",")}")
-      // every append is exactly one snapshot: create + init + 2×N
-      assert(t.history.count() == 2L + 2L * AppendsPerWriter)
-    } finally spark.conf.unset("spark.graft.lake.pointer-store")
-  }
-
-  test("two real JVMs appending concurrently lose nothing (rename store)") {
-    race("rename")
-  }
-
   test("two real JVMs appending concurrently lose nothing (generation store)") {
-    race("generation")
+    val root = TestSpark.tmpDir("xproc") + "/t"
+    val init = Seq((0L, "0")).toDF("k", "w")
+    LakeTable.create(spark, root, init.schema).append(init)
+    val children = Seq(spawn(root, 1), spawn(root, 2))
+    val codes = children.map { case (p, log) =>
+      val code = p.waitFor()
+      if (code != 0) System.err.println(
+        s"child ${log.getName} failed ($code):\n" +
+          new String(java.nio.file.Files.readAllBytes(log.toPath)))
+      log.delete()
+      code
+    }
+    assert(codes.forall(_ == 0), s"child exit codes: $codes")
+    // fresh handle: read the post-race state from disk, not a cache
+    val t = LakeTable.load(spark, root)
+    val keys = t.scan().select("k").collect().map(_.getLong(0)).sorted
+    val expected = (Seq(0L) ++
+      (0 until AppendsPerWriter).map(i => 1000L + i) ++
+      (0 until AppendsPerWriter).map(i => 2000L + i)).sorted
+    assert(keys.toSeq == expected,
+      s"lost or doubled commits: ${keys.mkString(",")}")
+    // every append is exactly one snapshot: create + init + 2×N
+    assert(t.history.count() == 2L + 2L * AppendsPerWriter)
   }
 }

@@ -1,6 +1,5 @@
 package graft.lake
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Child-process entry for [[CrossProcessConflictSpec]]: opens the
@@ -16,13 +15,7 @@ import org.apache.spark.sql.functions._
 object CrossProcessRewriteMain {
   def main(args: Array[String]): Unit = {
     val Array(root, writerId, op, loStr, hiStr, barrierDir) = args
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"graft-conflict-$writerId")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession(s"graft-conflict-$writerId", 2)
     spark.sparkContext.setLogLevel("ERROR")
     val code =
       try {

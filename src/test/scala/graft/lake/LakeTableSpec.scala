@@ -423,8 +423,12 @@ class LakeTableSpec extends AnyFunSuite {
     val df = Seq((1L, "a", "x"), (2L, "b", "y"), (7L, "c", "x"))
       .toDF("id", "v", "p")
     val t = LakeTable.create(spark, root, df.schema, Seq("p"))
+    // an empty table (no manifest chunk) lists no files, same columns
+    val empty = t.files
+    assert(empty.isEmpty)
     t.append(df.repartition(1)) // one file per partition
     t.append(Seq((9L, "d", "y")).toDF("id", "v", "p")) // second y-file
+    assert(t.files.schema == empty.schema)
     val files = t.files.collect()
     val snap = t.currentSnapshot.get
     // set compare: the chunk-scan view carries no ordering guarantee

@@ -130,37 +130,6 @@ class ManifestSpec extends AnyFunSuite {
     assert(t.scan().count() == 50)
   }
 
-  test("legacy inline snapshot JSON still loads (and upgrades on next commit)") {
-    val root = freshRoot
-    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    val t = LakeTable.create(spark, root, df.schema)
-    t.append(df.repartition(1))
-    val snap = t.currentSnapshot.get
-    // rewrite the current snapshot in the LEGACY inline format
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val vPath = new Path(root,
-      s"${LakeTable.METADATA_DIR}/v${snap.snapshotId}.json")
-    fs.delete(vPath, false)
-    snap.manifests.foreach(m =>
-      fs.delete(new Path(root, s"${LakeTable.METADATA_DIR}/$m"), false))
-    LakeTable.writeStringExclusive(fs, vPath,
-      snap.copy(manifests = Nil).toJson)
-    // a fresh handle parses the legacy format: full read path works
-    val t2 = LakeTable.load(spark, root)
-    val loaded = t2.currentSnapshot.get
-    assert(loaded.manifests.isEmpty)
-    assert(loaded.liveFiles == snap.liveFiles)
-    assert(loaded.fileStats == snap.fileStats)
-    assert(loaded.fileSeq == snap.fileSeq)
-    assert(t2.scan().count() == 2)
-    // the next commit on top re-chunks the carried state
-    t2.append(Seq((3L, "c")).toDF("id", "v"))
-    val upgraded = t2.currentSnapshot.get
-    assert(upgraded.manifests.nonEmpty)
-    assert(t2.scan().count() == 3)
-    assert(t2.currentSnapshot.get.fileStats.nonEmpty)
-  }
-
   test("expireSnapshots reclaims chunks referenced only by expired snapshots") {
     val root = freshRoot
     val df = Seq((1L, "a")).toDF("id", "v")

@@ -9,71 +9,64 @@ import graft.TestSpark
 
 /** Commit-pointer protocol ([[PointerStore]]): readers must ride
   * through a swap (old value or new value, never torn, never a
-  * spurious "no table"), a never-created pointer must answer None
-  * without retry sleeps, and the generation store must uphold the same
-  * contract with no rename at all (the object-store shape). */
+  * spurious "no table"), and a never-created pointer must answer None
+  * without retry sleeps — all with no rename at all (the object-store
+  * shape). */
 class PointerStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def fixture(name: String) = {
     val dir = new Path(TestSpark.tmpDir(name))
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = dir.getFileSystem(conf)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     fs.mkdirs(dir)
-    (fs, dir, conf)
+    (fs, dir)
   }
 
-  private def stores(name: String): Seq[(String, PointerStore, Path)] = {
-    val (fs, dir, conf) = fixture(name)
-    Seq(
-      ("rename", new RenamePointerStore(fs, dir.toUri, conf),
-        new Path(dir, "HEAD")),
-      ("generation", new GenerationPointerStore(fs),
-        new Path(dir, "HEAD")))
+  private def headStore(name: String): (PointerStore, Path) = {
+    val (fs, dir) = fixture(name)
+    (PointerStore.forTable(fs), new Path(dir, "HEAD"))
   }
 
   test("never-created pointer answers None immediately, no retry sleeps") {
-    stores("ptr-absent").foreach { case (label, store, p) =>
-      assert(store.read(p).isEmpty, label) // cold call warms fs metadata
-      val t0 = System.nanoTime()
-      assert(store.read(p).isEmpty, label)
-      val ms = (System.nanoTime() - t0) / 1e6
-      // the old behavior slept ~30ms probing for a swap that never was
-      assert(ms < 8.0, s"$label: absent read took ${ms}ms (retry sleeps?)")
-    }
+    val (store, p) = headStore("ptr-absent")
+    assert(store.read(p).isEmpty) // cold call warms fs metadata
+    val t0 = System.nanoTime()
+    assert(store.read(p).isEmpty)
+    val ms = (System.nanoTime() - t0) / 1e6
+    // the old behavior slept ~30ms probing for a swap that never was
+    assert(ms < 8.0, s"absent read took ${ms}ms (retry sleeps?)")
   }
 
   test("write is complete-at-swap: concurrent readers never see a torn value") {
-    stores("ptr-race").foreach { case (label, store, p) =>
-      store.write(p, "0" * 64) // long values make torn reads detectable
-      val stop = new AtomicBoolean(false)
-      val anomalies = new AtomicInteger(0)
-      val seen = new AtomicInteger(0)
-      val reader = new Thread(() => {
-        while (!stop.get()) {
-          store.read(p) match {
-            case Some(v) if v.length == 64 && v.distinct.length == 1 =>
-              seen.incrementAndGet()
-            case other =>
-              // torn value, mixed generations, or spurious None
-              anomalies.incrementAndGet()
-              System.err.println(s"$label anomaly: $other")
-          }
+    val (store, p) = headStore("ptr-race")
+    store.write(p, "0" * 64) // long values make torn reads detectable
+    val stop = new AtomicBoolean(false)
+    val anomalies = new AtomicInteger(0)
+    val seen = new AtomicInteger(0)
+    val reader = new Thread(() => {
+      while (!stop.get()) {
+        store.read(p) match {
+          case Some(v) if v.length == 64 && v.distinct.length == 1 =>
+            seen.incrementAndGet()
+          case other =>
+            // torn value, mixed generations, or spurious None
+            anomalies.incrementAndGet()
+            System.err.println(s"anomaly: $other")
         }
-      })
-      reader.start()
-      (1 to 200).foreach(i => store.write(p, (i % 10).toString * 64))
-      stop.set(true)
-      reader.join(10000)
-      assert(anomalies.get() == 0,
-        s"$label: ${anomalies.get()} torn/absent reads during swaps")
-      assert(seen.get() > 0, s"$label: reader starved")
-      assert(store.read(p).contains((200 % 10).toString * 64), label)
-    }
+      }
+    })
+    reader.start()
+    (1 to 200).foreach(i => store.write(p, (i % 10).toString * 64))
+    stop.set(true)
+    reader.join(10000)
+    assert(anomalies.get() == 0,
+      s"${anomalies.get()} torn/absent reads during swaps")
+    assert(seen.get() > 0, "reader starved")
+    assert(store.read(p).contains((200 % 10).toString * 64))
   }
 
   test("racing generation writers all land, last value wins, no torn state") {
-    val (fs, dir, _) = fixture("ptr-genrace")
+    val (fs, dir) = fixture("ptr-genrace")
     val store = new GenerationPointerStore(fs)
     val p = new Path(dir, "HEAD")
     val threads = (1 to 4).map { t =>
@@ -90,39 +83,10 @@ class PointerStoreSpec extends AnyFunSuite {
     assert(left <= 8, s"$left generation files left behind")
   }
 
-  test("generation store migrates: a rename-store pointer and a " +
-      "round-17 beside-the-pointer generation layout both read; the " +
-      "first write starts subdir generations that take precedence") {
-    // (a) plain rename-store pointer file
-    val (fs, dir, conf) = fixture("ptr-migrate")
-    val p = new Path(dir, "HEAD")
-    new RenamePointerStore(fs, dir.toUri, conf).write(p, "legacy-plain")
-    val gen = new GenerationPointerStore(fs)
-    assert(gen.read(p).contains("legacy-plain"))
-    // (b) legacy beside-the-pointer generation (round-17 layout)
-    def framed(v: String) =
-      s"${v.getBytes(java.nio.charset.StandardCharsets.UTF_8).length}\n$v"
-    LakeTable.writeStringExclusive(fs,
-      new Path(dir, f"HEAD.gen-${1L}%019d"), framed("legacy-gen"))
-    assert(gen.read(p).contains("legacy-gen"),
-      "legacy generations outrank the plain file")
-    // first generation-store write wins over both legacy layouts AND
-    // retires them — a reader still on the rename protocol must fail
-    // loudly (no pointer) rather than resolve the stale plain file
-    gen.write(p, "migrated")
-    assert(gen.read(p).contains("migrated"))
-    assert(fs.exists(new Path(dir, ".ptr-HEAD")))
-    assert(!fs.exists(p), "legacy plain pointer must be retired")
-    assert(!fs.listStatus(dir)
-        .exists(_.getPath.getName.startsWith("HEAD.gen-")),
-      "legacy beside-the-pointer generations must be retired")
-    assert(new RenamePointerStore(fs, dir.toUri, conf).read(p).isEmpty)
-  }
-
   test("conditional-put 412 races through the double: a rival winning " +
       "every contended generation forces re-list + retry, readers stay " +
       "complete; spurious 412s converge; non-412 errors propagate") {
-    val (fs, dir, _) = fixture("ptr-412")
+    val (fs, dir) = fixture("ptr-412")
     val p = new Path(dir, "HEAD")
     def framed(v: String) =
       s"${v.getBytes(java.nio.charset.StandardCharsets.UTF_8).length}\n$v"
@@ -189,25 +153,18 @@ class PointerStoreSpec extends AnyFunSuite {
 
   test("a LakeTable commits and reads through the generation store") {
     import spark.implicits._
-    spark.conf.set("spark.graft.lake.pointer-store", "generation")
-    try {
-      val root = TestSpark.tmpDir("ptr-gen-table") + "/t"
-      val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      val t = LakeTable.create(spark, root, df.schema)
-      t.append(df)
-      t.append(Seq((3L, "c")).toDF("id", "v"))
-      assert(t.scan().count() == 3)
-      assert(t.history.count() == 3) // create + 2 appends
-      // a fresh handle (new store instance) resolves the same HEAD
-      val t2 = LakeTable.load(spark, root)
-      assert(t2.scan().count() == 3)
-      // no HEAD rename artifact exists — the pointer is generations only
-      val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-      assert(!fs.exists(new Path(root, s"${LakeTable.METADATA_DIR}/HEAD")))
-    } finally spark.conf.unset("spark.graft.lake.pointer-store")
-    // ^ unset, NEVER a literal: pinning "rename" on the SHARED session
-    // poisoned every later suite in the run — the parent read through
-    // the rename store while child JVMs (fresh sessions, generation
-    // default) advanced generations the rename store cannot see
+    val root = TestSpark.tmpDir("ptr-gen-table") + "/t"
+    val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    val t = LakeTable.create(spark, root, df.schema)
+    t.append(df)
+    t.append(Seq((3L, "c")).toDF("id", "v"))
+    assert(t.scan().count() == 3)
+    assert(t.history.count() == 3) // create + 2 appends
+    // a fresh handle (new store instance) resolves the same HEAD
+    val t2 = LakeTable.load(spark, root)
+    assert(t2.scan().count() == 3)
+    // no HEAD rename artifact exists — the pointer is generations only
+    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(new Path(root, s"${LakeTable.METADATA_DIR}/HEAD")))
   }
 }

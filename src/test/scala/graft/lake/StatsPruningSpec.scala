@@ -47,13 +47,17 @@ class StatsPruningSpec extends AnyFunSuite {
     val src = Seq((250L, "updated")).toDF("id", "v")
     assert(t.pruneByStats(legacy, src, Seq("id")) == legacy.liveFiles)
     // and a merge against such a manifest still produces correct data:
-    // simulate by rewriting the snapshot metadata without stats
-    val mPath = new org.apache.hadoop.fs.Path(t.root,
-      s"${LakeTable.METADATA_DIR}/v${base.snapshotId}.json")
-    val fs = mPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
+    // rewrite the snapshot's manifest as one stats-less chunk (no
+    // chunk summaries either)
+    val metaDir = new org.apache.hadoop.fs.Path(t.root, LakeTable.METADATA_DIR)
+    val mPath = new org.apache.hadoop.fs.Path(metaDir,
+      s"v${base.snapshotId}.json")
+    val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val chunk = ManifestIO.writeChunk(fs, metaDir,
+      ManifestIO.entriesOf(legacy))
     fs.delete(mPath, false)
-    LakeTable.writeStringExclusive(fs, mPath, legacy.toJson)
+    LakeTable.writeStringExclusive(fs, mPath, ManifestIO.listToJson(
+      legacy.copy(manifests = Seq(chunk), manifestSummaries = Map.empty)))
     val t2 = LakeTable.load(spark, t.root)
     t2.merge(src, Seq("id"))
     val got = t2.scan().where($"id" === 250L).collect()
@@ -225,7 +229,8 @@ class StatsPruningSpec extends AnyFunSuite {
       fileInfo = Map(
         "data/p=a/f1.parquet" -> FileInfo(4096L, 120L),
         "data/p=b/f2.parquet" -> FileInfo(1024L, -1L)))
-    assert(Snapshot.fromJson(snap.toJson) == snap)
+    val got = SnapshotRoundTrip(snap)
+    assert(got == snap.copy(manifests = got.manifests))
   }
 
   test("merge on a stats-supported partition column prunes to the partition") {
