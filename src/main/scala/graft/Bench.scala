@@ -12,7 +12,6 @@ package graft
   *                        longer masquerade as a plan regression)
   *   SPARK_GRAFT_CONF     extra session confs, `k=v;k=v` (A/B runs; see
   *                        [[GraftSession]], whose session shape this runs)
-  *   SPARK_GRAFT_TIMERS   1 = print the lake commit-path timer totals
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -32,11 +31,6 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
     val loadBefore = loadAvg
-    // opt-in commit/write-path timer totals across the whole run
-    // (SPARK_GRAFT_TIMERS=1): prints one diagnostics line on stderr at
-    // the end; zero cost when off (one atomic read per section)
-    val wantTimers = sys.env.get("SPARK_GRAFT_TIMERS").contains("1")
-    if (wantTimers) graft.lake.LakeTable.timersEnabled.set(true)
     // pinned (sorted) query order: run-to-run and round-to-round diffs
     // line up by name, never by map-iteration accident
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
@@ -63,13 +57,6 @@ object Bench {
       name -> (if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0)
     }
     val loadAfter = loadAvg
-    if (wantTimers) {
-      import scala.jdk.CollectionConverters._
-      val prof = graft.lake.LakeTable.timers.asScala.toSeq
-        .map { case (k, v) => k -> v.get / 1e6 }.sortBy(-_._2)
-      System.err.println("[bench-timers] " + prof.map { case (k, ms) =>
-        f"$k=$ms%.0f ms" }.mkString(", "))
-    }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum

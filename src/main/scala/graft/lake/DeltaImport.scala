@@ -1027,15 +1027,7 @@ object DeltaImport {
     * plan assertions. Analysis failure keeps every file. */
   private[graft] def pruneAdds(spark: SparkSession, st: TableState,
       predicate: Column): Seq[AddFile] = {
-    val cond = scala.util.Try {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st.schema)
-        .where(predicate).queryExecution.analyzed
-        .collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition
-        }
-    }.toOption.flatten
-    cond match {
+    PredicatePruning.analyze(spark, predicate, st.schema) match {
       case None => st.adds
       case Some(c) =>
         val byUri = st.adds.map(a => a.uri -> a).toMap

@@ -612,15 +612,7 @@ object IcebergImport {
     * load-bearing. */
   private[graft] def pruneEntries(spark: SparkSession, tm: TableMeta,
       predicate: Column): Seq[DataEntry] = {
-    val cond = scala.util.Try {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], tm.schema)
-        .where(predicate).queryExecution.analyzed
-        .collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition
-        }
-    }.toOption.flatten
-    cond match {
+    PredicatePruning.analyze(spark, predicate, tm.schema) match {
       case None => tm.dataEntries
       case Some(c) =>
         val byUri = tm.dataEntries.map(e => e.uri -> e).toMap
@@ -642,16 +634,12 @@ object IcebergImport {
         .expressions.Expression,
       entries: Seq[DataEntry]): Seq[DataEntry] = {
     import org.apache.spark.sql.catalyst.expressions.{
-      And, AttributeReference, EqualTo, Expression, In, Literal}
+      AttributeReference, EqualTo, In, Literal}
     if (!entries.exists(_.buckets.nonEmpty)) return entries
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     // source column → the equality literals a matching row must take
     val eqLits = scala.collection.mutable
       .Map.empty[String, Seq[Literal]]
-    conjuncts(cond).foreach {
+    PredicatePruning.conjuncts(cond).foreach {
       case EqualTo(a: AttributeReference, l: Literal) =>
         eqLits(a.name) = eqLits.getOrElse(a.name, Nil) :+ l
       case EqualTo(l: Literal, a: AttributeReference) =>

@@ -521,7 +521,7 @@ final class LakeTable private (
     val skel = ManifestIO.listSkeleton(readString(fs, p))
     if (skel.manifestSummaries.isEmpty) return snapshot(id)
     val sch = DataType.fromJson(skel.schemaJson).asInstanceOf[StructType]
-    analyzedCond(predicate, sch) match {
+    PredicatePruning.analyze(spark, predicate, sch) match {
       case Some(cond) =>
         val kept = PredicatePruning.candidateFiles(cond, sch,
           skel.manifests, skel.manifestSummaries)
@@ -1730,6 +1730,18 @@ final class LakeTable private (
     * commit. No-op in production. */
   private[lake] var beforeCommitHook: () => Unit = () => ()
 
+  /** Tag every Spark job a table operation submits with a readable
+    * description (`graft.<op>`) — the optimization guide's "label your
+    * jobs": attribution in the UI / listeners without touching plans.
+    * Restores the caller's description on exit so nested ops and user
+    * labels survive. */
+  private def labeled[T](op: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"graft.$op")
+    try f finally sc.setJobDescription(prev)
+  }
+
   /** Whole-operation conflict retry for COPY-ON-WRITE rewrites (merge,
     * mergeClauses, delete, deleteByKeys, update). A rewrite's outputs
     * derive from the base snapshot's DATA, so a lost commit race can't
@@ -1747,18 +1759,6 @@ final class LakeTable private (
     * across real process boundaries (see CrossProcessConflictSpec).
     * Files written by a lost attempt become orphans for maintenance
     * (same note as appendInternal's rebased retry). */
-  /** Tag every Spark job a table operation submits with a readable
-    * description (`graft.<op>`) — the optimization guide's "label your
-    * jobs": attribution in the UI / listeners without touching plans.
-    * Restores the caller's description on exit so nested ops and user
-    * labels survive. */
-  private def labeled[T](op: String)(f: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"graft.$op")
-    try f finally sc.setJobDescription(prev)
-  }
-
   private def rewriteWithRetry(op: () => Long): Long = {
     var n = 0
     while (true) {
@@ -1873,7 +1873,7 @@ final class LakeTable private (
     // delete side (COW semantics regardless of delete-mode: an
     // overwrite is a rewrite op, like Delta's replaceWhere)
     val candidates = pruneByPredicate(base, predicate)
-    val covered = analyzedCond(predicate)
+    val covered = PredicatePruning.analyze(spark, predicate, schema)
       .map(c => fullyCovered(base, c, candidates)).getOrElse(Nil)
     val rest = candidates.diff(covered)
     val affected =
@@ -2643,7 +2643,7 @@ final class LakeTable private (
     if (candidates.isEmpty) return base.snapshotId
     val covered =
       if (assignments.nonEmpty) Nil
-      else analyzedCond(predicate)
+      else PredicatePruning.analyze(spark, predicate, schema)
         .map(c => fullyCovered(base, c, candidates)).getOrElse(Nil)
     val rest = candidates.diff(covered)
     val sch = schema
@@ -3256,11 +3256,6 @@ final class LakeTable private (
       statsOverride = Some(stats), renamesOverride = Some(renames))
   }
 
-  /** Manifest-stats pruning for a `Column` predicate: analyze it against
-    * an empty relation with the table schema (resolving attributes,
-    * inserting coercion casts, and making literal-only subtrees — e.g.
-    * `to_timestamp('…')` — foldable), then intersect the resolved
-    * condition with the per-file bounds. Any failure → no pruning. */
   /** Parquet scan over `relFiles` planned from the MANIFEST (see
     * [[GraftManifestFileIndex]]): file statuses come from per-file
     * manifest sizes — ZERO filesystem listing at plan time — and
@@ -3326,10 +3321,7 @@ final class LakeTable private (
           case a: AttributeReference if inv.contains(a.name) =>
             a.withName(inv(a.name))
         }
-        val kept = pruneByLiteralBloom(ctx, cond,
-          pruneBucketsByPredicate(ctx, cond,
-            PredicatePruning.candidateFiles(cond, logicalSchema, relFiles,
-              ctx.fileStats))).toSet
+        val kept = pruneFiles(ctx, cond, logicalSchema, relFiles).toSet
         p => kept(relativePath(rootPath, p))
       }
     }
@@ -3477,14 +3469,8 @@ final class LakeTable private (
       cond: org.apache.spark.sql.catalyst.expressions.Expression,
       candidates: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{
-      And, AttributeReference, EqualTo, In, Literal, XxHash64}
+      AttributeReference, EqualTo, In, Literal, XxHash64}
     if (base.fileStats.isEmpty) return candidates
-    def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
-        : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-      e match {
-        case And(l, r) => conjuncts(l) ++ conjuncts(r)
-        case x => Seq(x)
-      }
     var files = candidates
     // IN semantics: keep the file iff ANY listed value might be present
     def prune(a: AttributeReference, ls: Seq[Literal]): Unit = {
@@ -3509,7 +3495,7 @@ final class LakeTable private (
           }
       }
     }
-    conjuncts(cond).foreach {
+    PredicatePruning.conjuncts(cond).foreach {
       case EqualTo(a: AttributeReference, l: Literal) => prune(a, Seq(l))
       case EqualTo(l: Literal, a: AttributeReference) => prune(a, Seq(l))
       case In(a: AttributeReference, vs)
@@ -3519,28 +3505,6 @@ final class LakeTable private (
     }
     files
   }
-
-  /** `predicate` ANALYZED against the table schema (attributes
-    * resolved, coercion casts inserted, literal-only subtrees
-    * foldable); None when analysis fails. */
-  private def analyzedCond(predicate: org.apache.spark.sql.Column)
-      : Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-    analyzedCond(predicate, schema)
-
-  /** Variant taking the schema explicitly — the pruned-scan path works
-    * from a snapshot SKELETON and must not trigger the full `current`
-    * materialization that the `schema` accessor implies. */
-  private def analyzedCond(predicate: org.apache.spark.sql.Column,
-      sch: StructType)
-      : Option[org.apache.spark.sql.catalyst.expressions.Expression] =
-    scala.util.Try {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], sch)
-        .where(predicate).queryExecution.analyzed
-        .collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition
-        }
-    }.toOption.flatten
 
   /** Files of `candidates` whose manifest stats PROVE every row matches
     * the analyzed condition — droppable from the manifest with zero
@@ -3556,6 +3520,12 @@ final class LakeTable private (
     }
   }
 
+  /** Manifest pruning for a `Column` predicate: analyze it against the
+    * snapshot's schema ([[PredicatePruning.analyze]]), then keep the
+    * live files [[pruneFiles]] cannot rule out — the same selection a
+    * pruned scan makes, so predicate DELETE/UPDATE, `overwriteWhere`
+    * and [[compactWhere]] touch exactly the files a scan would open.
+    * Analysis failure → no pruning. */
   private[lake] def pruneByPredicate(base: Snapshot,
       predicate: org.apache.spark.sql.Column): Seq[String] = {
     if (base.fileStats.isEmpty) return base.liveFiles
@@ -3563,15 +3533,21 @@ final class LakeTable private (
     // scan path hands in a partially-materialized snapshot and must not
     // force a full `current` load (it would defeat the chunk skipping)
     val sch = DataType.fromJson(base.schemaJson).asInstanceOf[StructType]
-    val cond = analyzedCond(predicate, sch)
-    cond match {
-      case Some(c) =>
-        pruneBucketsByPredicate(base, c,
-          PredicatePruning.candidateFiles(c, sch, base.liveFiles,
-            base.fileStats))
-      case None => base.liveFiles
-    }
+    PredicatePruning.analyze(spark, predicate, sch)
+      .fold(base.liveFiles)(pruneFiles(base, _, sch, base.liveFiles))
   }
+
+  /** The one predicate file pruner, shared by the scan-time file index
+    * and [[pruneByPredicate]]: per-file bounds
+    * ([[PredicatePruning.candidateFiles]]), then bucket hashes
+    * ([[pruneBucketsByPredicate]]), then literal Blooms
+    * ([[pruneByLiteralBloom]]). `cond` is analyzed and spelled in the
+    * snapshot's logical column names. */
+  private def pruneFiles(ctx: Snapshot,
+      cond: org.apache.spark.sql.catalyst.expressions.Expression,
+      sch: StructType, files: Seq[String]): Seq[String] =
+    pruneByLiteralBloom(ctx, cond, pruneBucketsByPredicate(ctx, cond,
+      PredicatePruning.candidateFiles(cond, sch, files, ctx.fileStats)))
 
   /** Bucket-partition pruning for predicates: a top-level
     * `source = literal` / `source IN (literals)` conjunct on a
@@ -3585,17 +3561,13 @@ final class LakeTable private (
       cond: org.apache.spark.sql.catalyst.expressions.Expression,
       candidates: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{
-      And, AttributeReference, EqualTo, Expression, In, Literal, Murmur3Hash}
+      AttributeReference, EqualTo, In, Literal, Murmur3Hash}
     if (base.fileStats.isEmpty) return candidates
     // base's own spec, not `partitionFields` — see pruneByPredicate's
     // schema note (the partial-snapshot path must stay current-free)
     val bucketFields = PartitionSpec.parseAll(base.partitionColumns)
       .filter(_.isBucketLike)
     if (bucketFields.isEmpty) return candidates
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x => Seq(x)
-    }
     var files = candidates
     def prune(name: String, lits: Seq[Literal]): Unit =
       bucketFields.find(_.source == name).foreach { f =>
@@ -3624,7 +3596,7 @@ final class LakeTable private (
             }
           }
       }
-    conjuncts(cond).foreach {
+    PredicatePruning.conjuncts(cond).foreach {
       case EqualTo(a: AttributeReference, l: Literal) => prune(a.name, Seq(l))
       case EqualTo(l: Literal, a: AttributeReference) => prune(a.name, Seq(l))
       case In(a: AttributeReference, vs)
@@ -3653,12 +3625,11 @@ final class LakeTable private (
         live = b.liveFiles, rechunk = true)
     }
 
-  /** Bin-pack compaction: rewrite the current data into at most
+  /** Whole-table compaction: rewrite every live file into at most
     * `targetFilesPerPartition` files per hive partition (small-file
     * compaction — the maintenance operation an ingest-heavy lakehouse
-    * schedules; content-identical, new snapshot). A salt column spreads
-    * each partition's rows across up to `target` shuffle buckets, so no
-    * single task ever funnels the whole table. */
+    * schedules; content-identical, new snapshot). See
+    * [[rewriteDataFiles]] for the layout. */
   def compact(targetFilesPerPartition: Int = 1): Long =
     compact(targetFilesPerPartition, Nil)
 
@@ -3672,6 +3643,45 @@ final class LakeTable private (
     * (one tiny agg over data the rewrite reads anyway); columns must be
     * numeric/date/timestamp/boolean (stat-domain orderable). Content is
     * identical; only layout changes. */
+  def compact(targetFilesPerPartition: Int,
+      clusterBy: Seq[String]): Long = {
+    require(targetFilesPerPartition >= 1, "target must be >= 1")
+    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    clusterBy.foreach { c =>
+      require(types.contains(c), s"no column $c to cluster by")
+      require(types(c) != StringType && FileStats.supportsPruning(types(c)),
+        s"cannot Z-order on ${types(c)} column $c (needs a numeric-" +
+          "orderable stat domain)")
+    }
+    val base = current
+    if (base.liveFiles.isEmpty) base.snapshotId
+    else rewriteDataFiles("compact", base, Seq(base.liveFiles),
+      targetFilesPerPartition, clusterBy)
+  }
+
+  /** Predicate-scoped compaction (≡ Iceberg
+    * `rewrite_data_files(where => …)` / Delta `OPTIMIZE t WHERE …`):
+    * coalesce ONLY the files the predicate selects via MANIFEST
+    * pruning ([[pruneByPredicate]]: per-file bounds, identity
+    * partition values, hidden bucket hashes, literal Blooms) — at
+    * 100 TB the maintenance pass rewrites one partition's files, not
+    * the table. Selection is file-granular and layout-only: every row
+    * of a selected file rewrites (content identical — the predicate
+    * scopes, it does not filter), groups never cross partition dirs or
+    * spec eras, and groups already at or under
+    * `targetFilesPerPartition` files stay put. */
+  def compactWhere(predicate: Column,
+      targetFilesPerPartition: Int = 1): Long = {
+    require(targetFilesPerPartition >= 1, "target must be >= 1")
+    val base = current
+    val rewritten = pruneByPredicate(base, predicate)
+      .groupBy(rewriteGroupOf(base, _)).values
+      .filter(_.size > targetFilesPerPartition).flatten.toSeq.sorted
+    if (rewritten.isEmpty) base.snapshotId
+    else rewriteDataFiles("compactWhere", base, Seq(rewritten),
+      targetFilesPerPartition)
+  }
+
   /** Size-aware binpack compaction (≡ Iceberg `rewrite_data_files`
     * binpack): coalesce SMALL files toward `targetFileBytes` outputs
     * and leave right-sized files untouched — at 100 TB the difference
@@ -3683,15 +3693,9 @@ final class LakeTable private (
     * partition directory + spec era (files of different hive layouts
     * can't share an output), greedy-packed into bins of roughly
     * `targetFileBytes`; only bins holding >= 2 files rewrite (each to
-    * ONE output via a source-file-keyed repartition). Groups with
-    * fewer than `minInputFiles` candidates are left alone. Files with
-    * no recorded size (legacy manifests) are skipped, conservatively.
-    *
-    * Outstanding deletes stay correct WITHOUT a full fold: rewritten
-    * rows are read through the delete set, and the new files' commit
-    * sequence outranks every existing delete so nothing re-suppresses
-    * them; untouched files keep their sequence and their deletes;
-    * stale position-delete rows naming removed files match nothing. */
+    * ONE output). Groups with fewer than `minInputFiles` candidates are
+    * left alone. Files with no recorded size (legacy manifests) are
+    * skipped, conservatively. */
   def binPack(targetFileBytes: Long, minInputFiles: Int = 2): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(minInputFiles >= 2,
@@ -3700,16 +3704,12 @@ final class LakeTable private (
     val smalls = base.liveFiles
       .flatMap(f => base.fileInfo.get(f).map(f -> _.bytes))
       .filter(_._2 < targetFileBytes)
-    val groups = smalls.groupBy { case (f, _) =>
-      (f.take(f.lastIndexOf('/') + 1), base.fileSpec.getOrElse(f, 0L))
-    }
     // on a sort-ordered table, bins are formed in RANGE order (files
     // ordered by their recorded min bound of the leading sort column,
     // not by path): disjoint input ranges then pack into contiguous,
     // still-disjoint output ranges, preserving single-file pruning
-    val sortCols = sortOrderColumns
     val binOrder: Seq[(String, Long)] => Seq[(String, Long)] =
-      sortCols.headOption.flatMap { c =>
+      sortOrderColumns.headOption.flatMap { c =>
         schema.fields.find(_.name == c).map { f =>
           // total order (strict weak ordering for TimSort): stat-less
           // files (e.g. written before a sort-column rename) sort first
@@ -3734,165 +3734,106 @@ final class LakeTable private (
         }
       }.getOrElse((files: Seq[(String, Long)]) => files.sortBy(_._1))
     val bins = Seq.newBuilder[Seq[String]]
-    groups.toSeq.sortBy(_._1._1).foreach { case (_, files) =>
-      if (files.size >= minInputFiles) {
-        var cur = List.empty[String]
-        var bytes = 0L
-        def flush(): Unit = {
-          if (cur.sizeIs >= 2) bins += cur.reverse
-          cur = Nil; bytes = 0L
+    smalls.groupBy { case (f, _) => rewriteGroupOf(base, f) }
+      .toSeq.sortBy(_._1._1).foreach { case (_, files) =>
+        if (files.size >= minInputFiles) {
+          var cur = List.empty[String]
+          var bytes = 0L
+          def flush(): Unit = {
+            if (cur.sizeIs >= 2) bins += cur.reverse
+            cur = Nil; bytes = 0L
+          }
+          binOrder(files).foreach { case (f, b) =>
+            if (cur.nonEmpty && bytes + b > targetFileBytes) flush()
+            cur ::= f; bytes += b
+          }
+          flush()
         }
-        binOrder(files).foreach { case (f, b) =>
-          if (cur.nonEmpty && bytes + b > targetFileBytes) flush()
-          cur ::= f; bytes += b
-        }
-        flush()
       }
-    }
     val packed = bins.result()
-    if (packed.isEmpty) return base.snapshotId
-    val rewritten = packed.flatten
-    // bin id per source file. Matching key is the bare fs PATH — the
-    // scan's input_file_name() spells the scheme as `file:///root/…`
-    // while Hadoop Path.toString spells `file:/root/…`, so both sides
-    // normalize to the scheme-less path before the join.
-    val spark0 = spark
-    import spark0.implicits._
-    val pathBins = packed.zipWithIndex.flatMap { case (fls, i) =>
-      fls.map(f =>
-        fs.makeQualified(new Path(rootPath, f)).toUri.getPath -> i)
-    }.toDF("__graft_path", "__graft_bin")
-    // bins are a packing heuristic: a hash collision can co-locate two
-    // bins in one task, which only makes an output file larger (and
-    // dynamic partitioning still splits cross-dir rows) — the size
-    // target is advisory, correctness never depends on it. On a
-    // sort-ordered table the distribution is RANGE on (bin, sort
-    // cols) + an in-partition sort instead: bins were formed in range
-    // order, so every output file is a contiguous slice of the global
-    // sort — bounds stay disjoint and pruning stays single-file.
-    val joined = readFilesAs(base, rewritten, withName = true,
-        withLineage = rowLineageEnabled)
-      .withColumn("__graft_path",
-        regexp_replace(col(FILE_COL), "^[A-Za-z0-9+.-]+:/+", "/"))
-      .join(maybeBroadcastFileList(pathBins,
-        fileListBytes(rewritten)), Seq("__graft_path"))
-    val data = (if (sortCols.isEmpty)
-        joined.repartition(packed.size, col("__graft_bin"))
-      else {
-        val order = col("__graft_bin") +: sortCols.map(col)
-        joined.repartitionByRange(packed.size, order: _*)
-          .sortWithinPartitions(order: _*)
-      }).drop(FILE_COL, "__graft_path", "__graft_bin")
-    val WriteResult(added, stats, info) = writeDataFiles(data)
-    // row-conservation guard (manifest arithmetic, no extra job): with
-    // no deletes outstanding the rewrite must carry EXACTLY the input
-    // rows — a path-normalization miss in the bin join would otherwise
-    // silently drop whole files
-    if (base.deleteFiles.isEmpty && base.posDeleteFiles.isEmpty &&
-        base.dvFiles.isEmpty) {
-      val expectRows = rewritten.flatMap(base.fileInfo.get).map(_.rows).sum
-      val gotRows = info.values.map(_.rows).sum
-      require(gotRows == expectRows,
-        s"binPack aborted before commit: rewrite carries $gotRows rows " +
-          s"of $expectRows read — refusing to lose data")
-    }
-    val keep = base.liveFiles.filterNot(rewritten.toSet)
-    commit(base, "compact", added = added, removed = rewritten,
-      live = keep ++ added, addedStats = stats, addedInfo = info)
+    if (packed.isEmpty) base.snapshotId
+    else rewriteDataFiles("binPack", base, packed, target = 1)
   }
 
-  /** Predicate-scoped compaction (≡ Iceberg
-    * `rewrite_data_files(where => …)` / Delta `OPTIMIZE t WHERE …`):
-    * coalesce ONLY the files the predicate selects via MANIFEST
-    * pruning (per-file bounds, identity partition values, hidden
-    * bucket hashes) — at 100 TB the maintenance pass rewrites one
-    * partition's files, not the table. Selection is file-granular and
-    * layout-only: every row of a selected file rewrites (content
-    * identical — the predicate scopes, it does not filter), groups
-    * never cross partition dirs or spec eras, and groups already at or
-    * under `targetFilesPerPartition` files stay put. Outstanding
-    * deletes stay correct exactly as in [[binPack]]: rewritten rows
-    * are read THROUGH the delete set and the new files' sequence
-    * outranks every existing delete; untouched files keep their delete
-    * state (only a FULL [[compact]] clears delete files). */
-  def compactWhere(predicate: Column,
-      targetFilesPerPartition: Int = 1): Long = {
-    require(targetFilesPerPartition >= 1, "target must be >= 1")
-    val base = current
-    if (base.liveFiles.isEmpty) return base.snapshotId
-    val cands = pruneByPredicate(base, predicate)
-    val groups = cands.groupBy(f => (f.take(f.lastIndexOf('/') + 1),
-        base.fileSpec.getOrElse(f, 0L)))
-      .filter(_._2.size > targetFilesPerPartition)
-    val rewritten = groups.values.flatten.toSeq.sorted
-    if (rewritten.isEmpty) return base.snapshotId
-    val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    val salt = "__graft_compact_salt"
-    val numParts = math.max(1L,
-      groups.size.toLong * targetFilesPerPartition).min(100000L).toInt
-    // deterministic content-hash salt — same retry-safety bar as
-    // [[compact]]'s (a re-salted retry must place rows identically)
-    val data = readFilesForRewrite(base, rewritten)
-      .withColumn(salt, pmod(xxhash64(schema.fields.map(f =>
-          LakeTable.comparableCol(f.name, f.dataType)).toIndexedSeq: _*),
-        lit(targetFilesPerPartition)))
-      .repartition(numParts,
-        (partitionFields.map(f => f.expr(types(f.source))) :+
-          col(salt)): _*)
-      .drop(salt)
-    val WriteResult(added, stats, info) = writeDataFiles(data)
-    // row-conservation guard, manifest arithmetic (see binPack) —
-    // only provable when nothing suppresses rows and counts are known
-    if (base.deleteFiles.isEmpty && base.posDeleteFiles.isEmpty &&
-        base.dvFiles.isEmpty &&
-        rewritten.forall(base.fileInfo.contains)) {
-      val expectRows = rewritten.map(base.fileInfo(_).rows).sum
-      val gotRows = info.values.map(_.rows).sum
-      require(gotRows == expectRows,
-        s"compactWhere aborted before commit: rewrite carries $gotRows " +
-          s"rows of $expectRows read — refusing to lose data")
-    }
-    val keep = base.liveFiles.filterNot(rewritten.toSet)
-    commit(base, "compact", added = added, removed = rewritten,
-      live = keep ++ added, addedStats = stats, addedInfo = info)
-  }
+  /** The (partition directory, spec era) a file belongs to: files of
+    * different hive layouts never share one compaction group. */
+  private def rewriteGroupOf(base: Snapshot, f: String): (String, Long) =
+    (f.take(f.lastIndexOf('/') + 1), base.fileSpec.getOrElse(f, 0L))
 
-  def compact(targetFilesPerPartition: Int,
-      clusterBy: Seq[String]): Long = {
-    require(targetFilesPerPartition >= 1, "target must be >= 1")
+  /** The one data-file rewrite engine (≡ Iceberg's `rewrite_data_files`
+    * action, whose binpack / sort / z-order are strategies of it):
+    * [[compact]], [[compactWhere]] and [[binPack]] only SELECT files;
+    * this reads, lays out, guards and commits them once.
+    *
+    * `groups` are output groups: rows of different groups never share
+    * an output file (binPack's bins); within a group the layout aims
+    * at `target` files per (partition directory, spec era).
+    *
+    *  - READ through the delete set (with `_row_id` on lineage tables,
+    *    so the rewrite preserves the ids).
+    *  - LAYOUT, decided by the table: a Z-value range when `clusterBy`
+    *    is given; else a range on the `write.sort.order` columns (a
+    *    sort-ordered table's pruning depends on per-file bounds staying
+    *    DISJOINT — a hash layout would widen every file to the whole
+    *    key range); else a deterministic content-hash salt mod
+    *    `target`. Range boundaries are sampled ONCE on the driver, so
+    *    a retried task places every row identically, the same
+    *    retry-safety bar the content-hash salt meets.
+    *  - GUARD: with no delete artifact outstanding and every input's
+    *    row count recorded, the output must carry exactly the input
+    *    rows (manifest arithmetic, no extra job).
+    *  - COMMIT: one `compact` snapshot. The new files' sequence
+    *    outranks every existing delete, so nothing re-suppresses the
+    *    rewritten rows; untouched files keep their deletes, and stale
+    *    position-delete rows naming removed files match nothing. When
+    *    every live file was rewritten, the delete artifacts are
+    *    cleared — the rewrite already applied them all. */
+  private def rewriteDataFiles(op: String, base: Snapshot,
+      groups: Seq[Seq[String]], target: Int,
+      clusterBy: Seq[String] = Nil): Long = labeled(op) {
+    val rewritten = groups.flatten
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    clusterBy.foreach { c =>
-      require(types.contains(c), s"no column $c to cluster by")
-      require(types(c) != StringType && FileStats.supportsPruning(types(c)),
-        s"cannot Z-order on ${types(c)} column $c (needs a numeric-" +
-          "orderable stat domain)")
-    }
-    val base = current
-    if (base.liveFiles.isEmpty) return base.snapshotId
-    val salt = "__graft_compact_salt"
-    val all = readFilesForRewrite(base, base.liveFiles)
     // partition expressions: identity columns directly, transformed
     // fields via their derived expression (same value the write derives)
-    val partExprs = partitionFields.map(f =>
-      f.expr(types(f.source)).as(f.dirName))
+    val partExprs = partitionFields.map(f => f.expr(types(f.source)))
     // explicit numPartitions: an expression-only repartition would be
     // AQE-coalesced back into few partitions, defeating the file target
-    val nHivePartitions =
-      if (partExprs.isEmpty) 1L
-      else all.select(partExprs: _*).distinct().count()
-    val numParts = math.max(1L,
-      nHivePartitions * targetFilesPerPartition).min(100000L).toInt
-    val data =
+    val numParts = math.max(1L, groups.map(g =>
+        g.map(rewriteGroupOf(base, _)).distinct.size.toLong)
+      .sum * target).min(100000L).toInt
+    val read = readFilesAs(base, rewritten, withName = groups.size > 1,
+      withLineage = rowLineageEnabled)
+    val grp = "__graft_group"
+    val (data, groupKey) =
+      if (groups.size == 1) (read, Nil)
+      else {
+        // group id per source file. Matching key is the bare fs PATH —
+        // the scan's input_file_name() spells the scheme as
+        // `file:///data/…` while Hadoop Path.toString spells
+        // `file:/data/…`, so both sides normalize to the scheme-less
+        // path before the join.
+        val spark0 = spark
+        import spark0.implicits._
+        val pathGroups = groups.zipWithIndex.flatMap { case (fls, i) =>
+          fls.map(f =>
+            fs.makeQualified(new Path(rootPath, f)).toUri.getPath -> i)
+        }.toDF("__graft_path", grp)
+        (read.withColumn("__graft_path",
+            regexp_replace(col(FILE_COL), "^[A-Za-z0-9+.-]+:/+", "/"))
+          .join(maybeBroadcastFileList(pathGroups,
+            fileListBytes(rewritten)), Seq("__graft_path"))
+          .drop(FILE_COL, "__graft_path"), Seq(col(grp)))
+      }
+    val layoutKey = groupKey ++ partExprs
+    val laidOut =
       if (clusterBy.nonEmpty) {
         // Z-order: one agg for the global bounds, then range-distribute
-        // + sort by the interleaved rank. Range boundaries are sampled
-        // ONCE on the driver and broadcast, so task retries place every
-        // row identically (same retry-safety bar as the hash salt).
+        // + sort by the interleaved rank
         val zcol = "__graft_zvalue"
         val encs = clusterBy.map(c => FileStats.boundExpr(c, types(c))
           .cast(DoubleType))
         val aggs = encs.flatMap(e => Seq(min(e), max(e)))
-        val row = all.agg(aggs.head, aggs.tail: _*).head()
+        val row = data.agg(aggs.head, aggs.tail: _*).head()
         val ranks = encs.zipWithIndex.map { case (e, i) =>
           val mn = Option(row.get(2 * i)).fold(0.0)(_.asInstanceOf[Double])
           val mx = Option(row.get(2 * i + 1))
@@ -3909,45 +3850,42 @@ final class LakeTable private (
             shiftleft(shiftright(r, bit).bitwiseAND(lit(1L)), bit * k + j)
           }
         }.reduce(_ + _) // disjoint bit positions: + == bitwise OR
-        all.withColumn(zcol, z)
-          .repartitionByRange(numParts, (partExprs :+ col(zcol)): _*)
-          .sortWithinPartitions((partExprs :+ col(zcol)): _*)
+        data.withColumn(zcol, z)
+          .repartitionByRange(numParts, (layoutKey :+ col(zcol)): _*)
+          .sortWithinPartitions((layoutKey :+ col(zcol)): _*)
           .drop(zcol)
       } else if (sortOrderColumns.nonEmpty) {
-        // SORT-ORDER-AWARE rewrite (≡ Iceberg's sort-order-preserving
-        // rewrite_data_files): a sort-ordered table's read-side
-        // pruning depends on per-file bounds staying DISJOINT — the
-        // hash-salt path below would shuffle the clustering away and
-        // widen every rewritten file's range to the whole domain,
-        // degrading post-compaction merge/filter pruning from
-        // one-file to all-files. Range-distribute + sort by the
-        // declared order instead (boundaries sampled once on the
-        // driver — same retry-determinism bar as the Z-order path).
-        val sc = sortOrderColumns.map(col)
-        all.repartitionByRange(numParts, (partExprs ++ sc): _*)
-          .sortWithinPartitions((partExprs ++ sc): _*)
+        val order = layoutKey ++ sortOrderColumns.map(col)
+        data.repartitionByRange(numParts, order: _*)
+          .sortWithinPartitions(order: _*)
       } else {
         // salt must be DETERMINISTIC per row (content hash, not
         // monotonically_increasing_id): a retried map task re-salting
         // rows differently than its first attempt would duplicate/lose
-        // rows across reducers — and compact retires the only correct copy
-        all
-          .withColumn(salt, pmod(xxhash64(schema.fields.map(f =>
-              LakeTable.comparableCol(f.name, f.dataType))
-              .toIndexedSeq: _*),
-            lit(targetFilesPerPartition)))
-          .repartition(numParts,
-            (partitionFields.map(f => f.expr(types(f.source))) :+
-              col(salt)): _*)
-          .drop(salt)
+        // rows across reducers — and the rewrite retires the only
+        // correct copy
+        val salt = pmod(xxhash64(schema.fields.map(f =>
+            LakeTable.comparableCol(f.name, f.dataType)).toIndexedSeq: _*),
+          lit(target))
+        data.repartition(numParts, (layoutKey :+ salt): _*)
       }
-    val WriteResult(added, stats, info) = writeDataFiles(data)
-    // compaction folds outstanding equality AND position deletes into
-    // the rewrite (readFiles applied both) — the new snapshot starts
-    // delete-free
-    commit(base, "compact", added = added, removed = base.liveFiles,
-      live = added, addedStats = stats, addedInfo = info, deletesOverride = Some(Nil),
-      posDeletesOverride = Some(Nil), dvOverride = Some(Nil))
+    val WriteResult(added, stats, info) = writeDataFiles(laidOut.drop(grp))
+    // row-conservation guard: a path-normalization miss in the group
+    // join would otherwise silently drop whole files
+    if (base.deleteFiles.isEmpty && base.posDeleteFiles.isEmpty &&
+        base.dvFiles.isEmpty && rewritten.forall(base.fileInfo.contains)) {
+      val expectRows = rewritten.map(base.fileInfo(_).rows).sum
+      val gotRows = info.values.map(_.rows).sum
+      require(gotRows == expectRows,
+        s"$op aborted before commit: rewrite carries $gotRows rows " +
+          s"of $expectRows read — refusing to lose data")
+    }
+    val keep = base.liveFiles.filterNot(rewritten.toSet)
+    val cleared = if (keep.isEmpty) Some(Nil) else None
+    commit(base, "compact", added = added, removed = rewritten,
+      live = keep ++ added, addedStats = stats, addedInfo = info,
+      deletesOverride = cleared, posDeletesOverride = cleared,
+      dvOverride = cleared)
   }
 
   /** Expire snapshots older than the latest `keepLast`, deleting their

@@ -1,7 +1,9 @@
 package graft.lake
 
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.types._
 
 /** Manifest-stats pruning for predicate-driven DELETE/UPDATE: decide,
@@ -24,6 +26,26 @@ import org.apache.spark.sql.types._
 object PredicatePruning {
 
   private type Check = (DataType, ColStat, String) => Boolean
+
+  /** `predicate` ANALYZED against an empty relation of `schema`:
+    * attributes resolved, coercion casts inserted, literal-only
+    * subtrees (e.g. `to_timestamp('…')`) foldable. None when analysis
+    * fails — callers then prune nothing (pruning is never
+    * load-bearing). */
+  def analyze(spark: SparkSession, predicate: Column,
+      schema: StructType): Option[Expression] =
+    scala.util.Try {
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+        .where(predicate).queryExecution.analyzed
+        .collectFirst { case f: Filter => f.condition }
+    }.toOption.flatten
+
+  /** The top-level AND conjuncts of `e` (the facts a matching row must
+    * satisfy one by one — what bucket and Bloom pruning key on). */
+  def conjuncts(e: Expression): Seq[Expression] = e match {
+    case And(l, r) => conjuncts(l) ++ conjuncts(r)
+    case x => Seq(x)
+  }
 
   /** Files from `liveFiles` that may contain a row matching `predicate`.
     * `stats` maps file → column → recorded bounds (absent = unknown). */

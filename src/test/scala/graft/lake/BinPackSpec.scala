@@ -74,6 +74,10 @@ class BinPackSpec extends AnyFunSuite {
     assert(t.currentSnapshot.get.liveFiles.nonEmpty)
     assert(t.scan().collect().map(_.toSeq.toString).sorted.sameElements(expect),
       "rewritten rows fold the deletes; nothing re-suppresses them")
+    // both small files packed into one bin: every live file rewrote, so
+    // the folded delete files retire with them
+    assert(t.currentSnapshot.get.deleteFiles.isEmpty,
+      "a rewrite of every live file leaves no delete artifact behind")
   }
 
   test("CALL rewrite_small_files drives binPack through SQL") {

@@ -49,6 +49,25 @@ class BloomPruningSpec extends AnyFunSuite {
     assert(after.liveFiles.toSet.intersect(before).size == 1)
   }
 
+  test("predicate pruning consults the blooms, as scans do") {
+    val t = overlapTable(TestSpark.tmpDir("bloom-pred") + "/t")
+    val snap = t.currentSnapshot.get
+    val evenFile = snap.liveFiles.find(f =>
+      t.pruneByStats(snap, Seq(500L).toDF("id"), Seq("id")) == Seq(f)).get
+    // both files span the key range, so bounds keep both; the literal's
+    // bloom probe keeps only the file that may hold it — the selection
+    // predicate DELETE/UPDATE, overwriteWhere and compactWhere act on
+    assert(t.pruneByPredicate(snap, col("id") === 500L) == Seq(evenFile))
+    assert(t.pruneByPredicate(snap, col("id").isin(500L, 502L)) ==
+      Seq(evenFile))
+    assert(t.pruneByPredicate(snap, col("id") === 501L).size == 1)
+    assert(!t.pruneByPredicate(snap, col("id") === 501L).contains(evenFile))
+    // a predicate delete through that selection stays exact
+    t.delete(col("id") === 500L)
+    assert(t.scan().count() == 999)
+    assert(t.scan().where($"id" === 500L).count() == 0)
+  }
+
   test("bloom never false-negatives: every present key finds its file") {
     val t = overlapTable(TestSpark.tmpDir("bloom-fn") + "/t")
     val snap = t.currentSnapshot.get

@@ -86,32 +86,38 @@ class SortOrderSpec extends AnyFunSuite {
     // the maintenance shape for streaming upserts: many sorted
     // micro-batch files accumulate; compaction must keep the declared
     // clustering (Iceberg's sort-order-aware rewrite) or merge pruning
-    // degrades from one file back to all files
-    val root = TestSpark.tmpDir("sortcompact") + "/t"
-    val df = (1L to 1200L).map(i => (i, s"v$i")).toDF("id", "v")
-    val t = LakeTable.create(spark, root, df.schema,
-      properties = Map(LakeTable.PROP_SORT_ORDER -> "id"))
-    // 6 appends with interleaved key ranges — each internally sorted,
-    // but the FILES' ranges overlap across appends
-    (0 until 6).foreach { i =>
-      t.append(df.where($"id" % 6 === i))
+    // degrades from one file back to all files — whichever entry
+    // selects the files (the whole table, or a predicate's scope)
+    Seq[(String, LakeTable => Long)](
+      "compact" -> (_.compact(targetFilesPerPartition = 4)),
+      "compactWhere" -> (_.compactWhere(lit(true), 4))
+    ).foreach { case (entry, rewrite) =>
+      val root = TestSpark.tmpDir(s"sortcompact-$entry") + "/t"
+      val df = (1L to 1200L).map(i => (i, s"v$i")).toDF("id", "v")
+      val t = LakeTable.create(spark, root, df.schema,
+        properties = Map(LakeTable.PROP_SORT_ORDER -> "id"))
+      // 6 appends with interleaved key ranges — each internally sorted,
+      // but the FILES' ranges overlap across appends
+      (0 until 6).foreach { i =>
+        t.append(df.where($"id" % 6 === i))
+      }
+      assert(t.currentSnapshot.get.liveFiles.size >= 6)
+      val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+      spark.conf.set(coalesceKey, "false")
+      try rewrite(t)
+      finally spark.conf.set(coalesceKey, "true")
+      val after = t.currentSnapshot.get
+      assert(after.liveFiles.size > 1,
+        "need multiple post-compact files to prove disjointness")
+      disjointRanges(t)
+      // and pruning is single-file again
+      val pruned = t.pruneByStats(after,
+        Seq((600L, "upd")).toDF("id", "v"), Seq("id"))
+      assert(pruned.size == 1, s"expected 1 candidate, got $pruned")
+      assert(t.scan().count() == 1200)
+      assert(t.scan().agg(sum("id")).head().getLong(0) ==
+        (1L to 1200L).sum)
     }
-    assert(t.currentSnapshot.get.liveFiles.size >= 6)
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    spark.conf.set(coalesceKey, "false")
-    try t.compact(targetFilesPerPartition = 4)
-    finally spark.conf.set(coalesceKey, "true")
-    val after = t.currentSnapshot.get
-    assert(after.liveFiles.size > 1,
-      "need multiple post-compact files to prove disjointness")
-    disjointRanges(t)
-    // and pruning is single-file again
-    val pruned = t.pruneByStats(after,
-      Seq((600L, "upd")).toDF("id", "v"), Seq("id"))
-    assert(pruned.size == 1, s"expected 1 candidate, got $pruned")
-    assert(t.scan().count() == 1200)
-    assert(t.scan().agg(sum("id")).head().getLong(0) ==
-      (1L to 1200L).sum)
   }
 
   test("binPack on a sort-ordered table packs bins in RANGE order") {
