@@ -7,7 +7,9 @@ import org.apache.spark.sql.SparkSession
   * Explain, MedallionDemo, ScaleSmoke) and the test suite run under, so
   * the suite exercises exactly what the oracle checked and the benches
   * measure (≡ the reference's one `create_spark_session` helper,
-  * scripts/raw-bronze.py:102-116).
+  * scripts/raw-bronze.py:102-116). The four ScaleSmoke scale legs run on
+  * the session they are handed — this one from `ScaleSmoke.main`, the
+  * suite's in `ScaleSmokeSpec` — and put back any conf they set.
   *
   * Engine confs it owns:
   *   - `local[cores]` with `cores` shuffle partitions, UTC session time

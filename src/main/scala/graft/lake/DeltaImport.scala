@@ -306,10 +306,11 @@ object DeltaImport {
     // checkpoint seed (only when usable at or below the target).
     // Preference: PURE JSON replay whenever the full 0..target commit
     // chain is still present and short — the columnar seed pays two
-    // fixed Spark jobs (~0.4 s measured at 800 adds, ScaleSmoke
-    // delta-publish) that only amortize past many versions or the
-    // multi-GB foreign checkpoints it exists for; after log cleanup
-    // the seed is the only reconstruction path and always taken.
+    // fixed Spark jobs (391 ms vs 46 ms of JSON replay at 802 adds,
+    // PERF.md "Round 16: DV publish cost at file-count scale") that
+    // only amortize past many versions or the multi-GB foreign
+    // checkpoints it exists for; after log cleanup the seed is the
+    // only reconstruction path and always taken.
     val jsonChainComplete = versions.headOption.contains(0L) &&
       versions.filter(_ <= target) == (0L to target)
     val seedV = ckptVersion(fs, logDir, m).filter(_ <= target)

@@ -1872,9 +1872,9 @@ final class LakeTable private (
     }
     // delete side (COW semantics regardless of delete-mode: an
     // overwrite is a rewrite op, like Delta's replaceWhere)
-    val candidates = pruneByPredicate(base, predicate)
-    val covered = PredicatePruning.analyze(spark, predicate, schema)
-      .map(c => fullyCovered(base, c, candidates)).getOrElse(Nil)
+    val (cond, candidates) = analyzeAndPrune(base, predicate)
+    val covered =
+      cond.fold(Seq.empty[String])(fullyCovered(base, _, candidates))
     val rest = candidates.diff(covered)
     val affected =
       if (rest.isEmpty) Nil
@@ -2639,12 +2639,11 @@ final class LakeTable private (
     val op = if (assignments.isEmpty) "delete" else "update"
     val base = current
     if (base.liveFiles.isEmpty) return base.snapshotId
-    val candidates = pruneByPredicate(base, predicate)
+    val (cond, candidates) = analyzeAndPrune(base, predicate)
     if (candidates.isEmpty) return base.snapshotId
     val covered =
       if (assignments.nonEmpty) Nil
-      else PredicatePruning.analyze(spark, predicate, schema)
-        .map(c => fullyCovered(base, c, candidates)).getOrElse(Nil)
+      else cond.fold(Seq.empty[String])(fullyCovered(base, _, candidates))
     val rest = candidates.diff(covered)
     val sch = schema
     val mor = properties.get(
@@ -3527,14 +3526,24 @@ final class LakeTable private (
     * and [[compactWhere]] touch exactly the files a scan would open.
     * Analysis failure → no pruning. */
   private[lake] def pruneByPredicate(base: Snapshot,
-      predicate: org.apache.spark.sql.Column): Seq[String] = {
-    if (base.fileStats.isEmpty) return base.liveFiles
+      predicate: org.apache.spark.sql.Column): Seq[String] =
+    analyzeAndPrune(base, predicate)._2
+
+  /** [[pruneByPredicate]] that also hands back the analyzed condition
+    * (None: no stats to prune with, or analysis failed), so a caller
+    * proving [[fullyCovered]] files analyzes the predicate once. */
+  private def analyzeAndPrune(base: Snapshot,
+      predicate: org.apache.spark.sql.Column)
+      : (Option[org.apache.spark.sql.catalyst.expressions.Expression],
+        Seq[String]) = {
+    if (base.fileStats.isEmpty) return (None, base.liveFiles)
     // schema from the SNAPSHOT, not the `schema` accessor: the pruned
     // scan path hands in a partially-materialized snapshot and must not
     // force a full `current` load (it would defeat the chunk skipping)
     val sch = DataType.fromJson(base.schemaJson).asInstanceOf[StructType]
-    PredicatePruning.analyze(spark, predicate, sch)
-      .fold(base.liveFiles)(pruneFiles(base, _, sch, base.liveFiles))
+    val cond = PredicatePruning.analyze(spark, predicate, sch)
+    (cond,
+      cond.fold(base.liveFiles)(pruneFiles(base, _, sch, base.liveFiles)))
   }
 
   /** The one predicate file pruner, shared by the scan-time file index
@@ -4840,8 +4849,9 @@ object MergeWhen {
 
 object LakeTable {
 
-  /** Commit-path micro-timers (ScaleSmoke `commit-depth` profiling —
-    * off by default, one atomic read per section when disabled). */
+  /** Commit-path micro-timers, read by `graft.Prof`; replaced by
+    * ROADMAP item 1's reports. Off by default, one atomic read per
+    * section when disabled. */
   private[graft] val timersEnabled =
     new java.util.concurrent.atomic.AtomicBoolean(false)
   private[graft] val timers = new java.util.concurrent.ConcurrentHashMap[

@@ -69,8 +69,16 @@ trait ConditionalPut {
 }
 
 /** [[ConditionalPut]] over a Hadoop FileSystem: exclusive create is
-  * the conditional PUT (HDFS/local honor it natively). */
-final class FsConditionalPut(fs: FileSystem) extends ConditionalPut {
+  * the conditional PUT (HDFS/local honor it natively). A checksummed
+  * FileSystem (the local one) is bypassed for its raw FileSystem: the
+  * length-prefixed frame is what guards a generation's completeness, so
+  * a `.crc` sibling would cost a create and a delete per swap and guard
+  * nothing. */
+final class FsConditionalPut(checked: FileSystem) extends ConditionalPut {
+  private val fs = checked match {
+    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
   override def putIfAbsent(p: Path, value: String): Unit =
     try LakeTable.writeStringExclusive(fs, p, value)
     catch {

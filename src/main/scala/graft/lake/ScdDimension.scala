@@ -131,12 +131,13 @@ object ScdDimension {
     * bit-for-bit (the lineage vocabulary folds back to insert/delete
     * before the shared apply core; ScdDimensionSpec proves the
     * equivalence). It is OPT-IN, not automatic, because the measured
-    * default regime favors content-diff: at the sf0.1 ScaleSmoke
-    * (150k keys, scattered ~1.1k-key updates, 20 cycles) lineage
-    * refreshes averaged 6.5 s vs 4.9 s (cow dim) and 5.8 s vs 3.7 s
-    * (mor dim) — the id-materializing read (`_metadata.row_index` +
-    * first_row_id resolution per side) costs more than the
-    * `EXCEPT ALL` pair it replaces. The switch exists for sources
+    * default regime favors content-diff: at sf0.1 (150k keys,
+    * scattered ~1.1k-key updates, 20 cycles; PERF.md "Round 16: SCD2
+    * lineage-changelog hypothesis") lineage refreshes averaged 6.5 s
+    * vs 4.9 s (cow dim) and 5.8 s vs 3.7 s (mor dim) — the
+    * id-materializing read (`_metadata.row_index` + first_row_id
+    * resolution per side) costs more than the `EXCEPT ALL` pair it
+    * replaces. The switch exists for sources
     * where the balance flips (very wide rows, where hashing full
     * row content dominates reading an 8-byte id). */
   def refresh(source: LakeTable, target: LakeTable, keys: Seq[String],

@@ -166,5 +166,9 @@ class PointerStoreSpec extends AnyFunSuite {
     // no HEAD rename artifact exists — the pointer is generations only
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     assert(!fs.exists(new Path(root, s"${LakeTable.METADATA_DIR}/HEAD")))
+    // generations are framed, not checksummed: no `.crc` siblings
+    val ptrDir = new java.io.File(s"$root/${LakeTable.METADATA_DIR}/.ptr-HEAD")
+    assert(ptrDir.list().nonEmpty && !ptrDir.list().exists(_.endsWith(".crc")),
+      ptrDir.list().mkString(", "))
   }
 }
