@@ -3,7 +3,8 @@ package graft.lake
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path,
+  RawLocalFileSystem}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftlake.GraftManifestFileIndex
@@ -75,11 +76,28 @@ final class LakeTable private (
 
   private def readPointer(p: Path): Option[String] = pointerStore.read(p)
 
-  def snapshot(id: Long): Snapshot = {
-    val p = new Path(metaDir, s"v$id.json")
-    require(fs.exists(p),
+  /** Version `id`'s snapshot doc (see [[ManifestIO.docName]]). */
+  private def docPath(id: Long): Path =
+    new Path(metaDir, ManifestIO.docName(id))
+
+  private def requireDoc(id: Long): Unit =
+    require(fs.exists(docPath(id)),
       s"snapshot $id not found in $root (expired or never committed)")
-    // Materialized-snapshot cache: a v<id>.json at-or-below HEAD is
+
+  /** Version `id`'s doc JSON; an expired or unknown id fails loudly. */
+  private def readDoc(id: Long): String = {
+    requireDoc(id)
+    ManifestIO.readDoc(fs, metaDir, id)
+  }
+
+  /** Versions of every snapshot doc in `metadata/`, unsorted. */
+  private def docIds: Seq[Long] =
+    fs.listStatus(metaDir).toSeq.flatMap(s =>
+      ManifestIO.docId(s.getPath.getName))
+
+  def snapshot(id: Long): Snapshot = {
+    requireDoc(id)
+    // Materialized-snapshot cache: a v<id>.json.gz at-or-below HEAD is
     // immutable (commits only ever create NEW versions; the one file
     // that can be rewritten is a crashed commit's beyond-HEAD debris,
     // which is never cached). The existence check above still runs
@@ -88,7 +106,7 @@ final class LakeTable private (
     // re-materializing the per-file maps each time.
     val cached = snapCache.get(id)
     if (cached != null) return cached
-    val json = readString(fs, p)
+    val json = ManifestIO.readDoc(fs, metaDir, id)
     // the doc's OWN inline chunks are in hand — seed the cache so
     // materializing it doesn't re-read the file per chunk (each seed
     // still counts as ONE cold chunk load for the pruning metric)
@@ -122,11 +140,7 @@ final class LakeTable private (
     if (full != null) return full
     val c = skelCache.get(id)
     if (c != null) return c
-    val p = new Path(metaDir, s"v$id.json")
-    require(fs.exists(p),
-      s"snapshot $id not found in $root (expired or never committed)")
-    val json = readString(fs, p)
-    val s = ManifestIO.listSkeleton(json)
+    val s = ManifestIO.listSkeleton(readDoc(id))
     if (currentSnapshotId.exists(id <= _)) {
       if (skelCache.size >= 256) skelCache.clear()
       skelCache.put(id, s)
@@ -145,11 +159,11 @@ final class LakeTable private (
   /** Cold chunk reads (cache misses) — observable by specs asserting
     * that summary-pruned scans load strictly fewer chunks. */
   private[lake] val chunkLoads = new java.util.concurrent.atomic.AtomicLong
-  /** Inline delta chunks: `iv<hostVersion>-<k>.json`, embedded in their
-    * host snapshot doc at commit (zero extra creates); a real file of
-    * the same name exists only once expiry PROMOTED the chunk past its
-    * host's death — the file, when present, wins. */
-  private val InlineChunkRe = "^iv(\\d+)-\\d+\\.json$".r
+  /** Inline delta chunks: `iv<hostVersion>-<k>.json.gz`, embedded in
+    * their host snapshot doc at commit (zero extra creates); a real
+    * (gzip) file of the same name exists only once expiry PROMOTED the
+    * chunk past its host's death — the file, when present, wins. */
+  private val InlineChunkRe = "^iv(\\d+)-\\d+\\.json\\.gz$".r
   private def loadChunk(name: String): Seq[ManifestEntry] =
     chunkCache.computeIfAbsent(name, { n =>
       chunkLoads.incrementAndGet()
@@ -157,9 +171,10 @@ final class LakeTable private (
       n match {
         case InlineChunkRe(vid) if !fs.exists(p) =>
           ManifestIO.inlineChunk(
-              readString(fs, new Path(metaDir, s"v$vid.json")), n)
+              ManifestIO.readDoc(fs, metaDir, vid.toLong), n)
             .getOrElse(throw new IllegalStateException(
-              s"chunk $n absent from both $metaDir and v$vid.json"))
+              s"chunk $n absent from both $metaDir and " +
+                ManifestIO.docName(vid.toLong)))
         case _ => ManifestIO.readChunk(fs, p)
       }
     })
@@ -219,18 +234,11 @@ final class LakeTable private (
   def snapshots: Seq[Snapshot] = {
     if (!fs.exists(metaDir)) return Nil
     val head = currentSnapshotId.getOrElse(return Nil)
-    val re = "^v(\\d+)\\.json$".r
-    fs.listStatus(metaDir).toSeq
-      .flatMap(s => s.getPath.getName match {
-        case re(id) => Some(id.toLong)
-        case _ => None
-      })
-      .filter(_ <= head)
-      .sorted.map(snapshot)
+    docIds.filter(_ <= head).sorted.map(snapshot)
   }
 
   /** Compact per-snapshot summaries for the metadata VIEWS (history /
-    * snapshots): parsing N full `v<id>.json` files per query is
+    * snapshots): parsing N full `v<id>.json.gz` docs per query is
     * O(history) I/O — 1.2 s at 300 commits, tens of seconds at a
     * month of micro-batches — so summaries live in a single
     * `metadata/snaplog.json` CACHE. Snapshots are immutable, so cached
@@ -243,13 +251,7 @@ final class LakeTable private (
     * reconciliation starts from the live v-json listing. */
   def snapshotSummaries: Seq[LakeTable.SnapSummary] = {
     val head = currentSnapshotId.getOrElse(return Nil)
-    val re = "^v(\\d+)\\.json$".r
-    val ids = fs.listStatus(metaDir).toSeq
-      .flatMap(_.getPath.getName match {
-        case re(id) => Some(id.toLong)
-        case _ => None
-      })
-      .filter(_ <= head).sorted
+    val ids = docIds.filter(_ <= head).sorted
     val cached = readSnaplog()
     val missing = ids.filterNot(cached.contains)
     val fresh = missing.map { id =>
@@ -333,7 +335,7 @@ final class LakeTable private (
     // driver-side row materialization. At 10⁶ files that is a few
     // thousand chunk files read in parallel, not a 300 MB driver list.
     // file-backed chunks scan DISTRIBUTED (Spark gunzips the
-    // `m-*.json.gz` chunk files by their extension); inline chunks
+    // `*.json.gz` chunk files by their extension); inline chunks
     // (small by the commit-path bound) parse driver-side from their
     // host docs and union in through the same JSON reader
     val (inline, backed) = snap.manifests.partition(n =>
@@ -351,8 +353,11 @@ final class LakeTable private (
           ManifestIO.chunkToJson(loadChunk(n))))(
           org.apache.spark.sql.Encoders.STRING)))
     val parts = split(col("e.path"), "/")
-    (backedDf.toSeq ++ inlineDf.toSeq).reduce(_ unionByName _)
+    val entries = (backedDf.toSeq ++ inlineDf.toSeq).reduce(_ unionByName _)
       .select(explode(col("entries")).as("e"))
+    // chunk entries of removed files stay behind their tombstones
+    (if (snap.tombstones.isEmpty) entries
+     else entries.where(!col("e.path").isin(snap.tombstones: _*)))
       .select(
         col("e.path").as("file_path"),
         // hive `col=value` segments between data/ and the file name
@@ -420,15 +425,18 @@ final class LakeTable private (
   /** Metadata view ≡ Iceberg's `<table>.manifests`: one row per
     * manifest chunk of the current snapshot with its entry count —
     * the operator's view of metadata-layer health (chunk count should
-    * track table size / fold policy, not commit count). Entry counts
-    * come from the immutable-chunk cache; O(chunks) driver rows. */
+    * track table size / fold policy, not commit count). `entry_count`
+    * counts the chunk's LIVE entries (tombstoned ones excluded), from
+    * the immutable-chunk cache; O(chunks) driver rows. */
   def manifestsTable: DataFrame = {
     val snap = current
     val sch = StructType(Seq(
       StructField("path", StringType, nullable = false),
       StructField("entry_count", LongType, nullable = false)))
+    val dead = snap.tombstones.toSet
     val rows = snap.manifests.map(n =>
-      Row(s"$METADATA_DIR/$n", loadChunk(n).size.toLong))
+      Row(s"$METADATA_DIR/$n",
+        loadChunk(n).count(e => !dead(e.path)).toLong))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), sch)
   }
 
@@ -515,10 +523,7 @@ final class LakeTable private (
       throw new IllegalStateException(
         s"table $root has no committed snapshot"))
     if (snapCache.get(id) != null) return snapshot(id)
-    val p = new Path(metaDir, s"v$id.json")
-    require(fs.exists(p),
-      s"snapshot $id not found in $root (expired or never committed)")
-    val skel = ManifestIO.listSkeleton(readString(fs, p))
+    val skel = ManifestIO.listSkeleton(readDoc(id))
     if (skel.manifestSummaries.isEmpty) return snapshot(id)
     val sch = DataType.fromJson(skel.schemaJson).asInstanceOf[StructType]
     PredicatePruning.analyze(spark, predicate, sch) match {
@@ -813,12 +818,12 @@ final class LakeTable private (
 
   /** Cheap change stamp for HEAD-PRESERVING metadata mutations — ref
     * edits (create_tag / create_branch / drop_ref) rewrite refs.json
-    * without moving HEAD, and expire_snapshots deletes v<id>.json
-    * files (direct children of the metadata dir, so the dir mtime
+    * without moving HEAD, and expire_snapshots deletes v<id>.json.gz
+    * docs (direct children of the metadata dir, so the dir mtime
     * bumps). The catalog's view-registration ledger keys on this in
     * addition to HEAD so `t_refs` / `t_snapshots` / `t_history` temp
     * views never serve pre-mutation state from cache. Content hash of
-    * refs (one small read) + the v*.json population (count and max id
+    * refs (one small read) + the snapshot-doc population (count and max id
     * from one directory listing): mtime granularity is 1 s on many
     * filesystems, so an expire within the same tick as the last view
     * registration would be invisible to an mtime stamp — the version-
@@ -826,10 +831,7 @@ final class LakeTable private (
     * clock resolution. Two fs calls, cross-process visible. */
   def metadataStamp: (Long, Long) = {
     val vs =
-      try fs.listStatus(metaDir).toSeq.map(_.getPath.getName)
-        .filter(n => n.startsWith("v") && n.endsWith(".json"))
-        .flatMap(n => scala.util.Try(
-          n.stripPrefix("v").stripSuffix(".json").toLong).toOption)
+      try docIds
       catch { case _: java.io.IOException => Seq.empty[Long] }
     (refs.hashCode.toLong,
       if (vs.isEmpty) 0L else vs.size.toLong * 1000003L + vs.max)
@@ -3965,10 +3967,8 @@ final class LakeTable private (
       val expiredIds = expired.map(_.snapshotId).toSet
       keptChunks.toSeq.sorted.foreach {
         case n @ InlineChunkRe(vid) if expiredIds(vid.toLong) =>
-          val p = new Path(metaDir, n)
-          if (!fs.exists(p))
-            writeStringExclusive(fs, p,
-              ManifestIO.chunkToJson(loadChunk(n)))
+          if (!fs.exists(new Path(metaDir, n)))
+            ManifestIO.writeChunk(fs, metaDir, loadChunk(n), name = n)
         case _ => ()
       }
     }
@@ -3983,7 +3983,7 @@ final class LakeTable private (
             s.dvFiles.map(_.path))
         .distinct.filterNot(keptDeletes).map(f => new Path(rootPath, f)) ++
       doomedChunks.map(n => new Path(metaDir, n)) ++
-      expired.map(s => new Path(metaDir, s"v${s.snapshotId}.json"))
+      expired.map(s => docPath(s.snapshotId))
     deleteAll(doomed)
   }
 
@@ -4209,6 +4209,9 @@ final class LakeTable private (
         s.dvFiles.map(_.path)) ++
       staged).toSet
     val referencedChunks = retained.flatMap(_.manifests).toSet
+    // inclusive: mtimes are whole milliseconds, so debris written in the
+    // cutoff's own millisecond is old enough (olderThanMs = 0 sweeps
+    // everything unreferenced at the call)
     val cutoff = System.currentTimeMillis() - olderThanMs
     val removed = scala.collection.mutable.ArrayBuffer.empty[String]
     Seq(dataDir, new Path(rootPath, DELETES_DIR)).foreach { dir =>
@@ -4218,7 +4221,7 @@ final class LakeTable private (
           val f = it.next()
           val rel = relativePath(rootPath, f.getPath)
           if (f.isFile && f.getPath.getName.endsWith(".parquet") &&
-              !referenced(rel) && f.getModificationTime < cutoff)
+              !referenced(rel) && f.getModificationTime <= cutoff)
             removed += rel
         }
       }
@@ -4232,7 +4235,7 @@ final class LakeTable private (
         val name = st.getPath.getName
         if (st.isFile && (ManifestIO.isChunkFile(name) ||
               InlineChunkRe.matches(name)) && // promoted-then-stranded
-            !referencedChunks(name) && st.getModificationTime < cutoff) {
+            !referencedChunks(name) && st.getModificationTime <= cutoff) {
           chunkCache.remove(name)
           removed += s"$METADATA_DIR/$name"
         }
@@ -4241,7 +4244,7 @@ final class LakeTable private (
         // between write and rename leaves the file) — nothing ever
         // references them, so age is the only gate
         if (st.isFile && name.startsWith(".snaplog-") &&
-            name.endsWith(".json") && st.getModificationTime < cutoff)
+            name.endsWith(".json") && st.getModificationTime <= cutoff)
           removed += s"$METADATA_DIR/$name"
       }
     }
@@ -4587,12 +4590,14 @@ final class LakeTable private (
     // append, MOR merge/delete/update) keep every base entry live, so
     // the carried maps concatenate in O(delta) instead of re-filtering
     // O(table); the chunk plan below skips the equality scan for the
-    // same reason.
+    // same reason. Re-adding a tombstoned path is not append-shaped:
+    // its tombstone would mask the new entry.
     val appendShaped = removed.isEmpty && statsOverride.isEmpty &&
       renamesOverride.isEmpty && seqOverride.isEmpty &&
       infoOverride.isEmpty && reuseChunksFrom.isEmpty &&
       fileSpecOverride.isEmpty &&
-      live.length == base.liveFiles.length + added.length
+      live.length == base.liveFiles.length + added.length &&
+      (base.tombstones.isEmpty || !added.exists(base.tombstones.toSet))
     lazy val liveSet = live.toSet
     val stats = statsOverride.getOrElse(
       if (appendShaped) base.fileStats ++ addedStats
@@ -4647,8 +4652,9 @@ final class LakeTable private (
       fileSpec = fspec, partitionSpecs = specs,
       currentSpecId = curSpec)
     // Chunk the per-file state (see ManifestIO): reuse every parent
-    // chunk whose entries are unchanged (rollback additionally offers
-    // its target's chunks), write only the delta. Chunks are written
+    // chunk whose live entries are unchanged, tombstoning its removed
+    // ones (rollback additionally offers its target's chunks), write
+    // only the delta. Chunks are written
     // BEFORE the snapshot JSON's exclusive create — a lost race or
     // crash strands only uuid-named orphans that maintenance reclaims.
     //
@@ -4660,7 +4666,7 @@ final class LakeTable private (
         ManifestIO.Plan(Nil, ManifestIO.entriesOf(snap0).sortBy(_.path)
           .grouped(ManifestIO.ChunkTargetEntries).toVector)
       else if (appendShaped)
-        ManifestIO.planAppend(base.manifests,
+        ManifestIO.planAppend(base.manifests, base.tombstones,
           added.map(f => ManifestEntry(f, seqs.getOrElse(f, 0L),
             stats.getOrElse(f, Map.empty),
             renames.getOrElse(f, Map.empty).filter(_._2.nonEmpty),
@@ -4688,7 +4694,7 @@ final class LakeTable private (
     val newChunks = LakeTable.timed("c.chunkwrite")(
       planned.toWrite.zipWithIndex.map { case (entries, k) =>
         if (entries.size <= LakeTable.INLINE_CHUNK_MAX_ENTRIES) {
-          val name = s"iv$id-$k.json"
+          val name = s"iv$id-$k.json.gz"
           inlined(name) = entries
           chunkCache.put(name, entries)
           name
@@ -4711,7 +4717,7 @@ final class LakeTable private (
           newChunks.zip(planned.toWrite).map { case (n, es) =>
             n -> ManifestIO.summarize(es, listSchema) }).toMap)
     val snap = snap0.copy(manifests = planned.reused ++ newChunks,
-      manifestSummaries = summaries)
+      manifestSummaries = summaries, tombstones = planned.tombstones)
     // a losing racer's inline chunks exist ONLY in our cache — purge
     // them so a rebase never reads our content under the winner's
     // same-named chunk; file-backed ones are deleted like before
@@ -4719,34 +4725,33 @@ final class LakeTable private (
       chunkCache.remove(n)
       if (ManifestIO.isChunkFile(n)) fs.delete(new Path(metaDir, n), false)
     }
-    // crash recovery: a v<id>.json left by a commit that died before its
+    // crash recovery: a doc left by a commit that died before its
     // HEAD swap (HEAD still == our base) is an orphan — remove it, or the
     // table could never commit again. Age-gated so a LIVE racing writer's
     // freshly-written file is never mistaken for one (racers collide
     // within ms and lose via the exclusive create; a crashed commit is
     // retried much later).
-    val metaPath = new Path(metaDir, s"v$id.json")
+    val metaPath = docPath(id)
     LakeTable.timed("c.orphancheck") {
       if (fs.exists(metaPath) && currentSnapshotId.contains(base.snapshotId)
           && System.currentTimeMillis() -
             fs.getFileStatus(metaPath).getModificationTime > ORPHAN_GRACE_MS)
         fs.delete(metaPath, false)
     }
-    // optimistic concurrency: exclusive create of v<id>.json fails if a
+    // optimistic concurrency: exclusive create of the doc fails if a
     // racing writer committed the same version first. Normalize the
     // already-exists failure to ConcurrentModificationException, so
     // every losing racer sees ONE exception type (and [[append]] can
     // retry on it).
-    val metaJson = ManifestIO.listToJson(snap, inlined.toMap)
-    try LakeTable.timed("c.vjson")(
-      writeStringExclusive(fs, metaPath, metaJson))
+    val metaBytes = try LakeTable.timed("c.vjson")(
+      ManifestIO.writeDoc(fs, metaDir, snap, inlined.toMap))
     catch {
       case e: java.io.IOException if fs.exists(metaPath) =>
         // lost the exclusive create: the winner's HEAD swap may still
         // be IN FLIGHT (a real cross-process window — the winner is
         // between create and swap for milliseconds of wall time), so
         // HEAD alone can't distinguish "lost the race" from "storage
-        // trouble". The surviving v<id>.json IS the evidence. Ride the
+        // trouble". The surviving doc IS the evidence. Ride the
         // swap out briefly so the retry loop observes the moved HEAD
         // and rebases; if HEAD never moves (winner crashed mid-swap),
         // the age-gated orphan recovery above unblocks a later attempt.
@@ -4781,7 +4786,7 @@ final class LakeTable private (
     LakeTable.timed("c.head")(writeHead(id))
     // POST-SWAP OWNERSHIP CHECK: the age-gated orphan reclaim above
     // can — if THIS writer stalled past ORPHAN_GRACE_MS between its
-    // v-file write and here — have deleted our v<id>.json and
+    // doc write and here — have deleted our doc and
     // re-claimed the ordinal for another writer; both of us then swap
     // HEAD to the same id and OUR commit would silently vanish while
     // we report success (the one lost-commit window in the protocol).
@@ -4791,7 +4796,7 @@ final class LakeTable private (
     // surface the lost race for the retry loop to re-commit; the
     // reclaimer's commit is exactly the file at HEAD, so nothing is
     // torn. The read-back is one just-written (page-warm) metadata
-    // file per commit.
+    // file per commit, compared byte for byte with what we wrote.
     // Only a SUCCESSFUL read returning DIFFERENT content is reclaim
     // evidence. A transient IO failure here must NOT be treated as
     // reclaim: the swap already succeeded, so dropNewChunks() would
@@ -4799,12 +4804,12 @@ final class LakeTable private (
     // CME would make the retry loop re-commit already-committed rows.
     // Retry the read briefly; if it keeps failing, propagate the IO
     // error with the chunks intact (the commit may well be live).
-    val backJson = LakeTable.timed("c.ownership") {
+    val back = LakeTable.timed("c.ownership") {
       var last: Throwable = null
-      var got: String = null
+      var got: Array[Byte] = null
       var attempt = 0
       while (got == null && attempt < 3) {
-        try got = readString(fs, metaPath)
+        try got = ManifestIO.readDocBytes(fs, metaDir, id)
         catch {
           case e: java.io.IOException =>
             last = e; attempt += 1
@@ -4817,7 +4822,7 @@ final class LakeTable private (
           "verify before retrying", last)
       got
     }
-    if (backJson != metaJson) {
+    if (!java.util.Arrays.equals(back, metaBytes)) {
       dropNewChunks()
       throw new java.util.ConcurrentModificationException(
         s"table $root: version $id was reclaimed by a racing writer " +
@@ -5223,8 +5228,7 @@ object LakeTable {
     fs.mkdirs(new Path(root, DATA_DIR))
     val snap = Snapshot(1L, None, System.currentTimeMillis(), "create",
       Nil, Nil, Nil, schema.json, partitionBy, properties)
-    writeStringExclusive(fs, new Path(root, s"$METADATA_DIR/v1.json"),
-      ManifestIO.listToJson(snap))
+    ManifestIO.writeDoc(fs, new Path(root, METADATA_DIR), snap)
     t.writeHead(1L)
     t
   }
@@ -5260,10 +5264,26 @@ object LakeTable {
   }
 
   private[graft] def writeStringExclusive(fs: FileSystem, p: Path,
-      s: String): Unit = {
-    val out = fs.create(p, false) // overwrite=false → exclusive
-    try out.write(s.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+      s: String): Unit =
+    writeBytesExclusive(fs, p, s.getBytes(StandardCharsets.UTF_8))
+
+  /** Exclusive create of `p` holding `bytes`. Hadoop's local create
+    * checks for the file and then opens it truncating, so two racing
+    * creators can both succeed and the later one silently replaces the
+    * earlier's commit; on the raw local FS the create is one O_EXCL
+    * open instead (`CREATE_NEW`), the conditional PUT the commit
+    * protocol assumes. */
+  private[graft] def writeBytesExclusive(fs: FileSystem, p: Path,
+      bytes: Array[Byte]): Unit = fs match {
+    case local: RawLocalFileSystem =>
+      val f = local.pathToFile(p).toPath
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.write(f, bytes,
+        java.nio.file.StandardOpenOption.CREATE_NEW,
+        java.nio.file.StandardOpenOption.WRITE)
+    case _ =>
+      val out = fs.create(p, false) // overwrite=false → exclusive
+      try out.write(bytes) finally out.close()
   }
 
   private[lake] def listParquet(fs: FileSystem, dir: Path): Seq[Path] = {

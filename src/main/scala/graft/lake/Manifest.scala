@@ -1,12 +1,13 @@
 package graft.lake
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 
 import scala.jdk.CollectionConverters._
 
@@ -36,7 +37,7 @@ final case class ManifestEntry(
 /** Chunked manifest IO — the scalable commit-metadata layer.
   *
   * Why: serializing the ENTIRE live-file manifest into every snapshot
-  * JSON is O(table) metadata written per commit — invisible at test
+  * doc is O(table) metadata written per commit — invisible at test
   * scale, the metadata layer's bottleneck at 100 TB (~10⁶ files ×
   * ~1 KB of JSON stats each ⇒ ~1 GB rewritten per append). Iceberg's
   * answer is manifest files + a manifest list that REUSES the parent
@@ -45,20 +46,28 @@ final case class ManifestEntry(
   *   - per-file state lives in immutable chunk files
   *     (`metadata/m-<uuid>.json.gz`, ≤ [[ChunkTargetEntries]] entries,
   *     compact JSON, gzip-compressed);
-  *   - each snapshot JSON carries only scalars, the commit's file
-  *     DELTA, the (small) delete-file lists, and the NAMES of the
-  *     chunks covering its live files;
-  *   - a commit reuses every parent chunk whose entries are unchanged,
-  *     rewrites (shrinks), whole, every chunk that lost or changed an
-  *     entry (below [[ChunkTargetEntries]] files that one chunk is the
-  *     table's whole manifest), and writes the added
-  *     entries as fresh chunks — O(delta + affected chunks) metadata
-  *     bytes per commit;
+  *   - each snapshot doc (`metadata/v<id>.json.gz`, compact JSON, gzip)
+  *     carries only scalars, the commit's file DELTA, the (small)
+  *     delete-file lists, the NAMES of the chunks covering its live
+  *     files and the `tombstones`: paths those chunks still hold that
+  *     are no longer live;
+  *   - a commit reuses every parent chunk whose entries for still-live
+  *     paths are unchanged, masking its removed paths behind tombstones
+  *     (≡ Iceberg's DELETED manifest entries), and writes the added
+  *     entries as fresh chunks — O(delta) metadata bytes per commit. A
+  *     chunk whose live entry changed, a chunk at least half dead, and
+  *     every tombstoned chunk once the doc would carry more than
+  *     [[MaxTombstones]] are rewritten to their survivors instead;
   *   - small chunks are folded together LSM-style by size class
   *     ([[MergeFanout]] per level) so N single-file appends settle into
   *     O(N/target + log N) chunks, with each fold writing at most
   *     [[ChunkTargetEntries]] entries — an amortized-constant tax that
   *     keeps snapshot loads from reading one chunk per historic commit.
+  *
+  * Docs and chunk files are gzip-framed: they go through the raw
+  * FileSystem under a checksummed one and are always read to EOF, so
+  * the gzip CRC32/ISIZE trailer is their integrity check and a flipped
+  * or truncated file throws instead of parsing.
   */
 object ManifestIO {
 
@@ -73,6 +82,11 @@ object ManifestIO {
     * [F^k, F^(k+1)) holds ≥ F chunks, the F smallest fold into one. */
   val MergeFanout: Int = 8
 
+  /** Most tombstones a snapshot doc carries: a commit that would exceed
+    * it rewrites every tombstoned chunk instead. The inline-chunk bound,
+    * so the doc's per-file lists stay the same small size class. */
+  def MaxTombstones: Int = LakeTable.INLINE_CHUNK_MAX_ENTRIES
+
   /** Per-file manifest entries of snapshot `s`, in live-file order. */
   def entriesOf(s: Snapshot): Seq[ManifestEntry] =
     s.liveFiles.map { f =>
@@ -84,8 +98,15 @@ object ManifestIO {
     }
 
   /** Rebuild the snapshot's per-file maps from loaded chunk entries
-    * (inverse of [[entriesOf]]); entry order defines live-file order. */
-  def materialize(base: Snapshot, entries: Seq[ManifestEntry]): Snapshot =
+    * (inverse of [[entriesOf]]) minus `base.tombstones`; entry order
+    * defines live-file order. */
+  def materialize(base: Snapshot, all: Seq[ManifestEntry]): Snapshot = {
+    val entries =
+      if (base.tombstones.isEmpty) all
+      else {
+        val dead = base.tombstones.toSet
+        all.filterNot(e => dead(e.path))
+      }
     base.copy(
       liveFiles = entries.map(_.path),
       fileStats = entries.iterator
@@ -98,29 +119,38 @@ object ManifestIO {
         .flatMap(e => e.info.map(e.path -> _)).toMap,
       fileSpec = entries.iterator
         .filter(_.specId != 0L).map(e => e.path -> e.specId).toMap)
+  }
 
   /** Chunk-level commit plan: `reused` parent chunks carried by name,
-    * `toWrite` entry groups needing fresh chunk files. */
-  final case class Plan(reused: Seq[String], toWrite: Seq[Seq[ManifestEntry]])
+    * `toWrite` entry groups needing fresh chunk files, and the
+    * `tombstones` masking the reused chunks' dead entries. */
+  final case class Plan(reused: Seq[String], toWrite: Seq[Seq[ManifestEntry]],
+      tombstones: Seq[String] = Nil)
 
   /** Append-shaped plan: the parent's chunks carry over by name (no
-    * entry can have changed when nothing was removed or overridden) and
-    * only the `added` entries are grouped into fresh chunks — O(delta)
-    * planning, no per-entry equality scan. `load` resolves sizes and
-    * entries for the fold only (cache-backed; at larger scale the entry
-    * counts could ride in the snapshot list JSON instead). */
-  def planAppend(parentManifests: Seq[String], added: Seq[ManifestEntry],
-      load: String => Seq[ManifestEntry]): Plan =
+    * entry can have changed when nothing was removed or overridden),
+    * its tombstones carry forward unchanged, and only the `added`
+    * entries are grouped into fresh chunks — O(delta) planning, no
+    * per-entry equality scan. `load` resolves sizes and entries for the
+    * fold only (cache-backed; at larger scale the entry counts could
+    * ride in the snapshot list JSON instead). */
+  def planAppend(parentManifests: Seq[String], parentTombstones: Seq[String],
+      added: Seq[ManifestEntry], load: String => Seq[ManifestEntry]): Plan =
     fold(Plan(parentManifests,
-        added.grouped(ChunkTargetEntries).toVector),
+        added.grouped(ChunkTargetEntries).toVector, parentTombstones),
       parentManifests.map(n => n -> load(n)).toMap)
 
   /** Plan the chunk set for `snap` given the reusable `candidates`
     * (parent's chunks, plus e.g. a rollback target's): a candidate is
-    * reused verbatim iff every entry it holds is still exactly live in
-    * `snap` and not already covered; survivors of partially-dead chunks
-    * and brand-new entries are regrouped into fresh chunks; then the
-    * size-class fold keeps the chunk count from growing one-per-commit. */
+    * reused by name iff every entry it holds is either exactly live in
+    * `snap` or dead (its path not live, masked by a tombstone), no path
+    * it holds is already covered, and less than half of it is dead.
+    * A chunk whose entry for a live path CHANGED is never reused — only
+    * then is masking by path sound. If the reused chunks would need
+    * more than [[MaxTombstones]] tombstones, every tombstoned one is
+    * demoted too. Survivors of rewritten chunks and brand-new entries
+    * are regrouped into fresh chunks; then the size-class fold keeps
+    * the chunk count from growing one-per-commit. */
   def plan(snap: Snapshot,
       candidates: Seq[(String, Seq[ManifestEntry])]): Plan = {
     val target: Map[String, ManifestEntry] =
@@ -129,43 +159,61 @@ object ManifestIO {
     val reused = Vector.newBuilder[(String, Seq[ManifestEntry])]
     val carryOver = Vector.newBuilder[ManifestEntry]
     candidates.foreach { case (name, entries) =>
-      val allValid = entries.nonEmpty && entries.forall(e =>
+      val valid = entries.filter(e =>
         !covered(e.path) && target.get(e.path).contains(e))
-      if (allValid) {
+      val dead = entries.count(e =>
+        !covered(e.path) && !target.contains(e.path))
+      if (entries.nonEmpty && valid.size + dead == entries.size &&
+          dead * 2 < entries.size) {
         reused += (name -> entries)
         covered ++= entries.iterator.map(_.path)
       } else {
-        // chunk lost/changed entries: keep its survivors, drop the rest
-        val valid = entries.filter(e =>
-          !covered(e.path) && target.get(e.path).contains(e))
+        // chunk lost too much or changed entries: keep its survivors
         carryOver ++= valid
         covered ++= valid.iterator.map(_.path)
+      }
+    }
+    def deadPaths(entries: Seq[ManifestEntry]): Seq[String] =
+      entries.collect { case e if !target.contains(e.path) => e.path }
+    val (kept, tombstones) = {
+      val all = reused.result()
+      val tombs = all.flatMap { case (_, es) => deadPaths(es) }
+      if (tombs.sizeIs <= MaxTombstones) (all, tombs)
+      else {
+        val (clean, dirty) = all.partition { case (_, es) =>
+          deadPaths(es).isEmpty }
+        carryOver ++= dirty.flatMap(_._2).filter(e => target.contains(e.path))
+        (clean, Nil)
       }
     }
     val fresh = snap.liveFiles.filterNot(covered).map(target)
     val toWrite = (carryOver.result() ++ fresh)
       .grouped(ChunkTargetEntries).toVector
-    fold(Plan(reused.result().map(_._1), toWrite),
-      reused.result().toMap)
+    fold(Plan(kept.map(_._1), toWrite, tombstones), kept.toMap)
   }
 
   /** LSM-style small-chunk fold: repeatedly, if a size class
     * [F^k, F^(k+1)) holds ≥ F chunks and the F smallest fit in one
     * target-size chunk, fold them (a reused chunk entering a fold is
-    * demoted to a rewrite). Each fold writes ≤ [[ChunkTargetEntries]]
-    * entries, so per-commit metadata stays bounded by delta + a
-    * constant; amortized over N commits the fold tax is O(log N). */
+    * demoted to a rewrite of its live entries, and its tombstones go).
+    * Each fold writes ≤ [[ChunkTargetEntries]] entries, so per-commit
+    * metadata stays bounded by delta + a constant; amortized over N
+    * commits the fold tax is O(log N). */
   private def fold(p: Plan,
       reusedEntries: Map[String, Seq[ManifestEntry]]): Plan = {
     // work list: Left(name) = reused on disk, Right(entries) = to write
     var work: Vector[Either[String, Seq[ManifestEntry]]] =
       p.reused.map(Left(_)).toVector ++ p.toWrite.map(Right(_))
+    lazy val dead = p.tombstones.toSet
+    val demoted = Vector.newBuilder[String]
     def sizeOf(c: Either[String, Seq[ManifestEntry]]): Int = c match {
       case Left(n) => reusedEntries(n).size
       case Right(es) => es.size
     }
     def entriesOfChunk(c: Either[String, Seq[ManifestEntry]]) = c match {
-      case Left(n) => reusedEntries(n)
+      case Left(n) =>
+        demoted += n
+        reusedEntries(n).filterNot(e => dead(e.path))
       case Right(es) => es
     }
     def sizeClass(n: Int): Int = {
@@ -195,8 +243,11 @@ object ManifestIO {
         }
       }
     }
+    val gone = demoted.result().iterator
+      .flatMap(n => reusedEntries(n).iterator.map(_.path)).toSet
     Plan(work.collect { case Left(n) => n },
-      work.collect { case Right(es) => es })
+      work.collect { case Right(es) => es },
+      if (gone.isEmpty) p.tombstones else p.tombstones.filterNot(gone))
   }
 
   /** Chunk-level stat summary: the union of the chunk's entry bounds,
@@ -246,24 +297,78 @@ object ManifestIO {
   def isChunkFile(name: String): Boolean =
     name.startsWith("m-") && name.endsWith(".json.gz")
 
-  /** Write `entries` as a fresh file-backed chunk in `dir` (exclusive
-    * create) and return its name. */
-  def writeChunk(fs: FileSystem, dir: Path,
-      entries: Seq[ManifestEntry]): String = {
-    val name = s"m-${UUID.randomUUID()}.json.gz"
-    val out = new GZIPOutputStream(fs.create(new Path(dir, name), false))
-    try out.write(chunkToJson(entries).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+  /** Write `entries` as a chunk file in `dir` (exclusive create) and
+    * return its name: a fresh `m-<uuid>.json.gz`, or `name` when expiry
+    * promotes an inline chunk to a file of its own name. */
+  def writeChunk(fs: FileSystem, dir: Path, entries: Seq[ManifestEntry],
+      name: String = s"m-${UUID.randomUUID()}.json.gz"): String = {
+    LakeTable.writeBytesExclusive(rawFs(fs), new Path(dir, name),
+      gzip(chunkToJson(entries)))
     name
   }
 
-  /** Read one chunk file: gzip-compressed when named `*.gz` (every
-    * [[writeChunk]] file), plain JSON otherwise (an inline chunk that
-    * expiry promoted to a file keeps its `iv<id>-<k>.json` form). */
-  def readChunk(fs: FileSystem, p: Path): Seq[ManifestEntry] = {
-    val raw = fs.open(p)
-    val in = if (p.getName.endsWith(".gz")) new GZIPInputStream(raw) else raw
-    try chunkFromNode(Snapshot.mapper.readTree(in))
+  /** Read one chunk file (any [[writeChunk]] file). */
+  def readChunk(fs: FileSystem, p: Path): Seq[ManifestEntry] =
+    chunkFromNode(Snapshot.mapper.readTree(gunzip(readBytes(fs, p))))
+
+  // ------------------------------------------------------- snapshot docs
+
+  /** File name of version `id`'s snapshot doc. */
+  def docName(id: Long): String = s"v$id.json.gz"
+
+  private val DocName = "^v(\\d+)\\.json\\.gz$".r
+
+  /** Version of a snapshot doc file name; None for any other file. */
+  def docId(name: String): Option[Long] = name match {
+    case DocName(id) => Some(id.toLong)
+    case _ => None
+  }
+
+  /** Exclusively create version `s.snapshotId`'s doc in `dir` (see
+    * [[listToJson]]) and return the bytes written — what the commit's
+    * post-swap ownership read-back compares against [[readDocBytes]]. */
+  def writeDoc(fs: FileSystem, dir: Path, s: Snapshot,
+      inline: Map[String, Seq[ManifestEntry]] = Map.empty): Array[Byte] = {
+    val bytes = gzip(listToJson(s, inline))
+    LakeTable.writeBytesExclusive(rawFs(fs),
+      new Path(dir, docName(s.snapshotId)), bytes)
+    bytes
+  }
+
+  /** Version `id`'s doc as written (gzip bytes, unchecked). */
+  def readDocBytes(fs: FileSystem, dir: Path, id: Long): Array[Byte] =
+    readBytes(fs, new Path(dir, docName(id)))
+
+  /** Version `id`'s doc JSON, its gzip trailer verified. */
+  def readDoc(fs: FileSystem, dir: Path, id: Long): String =
+    gunzip(readDocBytes(fs, dir, id))
+
+  /** The raw FileSystem under a checksummed one: gzip-framed metadata
+    * carries its own CRC32/ISIZE trailer, so a `.crc` sibling would
+    * cost one more create per file and guard nothing. */
+  private[lake] def rawFs(fs: FileSystem): FileSystem = fs match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case other => other
+  }
+
+  private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
+    val in = rawFs(fs).open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
+  private def gzip(json: String): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new GZIPOutputStream(bos)
+    try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    bos.toByteArray
+  }
+
+  /** Decompress to EOF: only reading past the last deflate block makes
+    * `GZIPInputStream` check the trailer (a JSON parser on the stream
+    * would stop at the closing brace), so corruption throws here. */
+  private def gunzip(bytes: Array[Byte]): String = {
+    val in = new GZIPInputStream(new ByteArrayInputStream(bytes))
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8)
     finally in.close()
   }
 
@@ -324,16 +429,17 @@ object ManifestIO {
         specId = if (o.has("spec")) o.path("spec").asLong() else 0L)
     }.toSeq
 
-  /** Manifest-list snapshot JSON: scalars, the commit's file delta,
-    * chunk names, and the delete-file lists — O(delta) bytes, never
-    * O(table).
+  /** Manifest-list snapshot JSON (the body of a `v<id>.json.gz` doc):
+    * scalars, the commit's file delta, chunk names, the tombstones
+    * masking those chunks' dead entries, and the delete-file lists —
+    * O(delta) bytes, never O(table).
     *
     * `inline` carries this commit's NEW delta chunks embedded in the
-    * snapshot doc itself (named `iv<id>-<k>.json`) — one exclusive
+    * snapshot doc itself (named `iv<id>-<k>.json.gz`) — one exclusive
     * create per commit instead of two, and the chunk rides the commit
     * point atomically (a lost race strands NOTHING on disk). An inline
     * chunk referenced past its host's expiry is promoted to a real
-    * file of the same name by [[LakeTable.expireWhere]]. */
+    * chunk file of the same name by [[LakeTable.expireWhere]]. */
   def listToJson(s: Snapshot,
       inline: Map[String, Seq[ManifestEntry]] = Map.empty): String = {
     val m = Snapshot.mapper
@@ -354,6 +460,7 @@ object ManifestIO {
     arr("added_files", s.addedFiles)
     arr("removed_files", s.removedFiles)
     arr("manifests", s.manifests)
+    if (s.tombstones.nonEmpty) arr("tombstones", s.tombstones)
     n.put("schema", s.schemaJson)
     arr("partition_columns", s.partitionColumns)
     if (s.partitionSpecs.nonEmpty) {
@@ -434,7 +541,9 @@ object ManifestIO {
   /** Materialize only the named chunks of a skeleton — the pruned-scan
     * path: callers pass the chunk subset whose [[Snapshot
     * .manifestSummaries]] survive a predicate, and the partial snapshot
-    * covers exactly the files those chunks hold. Correct ONLY for reads
+    * covers exactly the live files those chunks hold (every tombstone
+    * still applies: a summary counts dead entries too, so it is only
+    * ever wider than the live files). Correct ONLY for reads
     * whose predicate implied the skipped chunks are irrelevant; never
     * cached as the full snapshot. */
   def materializePartial(skel: Snapshot, names: Seq[String],
@@ -485,6 +594,7 @@ object ManifestIO {
             o.path("bytes").asLong())
         }.toSeq,
       manifests = arr("manifests"),
+      tombstones = arr("tombstones"),
       partitionSpecs =
         if (!n.has("partition_specs")) Map.empty
         else n.path("partition_specs").properties().asScala.map { e =>

@@ -21,8 +21,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * complete-at-swap (a reader sees the OLD value or the NEW value, never
   * a torn prefix), and `read` returning None means the pointer was never
   * created — not that a swap was in flight. Race DETECTION lives one
-  * level up (exclusive create of `v<id>.json`); the pointer swap only
-  * ever publishes an already-won commit. */
+  * level up (exclusive create of the `v<id>.json.gz` doc); the pointer
+  * swap only ever publishes an already-won commit. */
 sealed trait PointerStore {
   /** Current pointer value; None = never created. Rides out any
     * transient mid-swap state rather than surfacing it. */
@@ -75,10 +75,7 @@ trait ConditionalPut {
   * a `.crc` sibling would cost a create and a delete per swap and guard
   * nothing. */
 final class FsConditionalPut(checked: FileSystem) extends ConditionalPut {
-  private val fs = checked match {
-    case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
-    case other => other
-  }
+  private val fs = ManifestIO.rawFs(checked)
   override def putIfAbsent(p: Path, value: String): Unit =
     try LakeTable.writeStringExclusive(fs, p, value)
     catch {

@@ -13,10 +13,10 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * `liveFiles` is the full manifest of data files visible at this version
   * (paths relative to the table root). In-memory the per-file state is
   * materialized; ON DISK it lives in immutable manifest chunk files
-  * referenced by name from the snapshot JSON (see [[ManifestIO]] — the
+  * referenced by name from the snapshot doc (see [[ManifestIO]] — the
   * Iceberg manifest-list shape), so a commit writes O(delta) metadata,
   * never O(table). The on-disk codec is [[ManifestIO]]'s
-  * (`listToJson` / `snapshotFromJson`).
+  * (`writeDoc` / `readDoc`, `listToJson` / `snapshotFromJson`).
   */
 final case class Snapshot(
     snapshotId: Long,
@@ -75,9 +75,9 @@ final case class Snapshot(
       * (legacy manifest) = unknown. */
     fileInfo: Map[String, FileInfo] = Map.empty,
     /** Names of the immutable manifest CHUNKS (`metadata/m-*.json.gz`
-      * files, or `iv<id>-<k>.json` delta chunks inline in a snapshot doc)
-      * whose entries back this snapshot's per-file state — the manifest
-      * list (see [[ManifestIO]]). Empty for a table with no files, or
+      * files, or `iv<id>-<k>.json.gz` delta chunks inline in a snapshot
+      * doc) whose entries back this snapshot's per-file state — the
+      * manifest list (see [[ManifestIO]]). Empty for a table with no files, or
       * before the commit plans its chunks. */
     manifests: Seq[String] = Nil,
     /** Partition-spec id each live file was WRITTEN under (absent = 0,
@@ -100,7 +100,13 @@ final case class Snapshot(
       * the O(live-files) driver cost of first materialization at 10⁸
       * files (≡ Iceberg's manifest-list partition summaries). Absent
       * chunk = unknown (conservatively loaded). */
-    manifestSummaries: Map[String, Map[String, ColStat]] = Map.empty) {
+    manifestSummaries: Map[String, Map[String, ColStat]] = Map.empty,
+    /** Paths that entries of [[manifests]] still name but that are NOT
+      * live here (≡ Iceberg's DELETED manifest entries): a row-level
+      * commit keeps a chunk that lost files by name and lists the lost
+      * paths instead of rewriting it. Every reader of chunk entries
+      * subtracts them; at most [[ManifestIO.MaxTombstones]]. */
+    tombstones: Seq[String] = Nil) {
 
   /** The spec registry with the never-evolved default folded in. */
   def specsOrDefault: Map[Long, Seq[String]] =

@@ -12,8 +12,8 @@ import graft.schema.AvroSchemaConverter
   * MERGE upsert, snapshot-checkpoint-gated commit.
   *
   * ≡ reference entry point B (scripts/bronze-silver.py:222-305):
-  *   - latest bronze snapshot id from `.history` ordered by
-  *     `made_current_at` desc (top-1);
+  *   - latest bronze snapshot id (the reference's `.history` top-1 by
+  *     `made_current_at`, read here as HEAD);
   *   - no checkpoint → full scan; checkpoint == latest → short-circuit;
   *     else incremental scan `(checkpoint, latest]`;
   *   - dedup to the latest row per `invoiceid` by `processed_time`
@@ -44,11 +44,14 @@ final class BronzeToSilverJob(
   def run(): Long = {
     val bronze = catalog.loadTable(namespace, bronzeTable)
 
-    // latest snapshot via the .history metadata view (top-1 by commit time;
-    // ≡ scripts/bronze-silver.py:136-141)
-    val latest = bronze.history
-      .orderBy(col("made_current_at").desc, col("snapshot_id").desc)
-      .limit(1).collect()(0).getAs[Long]("snapshot_id")
+    // latest snapshot (≡ scripts/bronze-silver.py:136-141, the top-1 of
+    // `.history` by `made_current_at`) read as HEAD: in linear history
+    // HEAD is the snapshot that top-1 means, and reading it costs no
+    // Spark job and no rewrite of the history cache. The commit-time
+    // order can also name a non-HEAD snapshot when two writers' clocks
+    // disagree; HEAD cannot.
+    val latest = bronze.currentSnapshotId.getOrElse(throw
+      new IllegalStateException(s"bronze table $bronzeTable has no snapshot"))
 
     val ckpt = Checkpoint.loadKey(checkpointPath, CKPT_KEY).map(_.toLong)
     val incoming: DataFrame = ckpt match {

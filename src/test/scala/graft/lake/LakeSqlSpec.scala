@@ -810,7 +810,7 @@ WHEN NOT MATCHED THEN INSERT *
       "SELECT name FROM hp_refs").collect().map(_.getString(0))
       .contains("silver"))
     // direct-API expire immediately after a view query: dir-mtime has
-    // 1 s granularity on many filesystems, so only the v*.json census
+    // 1 s granularity on many filesystems, so only the snapshot-doc census
     // in the stamp makes this visible without any clock settling
     lt.append(Seq((3L, "c")).toDF("id", "v"))
     lt.append(Seq((4L, "d")).toDF("id", "v"))

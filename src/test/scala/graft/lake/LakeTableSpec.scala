@@ -305,8 +305,9 @@ class LakeTableSpec extends AnyFunSuite {
     val df = Seq((1L, "a")).toDF("id", "v")
     val t = LakeTable.create(spark, root, df.schema)
     t.append(df) // HEAD = 2
-    // simulate a crash: v3.json exists but HEAD never moved
-    val orphan = new org.apache.hadoop.fs.Path(root, "metadata/v3.json")
+    // simulate a crash: v3's doc exists but HEAD never moved
+    val orphan = new org.apache.hadoop.fs.Path(root,
+      s"metadata/${ManifestIO.docName(3L)}")
     val fs = orphan.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(orphan, false)
     out.write("{\"snapshot_id\": 3}".getBytes("UTF-8")); out.close()

@@ -41,7 +41,7 @@ class ManifestSpec extends AnyFunSuite {
       val after = metaFiles(root)
       val newFiles = after.view.filterKeys(!before.contains(_)).toMap
       perCommitNewBytes :+= newFiles.values.sum
-      vJsonSizes :+= after(s"v$id.json")
+      vJsonSizes :+= after(ManifestIO.docName(id))
       vJsonIds :+= id
       chunkCounts :+= t.currentSnapshot.get.manifests.size
       if (t.currentSnapshot.get.manifests.exists(prevManifests))
@@ -57,8 +57,8 @@ class ManifestSpec extends AnyFunSuite {
       spark.sessionState.newHadoopConf())
     vJsonSizes.zip(chunkCounts).zip(vJsonIds).foreach {
       case ((bytes, chunks), id) =>
-        val doc = Snapshot.mapper.readTree(LakeTable.readString(fsys,
-          new Path(root, s"${LakeTable.METADATA_DIR}/v$id.json")))
+        val doc = Snapshot.mapper.readTree(ManifestIO.readDoc(fsys,
+          new Path(root, LakeTable.METADATA_DIR), id))
           .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
         doc.remove("inline_chunks")
         val nonInline = Snapshot.mapper.writerWithDefaultPrettyPrinter()
@@ -173,34 +173,54 @@ class ManifestSpec extends AnyFunSuite {
     assert(t.scan().count() == 1)
   }
 
-  test("one-partition COW delete on a 200-file table writes one compressed chunk") {
-    import org.apache.spark.sql.functions.sum
-    val root = freshRoot
-    // rows ordered by partition and round-robined over 4 tasks: every
-    // task writes every one of the 50 partitions, ~200 files in ONE
-    // file-backed chunk (above the inline bound, below the target)
-    val df = (0 until 1000).map(i => (i.toLong, s"v$i", i / 20))
-      .toDF("id", "v", "p")
+  /** A table of exactly `partitions` × 4 files of 5 rows: ids
+    * `0 until 20 * partitions`, partition `p = id / 20`, written by 4
+    * tasks that each hold 5 rows of every partition. */
+  private def fourTaskTable(root: String, partitions: Int): LakeTable = {
+    val rows = for {
+      task <- 0 until 4; p <- 0 until partitions; k <- 0 until 5
+    } yield { val i = p * 20 + task * 5 + k; (i.toLong, s"v$i", p) }
+    val df = spark.sparkContext.parallelize(rows, 4).toDF("id", "v", "p")
     val t = LakeTable.create(spark, root, df.schema, Seq("p"))
-    t.append(df.repartition(4))
+    t.append(df)
+    assert(t.currentSnapshot.get.liveFiles.size == partitions * 4)
+    t
+  }
+
+  /** One COW delete inside partition 7 of a [[fourTaskTable]]: the
+    * table's root and the bytes of metadata the delete wrote. */
+  private def onePartitionDelete(partitions: Int): (String, Long) = {
+    val root = freshRoot
+    val t = fourTaskTable(root, partitions)
     val base = t.currentSnapshot.get
-    assert(base.liveFiles.size > LakeTable.INLINE_CHUNK_MAX_ENTRIES &&
-      base.liveFiles.size <= ManifestIO.ChunkTargetEntries,
-      s"${base.liveFiles.size} files")
-    assert(base.manifests.size == 1 &&
-      ManifestIO.isChunkFile(base.manifests.head), base.manifests)
-    // a row-level delete in partition 7 rewrites that chunk whole; its
-    // compact gzip form is a few KiB
+    assert(base.manifests.forall(ManifestIO.isChunkFile), base.manifests)
     val before = metaFiles(root)
     t.delete($"p" === 7 && $"id" % 2 === 0)
     val written = metaFiles(root).collect {
       case (n, len) if !before.get(n).contains(len) => len
     }.sum
-    assert(written < 16 * 1024,
-      s"a one-partition delete wrote $written B of metadata")
     val snap = t.currentSnapshot.get
     assert(snap.removedFiles.nonEmpty && snap.addedFiles.nonEmpty,
       "expected a copy-on-write rewrite")
+    // every parent chunk kept by name, the removed files masked
+    assert(base.manifests.forall(snap.manifests.contains),
+      s"${base.manifests} -> ${snap.manifests}")
+    assert(snap.tombstones.toSet == snap.removedFiles.toSet)
+    (root, written)
+  }
+
+  private lazy val smallDelete = onePartitionDelete(50)
+
+  test("one-partition COW delete on a 200-file table writes only its doc") {
+    import org.apache.spark.sql.functions.sum
+    val (root, written) = smallDelete
+    info(s"the delete wrote $written B of metadata")
+    // the 200 entries stay in their one file-backed chunk; the delete
+    // writes one gzip doc holding the delta and four tombstones
+    assert(written < 1024,
+      s"a one-partition delete wrote $written B of metadata")
+    val t = LakeTable.load(spark, root)
+    val snap = t.currentSnapshot.get
     val rows = 1000L - 10L
     def readBack(h: LakeTable): (Long, Long, Long) =
       (h.scan().count(), h.files.count(),
@@ -211,6 +231,169 @@ class ManifestSpec extends AnyFunSuite {
     assert(readBack(LakeTable.load(spark, root)) == expected)
     t.expireSnapshots(keepLast = 1)
     assert(readBack(LakeTable.load(spark, root)) == expected)
+  }
+
+  test("one-partition COW delete writes the same metadata on a 2 000-file table") {
+    val (_, small) = smallDelete
+    val (root, written) = onePartitionDelete(500)
+    info(s"the delete wrote $written B of metadata, $small B at 200 files")
+    assert(LakeTable.load(spark, root).currentSnapshot.get.manifests
+      .count(ManifestIO.isChunkFile) == 4)
+    // metadata in proportion to the change, not the table: ten times
+    // the files costs three more chunk names and summaries
+    assert(written <= small + 1024,
+      s"2 000-file delete wrote $written B against $small B at 200 files")
+  }
+
+  test("tombstones mask removed files on every read path and fold past the bound") {
+    import org.apache.spark.sql.functions.{col, sum}
+    val root = freshRoot
+    val t = fourTaskTable(root, 50) // 200 files in one file-backed chunk
+    val bigChunk = t.currentSnapshot.get.manifests.head
+    // the model: ids left after deletes of the even ids in partitions
+    // 3k..3k+2 for round k, plus appended ids
+    var model: Set[Long] = (0L until 1000L).toSet
+    val atSnapshot = scala.collection.mutable.Map.empty[Long, Set[Long]]
+    val pred = col("p") <= 2 // partial materialize: later deltas skip
+    def predRows(m: Set[Long]) = m.count(i => i < 1000L && i / 20 <= 2)
+    def check(h: LakeTable): Unit = {
+      val snap = h.currentSnapshot.get
+      val live = snap.liveFiles.toSet
+      assert(snap.tombstones.size <= ManifestIO.MaxTombstones)
+      assert(!snap.tombstones.exists(live), "a tombstone names a live file")
+      assert(h.scan().count() == model.size)
+      assert(h.scan(pred).count() == predRows(model))
+      assert(h.files.count() == live.size)
+      val parts = h.partitions.agg(sum("file_count"), sum("total_rows"))
+        .first()
+      assert(parts.getLong(0) == live.size && parts.getLong(1) == model.size)
+      assert(h.manifestsTable.agg(sum("entry_count")).first().getLong(0) ==
+        live.size)
+      assert(h.countRows() == model.size)
+    }
+    def deleteRound(k: Int): Long = {
+      val ps = (3 * k until 3 * k + 3).toSet
+      val id = t.delete(col("p").isin(ps.toSeq: _*) && col("id") % 2 === 0)
+      model = model.filterNot(i => i < 1000L && ps((i / 20).toInt) && i % 2 == 0)
+      atSnapshot(id) = model
+      check(t)
+      // a cold handle plans `pred` from chunk summaries alone: it loads
+      // only the chunks they keep and still subtracts every tombstone
+      val cold = LakeTable.load(spark, root)
+      assert(cold.scan(pred).count() == predRows(model))
+      if (k > 0) assert(
+        cold.chunkLoads.get() < t.currentSnapshot.get.manifests.size,
+        "the pruned scan loaded every chunk")
+      check(cold)
+      id
+    }
+    // five deletes of 12 files each: the chunk stays, 60 tombstones
+    val ids = (0 until 5).map(deleteRound)
+    val tombstoned = t.currentSnapshot.get
+    assert(tombstoned.manifests.contains(bigChunk) &&
+      tombstoned.tombstones.size == 60, tombstoned.tombstones.size)
+    // an append carries the tombstones forward unchanged
+    val beforeAppend = t.currentSnapshot.get.snapshotId
+    t.append(Seq((5000L, "a", 100)).toDF("id", "v", "p"))
+    model += 5000L
+    assert(t.currentSnapshot.get.tombstones == tombstoned.tombstones)
+    check(t); check(LakeTable.load(spark, root))
+    // the sixth would carry 72: the chunk is rewritten, tombstones gone
+    val folded = deleteRound(5)
+    val head = t.currentSnapshot.get
+    assert(!head.manifests.contains(bigChunk) && head.tombstones.isEmpty,
+      s"${head.manifests} / ${head.tombstones.size} tombstones")
+    t.append(Seq((5001L, "b", 100), (5002L, "c", 100)).toDF("id", "v", "p"))
+    model ++= Seq(5001L, 5002L)
+    check(t); check(LakeTable.load(spark, root))
+    // time travel to a pre-fold snapshot, warm and cold
+    val preFold = ids(3)
+    Seq(t, LakeTable.load(spark, root)).foreach { h =>
+      assert(h.scanAt(preFold).count() == atSnapshot(preFold).size)
+    }
+    // incremental read across the fold: only the appended rows
+    assert(LakeTable.load(spark, root).incrementalScan(beforeAppend,
+      t.currentSnapshotId.get, skipNonAppends = true).count() == 3)
+    assert(folded > beforeAppend)
+    // roll back to a tombstoned snapshot
+    model = atSnapshot(preFold)
+    t.rollbackTo(preFold)
+    check(t); check(LakeTable.load(spark, root))
+    // expiry and the orphan sweep keep every live file
+    t.expireSnapshots(keepLast = 1)
+    check(LakeTable.load(spark, root))
+    val swept = t.removeOrphanFiles(olderThanMs = 0L)
+    val live = t.currentSnapshot.get.liveFiles.toSet
+    assert(!swept.exists(live), s"orphan sweep removed live files")
+    check(LakeTable.load(spark, root))
+    // docs, chunks and expiry's promoted inline chunks are gzip-framed
+    val crcs = new java.io.File(root, LakeTable.METADATA_DIR).list()
+      .filter(_.endsWith(".crc"))
+    assert(crcs.isEmpty, s"metadata holds checksum files: ${crcs.toSeq}")
+  }
+
+  test("the planner reuses a partly dead chunk only while every live entry is unchanged") {
+    def e(p: String, lo: String = "1") =
+      ManifestEntry(p, 2L, Map("id" -> ColStat(lo, "9")), Map.empty,
+        Some(FileInfo(10L, 1L)))
+    val snap = Snapshot(3L, Some(2L), 0L, "delete", Nil, Nil,
+      liveFiles = Seq("a", "b", "c"), schemaJson = "{}",
+      partitionColumns = Nil, properties = Map.empty,
+      fileStats = Seq("a", "b", "c").map(_ -> Map("id" -> ColStat("1", "9")))
+        .toMap,
+      fileSeq = Seq("a", "b", "c").map(_ -> 2L).toMap,
+      fileInfo = Seq("a", "b", "c").map(_ -> FileInfo(10L, 1L)).toMap)
+    // one dead entry: kept by name behind a tombstone
+    val kept = ManifestIO.plan(snap, Seq("x" -> Seq(e("a"), e("b"), e("d")),
+      "y" -> Seq(e("c"))))
+    assert(kept.reused == Seq("x", "y") && kept.tombstones == Seq("d") &&
+      kept.toWrite.isEmpty, kept)
+    // a changed entry for a live path: rewritten, no tombstone
+    val changed = ManifestIO.plan(snap, Seq(
+      "x" -> Seq(e("a"), e("b", lo = "0"), e("d")), "y" -> Seq(e("c"))))
+    assert(changed.reused == Seq("y") && changed.tombstones.isEmpty &&
+      changed.toWrite.flatten.map(_.path).toSet == Set("a", "b"), changed)
+    // at least half dead: rewritten
+    val halfDead = ManifestIO.plan(snap, Seq(
+      "x" -> Seq(e("a"), e("d")), "y" -> Seq(e("b"), e("c"))))
+    assert(halfDead.reused == Seq("y") && halfDead.tombstones.isEmpty,
+      halfDead)
+    // past the bound every tombstoned chunk is rewritten: two chunks,
+    // each under half dead, with 80 tombstones between them
+    val wide = snap.copy(liveFiles = (0 until 200).map(i => s"l$i"),
+      fileStats = Map.empty, fileSeq = Map.empty, fileInfo = Map.empty)
+    def le(p: String) = ManifestEntry(p, 0L, Map.empty, Map.empty, None)
+    val full = ManifestIO.plan(wide, Seq(
+      "x" -> ((0 until 100).map(i => le(s"l$i")) ++
+        (0 until 40).map(i => le(s"dead$i"))),
+      "y" -> ((100 until 200).map(i => le(s"l$i")) ++
+        (40 until 80).map(i => le(s"dead$i")))))
+    assert(full.tombstones.isEmpty && full.reused.isEmpty &&
+      full.toWrite.flatten.map(_.path).toSet == wide.liveFiles.toSet)
+    // an append carries the parent's tombstones unchanged
+    val appended = ManifestIO.planAppend(Seq("x"), Seq("d"), Seq(e("n")),
+      Map("x" -> Seq(e("a"), e("b"), e("d"))))
+    assert(appended.reused == Seq("x") && appended.tombstones == Seq("d"))
+  }
+
+  test("a corrupt or truncated snapshot doc fails loudly on a cold handle") {
+    val root = freshRoot
+    val t = LakeTable.create(spark, root,
+      Seq((1L, "a")).toDF("id", "v").schema)
+    val id = t.append(Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    val doc = java.nio.file.Paths.get(root, LakeTable.METADATA_DIR,
+      ManifestIO.docName(id))
+    val good = java.nio.file.Files.readAllBytes(doc)
+    val flipped = good.clone()
+    flipped(good.length / 2) = (flipped(good.length / 2) ^ 0x10).toByte
+    Seq(flipped, good.take(good.length - 5), good.take(good.length / 2))
+      .foreach { bad =>
+        java.nio.file.Files.write(doc, bad)
+        intercept[java.io.IOException](
+          LakeTable.load(spark, root).scan().count())
+      }
+    java.nio.file.Files.write(doc, good)
+    assert(LakeTable.load(spark, root).scan().count() == 2)
   }
 
   test("expiry of a ~1k-file snapshot completes and reclaims everything dead") {

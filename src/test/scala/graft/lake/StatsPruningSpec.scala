@@ -51,13 +51,13 @@ class StatsPruningSpec extends AnyFunSuite {
     // chunk summaries either)
     val metaDir = new org.apache.hadoop.fs.Path(t.root, LakeTable.METADATA_DIR)
     val mPath = new org.apache.hadoop.fs.Path(metaDir,
-      s"v${base.snapshotId}.json")
+      ManifestIO.docName(base.snapshotId))
     val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
     val chunk = ManifestIO.writeChunk(fs, metaDir,
       ManifestIO.entriesOf(legacy))
     fs.delete(mPath, false)
-    LakeTable.writeStringExclusive(fs, mPath, ManifestIO.listToJson(
-      legacy.copy(manifests = Seq(chunk), manifestSummaries = Map.empty)))
+    ManifestIO.writeDoc(fs, metaDir, legacy.copy(manifests = Seq(chunk),
+      manifestSummaries = Map.empty, tombstones = Nil))
     val t2 = LakeTable.load(spark, t.root)
     t2.merge(src, Seq("id"))
     val got = t2.scan().where($"id" === 250L).collect()

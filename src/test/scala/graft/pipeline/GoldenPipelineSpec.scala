@@ -110,6 +110,19 @@ class GoldenPipelineSpec extends AnyFunSuite {
         r.getAs[Long]("n_orders")).toMap
     assert(goldRows == 4) // states SC, PW, CT, VI
     assert(gold == Map("SC" -> 2L, "PW" -> 1L, "CT" -> 1L, "VI" -> 1L))
+
+    // bronze → silver reads bronze's HEAD, never its `.history` view, so
+    // no snapshot-summary cache is written; and gzip-framed metadata
+    // carries no `.crc` siblings in any table
+    def metaNames(table: String): Seq[String] =
+      Option(new java.io.File(cat.tablePath("example_namespace", table),
+        "metadata").list()).map(_.toSeq).getOrElse(Nil)
+    assert(!metaNames("bronze_orders").contains("snaplog.json"))
+    Seq("bronze_orders", "silver_orders", "gold_orders_by_state")
+      .foreach { t =>
+        assert(metaNames(t).nonEmpty && !metaNames(t).exists(_.endsWith(".crc")),
+          s"$t: ${metaNames(t)}")
+      }
   }
 
   test("MOR silver (reference table_type='MOR'): same golden end state, zero rewrites") {
