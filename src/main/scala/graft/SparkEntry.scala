@@ -1451,9 +1451,8 @@ WHEN NOT MATCHED THEN INSERT *
         lt.append(li.where(col("l_orderkey") % 4 === i)))
       lt.compact(targetFilesPerPartition = 4)
       val snap = lt.currentSnapshot.get
-      val ranges = snap.liveFiles.flatMap(f =>
-        snap.fileStats.get(f).flatMap(_.get("l_orderkey"))
-          .map(cs => (cs.min.toLong, cs.max.toLong))).sortBy(_._1)
+      val ranges = snap.entries.values.flatMap(_.stats.get("l_orderkey")
+          .map(cs => (cs.min.toLong, cs.max.toLong))).toSeq.sortBy(_._1)
       require(ranges.size == snap.liveFiles.size, "file missing bounds")
       ranges.sliding(2).foreach {
         case Seq((_, aMax), (bMin, _)) =>

@@ -197,8 +197,7 @@ object DeltaExport {
         "deletes into exportable deletion vectors; equality deletes " +
         "need compact()")
     locally {
-      val evolved = snap.liveFiles
-        .filter(f => snap.fileRenames.getOrElse(f, Map.empty).nonEmpty)
+      val evolved = snap.liveFiles.filter(snap.entries(_).renames.nonEmpty)
       require(evolved.isEmpty,
         s"${evolved.size} live files predate a schema evolution and " +
           "read through graft's name mapping (≙ Delta column mapping, " +
@@ -516,10 +515,7 @@ object DeltaExport {
       lines += m.writeValueAsString(rm)
     }
     newRels.foreach { rel =>
-      val info = snap.fileInfo.getOrElse(rel,
-        throw new IllegalStateException(
-          s"no size/row manifest info for $rel — legacy manifest; " +
-            "rewrite (compact) before export"))
+      val info = snap.entries(rel).info
       val add = m.createObjectNode()
       val o = add.putObject("add")
       o.put("path", absUri(rel))
@@ -543,7 +539,7 @@ object DeltaExport {
         o.put("defaultRowCommitVersion", version)
       }
       dvDescByRel.get(rel).foreach(putDv(o, _))
-      val fileStats = snap.fileStats.getOrElse(rel, Map.empty)
+      val fileStats = snap.entries(rel).stats
       val st = m.createObjectNode()
       // graft stats are PHYSICAL (pre-delete): numRecords counts the
       // file's rows per spec; with a DV the logical bounds may be

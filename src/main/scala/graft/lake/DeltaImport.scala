@@ -1033,8 +1033,7 @@ object DeltaImport {
       case Some(c) =>
         val byUri = st.adds.map(a => a.uri -> a).toMap
         PredicatePruning.candidateFiles(c, st.schema,
-          st.adds.map(_.uri),
-          st.adds.map(a => a.uri -> addStats(st, a)).toMap)
+          st.adds.map(_.uri), byUri.get(_).map(addStats(st, _)))
           .map(byUri)
     }
   }

@@ -173,60 +173,27 @@ object FileStats {
 
   // -------------------------------------------------------------- collection
 
-  /** Bounds for one freshly written data file: partition values parsed
-    * from the hive path (exact — identity partition columns are not
-    * stored in the file; transformed fields record their derived value
-    * as a point-stat under the derived dir name) plus footer min/max for
-    * the data columns (including transformed-partition SOURCE columns,
-    * which live in the file). Never throws: a file whose footer can't be
-    * decoded just gets no stats. */
+  /** Bounds and exact row count of one freshly written data file:
+    * partition values parsed from the hive path (exact — identity
+    * partition columns are not stored in the file; transformed fields
+    * record their derived value as a point-stat under the derived dir
+    * name) plus footer min/max for the data columns (including
+    * transformed-partition SOURCE columns, which live in the file).
+    * Throws when the footer can't be read — a file without a row count
+    * can't be committed; bounds the footer can't decode are just left
+    * out. */
   def collect(conf: Configuration, file: Path, schema: StructType,
       partitionFields: Seq[PartitionSpec.Field],
-      relPath: String): (Map[String, ColStat], Long) = {
-    val fromPath = partitionStats(schema, partitionFields, relPath)
-    val identitySources =
-      partitionFields.filter(_.isIdentity).map(_.source).toSet
-    val dataCols = schema.fields
-      .filterNot(f => identitySources(f.name))
-      .filter(f => supportsLiteralPruning(f.dataType))
-      .map(f => f.name -> f.dataType).toMap
-    val (footer, rows) = Try(footerStats(conf, file, dataCols))
-      .getOrElse((Map.empty[String, ColStat], -1L))
-    // identity partition columns live in the DIRECTORY, not the file:
-    // a concrete dir value means zero nulls in this file; the
-    // __HIVE_DEFAULT_PARTITION__ dir means every row is null
-    val partNulls = partitionFields.filter(_.isIdentity).flatMap { f =>
-      if (fromPath.contains(f.dirName)) Some(nullsKey(f.source) ->
-        ColStat("0", "0"))
-      else if (rows >= 0 && nullPartitionDirs(relPath).contains(f.dirName))
-        Some(nullsKey(f.source) -> ColStat(rows.toString, rows.toString))
-      else None
-    }.toMap
-    (fromPath ++ footer ++ partNulls, rows)
-  }
+      relPath: String): (Map[String, ColStat], Long) =
+    profile(readFooter(conf, file), schema, partitionFields, relPath)
 
-  /** One file's footer schema as SPARK types — the same per-footer
-    * conversion the parquet datasource's schema inference applies, but
-    * with NO Spark job (one footer open on the calling thread). The
-    * add_files per-file gate: merged inference would union columns
-    * across files (hiding a file MISSING a table column behind NULLs)
-    * and costs a distributed read per import — at commit depth that
-    * read dominates the whole import. Honors the session's parquet
-    * type flags (nanos-as-long, timestamp inference) via the passed
-    * session-derived Configuration. */
-  def footerSparkSchema(conf: Configuration, file: Path,
-      converter: org.apache.spark.sql.execution.datasources.parquet
-        .ParquetToSparkSchemaConverter)
-      : org.apache.spark.sql.types.StructType = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try converter.convert(reader.getFooter.getFileMetaData.getSchema)
-    finally reader.close()
-  }
-
-  /** [[footerSparkSchema]] + [[collect]] off ONE footer open — the
-    * add_files profile pass needs both, and a separate open per use
-    * doubles the dominant per-file import cost (a footer open is the
-    * most expensive fs operation of a metadata-only commit). Throws if
+  /** The footer's schema as SPARK types (the per-footer conversion the
+    * parquet datasource's schema inference applies, with NO Spark job:
+    * merged inference would hide a file MISSING a table column behind
+    * NULLs) + [[collect]], off ONE footer open — the add_files profile
+    * pass needs both, and a separate open per use doubles the dominant
+    * per-file import cost (a footer open is the most expensive fs
+    * operation of a metadata-only commit). Throws if
     * the footer is unreadable (the caller's per-file gate reports it);
     * stats decode failures inside a readable footer degrade to
     * no-stats exactly like [[collect]]. */
@@ -236,6 +203,22 @@ object FileStats {
       schema: StructType, partitionFields: Seq[PartitionSpec.Field],
       relPath: String)
       : (StructType, Map[String, ColStat], Long) = {
+    val footer = readFooter(conf, file)
+    val (st, rows) = profile(footer, schema, partitionFields, relPath)
+    (converter.convert(footer.getFileMetaData.getSchema), st, rows)
+  }
+
+  private def readFooter(conf: Configuration, file: Path)
+      : org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The [[collect]] result of one read footer. */
+  private def profile(
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
+      schema: StructType, partitionFields: Seq[PartitionSpec.Field],
+      relPath: String): (Map[String, ColStat], Long) = {
     val fromPath = partitionStats(schema, partitionFields, relPath)
     val identitySources =
       partitionFields.filter(_.isIdentity).map(_.source).toSet
@@ -243,23 +226,20 @@ object FileStats {
       .filterNot(f => identitySources(f.name))
       .filter(f => supportsLiteralPruning(f.dataType))
       .map(f => f.name -> f.dataType).toMap
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val (fileSch, footer, rows) =
-      try {
-        val meta = reader.getFooter
-        val sch0 = converter.convert(meta.getFileMetaData.getSchema)
-        val (st, r) = Try(footerStatsOf(meta, dataCols))
-          .getOrElse((Map.empty[String, ColStat], -1L))
-        (sch0, st, r)
-      } finally reader.close()
+    val rows = footer.getBlocks.asScala.map(_.getRowCount).sum
+    val bounds = Try(footerStatsOf(footer, dataCols))
+      .getOrElse(Map.empty[String, ColStat])
+    // identity partition columns live in the DIRECTORY, not the file:
+    // a concrete dir value means zero nulls in this file; the
+    // __HIVE_DEFAULT_PARTITION__ dir means every row is null
     val partNulls = partitionFields.filter(_.isIdentity).flatMap { f =>
       if (fromPath.contains(f.dirName)) Some(nullsKey(f.source) ->
         ColStat("0", "0"))
-      else if (rows >= 0 && nullPartitionDirs(relPath).contains(f.dirName))
+      else if (nullPartitionDirs(relPath).contains(f.dirName))
         Some(nullsKey(f.source) -> ColStat(rows.toString, rows.toString))
       else None
     }.toMap
-    (fileSch, fromPath ++ footer ++ partNulls, rows)
+    (fromPath ++ bounds ++ partNulls, rows)
   }
 
   /** Dir names of this path's `__HIVE_DEFAULT_PARTITION__` segments. */
@@ -271,19 +251,10 @@ object FileStats {
       else None
     }.toSet
 
-  /** Footer column bounds plus the file's total row count (-1 never —
-    * the count is in every footer; the Try in [[collect]] maps an
-    * unreadable footer to -1 = unknown). */
-  private def footerStats(conf: Configuration, file: Path,
-      dataCols: Map[String, DataType]): (Map[String, ColStat], Long) = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    try footerStatsOf(reader.getFooter, dataCols)
-    finally reader.close()
-  }
-
+  /** Footer column bounds and null counts. */
   private def footerStatsOf(
       footer: org.apache.parquet.hadoop.metadata.ParquetMetadata,
-      dataCols: Map[String, DataType]): (Map[String, ColStat], Long) = {
+      dataCols: Map[String, DataType]): Map[String, ColStat] = {
     {
       // Combine bounds across row groups; a column is dropped for the whole
       // file the moment any group's stats are missing or undecodable.
@@ -320,11 +291,10 @@ object FileStats {
           }
         }
       }
-      val rows = footer.getBlocks.asScala.map(_.getRowCount).sum
-      (acc.map { case (k, (mn, mx)) => k -> ColStat(mn, mx) }.toMap ++
+      acc.map { case (k, (mn, mx)) => k -> ColStat(mn, mx) }.toMap ++
         nullAcc.map { case (k, n) =>
           nullsKey(k) -> ColStat(n.toString, n.toString)
-        }, rows)
+        }
     }
   }
 

@@ -214,8 +214,7 @@ object IcebergExport {
     // policy as bucket transforms. compact() rewrites every file under
     // the current schema and clears the mapping.
     locally {
-      val evolved = snap.liveFiles
-        .filter(f => snap.fileRenames.getOrElse(f, Map.empty).nonEmpty)
+      val evolved = snap.liveFiles.filter(snap.entries(_).renames.nonEmpty)
       require(evolved.isEmpty,
         s"${evolved.size} live files predate a schema evolution " +
           "(rename/add column) and read through graft's name mapping, " +
@@ -389,10 +388,9 @@ object IcebergExport {
     // in BOTH systems (graft's era rule ⟺ Iceberg's data_seq <
     // delete_seq — same-commit after-images survive), and position
     // deletes apply at data_seq ≤ delete_seq with paths pinning the
-    // exact targets. A delete-free table still exports all-1s.
+    // exact targets.
     val snapId = snap.snapshotId
-    def seqOf(rel: String): Long =
-      math.max(snap.fileSeq.getOrElse(rel, 0L), 1L)
+    def seqOf(rel: String): Long = snap.entries(rel).seq
     def avroPartField(f: PartitionSpec.Field, i: Int): String = {
       val avroT = f.transform match {
         case PartitionSpec.Identity =>
@@ -559,10 +557,7 @@ object IcebergExport {
       val out = fs.create(manifestPath, true)
       w.create(entrySchema, out)
       filesToWrite.foreach { rel =>
-        val info = snap.fileInfo.getOrElse(rel,
-          throw new IllegalStateException(
-            s"no size/row manifest info for $rel — legacy manifest; " +
-              "rewrite (compact) before export"))
+        val info = snap.entries(rel).info
         // under a prior publish, files that predate it are EXISTING
         // (attributed to the previously published snapshot — the
         // standard conservative attribution when manifests rewrite);
@@ -589,7 +584,7 @@ object IcebergExport {
         if (formatVersion == 3)
           info.firstRowId.foreach(r =>
             df.put("first_row_id", Long.box(r)))
-        val stats = snap.fileStats.getOrElse(rel, Map.empty)
+        val stats = snap.entries(rel).stats
         if (stats.nonEmpty) {
           val dfSchema = entrySchema.getField("data_file").schema()
           val lower = Seq.newBuilder[(Int, AnyRef)]

@@ -617,8 +617,7 @@ object IcebergImport {
       case Some(c) =>
         val byUri = tm.dataEntries.map(e => e.uri -> e).toMap
         val kept = PredicatePruning.candidateFiles(c, tm.schema,
-          tm.dataEntries.map(_.uri),
-          tm.dataEntries.map(e => e.uri -> e.stats).toMap)
+          tm.dataEntries.map(_.uri), byUri.get(_).map(_.stats))
           .map(byUri)
         bucketPrune(c, kept)
     }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftlake.GraftManifestFileIndex
 import org.apache.spark.sql.types._
 
+import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 
 /** A snapshot-versioned, partitioned, Parquet-backed table — the engine's
@@ -247,24 +248,23 @@ final class LakeTable private (
     * cache via write-to-temp + rename (best-effort: concurrent
     * writers both produce valid content, last rename wins, and a
     * reader that finds no cache just pays the reads it would have
-    * paid anyway). Expired ids drop out at the next rewrite because
-    * reconciliation starts from the live v-json listing. */
+    * paid anyway). Expiry rewrites the cache down to the retained
+    * ids ([[expireWhere]]). */
   def snapshotSummaries: Seq[LakeTable.SnapSummary] = {
     val head = currentSnapshotId.getOrElse(return Nil)
     val ids = docIds.filter(_ <= head).sorted
     val cached = readSnaplog()
     val missing = ids.filterNot(cached.contains)
-    val fresh = missing.map { id =>
-      val s = snapshot(id)
-      id -> LakeTable.SnapSummary(s.snapshotId,
-        s.parentId, s.timestampMs, s.operation,
-        s.addedFiles.size.toLong, s.removedFiles.size.toLong,
-        s.liveFiles.size.toLong)
-    }.toMap
+    val fresh = missing.map(id => id -> summaryOf(snapshot(id))).toMap
     val all = ids.map(id => cached.getOrElse(id, fresh(id)))
     if (missing.nonEmpty) writeSnaplog(all)
     all
   }
+
+  private def summaryOf(s: Snapshot): LakeTable.SnapSummary =
+    LakeTable.SnapSummary(s.snapshotId, s.parentId, s.timestampMs,
+      s.operation, s.addedFiles.size.toLong, s.removedFiles.size.toLong,
+      s.entries.size.toLong)
 
   private def snaplogPath = new Path(metaDir, "snaplog.json")
 
@@ -363,9 +363,9 @@ final class LakeTable private (
         // hive `col=value` segments between data/ and the file name
         array_join(slice(parts, lit(2), size(parts) - 2), "/")
           .as("partition"),
-        coalesce(col("e.seq"), lit(0L)).as("seq"),
+        col("e.seq").as("seq"),
         col("e.bytes").as("size_bytes"),
-        when(col("e.rows") >= 0, col("e.rows")).as("record_count"),
+        col("e.rows").as("record_count"),
         // bloom/null-count pseudo-columns are pruning internals
         map_filter(coalesce(col("e.stats"), map().cast(BOUNDS_TYPE)),
           (k, _) => !k.startsWith(BloomStats.Prefix) &&
@@ -395,19 +395,14 @@ final class LakeTable private (
     * hive partition with its file count and data-sequence range — the
     * operator's view of partition balance and compaction debt.
     * Driver-side manifest aggregation, zero data read. */
-  def partitions: DataFrame = {
-    // executor-side aggregation over the chunk-backed `.files` view —
-    // a sum over null is kept null-propagating (a partition with ANY
-    // file of unknown size/rows reports unknown totals)
+  def partitions: DataFrame =
+    // executor-side aggregation over the chunk-backed `.files` view
     files.groupBy(col("partition")).agg(
       count(lit(1)).as("file_count"),
       min(col("seq")).as("min_seq"),
       max(col("seq")).as("max_seq"),
-      when(count(col("size_bytes")) === count(lit(1)),
-        sum(col("size_bytes"))).as("total_bytes"),
-      when(count(col("record_count")) === count(lit(1)),
-        sum(col("record_count"))).as("total_rows"))
-  }
+      sum(col("size_bytes")).as("total_bytes"),
+      sum(col("record_count")).as("total_rows"))
 
   /** Metadata view ≡ Iceberg's `<table>.refs`: the named snapshot
     * pointers (tags/branches). Driver-side, O(refs). */
@@ -529,7 +524,7 @@ final class LakeTable private (
     PredicatePruning.analyze(spark, predicate, sch) match {
       case Some(cond) =>
         val kept = PredicatePruning.candidateFiles(cond, sch,
-          skel.manifests, skel.manifestSummaries)
+          skel.manifests, skel.manifestSummaries.get)
         if (kept.sizeIs >= skel.manifests.size) snapshot(id)
         else ManifestIO.materializePartial(skel, kept, loadChunk,
           chunkCache.containsKey)
@@ -537,20 +532,18 @@ final class LakeTable private (
     }
   }
 
-  /** Exact row count. When every live file carries a manifest row count
-    * and no equality/position deletes are outstanding, the answer comes
-    * from the MANIFEST alone — O(live files) driver arithmetic, zero
-    * data-file I/O, zero Spark jobs (≡ Iceberg answering `COUNT(*)`
-    * from manifest `record_count`s). At 100 TB that is the difference
-    * between a metadata lookup and a full-table scan for the most
-    * common health probe a pipeline runs. Outstanding deletes (their
-    * suppressed-row count is unknowable without reading them) or a
-    * legacy manifest without row counts fall back to `scan().count()`. */
+  /** Exact row count. With no equality/position deletes outstanding,
+    * the answer comes from the MANIFEST alone — the sum of the live
+    * entries' row counts, zero data-file I/O, zero Spark jobs
+    * (≡ Iceberg answering `COUNT(*)` from manifest `record_count`s). At
+    * 100 TB that is the difference between a metadata lookup and a
+    * full-table scan for the most common health probe a pipeline runs.
+    * Outstanding deletes (their suppressed-row count is unknowable
+    * without reading them) fall back to `scan().count()`. */
   def countRows(): Long = {
     val s = current
-    val metadataExact = s.deleteFiles.isEmpty && s.posDeleteFiles.isEmpty &&
-      s.dvFiles.isEmpty && s.liveFiles.forall(s.fileInfo.contains)
-    if (metadataExact) s.liveFiles.map(s.fileInfo(_).rows).sum
+    if (s.deleteFiles.isEmpty && s.posDeleteFiles.isEmpty &&
+        s.dvFiles.isEmpty) s.entries.valuesIterator.map(_.info.rows).sum
     else scan().count()
   }
 
@@ -903,11 +896,8 @@ final class LakeTable private (
     require(!fs.exists(stagedPath(wapId)),
       s"staged changeset $wapId already exists on $root")
     val base = current
-    val WriteResult(added, stats, info) =
-      writeDataFiles(distributeForWrite(alignToSchema(df)))
-    val entries = added.map(f => ManifestEntry(f, 0L,
-      stats.getOrElse(f, Map.empty), Map.empty, info.get(f),
-      base.currentSpecId))
+    val entries = writeDataFiles(distributeForWrite(alignToSchema(df)))
+      .entries.map(_.copy(specId = base.currentSpecId))
     val m = Snapshot.mapper
     val n = m.createObjectNode()
     n.put("schema_json", base.schemaJson)
@@ -939,17 +929,23 @@ final class LakeTable private (
         .toMap
     }.getOrElse(Map.empty)
     (n.path("schema_json").asText(), n.path("spec_id").asLong(),
-      ManifestIO.chunkFromNode(n.get("chunk")),
+      ManifestIO.chunkFromNode(n.get("chunk"), stagedPath(wapId).getName),
       sources)
   }
 
   /** The parked rows of a staged changeset (for auditing). */
   def scanStaged(wapId: String): DataFrame = {
     val (schemaJson, _, entries, _) = readStaged(wapId)
-    require(schemaJson == current.schemaJson,
+    val base = current
+    require(schemaJson == base.schemaJson,
       s"staged changeset $wapId predates a schema evolution — " +
         "discard and re-stage")
-    readFilesAs(current, entries.map(_.path))
+    // the parked entries read as the publishing commit will stamp them:
+    // a sequence above every outstanding equality delete
+    val parked = entries.map(_.copy(seq = base.snapshotId + 1))
+    readFilesAs(base.copy(entries =
+        base.entries ++ parked.map(e => e.path -> e)),
+      parked.map(_.path))
   }
 
   /** Every table-relative data path RETAINED HISTORY has ever seen:
@@ -1011,16 +1007,11 @@ final class LakeTable private (
         }
       }
     }
-    val added = entries.map(_.path)
-    val stats = entries.filter(_.stats.nonEmpty)
-      .map(e => e.path -> e.stats).toMap
-    val info = entries.flatMap(e => e.info.map(e.path -> _)).toMap
     val id = commitWithRetry(current)() { b =>
       require(b.schemaJson == schemaJson && b.currentSpecId == specId,
         s"staged changeset $wapId predates a schema or partition-spec " +
           "evolution — discard and re-stage")
-      commit(b, "append", added = added, removed = Nil,
-        live = b.liveFiles ++ added, addedStats = stats, addedInfo = info)
+      commit(b, "append", added = entries, removed = Nil)
     }
     fs.delete(stagedPath(wapId), false)
     id
@@ -1145,10 +1136,6 @@ final class LakeTable private (
     require(ids.nonEmpty, s"no staged changesets on branch $name on $root")
     val loaded = ids.map(readStaged)
     val entries = loaded.flatMap(_._3)
-    val added = entries.map(_.path)
-    val stats = entries.filter(_.stats.nonEmpty)
-      .map(e => e.path -> e.stats).toMap
-    val info = entries.flatMap(e => e.info.map(e.path -> _)).toMap
     val id = commitWithRetry(base)() { b =>
       if (watermarked(b)) b.snapshotId
       else {
@@ -1161,9 +1148,7 @@ final class LakeTable private (
         // actually being committed on — the caller's staleness decision
         // sees the properties as of the commit base, never a stale view
         val drops = dropProperties(b)
-        commit(b, "append", added = added, removed = Nil,
-          live = b.liveFiles ++ added, addedStats = stats,
-          addedInfo = info,
+        commit(b, "append", added = entries, removed = Nil,
           propertiesOverride =
             if (txn.isEmpty && drops.isEmpty) None
             else Some((b.properties -- drops) ++ txn.map {
@@ -1196,12 +1181,13 @@ final class LakeTable private (
   private def readFilesWithName(relFiles: Seq[String]): DataFrame =
     readFilesAs(current, relFiles, withName = true)
 
-  /** Read `relFiles` under snapshot `ctx`'s schema, applying its
-    * equality-delete and position-delete files (merge-on-read). Files
-    * written before a column rename are read with their PHYSICAL
-    * (as-written) names via `ctx.fileRenames` and aliased back — one
-    * scan per distinct (mapping, delete-era) group, unioned; the common
-    * no-rename/no-delete case stays a single scan.
+  /** Read `relFiles` (entries of `ctx`) under snapshot `ctx`'s schema,
+    * applying its equality-delete and position-delete files
+    * (merge-on-read). Files written before a column rename are read
+    * with their PHYSICAL (as-written) names via their entry's
+    * `renames` and aliased back — one scan per distinct (mapping,
+    * delete-era, spec) group, unioned; the common no-rename/no-delete
+    * case stays a single scan.
     *
     * Equality-delete semantics (≡ Iceberg equality deletes + data
     * sequence numbers): delete file i (1-based in seq order) suppresses
@@ -1232,19 +1218,15 @@ final class LakeTable private (
     val dels = ctx.deleteFiles.sortBy(_.seq)
     val needPos = withPos || withLineage || ctx.posDeleteFiles.nonEmpty ||
       ctx.dvFiles.nonEmpty
-    def era(f: String): Int = {
-      val s = ctx.fileSeq.getOrElse(f, 0L)
-      dels.count(_.seq <= s)
-    }
     // group additionally by partition-spec era: files of different
     // layouts (hive dirs present/absent/differently shaped) cannot
     // share one scan — Spark's partition discovery would see
     // conflicting directory structures
-    val groups = relFiles.groupBy(f =>
-      (ctx.fileRenames.getOrElse(f, Map.empty[String, String]),
-        if (dels.isEmpty) 0 else era(f),
-        ctx.fileSpec.getOrElse(f, 0L)))
-    val parts = groups.toSeq.map { case ((mapping, e, _), files) =>
+    val files = relFiles.map(ctx.entries)
+    val groups = files.groupBy(f =>
+      (f.renames, if (dels.isEmpty) 0 else dels.count(_.seq <= f.seq),
+        f.specId))
+    val parts = groups.toSeq.map { case ((mapping, e, specId), group) =>
       // default-column metadata stays OUT of the physical scan schema:
       // the default is applied by THIS layer's projection below —
       // leaving EXISTS_DEFAULT on the scan schema would wake Spark's
@@ -1282,8 +1264,8 @@ final class LakeTable private (
         (if (withName) Seq(input_file_name().as(FILE_COL)) else Nil) ++
         (if (needPos) Seq(col("_metadata.file_path").as(PFILE_COL),
           col("_metadata.row_index").as(PIDX_COL)) else Nil)
-      val part = prunedParquetScan(ctx, files, physSchema, sch, mapping,
-          specId = ctx.fileSpec.getOrElse(files.head, 0L))
+      val part = prunedParquetScan(ctx, group, physSchema, sch, mapping,
+          specId)
         .select(cols: _*) // stable column order + current names
       if (dels.isEmpty) part else part.withColumn(ERA_COL, lit(e))
     }
@@ -1396,15 +1378,12 @@ final class LakeTable private (
         // (~125 KB for a 10⁶-row file), so a delete pattern touching
         // ~60k+ such files pushes the hint past Spark's 8 GB broadcast
         // ceiling and materializes on the driver first. The artifact
-        // size was recorded at consolidation time (DvFile.bytes; a
-        // live stat covers pre-field snapshots); above the gate —
-        // `spark.graft.lake.dv-broadcast-max-bytes`, default 1 GB —
+        // size was recorded at consolidation time (DvFile.bytes); above
+        // the gate — `spark.graft.lake.dv-broadcast-max-bytes`, default
+        // 1 GB —
         // fall back to a plain shuffled join keyed on the file tail
         // (still one slim row per file), same results either way.
-        val dvBytes = ctx.dvFiles.map { d =>
-          if (d.bytes > 0L) d.bytes
-          else fs.getFileStatus(new Path(rootPath, d.path)).getLen
-        }.sum
+        val dvBytes = ctx.dvFiles.map(_.bytes).sum
         val dvMax = spark.conf
           .getOption("spark.graft.lake.dv-broadcast-max-bytes")
           .map(_.toLong).getOrElse(1L << 30)
@@ -1428,11 +1407,8 @@ final class LakeTable private (
         // The (file → first_row_id) map is bounded by the PLANNED
         // files and broadcast; matching is on the table-relative tail
         // (same move-proof rule as position deletes above).
-        val wanted = relFiles.toSet
-        val firsts = ctx.fileInfo.toSeq.collect {
-          case (f, fi) if wanted(f) && fi.firstRowId.isDefined =>
-            Row(f, fi.firstRowId.get)
-        }
+        val firsts = files.flatMap(f =>
+          f.info.firstRowId.map(Row(f.path, _)))
         val fdf = spark.createDataFrame(
           spark.sparkContext.parallelize(firsts, 1),
           StructType(Seq(
@@ -1489,7 +1465,7 @@ final class LakeTable private (
       case Nil => distributeForWrite(aligned)
       case cols => aligned.repartitionByRange(cols.map(col): _*)
     }
-    val WriteResult(added, stats, info) = writeDataFiles(clustered)
+    val added = writeDataFiles(clustered).entries
     // adding fresh files commutes with ANY interleaved commit that kept
     // the schema and partition spec our files were written under —
     // append, merge, delete, compact all operate on *other* files, and
@@ -1501,7 +1477,6 @@ final class LakeTable private (
       // (the just-written files become orphans for maintenance)
       if (watermarked(b)) b.snapshotId
       else commit(b, "append", added = added, removed = Nil,
-        live = b.liveFiles ++ added, addedStats = stats, addedInfo = info,
         propertiesOverride = txn.map { case (app, v) =>
           b.properties + (s"txn.$app" -> v.toString)
         })
@@ -1653,10 +1628,11 @@ final class LakeTable private (
     require(schemaErrs.isEmpty,
       "add_files refused — file schemas do not match the table: " +
         schemaErrs.asScala.toSeq.sorted.take(5).mkString("; "))
-    val added = destRels.map(r => s"$DATA_DIR/$r")
-    val entries = added.map(k => ManifestEntry(k, 0L,
-      statsMap.getOrDefault(k, Map.empty), Map.empty,
-      Some(infoMap.get(k)), base.currentSpecId))
+    val entries = destRels.map { r =>
+      val k = s"$DATA_DIR/$r"
+      ManifestEntry(k, 0L, statsMap.getOrDefault(k, Map.empty), Map.empty,
+        infoMap.get(k), base.currentSpecId)
+    }
     val m = Snapshot.mapper
     val marker = m.createObjectNode()
     marker.put("schema_json", base.schemaJson)
@@ -1686,14 +1662,11 @@ final class LakeTable private (
       }
     }
     val snap = LakeTable.timed("af.commit")(commitWithRetry(base)() { b =>
-      commit(b, "add-files", added = added, removed = Nil,
-        live = b.liveFiles ++ added,
-        addedStats = statsMap.asScala.toMap,
-        addedInfo = infoMap.asScala.toMap)
+      commit(b, "add-files", added = entries, removed = Nil)
     })
     LakeTable.timed("af.unmark")(
       fs.delete(stagedPath(importId), false))
-    (snap, added.size)
+    (snap, entries.size)
   }
 
   /** Optimistic-retry loop (≡ Iceberg's commit retries): run
@@ -1812,11 +1785,10 @@ final class LakeTable private (
   def overwrite(df: DataFrame): Long = labeled("overwrite") {
     autoEvolveFor(df)
     val base = current
-    val WriteResult(added, stats, info) =
-      writeDataFiles(distributeForWrite(alignToSchema(df)))
-    commit(base, "overwrite", added = added, removed = base.liveFiles,
-      live = added, addedStats = stats, addedInfo = info, deletesOverride = Some(Nil),
-      posDeletesOverride = Some(Nil), dvOverride = Some(Nil))
+    val w = writeDataFiles(distributeForWrite(alignToSchema(df)))
+    commit(base, "overwrite", added = w.entries, removed = base.liveFiles,
+      deletesOverride = Some(Nil), posDeletesOverride = Some(Nil),
+      dvOverride = Some(Nil))
   }
 
   /** Predicate-scoped overwrite (≡ Delta `replaceWhere` / Iceberg's
@@ -1857,13 +1829,12 @@ final class LakeTable private (
     // never saw). A violation throws before any commit — the written
     // files are unreferenced orphans for maintenance, the table state
     // untouched.
-    val WriteResult(addedNew, statsN, infoN) =
-      writeDataFiles(distributeForWrite(aligned))
+    val addedNew = writeDataFiles(distributeForWrite(aligned)).entries
     if (addedNew.nonEmpty) {
       val written = spark.read
         .option("basePath", new Path(rootPath, "data").toString)
         .schema(schema)
-        .parquet(addedNew.map(f => new Path(rootPath, f).toString): _*)
+        .parquet(addedNew.map(e => new Path(rootPath, e.path).toString): _*)
       val violating = written.where(!coalesce(predicate, lit(false)))
         .limit(1).count()
       require(violating == 0L,
@@ -1884,15 +1855,12 @@ final class LakeTable private (
         .where(predicate)
         .select(FILE_COL).distinct()
         .collect().map(r => relativize(r.getString(0))).toSeq
-    val WriteResult(addedSurv, statsS, infoS) =
-      if (affected.isEmpty) WriteResult(Nil, Map.empty, Map.empty)
+    val addedSurv =
+      if (affected.isEmpty) NoWrite
       else writeDataFiles(sizeRewrite(readFilesForRewrite(base, affected)
         .where(!coalesce(predicate, lit(false))), base, affected))
-    val removed = covered ++ affected
-    val added = addedSurv ++ addedNew
-    commit(base, "overwrite-where", added = added, removed = removed,
-      live = base.liveFiles.diff(removed) ++ added,
-      addedStats = statsS ++ statsN, addedInfo = infoS ++ infoN,
+    commit(base, "overwrite-where", added = addedSurv.entries ++ addedNew,
+      removed = covered ++ affected,
       propertiesOverride = txn.map { case (app, v) =>
         base.properties + (s"txn.$app" -> v.toString)
       })
@@ -2269,9 +2237,7 @@ final class LakeTable private (
         eqDeletes: Seq[String]): Long = {
       def attempt(b: Snapshot): Long =
         if (txnWatermarked(b)) b.snapshotId
-        else commit(b, op, added = w.files, removed = removed,
-          live = b.liveFiles.diff(removed) ++ w.files,
-          addedStats = w.stats, addedInfo = w.info,
+        else commit(b, op, added = w.entries, removed = removed,
           deletesOverride =
             if (eqDeletes.isEmpty) None
             else Some(b.deleteFiles ++ eqDeletes.map(p =>
@@ -2435,8 +2401,7 @@ final class LakeTable private (
     * and this is a no-op). */
   private def sizeRewrite(df: DataFrame, base: Snapshot,
       affected: Seq[String]): DataFrame = {
-    val bytes = affected.iterator
-      .flatMap(f => base.fileInfo.get(f).map(_.bytes)).sum
+    val bytes = affected.iterator.map(base.entries(_).info.bytes).sum
     if (bytes <= 0L) df
     else {
       val target = properties.get(LakeTable.PROP_TARGET_FILE_BYTES)
@@ -2475,14 +2440,13 @@ final class LakeTable private (
   private def pruneByBloom(base: Snapshot, src: DataFrame,
       keys: Seq[String], candidates: Seq[String]): Seq[String] = {
     val withBloom = candidates.filter(f =>
-      base.fileStats.get(f).exists(st =>
-        keys.exists(k => st.contains(BloomStats.statKey(k)))))
+      keys.exists(k => base.entries(f).stats.contains(BloomStats.statKey(k))))
     if (withBloom.isEmpty) return candidates
     BloomStats.sourceKeyHashes(src, keys) match {
       case None => candidates // unbounded source: bounds pruning stands
       case Some(hashes) =>
         val excluded = withBloom.filter { f =>
-          val st = base.fileStats(f)
+          val st = base.entries(f).stats
           val filters = keys.map(k =>
             st.get(BloomStats.statKey(k)).map(cs =>
               BloomStats.decode(cs.min)))
@@ -2497,7 +2461,6 @@ final class LakeTable private (
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     if (!keys.forall(k => FileStats.supportsPruning(types(k))))
       return base.liveFiles
-    if (base.fileStats.isEmpty) return base.liveFiles
     val aggs = keys.flatMap { k =>
       val e = FileStats.boundExpr(k, types(k))
       Seq(min(e).as(s"__min_$k"), max(e).as(s"__max_$k"))
@@ -2520,16 +2483,14 @@ final class LakeTable private (
         case _ => k -> ((mn.toString, mx.toString))
       }
     }.toMap
-    base.liveFiles.filter { f =>
-      base.fileStats.get(f).forall { st =>
-        keys.forall { k =>
-          st.get(k).forall { cs =>
-            val (sMin, sMax) = bounds(k)
-            FileStats.rangesOverlap(types(k), cs.min, cs.max, sMin, sMax)
-          }
+    base.entries.valuesIterator.filter { e =>
+      keys.forall { k =>
+        e.stats.get(k).forall { cs =>
+          val (sMin, sMax) = bounds(k)
+          FileStats.rangesOverlap(types(k), cs.min, cs.max, sMin, sMax)
         }
       }
-    }
+    }.map(_.path).toSeq
   }
 
   /** Hidden-partition pruning for key-equality ops: when a key column is
@@ -2542,7 +2503,6 @@ final class LakeTable private (
     * order. Files without the stat are conservatively kept. */
   private def pruneByPartitionTransforms(base: Snapshot, src: DataFrame,
       keys: Seq[String], candidates: Seq[String]): Seq[String] = {
-    if (base.fileStats.isEmpty) return candidates
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     val fields = partitionFields
       .filter(f => !f.isIdentity && keys.contains(f.source))
@@ -2559,7 +2519,7 @@ final class LakeTable private (
             .select(expr.as("__graft_bval")).distinct()
             .collect().map(_.getLong(0)).toSet
           files = files.filter { file =>
-            base.fileStats.get(file).flatMap(_.get(f.dirName)) match {
+            base.entries(file).stats.get(f.dirName) match {
               case Some(cs) => vals.contains(cs.min.toLong)
               case None => true
             }
@@ -2571,7 +2531,7 @@ final class LakeTable private (
               if (dt == StringType) (row.getString(0), row.getString(1))
               else (row.getLong(0).toString, row.getLong(1).toString)
             files = files.filter { file =>
-              base.fileStats.get(file).flatMap(_.get(f.dirName)) match {
+              base.entries(file).stats.get(f.dirName) match {
                 case Some(cs) =>
                   FileStats.rangesOverlap(dt, cs.min, cs.max, mn, mx)
                 case None => true
@@ -2673,9 +2633,7 @@ final class LakeTable private (
       // rows); a racer's pure appends serialize AFTER this op, and the
       // after-image is new files, racer-independent
       commitWithRetry(base)(posRetrySafe) { b =>
-        commit(b, op, added = after.files, removed = covered,
-          live = b.liveFiles.diff(covered) ++ after.files,
-          addedStats = after.stats, addedInfo = after.info,
+        commit(b, op, added = after.entries, removed = covered,
           posDeletesOverride = Some(b.posDeleteFiles ++
             delPaths.map(p => PosDeleteFile(p, b.snapshotId + 1))))
       }
@@ -2701,10 +2659,7 @@ final class LakeTable private (
       val w =
         if (affected.isEmpty) NoWrite
         else writeDataFiles(sizeRewrite(rewritten, base, affected))
-      val removed = covered ++ affected
-      commit(base, op, added = w.files, removed = removed,
-        live = base.liveFiles.diff(removed) ++ w.files,
-        addedStats = w.stats, addedInfo = w.info)
+      commit(base, op, added = w.entries, removed = covered ++ affected)
     }
   }
 
@@ -2723,11 +2678,9 @@ final class LakeTable private (
     val base = current
     val dels = base.deleteFiles
     if (dels.isEmpty) return base.snapshotId
-    def era(f: String): Int = {
-      val s = base.fileSeq.getOrElse(f, 0L)
-      dels.count(_.seq <= s)
-    }
-    val candidates = base.liveFiles.filter(f => era(f) < dels.size)
+    val candidates = base.entries.valuesIterator
+      .filter(e => dels.count(_.seq <= e.seq) < dels.size)
+      .map(_.path).toSeq
     val delPaths =
       if (candidates.isEmpty) Nil
       else {
@@ -2748,7 +2701,7 @@ final class LakeTable private (
       // would un-delete its rows
       val newer = b.deleteFiles.filterNot(dels.toSet)
       commit(b, "rewrite-deletes", added = Nil, removed = Nil,
-        live = b.liveFiles, deletesOverride = Some(newer),
+        deletesOverride = Some(newer),
         posDeletesOverride = Some(b.posDeleteFiles ++
           delPaths.map(p => PosDeleteFile(p, seq))))
     }
@@ -2837,7 +2790,6 @@ final class LakeTable private (
       // everything in the base set is folded into the vector
       val newer = b.posDeleteFiles.filterNot(base.posDeleteFiles.toSet)
       commit(b, "rewrite-deletes", added = Nil, removed = Nil,
-        live = b.liveFiles,
         posDeletesOverride = Some(newer),
         dvOverride = Some(delPaths.map { case (p, sz) =>
           DvFile(p, seq, sz) }))
@@ -2964,7 +2916,6 @@ final class LakeTable private (
       s"cannot enable ${LakeTable.PROP_ROW_LINEAGE}: the schema already " +
         s"has a user column named ${LakeTable.ROW_ID_COL} (reserved)")
     commit(base, "set-properties", added = Nil, removed = Nil,
-      live = base.liveFiles,
       propertiesOverride = Some(base.properties ++ props))
   }
 
@@ -2978,7 +2929,7 @@ final class LakeTable private (
     * `DESCRIBE EXTENDED` / the `.stats` keys. */
   def analyze(): Long = {
     val s = current
-    val bytes = s.liveFiles.flatMap(s.fileInfo.get).map(_.bytes).sum
+    val bytes = s.entries.valuesIterator.map(_.info.bytes).sum
     setProperties(Map(
       LakeTable.PROP_STATS_ROWS -> countRows().toString,
       LakeTable.PROP_STATS_BYTES -> bytes.toString,
@@ -3028,7 +2979,7 @@ final class LakeTable private (
         str(s"__min_$c").map(v => s"stats.col.$c.min" -> v) ++
         str(s"__max_$c").map(v => s"stats.col.$c.max" -> v)
     }
-    val bytes = s.liveFiles.flatMap(s.fileInfo.get).map(_.bytes).sum
+    val bytes = s.entries.valuesIterator.map(_.info.bytes).sum
     setProperties(colProps.toMap ++ Map(
       LakeTable.PROP_STATS_ROWS -> str("__rows").getOrElse("0"),
       LakeTable.PROP_STATS_BYTES -> bytes.toString,
@@ -3039,7 +2990,6 @@ final class LakeTable private (
   def unsetProperties(keys: Seq[String]): Long = {
     val base = current
     commit(base, "unset-properties", added = Nil, removed = Nil,
-      live = base.liveFiles,
       propertiesOverride = Some(base.properties -- keys))
   }
 
@@ -3064,7 +3014,6 @@ final class LakeTable private (
     val newId = registry.find(_._2 == partitionBy).map(_._1)
       .getOrElse(registry.keys.max + 1L)
     commit(base, "evolve-spec", added = Nil, removed = Nil,
-      live = base.liveFiles,
       specChange = Some((partitionBy, newId,
         registry + (newId -> partitionBy))))
   }
@@ -3123,12 +3072,10 @@ final class LakeTable private (
     val newSchema = StructType(sch.fields :+
       StructField(name, dataType, nullable, metadata))
     val absent = ABSENT_PREFIX + name
-    val renames = base.liveFiles.map { f =>
-      f -> (base.fileRenames.getOrElse(f, Map.empty) + (name -> absent))
-    }.toMap
     commit(base, "evolve-schema", added = Nil, removed = Nil,
-      live = base.liveFiles, schemaJson = Some(newSchema.json),
-      renamesOverride = Some(renames))
+      restated = base.entries.values.map(e =>
+        e.copy(renames = e.renames + (name -> absent))).toSeq,
+      schemaJson = Some(newSchema.json))
   }
 
   /** Rename a column (metadata-only commit, ≡ Iceberg
@@ -3152,12 +3099,6 @@ final class LakeTable private (
         "(baked into the hive directory layout of some spec era)")
     val newSchema = StructType(sch.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
-    // every pre-rename live file now maps newName -> its physical name
-    val renames = base.liveFiles.map { f =>
-      val em = base.fileRenames.getOrElse(f, Map.empty)
-      val phys = em.getOrElse(oldName, oldName)
-      f -> ((em - oldName) + (newName -> phys))
-    }.toMap
     // stats and delete-file logical keys follow the column — including
     // the per-column pseudo-stats (null counts, bloom filters)
     def rekey(c: String): String =
@@ -3166,14 +3107,16 @@ final class LakeTable private (
       else if (c == FileStats.sumKey(oldName)) FileStats.sumKey(newName)
       else if (c == BloomStats.statKey(oldName)) BloomStats.statKey(newName)
       else c
-    val stats = base.fileStats.map { case (f, cols) =>
-      f -> cols.map { case (c, cs) => rekey(c) -> cs }
-    }
+    // every pre-rename live file now maps newName -> its physical name
+    val restated = base.entries.values.map { e =>
+      val phys = e.renames.getOrElse(oldName, oldName)
+      e.copy(renames = (e.renames - oldName) + (newName -> phys),
+        stats = e.stats.map { case (c, cs) => rekey(c) -> cs })
+    }.toSeq
     val dels = base.deleteFiles.map(d => d.copy(
       keys = d.keys.map(k => if (k == oldName) newName else k)))
     commit(base, "evolve-schema", added = Nil, removed = Nil,
-      live = base.liveFiles, schemaJson = Some(newSchema.json),
-      statsOverride = Some(stats), renamesOverride = Some(renames),
+      restated = restated, schemaJson = Some(newSchema.json),
       deletesOverride = Some(dels))
   }
 
@@ -3221,14 +3164,12 @@ final class LakeTable private (
     // sum result type stays LongType); widening into the FP domain
     // changes sum semantics to an order-dependent double fold
     val dropSum = !FileStats.supportsExactSum(to)
-    val stats = base.fileStats.map { case (fl, cols) =>
-      fl -> (cols - BloomStats.statKey(name) --
-        (if (dropBounds) Seq(name) else Nil) --
-        (if (dropSum) Seq(FileStats.sumKey(name)) else Nil))
-    }.filter(_._2.nonEmpty)
     commit(base, "evolve-schema", added = Nil, removed = Nil,
-      live = base.liveFiles, schemaJson = Some(newSchema.json),
-      statsOverride = Some(stats))
+      restated = base.entries.values.map(e => e.copy(stats =
+        e.stats - BloomStats.statKey(name) --
+          (if (dropBounds) Seq(name) else Nil) --
+          (if (dropSum) Seq(FileStats.sumKey(name)) else Nil))).toSeq,
+      schemaJson = Some(newSchema.json))
   }
 
   /** Drop a column (metadata-only commit, ≡ Iceberg
@@ -3245,16 +3186,12 @@ final class LakeTable private (
         "(of the current or a historical spec era)")
     require(sch.fields.length > 1, "cannot drop the last column")
     val newSchema = StructType(sch.fields.filterNot(_.name == name))
-    val stats = base.fileStats
-      .map { case (f, cols) => f -> (cols - name -
-        FileStats.nullsKey(name) - FileStats.sumKey(name) -
-        BloomStats.statKey(name)) }
-      .filter(_._2.nonEmpty)
-    val renames = base.fileRenames
-      .map { case (f, m) => f -> (m - name) }
     commit(base, "evolve-schema", added = Nil, removed = Nil,
-      live = base.liveFiles, schemaJson = Some(newSchema.json),
-      statsOverride = Some(stats), renamesOverride = Some(renames))
+      restated = base.entries.values.map(e => e.copy(
+        stats = e.stats - name - FileStats.nullsKey(name) -
+          FileStats.sumKey(name) - BloomStats.statKey(name),
+        renames = e.renames - name)).toSeq,
+      schemaJson = Some(newSchema.json))
   }
 
   /** Parquet scan over `relFiles` planned from the MANIFEST (see
@@ -3265,19 +3202,13 @@ final class LakeTable private (
     * filters before a single task is planned. Every read path (SQL
     * text over registered views, DataFrame ops, MERGE source scans,
     * time travel) inherits manifest pruning with no graft-specific
-    * API. Legacy manifest entries without a recorded size (and staged
-    * WAP files, not yet committed) fall back to one `getFileStatus`. */
-  private def prunedParquetScan(ctx: Snapshot, relFiles: Seq[String],
+    * API. */
+  private def prunedParquetScan(ctx: Snapshot, files: Seq[ManifestEntry],
       physSchema: StructType, logicalSchema: StructType,
-      mapping: Map[String, String], specId: Long = 0L): DataFrame = {
-    val statuses = relFiles.map { f =>
-      val p = fs.makeQualified(new Path(rootPath, f))
-      ctx.fileInfo.get(f) match {
-        case Some(fi) =>
-          new FileStatus(fi.bytes, false, 1, DefaultBlockSize, 0L, p)
-        case None => fs.getFileStatus(p)
-      }
-    }
+      mapping: Map[String, String], specId: Long): DataFrame = {
+    val relFiles = files.map(_.path)
+    val statuses = files.map(f => new FileStatus(f.info.bytes, false, 1,
+      DefaultBlockSize, 0L, fs.makeQualified(new Path(rootPath, f.path))))
     // claim a real BucketSpec when this era is partitioned by exactly
     // one bucket transform and EVERY file carries a parseable Spark
     // bucket-id suffix: the scan then reports
@@ -3314,27 +3245,20 @@ final class LakeTable private (
     val inv = mapping.map(_.swap)
     val pruner: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
         => (Path => Boolean) = { filters =>
-      if (ctx.fileStats.isEmpty) _ => true
-      else {
-        import org.apache.spark.sql.catalyst.expressions.{
-          And, AttributeReference}
-        val cond = filters.reduce(And(_, _)).transform {
-          case a: AttributeReference if inv.contains(a.name) =>
-            a.withName(inv(a.name))
-        }
-        val kept = pruneFiles(ctx, cond, logicalSchema, relFiles).toSet
-        p => kept(relativePath(rootPath, p))
+      import org.apache.spark.sql.catalyst.expressions.{
+        And, AttributeReference}
+      val cond = filters.reduce(And(_, _)).transform {
+        case a: AttributeReference if inv.contains(a.name) =>
+          a.withName(inv(a.name))
       }
+      val kept = pruneFiles(ctx, cond, logicalSchema, relFiles).toSet
+      p => kept(relativePath(rootPath, p))
     }
-    // exact relation row count from manifest footer counts (None if
-    // any file predates row-count recording) — lets a bare COUNT(*)
-    // answer from metadata (ManifestAggRule); delete anti-joins
-    // above this relation block that rewrite by plan shape, so MOR
-    // state can never leak into the fast path
-    val knownRows =
-      if (relFiles.forall(ctx.fileInfo.contains))
-        Some(relFiles.map(ctx.fileInfo(_).rows).sum)
-      else None
+    // exact relation row count from manifest footer counts — lets a
+    // bare COUNT(*) answer from metadata (ManifestAggRule); delete
+    // anti-joins above this relation block that rewrite by plan shape,
+    // so MOR state can never leak into the fast path
+    val knownRows = files.iterator.map(_.info.rows).sum
     // proven per-column facts for the metadata MIN/MAX/count(col) legs
     // of ManifestAggRule — a LAZY fold (cost ∝ files × cols, paid only
     // by plans the rule can actually rewrite). Bounds are proven iff
@@ -3346,8 +3270,7 @@ final class LakeTable private (
     // PHYSICAL names (the relation's attributes) — stats are held
     // under current logical names.
     val knownProofs: () => Map[String, ColumnProof] = () =>
-      if (knownRows.isEmpty) Map.empty
-      else logicalSchema.fields.iterator.flatMap { fld =>
+      logicalSchema.fields.iterator.flatMap { fld =>
         val wantBounds = ManifestAggRule.exactStatType(fld.dataType)
         var mn: String = null
         var mx: String = null
@@ -3357,9 +3280,9 @@ final class LakeTable private (
         var nonNullOk = true
         var sumAcc = BigInt(0)
         var sumOk = FileStats.supportsExactSum(fld.dataType)
-        relFiles.foreach { f =>
-          val st = ctx.fileStats.getOrElse(f, Map.empty)
-          val rows = ctx.fileInfo(f).rows
+        files.foreach { f =>
+          val st = f.stats
+          val rows = f.info.rows
           val nulls = st.get(FileStats.nullsKey(fld.name))
             .map(_.min.toLong)
           if (boundsOk) st.get(fld.name) match {
@@ -3396,9 +3319,9 @@ final class LakeTable private (
     // per-file facts for the GROUPED metadata rewrite (lazy, same
     // provenance as the folds above): physical-name keyed bounds /
     // all-null proofs / null counts per planned file
-    def factsOf(f: String): FileFacts = {
-      val st = ctx.fileStats.getOrElse(f, Map.empty)
-      val rows = ctx.fileInfo(f).rows
+    def factsOf(f: ManifestEntry): FileFacts = {
+      val st = f.stats
+      val rows = f.info.rows
       val cols = logicalSchema.fields.iterator.map { fld =>
         val nulls = st.get(FileStats.nullsKey(fld.name))
           .map(_.min.toLong)
@@ -3414,9 +3337,7 @@ final class LakeTable private (
       }.toMap
       FileFacts(rows, cols)
     }
-    val knownFacts: () => Option[Seq[FileFacts]] = () =>
-      if (knownRows.isEmpty) None
-      else Some(relFiles.map(factsOf))
+    val knownFacts: () => Seq[FileFacts] = () => files.map(factsOf)
     // FILTERED facts for `SELECT min/max/count … WHERE cond`
     // (ManifestAggRule's filtered leg): the manifest proves the split
     // when every file candidateFiles keeps is ALL-MATCH by the same
@@ -3427,32 +3348,28 @@ final class LakeTable private (
     // Identity-partitioned files satisfy equality conditions on the
     // partition column by construction (dir point-stat, zero nulls).
     val knownFilteredFacts: org.apache.spark.sql.catalyst.expressions
-        .Expression => Option[Seq[FileFacts]] = cond =>
-      if (knownRows.isEmpty || ctx.fileStats.isEmpty) None
-      else {
-        import org.apache.spark.sql.catalyst.expressions.AttributeReference
-        val logicalCond = cond.transform {
-          case a: AttributeReference if inv.contains(a.name) =>
-            a.withName(inv(a.name))
-        }
-        val types = logicalSchema.fields
-          .map(f => f.name -> f.dataType).toMap
-        // candidateFiles keeps a file it merely lacks bounds for (e.g.
-        // a NULL-partition dir has no bounds on the partition column);
-        // the dual noneMatch proof discards those it can PROVE
-        // matchless (all-null column vs a comparison) before the
-        // all-match requirement is applied to what remains
-        val kept = PredicatePruning.candidateFiles(logicalCond,
-            logicalSchema, relFiles, ctx.fileStats)
-          .filterNot(f => ctx.fileStats.get(f).exists(fs =>
-            PredicatePruning.noneMatch(logicalCond, fs, types,
-              Some(ctx.fileInfo(f).rows))))
-        val proven = kept.forall(f =>
-          ctx.fileStats.get(f).exists(fs =>
-            PredicatePruning.allRowsMatch(logicalCond, fs, types,
-              Some(ctx.fileInfo(f).rows))))
-        if (proven) Some(kept.map(factsOf)) else None
+        .Expression => Option[Seq[FileFacts]] = { cond =>
+      import org.apache.spark.sql.catalyst.expressions.AttributeReference
+      val logicalCond = cond.transform {
+        case a: AttributeReference if inv.contains(a.name) =>
+          a.withName(inv(a.name))
       }
+      val types = logicalSchema.fields
+        .map(f => f.name -> f.dataType).toMap
+      // candidateFiles keeps a file it merely lacks bounds for (e.g.
+      // a NULL-partition dir has no bounds on the partition column);
+      // the dual noneMatch proof discards those it can PROVE
+      // matchless (all-null column vs a comparison) before the
+      // all-match requirement is applied to what remains
+      val kept = PredicatePruning.candidateFiles(logicalCond,
+          logicalSchema, relFiles, ctx.entries.get(_).map(_.stats))
+        .map(ctx.entries)
+        .filterNot(f => PredicatePruning.noneMatch(logicalCond, f.stats,
+          types, f.info.rows))
+      val proven = kept.forall(f => PredicatePruning.allRowsMatch(
+        logicalCond, f.stats, types, f.info.rows))
+      if (proven) Some(kept.map(factsOf)) else None
+    }
     GraftManifestFileIndex.dataFrame(spark,
       Map("basePath" -> dataDir.toString), physSchema, statuses, pruner,
       bucketSpec, knownRows, knownProofs, knownFacts, knownFilteredFacts)
@@ -3471,29 +3388,27 @@ final class LakeTable private (
       candidates: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{
       AttributeReference, EqualTo, In, Literal, XxHash64}
-    if (base.fileStats.isEmpty) return candidates
     var files = candidates
     // IN semantics: keep the file iff ANY listed value might be present
     def prune(a: AttributeReference, ls: Seq[Literal]): Unit = {
       if (ls.isEmpty ||
         ls.exists(l => l.value == null || l.dataType != a.dataType)) return
-      if (!files.exists(f => base.fileStats.get(f)
-          .exists(_.contains(BloomStats.statKey(a.name))))) return
+      if (!files.exists(f =>
+          base.entries(f).stats.contains(BloomStats.statKey(a.name)))) return
       val hashes = ls.map { l =>
         (new XxHash64(Seq(l)).eval(null).asInstanceOf[Long],
           new XxHash64(Seq(Literal("graft-bloom"), l))
             .eval(null).asInstanceOf[Long])
       }
       files = files.filter { f =>
-        base.fileStats.get(f).flatMap(_.get(BloomStats.statKey(a.name)))
-          match {
-            case Some(cs) =>
-              val filter = Seq(Some(BloomStats.decode(cs.min)))
-              hashes.exists { case (h1, h2) =>
-                BloomStats.mightContain(filter, Array(h1, h2))
-              }
-            case None => true
-          }
+        base.entries(f).stats.get(BloomStats.statKey(a.name)) match {
+          case Some(cs) =>
+            val filter = Seq(Some(BloomStats.decode(cs.min)))
+            hashes.exists { case (h1, h2) =>
+              BloomStats.mightContain(filter, Array(h1, h2))
+            }
+          case None => true
+        }
       }
     }
     PredicatePruning.conjuncts(cond).foreach {
@@ -3515,9 +3430,8 @@ final class LakeTable private (
       candidates: Seq[String]): Seq[String] = {
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
     candidates.filter { f =>
-      base.fileStats.get(f).exists(fs =>
-        PredicatePruning.allRowsMatch(cond, fs, types,
-          base.fileInfo.get(f).map(_.rows)))
+      val e = base.entries(f)
+      PredicatePruning.allRowsMatch(cond, e.stats, types, e.info.rows)
     }
   }
 
@@ -3532,13 +3446,12 @@ final class LakeTable private (
     analyzeAndPrune(base, predicate)._2
 
   /** [[pruneByPredicate]] that also hands back the analyzed condition
-    * (None: no stats to prune with, or analysis failed), so a caller
-    * proving [[fullyCovered]] files analyzes the predicate once. */
+    * (None: analysis failed), so a caller proving [[fullyCovered]]
+    * files analyzes the predicate once. */
   private def analyzeAndPrune(base: Snapshot,
       predicate: org.apache.spark.sql.Column)
       : (Option[org.apache.spark.sql.catalyst.expressions.Expression],
         Seq[String]) = {
-    if (base.fileStats.isEmpty) return (None, base.liveFiles)
     // schema from the SNAPSHOT, not the `schema` accessor: the pruned
     // scan path hands in a partially-materialized snapshot and must not
     // force a full `current` load (it would defeat the chunk skipping)
@@ -3558,7 +3471,8 @@ final class LakeTable private (
       cond: org.apache.spark.sql.catalyst.expressions.Expression,
       sch: StructType, files: Seq[String]): Seq[String] =
     pruneByLiteralBloom(ctx, cond, pruneBucketsByPredicate(ctx, cond,
-      PredicatePruning.candidateFiles(cond, sch, files, ctx.fileStats)))
+      PredicatePruning.candidateFiles(cond, sch, files,
+        ctx.entries.get(_).map(_.stats))))
 
   /** Bucket-partition pruning for predicates: a top-level
     * `source = literal` / `source IN (literals)` conjunct on a
@@ -3573,7 +3487,6 @@ final class LakeTable private (
       candidates: Seq[String]): Seq[String] = {
     import org.apache.spark.sql.catalyst.expressions.{
       AttributeReference, EqualTo, In, Literal, Murmur3Hash}
-    if (base.fileStats.isEmpty) return candidates
     // base's own spec, not `partitionFields` — see pruneByPredicate's
     // schema note (the partial-snapshot path must stay current-free)
     val bucketFields = PartitionSpec.parseAll(base.partitionColumns)
@@ -3601,7 +3514,7 @@ final class LakeTable private (
         }.toSet
         if (lits.forall(_.value != null)) // null literals match nothing anyway
           files = files.filter { file =>
-            base.fileStats.get(file).flatMap(_.get(f.dirName)) match {
+            base.entries(file).stats.get(f.dirName) match {
               case Some(cs) => vals.contains(cs.min.toLong)
               case None => true
             }
@@ -3633,7 +3546,7 @@ final class LakeTable private (
   def rewriteManifests(): Long =
     commitWithRetry(current)() { b =>
       commit(b, "rewrite-manifests", added = Nil, removed = Nil,
-        live = b.liveFiles, rechunk = true)
+        rechunk = true)
     }
 
   /** Whole-table compaction: rewrite every live file into at most
@@ -3699,22 +3612,21 @@ final class LakeTable private (
     * between a maintenance pass that rewrites the whole table and one
     * whose write amplification is bounded by the small-file fraction.
     *
-    * Candidate selection is pure MANIFEST arithmetic (fileInfo bytes —
+    * Candidate selection is pure MANIFEST arithmetic (entry sizes —
     * zero fs calls): live files under `targetFileBytes`, grouped by
     * partition directory + spec era (files of different hive layouts
     * can't share an output), greedy-packed into bins of roughly
     * `targetFileBytes`; only bins holding >= 2 files rewrite (each to
     * ONE output). Groups with fewer than `minInputFiles` candidates are
-    * left alone. Files with no recorded size (legacy manifests) are
-    * skipped, conservatively. */
+    * left alone. */
   def binPack(targetFileBytes: Long, minInputFiles: Int = 2): Long = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     require(minInputFiles >= 2,
       "minInputFiles < 2 would rewrite lone files for nothing")
     val base = current
-    val smalls = base.liveFiles
-      .flatMap(f => base.fileInfo.get(f).map(f -> _.bytes))
-      .filter(_._2 < targetFileBytes)
+    val smalls = base.entries.valuesIterator
+      .map(e => e.path -> e.info.bytes)
+      .filter(_._2 < targetFileBytes).toSeq
     // on a sort-ordered table, bins are formed in RANGE order (files
     // ordered by their recorded min bound of the leading sort column,
     // not by path): disjoint input ranges then pack into contiguous,
@@ -3729,7 +3641,7 @@ final class LakeTable private (
           // "Comparison method violates its general contract!"
           val ord = new Ordering[(String, Long)] {
             private def minOf(p: String): Option[String] =
-              base.fileStats.get(p).flatMap(_.get(c))
+              base.entries(p).stats.get(c)
                 .flatMap(s => Option(s.min))
             def compare(x: (String, Long), y: (String, Long)): Int =
               (minOf(x._1), minOf(y._1)) match {
@@ -3769,7 +3681,7 @@ final class LakeTable private (
   /** The (partition directory, spec era) a file belongs to: files of
     * different hive layouts never share one compaction group. */
   private def rewriteGroupOf(base: Snapshot, f: String): (String, Long) =
-    (f.take(f.lastIndexOf('/') + 1), base.fileSpec.getOrElse(f, 0L))
+    (f.take(f.lastIndexOf('/') + 1), base.entries(f).specId)
 
   /** The one data-file rewrite engine (≡ Iceberg's `rewrite_data_files`
     * action, whose binpack / sort / z-order are strategies of it):
@@ -3880,21 +3792,19 @@ final class LakeTable private (
           lit(target))
         data.repartition(numParts, (layoutKey :+ salt): _*)
       }
-    val WriteResult(added, stats, info) = writeDataFiles(laidOut.drop(grp))
+    val added = writeDataFiles(laidOut.drop(grp)).entries
     // row-conservation guard: a path-normalization miss in the group
     // join would otherwise silently drop whole files
     if (base.deleteFiles.isEmpty && base.posDeleteFiles.isEmpty &&
-        base.dvFiles.isEmpty && rewritten.forall(base.fileInfo.contains)) {
-      val expectRows = rewritten.map(base.fileInfo(_).rows).sum
-      val gotRows = info.values.map(_.rows).sum
+        base.dvFiles.isEmpty) {
+      val expectRows = rewritten.map(base.entries(_).info.rows).sum
+      val gotRows = added.map(_.info.rows).sum
       require(gotRows == expectRows,
         s"$op aborted before commit: rewrite carries $gotRows rows " +
           s"of $expectRows read — refusing to lose data")
     }
-    val keep = base.liveFiles.filterNot(rewritten.toSet)
-    val cleared = if (keep.isEmpty) Some(Nil) else None
+    val cleared = if ((base.entries -- rewritten).isEmpty) Some(Nil) else None
     commit(base, "compact", added = added, removed = rewritten,
-      live = keep ++ added, addedStats = stats, addedInfo = info,
       deletesOverride = cleared, posDeletesOverride = cleared,
       dvOverride = cleared)
   }
@@ -3985,6 +3895,9 @@ final class LakeTable private (
       doomedChunks.map(n => new Path(metaDir, n)) ++
       expired.map(s => docPath(s.snapshotId))
     deleteAll(doomed)
+    // the summary cache holds only what history still has
+    if (expired.nonEmpty && fs.exists(snaplogPath))
+      writeSnaplog(kept.map(summaryOf))
   }
 
   /** Bounded-parallel fs deletes: maintenance against an object store is
@@ -4016,26 +3929,20 @@ final class LakeTable private (
       s"cannot roll forward to $snapshotId (HEAD ${base.snapshotId})")
     if (snapshotId == base.snapshotId) return base.snapshotId
     val target = snapshot(snapshotId) // throws if expired
-    commit(base, "rollback",
-      added = target.liveFiles.diff(base.liveFiles),
-      removed = base.liveFiles.diff(target.liveFiles),
-      live = target.liveFiles,
+    commit(base, "rollback", added = Nil,
+      removed = base.liveFiles.filterNot(target.entries.contains),
+      restated = target.entries.values.toSeq,
       schemaJson = Some(target.schemaJson),
-      statsOverride = Some(target.fileStats),
-      renamesOverride = Some(target.fileRenames),
       deletesOverride = Some(target.deleteFiles),
       posDeletesOverride = Some(target.posDeleteFiles),
       dvOverride = Some(target.dvFiles),
-      seqOverride = Some(target.fileSeq),
-      infoOverride = Some(target.fileInfo),
       // the restored state is exactly the target's → its chunks are
       // reused verbatim and the rollback writes ~zero chunk bytes
       reuseChunksFrom = Seq(target),
       // restore the target's partition spec too (keep every spec both
       // eras know — expired-spec files may still exist elsewhere)
       specChange = Some((target.partitionColumns, target.currentSpecId,
-        base.specsOrDefault ++ target.specsOrDefault)),
-      fileSpecOverride = Some(target.fileSpec))
+        base.specsOrDefault ++ target.specsOrDefault)))
   }
 
   /** Delete files under `data/` and `deletes/` referenced by NO retained
@@ -4063,10 +3970,8 @@ final class LakeTable private (
     val missing = base.liveFiles.filterNot(f =>
       fs.exists(new Path(rootPath, f)))
     val sizeBad = base.liveFiles.filter { f =>
-      base.fileInfo.get(f).exists { fi =>
-        val p = new Path(rootPath, f)
-        fs.exists(p) && fs.getFileStatus(p).getLen != fi.bytes
-      }
+      val p = new Path(rootPath, f)
+      fs.exists(p) && fs.getFileStatus(p).getLen != base.entries(f).info.bytes
     }
     val delMissing =
       (base.deleteFiles.map(_.path) ++ base.posDeleteFiles.map(_.path) ++
@@ -4099,7 +4004,7 @@ final class LakeTable private (
           .collect()
           .map(r => relativize(r.getString(0)) -> r.getLong(1)).toMap
       val rowBad = present.filter { f =>
-        base.fileInfo.get(f).exists(_.rows != counted.getOrElse(f, 0L))
+        base.entries(f).info.rows != counted.getOrElse(f, 0L)
       }
       rows = rows :+ (("row_counts", rowBad.isEmpty,
         if (rowBad.isEmpty)
@@ -4118,13 +4023,10 @@ final class LakeTable private (
       val sch = schema
       val fields = partitionFields
       val statsBad = present.filter { f =>
-        base.fileStats.get(f).exists { recorded =>
-          // absent fileSpec entry = era 0 (same default the read path
-          // uses), NOT current era — a legacy file in an evolved table
-          // must be skipped, not audited under the wrong spec
-          val skip = base.fileRenames.get(f).exists(_.nonEmpty) ||
-            base.fileSpec.getOrElse(f, 0L) != base.currentSpecId
-          !skip && scala.util.Try {
+        val e = base.entries(f)
+        val recorded = e.stats
+        recorded.nonEmpty && e.renames.isEmpty &&
+          e.specId == base.currentSpecId && scala.util.Try {
             val (actual, _) = FileStats.collect(hconf,
               new Path(rootPath, f), sch, fields, f)
             recorded.keys
@@ -4133,7 +4035,6 @@ final class LakeTable private (
                                        // not the footer collector
               .exists(k => actual.get(k).exists(_ != recorded(k)))
           }.getOrElse(false)
-        }
       }
       rows = rows :+ (("file_stats", statsBad.isEmpty,
         if (statsBad.isEmpty)
@@ -4488,8 +4389,10 @@ final class LakeTable private (
             byKey.getOrElse(key, zeros))
         }
       }
-      WriteResult(moved.map(_._1), statsMap.asScala.toMap,
-        infoMap.asScala.toMap)
+      WriteResult(moved.map { case (key, _, _) =>
+        ManifestEntry(key, 0L, statsMap.getOrDefault(key, Map.empty),
+          Map.empty, infoMap.get(key))
+      })
     } finally {
       fs.delete(staging, true)
       priorTsType match {
@@ -4564,21 +4467,22 @@ final class LakeTable private (
     DATA_DIR + decoded.substring(base.length)
   }
 
-  private def commit(base: Snapshot, op: String, added: Seq[String],
-      removed: Seq[String], live: Seq[String],
-      addedStats: Map[String, Map[String, ColStat]] = Map.empty,
+  /** Commit the next snapshot on `base`. Its entries are `base`'s
+    * minus `removed`, then `restated` taken as they are (entries an op
+    * rewrites in place — a rename, drop or widen — or a rollback
+    * restores), then `added`: new data files, stamped here with the data
+    * sequence number (the new id), the committing spec id and, on a
+    * row-lineage table, a first_row_id block. The entry update is
+    * O(delta); the chunk plan reuses every parent chunk it can. */
+  private def commit(base: Snapshot, op: String,
+      added: Seq[ManifestEntry], removed: Seq[String],
+      restated: Seq[ManifestEntry] = Nil,
       schemaJson: Option[String] = None,
-      statsOverride: Option[Map[String, Map[String, ColStat]]] = None,
-      renamesOverride: Option[Map[String, Map[String, String]]] = None,
       deletesOverride: Option[Seq[DeleteFile]] = None,
       posDeletesOverride: Option[Seq[PosDeleteFile]] = None,
       dvOverride: Option[Seq[DvFile]] = None,
-      seqOverride: Option[Map[String, Long]] = None,
-      addedInfo: Map[String, FileInfo] = Map.empty,
-      infoOverride: Option[Map[String, FileInfo]] = None,
       reuseChunksFrom: Seq[Snapshot] = Nil,
       specChange: Option[(Seq[String], Long, Map[Long, Seq[String]])] = None,
-      fileSpecOverride: Option[Map[String, Long]] = None,
       propertiesOverride: Option[Map[String, String]] = None,
       rechunk: Boolean = false): Long = {
     // the test seam fires between an op's artifact write and THIS
@@ -4586,71 +4490,54 @@ final class LakeTable private (
     // deterministically on COW rewrite paths too, not just appends)
     beforeCommitHook()
     val id = base.snapshotId + 1
-    // Append-shaped commits (nothing removed, no per-file overrides —
-    // append, MOR merge/delete/update) keep every base entry live, so
-    // the carried maps concatenate in O(delta) instead of re-filtering
-    // O(table); the chunk plan below skips the equality scan for the
-    // same reason. Re-adding a tombstoned path is not append-shaped:
-    // its tombstone would mask the new entry.
-    val appendShaped = removed.isEmpty && statsOverride.isEmpty &&
-      renamesOverride.isEmpty && seqOverride.isEmpty &&
-      infoOverride.isEmpty && reuseChunksFrom.isEmpty &&
-      fileSpecOverride.isEmpty &&
-      live.length == base.liveFiles.length + added.length &&
-      (base.tombstones.isEmpty || !added.exists(base.tombstones.toSet))
-    lazy val liveSet = live.toSet
-    val stats = statsOverride.getOrElse(
-      if (appendShaped) base.fileStats ++ addedStats
-      else base.fileStats.filter { case (f, _) => liveSet(f) } ++ addedStats)
-    val renames =
-      if (appendShaped) base.fileRenames
-      else renamesOverride.getOrElse(base.fileRenames)
-        .filter { case (f, m) => liveSet(f) && m.nonEmpty }
-    val seqs = seqOverride.getOrElse(
-      (if (appendShaped) base.fileSeq
-       else base.fileSeq.filter { case (f, _) => liveSet(f) }) ++
-        added.map(_ -> id))
-    val dels = deletesOverride.getOrElse(base.deleteFiles)
-    val pdels = posDeletesOverride.getOrElse(base.posDeleteFiles)
-    val dvs = dvOverride.getOrElse(base.dvFiles)
-    val finfo0 = infoOverride.getOrElse(
-      if (appendShaped) base.fileInfo ++ addedInfo
-      else base.fileInfo.filter { case (f, _) => liveSet(f) } ++ addedInfo)
+    // Append-shaped commits (nothing removed or restated — append, MOR
+    // merge/delete/update) keep every base entry as it is, so the chunk
+    // plan carries the parent's chunks by name without an equality
+    // scan. An op that changes existing entries must never plan this
+    // way. Re-adding a live or tombstoned path is not append-shaped
+    // either: its old entry (or its tombstone) would shadow the new one.
+    lazy val tombstoned = base.tombstones.toSet
+    val appendShaped = removed.isEmpty && restated.isEmpty &&
+      reuseChunksFrom.isEmpty && !added.exists(e =>
+        base.entries.contains(e.path) || tombstoned(e.path))
     // row lineage: every added file gets a first_row_id block carved
     // from the row.next-id counter IN THIS COMMIT (no crash window —
     // ids and counter land atomically with the files); path-sorted so
     // assignment is deterministic within the commit
     val props0 = propertiesOverride.getOrElse(base.properties)
-    val (finfo, props1) =
-      if (!props0.get(PROP_ROW_LINEAGE).contains("true") || added.isEmpty)
-        (finfo0, props0)
-      else {
-        var next = props0.get(PROP_NEXT_ROW_ID).map(_.toLong).getOrElse(0L)
-        val assigned = added.sorted.flatMap { f =>
-          finfo0.get(f).filter(_.firstRowId.isEmpty).map { fi =>
-            val entry = f -> fi.copy(firstRowId = Some(next))
-            next += fi.rows
-            entry
-          }
-        }
-        (finfo0 ++ assigned, props0 + (PROP_NEXT_ROW_ID -> next.toString))
-      }
-    // partition-spec bookkeeping: new files carry the committing spec
-    // id; an evolve-spec commit swaps the current spec + registry
+    val lineage = props0.get(PROP_ROW_LINEAGE).contains("true") &&
+      added.nonEmpty
+    var nextRowId = props0.get(PROP_NEXT_ROW_ID).map(_.toLong).getOrElse(0L)
+    val firstRowIds: Map[String, Long] =
+      if (!lineage) Map.empty
+      else added.sortBy(_.path).collect {
+        case e if e.info.firstRowId.isEmpty =>
+          val first = e.path -> nextRowId
+          nextRowId += e.info.rows
+          first
+      }.toMap
+    val props1 =
+      if (!lineage) props0
+      else props0 + (PROP_NEXT_ROW_ID -> nextRowId.toString)
+    val stamped = added.map(e => e.copy(seq = id,
+      specId = base.currentSpecId,
+      info = firstRowIds.get(e.path)
+        .fold(e.info)(r => e.info.copy(firstRowId = Some(r)))))
+    // partition-spec bookkeeping: an evolve-spec commit swaps the
+    // current spec + registry
     val (pcols, curSpec, specs) = specChange.getOrElse(
       (base.partitionColumns, base.currentSpecId, base.partitionSpecs))
-    val addedSpec =
-      if (base.currentSpecId == 0L) Nil
-      else added.map(_ -> base.currentSpecId)
-    val fspec = fileSpecOverride.getOrElse(
-      (if (appendShaped) base.fileSpec
-       else base.fileSpec.filter { case (f, _) => liveSet(f) }) ++ addedSpec)
     val snap0 = Snapshot(id, Some(base.snapshotId), System.currentTimeMillis(),
-      op, added, removed, live, schemaJson.getOrElse(base.schemaJson),
-      pcols, props1, stats, renames,
-      seqs, dels, pdels, dvFiles = dvs, fileInfo = finfo,
-      fileSpec = fspec, partitionSpecs = specs,
-      currentSpecId = curSpec)
+      op, stamped.map(_.path) ++ restated.iterator.map(_.path)
+        .filterNot(base.entries.contains),
+      removed,
+      (base.entries -- removed) ++
+        (restated.iterator ++ stamped.iterator).map(e => e.path -> e),
+      schemaJson.getOrElse(base.schemaJson), pcols, props1,
+      deleteFiles = deletesOverride.getOrElse(base.deleteFiles),
+      posDeleteFiles = posDeletesOverride.getOrElse(base.posDeleteFiles),
+      dvFiles = dvOverride.getOrElse(base.dvFiles),
+      partitionSpecs = specs, currentSpecId = curSpec)
     // Chunk the per-file state (see ManifestIO): reuse every parent
     // chunk whose live entries are unchanged, tombstoning its removed
     // ones (rollback additionally offers its target's chunks), write
@@ -4663,14 +4550,10 @@ final class LakeTable private (
         // forced full re-chunk (rewriteManifests): ignore every parent
         // chunk and regroup ALL entries path-sorted, so hive partition
         // dirs land contiguously and chunk summaries come out tight
-        ManifestIO.Plan(Nil, ManifestIO.entriesOf(snap0).sortBy(_.path)
+        ManifestIO.Plan(Nil, snap0.entries.values.toVector.sortBy(_.path)
           .grouped(ManifestIO.ChunkTargetEntries).toVector)
       else if (appendShaped)
-        ManifestIO.planAppend(base.manifests, base.tombstones,
-          added.map(f => ManifestEntry(f, seqs.getOrElse(f, 0L),
-            stats.getOrElse(f, Map.empty),
-            renames.getOrElse(f, Map.empty).filter(_._2.nonEmpty),
-            finfo.get(f), fspec.getOrElse(f, 0L))),
+        ManifestIO.planAppend(base.manifests, base.tombstones, stamped,
           loadChunk)
       else {
         val candidateNames =
@@ -5059,13 +4942,13 @@ object LakeTable {
   val CHANGE_TYPE_COL = "_change_type"
   val CHANGE_SNAP_COL = "_commit_snapshot_id"
 
-  /** Result of one data-file write: root-relative paths, per-file column
-    * bounds, and per-file size/row-count manifest info. */
-  private[lake] final case class WriteResult(
-      files: Seq[String],
-      stats: Map[String, Map[String, ColStat]],
-      info: Map[String, FileInfo])
-  private[lake] val NoWrite = WriteResult(Nil, Map.empty, Map.empty)
+  /** Result of one data-file write: one entry per new file (root-
+    * relative path, column bounds, size and row count), not yet
+    * stamped by a commit. */
+  private[lake] final case class WriteResult(entries: Seq[ManifestEntry]) {
+    def files: Seq[String] = entries.map(_.path)
+  }
+  private[lake] val NoWrite = WriteResult(Nil)
   /** Physical-name prefix guaranteed never to be written by this engine:
     * addColumn maps the new column here for pre-existing files, so they
     * read NULL even if they carry dead bytes under the same name. */
@@ -5227,7 +5110,7 @@ object LakeTable {
     fs.mkdirs(new Path(root, METADATA_DIR))
     fs.mkdirs(new Path(root, DATA_DIR))
     val snap = Snapshot(1L, None, System.currentTimeMillis(), "create",
-      Nil, Nil, Nil, schema.json, partitionBy, properties)
+      Nil, Nil, VectorMap.empty, schema.json, partitionBy, properties)
     ManifestIO.writeDoc(fs, new Path(root, METADATA_DIR), snap)
     t.writeHead(1L)
     t

@@ -9,29 +9,42 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 
+import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 
-/** Manifest state of ONE live data file: everything the per-snapshot
-  * metadata tracks per file, gathered so it can live in a manifest
-  * CHUNK instead of inline in the snapshot JSON.
+/** The record of ONE live data file: everything the table tracks per
+  * file, held as is by [[Snapshot.entries]] in memory and by a manifest
+  * CHUNK on disk.
   *
-  * Mirrors an Iceberg manifest entry (data file path + partition/stat
-  * fields + sequence number); the reference's stack gets this layering
-  * from Iceberg's format-version 2 (reference:
+  * Mirrors an Iceberg manifest entry (data file path, size, record
+  * count, column bounds, data sequence number, spec id); the reference's
+  * stack gets this layering from Iceberg's format-version 2 (reference:
   * scripts/bronze-silver.py:197 sets `format-version=2`). */
 final case class ManifestEntry(
     path: String,
-    /** Data sequence number (snapshot id that added the file); 0 =
-      * pre-MOR legacy (every equality delete applies). */
+    /** Data sequence number: the id of the snapshot that added the file
+      * (≡ Iceberg's data sequence numbers), stamped by the commit.
+      * Equality deletes apply only to files with a STRICTLY lower
+      * sequence, so a merge's own after-image is never suppressed by
+      * its own delete file. 0 only on an entry no commit has stamped
+      * yet (a write's result, a staged changeset's parked entry). */
     seq: Long,
-    /** Per-column min/max bounds in [[FileStats]]' normalized domain. */
+    /** Per-column min/max bounds in [[FileStats]]' normalized domain —
+      * what MERGE/DELETE and scans prune against. An absent column (or
+      * an empty map) means unknown bounds: conservatively scanned. */
     stats: Map[String, ColStat],
-    /** current column name → physical as-written name (renames only). */
+    /** Schema-evolution name mapping: current column name → PHYSICAL
+      * column name as written in the file. Only columns renamed or
+      * added after the file was written appear; absent = the physical
+      * name equals the current one. The name-mapped equivalent of
+      * Iceberg's field-id indirection: renames stay metadata-only. */
     renames: Map[String, String],
-    /** Size/row-count; None = unknown (legacy manifest). */
-    info: Option[FileInfo],
-    /** Partition-spec id the file was written under (0 = creation
-      * spec) — see [[Snapshot.fileSpec]]. */
+    /** Size and row count (≡ Iceberg's `file_size_in_bytes` /
+      * `record_count`, required here as there). */
+    info: FileInfo,
+    /** Partition-spec id the file was WRITTEN under (0 = creation
+      * spec): a scan reads files of different layout eras with separate
+      * per-era scans (≡ Iceberg's per-file spec id). */
     specId: Long = 0L)
 
 /** Chunked manifest IO — the scalable commit-metadata layer.
@@ -43,9 +56,11 @@ final case class ManifestEntry(
   * answer is manifest files + a manifest list that REUSES the parent
   * snapshot's manifests; this is the same shape:
   *
-  *   - per-file state lives in immutable chunk files
+  *   - each live file's [[ManifestEntry]] (the one per-file record,
+  *     see [[Snapshot.entries]]) lives in an immutable chunk file
   *     (`metadata/m-<uuid>.json.gz`, ≤ [[ChunkTargetEntries]] entries,
-  *     compact JSON, gzip-compressed);
+  *     compact JSON, gzip-compressed), written and read field for
+  *     field;
   *   - each snapshot doc (`metadata/v<id>.json.gz`, compact JSON, gzip)
   *     carries only scalars, the commit's file DELTA, the (small)
   *     delete-file lists, the NAMES of the chunks covering its live
@@ -87,38 +102,13 @@ object ManifestIO {
     * so the doc's per-file lists stay the same small size class. */
   def MaxTombstones: Int = LakeTable.INLINE_CHUNK_MAX_ENTRIES
 
-  /** Per-file manifest entries of snapshot `s`, in live-file order. */
-  def entriesOf(s: Snapshot): Seq[ManifestEntry] =
-    s.liveFiles.map { f =>
-      ManifestEntry(f, s.fileSeq.getOrElse(f, 0L),
-        s.fileStats.getOrElse(f, Map.empty),
-        s.fileRenames.getOrElse(f, Map.empty).filter(_._2.nonEmpty),
-        s.fileInfo.get(f),
-        s.fileSpec.getOrElse(f, 0L))
-    }
-
-  /** Rebuild the snapshot's per-file maps from loaded chunk entries
-    * (inverse of [[entriesOf]]) minus `base.tombstones`; entry order
-    * defines live-file order. */
+  /** The skeleton `base` with the loaded chunk entries minus
+    * `base.tombstones` as its live entries; chunk order defines
+    * live-file order. */
   def materialize(base: Snapshot, all: Seq[ManifestEntry]): Snapshot = {
-    val entries =
-      if (base.tombstones.isEmpty) all
-      else {
-        val dead = base.tombstones.toSet
-        all.filterNot(e => dead(e.path))
-      }
-    base.copy(
-      liveFiles = entries.map(_.path),
-      fileStats = entries.iterator
-        .filter(_.stats.nonEmpty).map(e => e.path -> e.stats).toMap,
-      fileRenames = entries.iterator
-        .filter(_.renames.nonEmpty).map(e => e.path -> e.renames).toMap,
-      fileSeq = entries.iterator
-        .filter(_.seq != 0L).map(e => e.path -> e.seq).toMap,
-      fileInfo = entries.iterator
-        .flatMap(e => e.info.map(e.path -> _)).toMap,
-      fileSpec = entries.iterator
-        .filter(_.specId != 0L).map(e => e.path -> e.specId).toMap)
+    val dead = base.tombstones.toSet
+    base.copy(entries = Snapshot.index(
+      if (dead.isEmpty) all else all.filterNot(e => dead(e.path))))
   }
 
   /** Chunk-level commit plan: `reused` parent chunks carried by name,
@@ -153,8 +143,7 @@ object ManifestIO {
     * the chunk count from growing one-per-commit. */
   def plan(snap: Snapshot,
       candidates: Seq[(String, Seq[ManifestEntry])]): Plan = {
-    val target: Map[String, ManifestEntry] =
-      entriesOf(snap).map(e => e.path -> e).toMap
+    val target = snap.entries
     val covered = scala.collection.mutable.Set.empty[String]
     val reused = Vector.newBuilder[(String, Seq[ManifestEntry])]
     val carryOver = Vector.newBuilder[ManifestEntry]
@@ -186,7 +175,7 @@ object ManifestIO {
         (clean, Nil)
       }
     }
-    val fresh = snap.liveFiles.filterNot(covered).map(target)
+    val fresh = target.valuesIterator.filterNot(e => covered(e.path))
     val toWrite = (carryOver.result() ++ fresh)
       .grouped(ChunkTargetEntries).toVector
     fold(Plan(kept.map(_._1), toWrite, tombstones), kept.toMap)
@@ -309,7 +298,8 @@ object ManifestIO {
 
   /** Read one chunk file (any [[writeChunk]] file). */
   def readChunk(fs: FileSystem, p: Path): Seq[ManifestEntry] =
-    chunkFromNode(Snapshot.mapper.readTree(gunzip(readBytes(fs, p))))
+    chunkFromNode(Snapshot.mapper.readTree(gunzip(readBytes(fs, p))),
+      p.getName)
 
   // ------------------------------------------------------- snapshot docs
 
@@ -395,17 +385,22 @@ object ManifestIO {
         val ro = o.putObject("renames")
         e.renames.toSeq.sortBy(_._1).foreach { case (c, p) => ro.put(c, p) }
       }
-      e.info.foreach { fi =>
-        o.put("bytes", fi.bytes); o.put("rows", fi.rows)
-        fi.firstRowId.foreach(o.put("first_row_id", _))
-      }
+      o.put("bytes", e.info.bytes); o.put("rows", e.info.rows)
+      e.info.firstRowId.foreach(o.put("first_row_id", _))
       if (e.specId != 0L) o.put("spec", e.specId)
     }
     n
   }
 
-  private[lake] def chunkFromNode(n: JsonNode): Seq[ManifestEntry] =
+  /** Decode the entries of chunk `name` (the name only labels the
+    * error): an entry without its size or row count is refused. */
+  private[lake] def chunkFromNode(n: JsonNode,
+      name: String): Seq[ManifestEntry] =
     n.path("entries").elements().asScala.map { o =>
+      if (!o.has("bytes") || !o.has("rows"))
+        throw new IllegalStateException(
+          s"manifest chunk $name: entry ${o.path("path").asText()} " +
+            "lacks its size or row count")
       ManifestEntry(
         path = o.path("path").asText(),
         seq = if (o.has("seq")) o.path("seq").asLong() else 0L,
@@ -419,13 +414,9 @@ object ManifestIO {
           if (!o.has("renames")) Map.empty
           else o.path("renames").properties().asScala
             .map(ce => ce.getKey -> ce.getValue.asText()).toMap,
-        info =
-          if (o.has("bytes"))
-            Some(FileInfo(o.path("bytes").asLong(),
-              o.path("rows").asLong(),
-              if (o.hasNonNull("first_row_id"))
-                Some(o.path("first_row_id").asLong()) else None))
-          else None,
+        info = FileInfo(o.path("bytes").asLong(), o.path("rows").asLong(),
+          if (o.hasNonNull("first_row_id"))
+            Some(o.path("first_row_id").asLong()) else None),
         specId = if (o.has("spec")) o.path("spec").asLong() else 0L)
     }.toSeq
 
@@ -493,7 +484,7 @@ object ManifestIO {
       s.dvFiles.foreach { d =>
         val o = va.addObject()
         o.put("path", d.path); o.put("seq", d.seq)
-        if (d.bytes > 0L) o.put("bytes", d.bytes)
+        o.put("bytes", d.bytes)
       }
     }
     if (s.manifestSummaries.nonEmpty) {
@@ -516,7 +507,7 @@ object ManifestIO {
       : Option[Seq[ManifestEntry]] = {
     val n = Snapshot.mapper.readTree(listJson).path("inline_chunks")
     if (!n.has(name)) None
-    else Some(chunkFromNode(n.get(name)))
+    else Some(chunkFromNode(n.get(name), name))
   }
 
   /** Every embedded delta chunk of a snapshot doc — loading a doc
@@ -525,10 +516,10 @@ object ManifestIO {
   def inlineChunksOf(listJson: String): Map[String, Seq[ManifestEntry]] = {
     val n = Snapshot.mapper.readTree(listJson).path("inline_chunks")
     n.properties().asScala.map(e =>
-      e.getKey -> chunkFromNode(e.getValue)).toMap
+      e.getKey -> chunkFromNode(e.getValue, e.getKey)).toMap
   }
 
-  /** Parse a snapshot JSON and materialize its per-file state:
+  /** Parse a snapshot JSON and materialize its entries:
     * `loadChunk` resolves chunk name → entries (callers route through an
     * immutable-chunk cache, which `cached` answers for). */
   def snapshotFromJson(json: String,
@@ -552,8 +543,8 @@ object ManifestIO {
     materialize(skel, loadChunks(names, loadChunk, cached))
 
   /** Parse a manifest-list snapshot JSON WITHOUT loading any chunk:
-    * every scalar field plus chunk names and summaries, with the
-    * per-file maps left empty. */
+    * every scalar field plus chunk names and summaries, with no
+    * entries. */
   def listSkeleton(json: String): Snapshot = {
     val n = Snapshot.mapper.readTree(json)
     require(n.has("manifests"),
@@ -568,7 +559,7 @@ object ManifestIO {
       operation = n.path("operation").asText(),
       addedFiles = arr("added_files"),
       removedFiles = arr("removed_files"),
-      liveFiles = Nil,
+      entries = VectorMap.empty,
       schemaJson = n.path("schema").asText(),
       partitionColumns = arr("partition_columns"),
       properties = n.path("properties").properties().asScala

@@ -134,7 +134,7 @@ object ManifestAggRule extends Rule[LogicalPlan] {
       if (legs.forall(_.isDefined)) Some(legs.flatten.sum) else None
     case l: LogicalRelation => l.relation match {
       case h: HadoopFsRelation => h.location match {
-        case g: GraftManifestFileIndex => g.knownRowCount
+        case g: GraftManifestFileIndex => Some(g.knownRowCount)
         case _ => None
       }
       case _ => None
@@ -424,7 +424,7 @@ object ManifestAggRule extends Rule[LogicalPlan] {
     val files = (filterSplit match {
       case Some((cond, below)) =>
         physicalCond(cond, below, idx).flatMap(idx.filteredFacts)
-      case None => idx.fileFacts
+      case None => Some(idx.fileFacts)
     }).getOrElse(return None)
     // assign every file wholly to one group (a point value or NULL per
     // grouping column), or give up
@@ -634,7 +634,7 @@ object ManifestAggRule extends Rule[LogicalPlan] {
       def distinctFor(a: Attribute): Option[Long] =
         resolveAttr(agg.child, a) match {
           case Some((idx, n)) =>
-            idx.fileFacts.flatMap(distinctFromFacts(_, n, a.dataType))
+            distinctFromFacts(idx.fileFacts, n, a.dataType)
           case None => None
         }
       val values = agg.aggregateExpressions.map(constantFor(_,

@@ -48,18 +48,13 @@ object PredicatePruning {
   }
 
   /** Files from `liveFiles` that may contain a row matching `predicate`.
-    * `stats` maps file → column → recorded bounds (absent = unknown). */
+    * `stats` looks up a file's column → recorded bounds (None, or an
+    * absent column = unknown bounds). */
   def candidateFiles(predicate: Expression, schema: StructType,
       liveFiles: Seq[String],
-      stats: Map[String, Map[String, ColStat]]): Seq[String] = {
-    if (stats.isEmpty) return liveFiles
+      stats: String => Option[Map[String, ColStat]]): Seq[String] = {
     val types = schema.fields.map(f => f.name -> f.dataType).toMap
-    liveFiles.filter { f =>
-      stats.get(f) match {
-        case None => true // legacy manifest entry without stats
-        case Some(fileStats) => canMatch(predicate, fileStats, types)
-      }
-    }
+    liveFiles.filter(f => stats(f).forall(canMatch(predicate, _, types)))
   }
 
   // bounds are attained values (parquet min/max are real rows; the ±0.0
@@ -112,7 +107,7 @@ object PredicatePruning {
       .flatMap(cs => scala.util.Try(cs.min.toLong).toOption)
 
   /** Does EVERY row of a file with stats `fileStats` (and `rows` total
-    * rows, when known) provably satisfy `e`? The metadata-delete
+    * rows) provably satisfy `e`? The metadata-delete
     * prover: a fully-covered file can be dropped from the manifest with
     * zero data I/O (≡ Iceberg's metadata delete). Strictly
     * conservative — false unless proven. Comparisons additionally need
@@ -122,7 +117,7 @@ object PredicatePruning {
     * remain sound (widened max < x ⇒ true max < x); NaN-bearing FP
     * columns record no bounds at all and so prove nothing. */
   def allRowsMatch(e: Expression, fileStats: Map[String, ColStat],
-      types: Map[String, DataType], rows: Option[Long]): Boolean = {
+      types: Map[String, DataType], rows: Long): Boolean = {
     val allEq: Check = (dt, st, x) =>
       FileStats.cmp(dt, st.min, x) == 0 && FileStats.cmp(dt, st.max, x) == 0
     val allLt: Check = (dt, st, x) => FileStats.cmp(dt, st.max, x) < 0
@@ -160,7 +155,7 @@ object PredicatePruning {
       case IsNotNull(a) => noNulls(a)
       case IsNull(a) =>
         attrName(a).flatMap(n => nullsOf(fileStats, n))
-          .exists(n => rows.contains(n))
+          .contains(rows)
       case _ => false
     }
   }
@@ -176,11 +171,11 @@ object PredicatePruning {
     * never complete — false unless proven. (`<=>` deliberately proves
     * nothing: null-safe equality CAN be true on nulls.) */
   def noneMatch(e: Expression, fileStats: Map[String, ColStat],
-      types: Map[String, DataType], rows: Option[Long]): Boolean = {
-    if (rows.contains(0L)) return true
+      types: Map[String, DataType], rows: Long): Boolean = {
+    if (rows == 0L) return true
     def allNull(a: Expression): Boolean =
       attrName(a).flatMap(n => nullsOf(fileStats, n))
-        .exists(n => n > 0L && rows.contains(n))
+        .exists(n => n > 0L && n == rows)
     e match {
       case And(l, r) =>
         noneMatch(l, fileStats, types, rows) ||

@@ -1,5 +1,7 @@
 package graft.lake
 
+import scala.collection.immutable.VectorMap
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** One committed version of a [[LakeTable]].
@@ -10,13 +12,15 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * start/end-snapshot-id incremental read): id, parent, wall-clock commit
   * time, the operation, and the file-level delta.
   *
-  * `liveFiles` is the full manifest of data files visible at this version
-  * (paths relative to the table root). In-memory the per-file state is
-  * materialized; ON DISK it lives in immutable manifest chunk files
-  * referenced by name from the snapshot doc (see [[ManifestIO]] — the
-  * Iceberg manifest-list shape), so a commit writes O(delta) metadata,
-  * never O(table). The on-disk codec is [[ManifestIO]]'s
-  * (`writeDoc` / `readDoc`, `listToJson` / `snapshotFromJson`).
+  * Per-file state is ONE record per live data file: [[entries]] holds
+  * the [[ManifestEntry]] of every live file (paths relative to the
+  * table root), keyed by path, in live-file order — the same record the
+  * manifest chunks store on disk. ON DISK the entries live in immutable
+  * manifest chunk files referenced by name from the snapshot doc (see
+  * [[ManifestIO]] — the Iceberg manifest-list shape), so a commit writes
+  * O(delta) metadata, never O(table). The on-disk codec is
+  * [[ManifestIO]]'s (`writeDoc` / `readDoc`, `listToJson` /
+  * `snapshotFromJson`).
   */
 final case class Snapshot(
     snapshotId: Long,
@@ -25,28 +29,14 @@ final case class Snapshot(
     operation: String, // create | append | overwrite | merge
     addedFiles: Seq[String],
     removedFiles: Seq[String],
-    liveFiles: Seq[String],
+    /** The manifest entry of every live data file, keyed by path, in
+      * live-file order: column bounds, rename mapping, data sequence
+      * number, size/row count and spec id (see [[ManifestEntry]]). A
+      * skeleton (see [[ManifestIO.listSkeleton]]) carries none. */
+    entries: VectorMap[String, ManifestEntry],
     schemaJson: String,
     partitionColumns: Seq[String],
     properties: Map[String, String],
-    /** Per-live-file column bounds (see [[FileStats]]) — what MERGE/DELETE
-      * range-prune against before touching any data. Keyed by the same
-      * root-relative path as `liveFiles`; absent file or column = unknown
-      * bounds (conservatively scanned). */
-    fileStats: Map[String, Map[String, ColStat]] = Map.empty,
-    /** Schema-evolution name mapping: file → (current column name →
-      * PHYSICAL column name as written in that file). Only files written
-      * before a `renameColumn` carry entries, and only for the renamed
-      * columns — absent file or column means the physical name equals the
-      * current name. This is the name-mapped equivalent of Iceberg's
-      * field-id indirection: renames stay metadata-only, no rewrite. */
-    fileRenames: Map[String, Map[String, String]] = Map.empty,
-    /** Data sequence number per live file = the snapshot id that added it
-      * (≡ Iceberg's data sequence numbers). Equality deletes apply only
-      * to files with a STRICTLY lower sequence, so a merge's own
-      * after-image is never suppressed by its own delete file. Absent
-      * file = 0 (pre-MOR legacy; every delete applies). */
-    fileSeq: Map[String, Long] = Map.empty,
     /** Live equality-delete files (merge-on-read): each suppresses, from
       * every older data file, the rows whose key columns match any row in
       * the delete file. Cleared by compaction. */
@@ -69,22 +59,12 @@ final case class Snapshot(
       * Cleared by full compaction and overwrite like position
       * deletes. */
     dvFiles: Seq[DvFile] = Nil,
-    /** Per-live-file size and row count (≡ Iceberg's `file_size_in_bytes`
-      * / `record_count` manifest fields) — what `.files`/`.partitions`
-      * report and size-aware maintenance plans against. Absent file
-      * (legacy manifest) = unknown. */
-    fileInfo: Map[String, FileInfo] = Map.empty,
     /** Names of the immutable manifest CHUNKS (`metadata/m-*.json.gz`
       * files, or `iv<id>-<k>.json.gz` delta chunks inline in a snapshot
       * doc) whose entries back this snapshot's per-file state — the
       * manifest list (see [[ManifestIO]]). Empty for a table with no files, or
       * before the commit plans its chunks. */
     manifests: Seq[String] = Nil,
-    /** Partition-spec id each live file was WRITTEN under (absent = 0,
-      * the creation spec) — what lets a scan read files of different
-      * layout eras with separate per-era scans (≡ Iceberg's per-file
-      * spec-id after partition evolution). */
-    fileSpec: Map[String, Long] = Map.empty,
     /** Registry of every partition spec this table has carried, id →
       * spec strings (≡ Iceberg's `partition-specs` list). Empty means
       * the table never evolved: the registry is {0 → partitionColumns}.
@@ -108,6 +88,14 @@ final case class Snapshot(
       * subtracts them; at most [[ManifestIO.MaxTombstones]]. */
     tombstones: Seq[String] = Nil) {
 
+  /** Paths of the live data files, in live-file order (the key view of
+    * [[entries]], computed once per snapshot). */
+  lazy val liveFiles: Seq[String] = entries.keys.toVector
+
+  /** Rows the commit's added files hold (footer counts, before any
+    * row-level delete). */
+  def addedRecords: Long = addedFiles.iterator.map(entries(_).info.rows).sum
+
   /** The spec registry with the never-evolved default folded in. */
   def specsOrDefault: Map[Long, Seq[String]] =
     if (partitionSpecs.isEmpty) Map(0L -> partitionColumns)
@@ -116,6 +104,10 @@ final case class Snapshot(
 
 object Snapshot {
   private[lake] val mapper = new ObjectMapper()
+
+  /** Entries keyed by path, in the given order. */
+  def index(es: Iterable[ManifestEntry]): VectorMap[String, ManifestEntry] =
+    VectorMap.from(es.iterator.map(e => e.path -> e))
 }
 
 /** Size and row count of one data file (manifest bookkeeping).
@@ -133,10 +125,11 @@ final case class FileInfo(bytes: Long, rows: Long,
 final case class ColStat(min: String, max: String)
 
 /** One equality-delete file (merge-on-read): a Parquet file of key rows
-  * that suppresses matching rows in every data file with
-  * `fileSeq < seq`. `keys` are the CURRENT logical column names (renamed
-  * along with the table); `physicalKeys` are the names as written in the
-  * file, fixed forever (same indirection as Snapshot.fileRenames). */
+  * that suppresses matching rows in every data file whose data sequence
+  * number is below `seq`. `keys` are the CURRENT logical column names
+  * (renamed along with the table); `physicalKeys` are the names as
+  * written in the file, fixed forever (same indirection as
+  * [[ManifestEntry.renames]]). */
 final case class DeleteFile(path: String, seq: Long, keys: Seq[String],
     physicalKeys: Seq[String])
 
@@ -157,6 +150,5 @@ final case class PosDeleteFile(path: String, seq: Long)
   * consolidating snapshot (bookkeeping only, like
   * [[PosDeleteFile.seq]]). `bytes` is the artifact's on-disk size,
   * recorded at commit so the read path can size-gate its broadcast
-  * without a plan-time `getFileStatus`; 0 means unknown (a snapshot
-  * written before the field existed) and falls back to a live stat. */
-final case class DvFile(path: String, seq: Long, bytes: Long = 0L)
+  * without a plan-time `getFileStatus`. */
+final case class DvFile(path: String, seq: Long, bytes: Long)

@@ -36,17 +36,19 @@ final class RawToBronzeJob(
     val raw = CsvIngest.read(spark, files.map(_._1))
     val enriched = CsvIngest.enrich(raw, fixedTime)
 
-    val n = enriched.count()
-    if (catalog.tableExists(namespace, table)) {
-      catalog.loadTable(namespace, table).append(enriched)
-    } else {
-      catalog.createNamespace(namespace)
-      val t = catalog.createTable(namespace, table, enriched.schema,
-        partitionBy, tableProperties)
-      t.append(enriched)
-    }
+    val t =
+      if (catalog.tableExists(namespace, table))
+        catalog.loadTable(namespace, table)
+      else {
+        catalog.createNamespace(namespace)
+        catalog.createTable(namespace, table, enriched.schema,
+          partitionBy, tableProperties)
+      }
+    // the row count comes from the append commit's entries (footer
+    // counts), not from a second pass over the CSVs
+    val appended = t.snapshot(t.append(enriched)).addedRecords
     source.commit(files) // commit gate: checkpoint only after table commit
-    n
+    appended
   }
 }
 

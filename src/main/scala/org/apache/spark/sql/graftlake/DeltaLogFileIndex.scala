@@ -90,7 +90,7 @@ class DeltaLogFileIndex(
       else {
         val cond = det.reduce(And)
         val keep = PredicatePruning.candidateFiles(cond, schema,
-          entries.map(_._1.getPath.toString), stats).toSet
+          entries.map(_._1.getPath.toString), stats.get).toSet
         afterPart.map { case (row, fs) =>
           (row, fs.filter(f => keep(f.getPath.toString))) }
           .filter(_._2.nonEmpty)

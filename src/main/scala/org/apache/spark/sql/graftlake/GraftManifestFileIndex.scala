@@ -47,10 +47,9 @@ class GraftManifestFileIndex(
     statuses: Seq[FileStatus],
     prune: Seq[Expression] => (Path => Boolean),
     /** Exact total rows across `statuses` per the manifest's footer
-      * counts, when every file reported one — lets
-      * [[graft.lake.ManifestAggRule]] answer a bare COUNT(*) with
-      * zero data I/O. None = at least one file's count is unknown. */
-    val knownRowCount: Option[Long] = None,
+      * counts — lets [[graft.lake.ManifestAggRule]] answer a bare
+      * COUNT(*) with zero data I/O. */
+    val knownRowCount: Long,
     /** Thunk producing PROVEN per-column facts across `statuses`
       * (bounds encoded in the manifest stat domain + exact non-null
       * counts, keyed by this scan's physical column names; see
@@ -59,10 +58,9 @@ class GraftManifestFileIndex(
       * per-file stats. */
     knownColumnProofs: () => Map[String, graft.lake.ColumnProof] =
       () => Map.empty,
-    /** Thunk producing per-file facts for the GROUPED metadata rewrite
-      * (None = some file lacks manifest info). Lazily forced. */
-    knownFileFacts: () => Option[Seq[graft.lake.FileFacts]] =
-      () => None,
+    /** Thunk producing per-file facts for the GROUPED metadata
+      * rewrite. Lazily forced. */
+    knownFileFacts: () => Seq[graft.lake.FileFacts] = () => Nil,
     /** FILTERED facts for the metadata rewrite of
       * `SELECT min/max/count … WHERE cond`: given the condition in this
       * scan's physical column names, returns per-file facts for exactly
@@ -82,8 +80,7 @@ class GraftManifestFileIndex(
 
   /** Forced at most once, and only by [[graft.lake.ManifestAggRule]]'s
     * grouped rewrite. */
-  lazy val fileFacts: Option[Seq[graft.lake.FileFacts]] =
-    knownFileFacts()
+  lazy val fileFacts: Seq[graft.lake.FileFacts] = knownFileFacts()
 
   /** Per-condition facts for the FILTERED metadata rewrite — evaluated
     * per call (conditions vary), only by [[graft.lake.ManifestAggRule]]
@@ -137,11 +134,10 @@ object GraftManifestFileIndex {
       prune: Seq[Expression] => (Path => Boolean),
       bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec]
         = None,
-      knownRowCount: Option[Long] = None,
+      knownRowCount: Long,
       knownColumnProofs: () => Map[String, graft.lake.ColumnProof] =
         () => Map.empty,
-      knownFileFacts: () => Option[Seq[graft.lake.FileFacts]] =
-        () => None,
+      knownFileFacts: () => Seq[graft.lake.FileFacts] = () => Nil,
       knownFilteredFacts: Expression => Option[Seq[graft.lake.FileFacts]] =
         _ => None): DataFrame = {
     val cs = spark.asInstanceOf[classic.SparkSession]

@@ -26,8 +26,8 @@ class BinPackSpec extends AnyFunSuite {
     t.append(big.coalesce(1))
     val before = t.currentSnapshot.get
     assert(before.liveFiles.size == 4)
-    val bigFile = before.liveFiles.maxBy(f => before.fileInfo(f).bytes)
-    val target = before.fileInfo(bigFile).bytes // tiny files are under it
+    val bigFile = before.liveFiles.maxBy(f => before.entries(f).info.bytes)
+    val target = before.entries(bigFile).info.bytes // tiny files are under it
     val expect = t.scan().collect().map(_.toSeq.toString).sorted
 
     t.binPack(target)

@@ -32,7 +32,7 @@ class BloomPruningSpec extends AnyFunSuite {
     assert(snap.liveFiles.size == 2)
     // both files carry a bloom entry
     assert(snap.liveFiles.forall(f =>
-      snap.fileStats(f).contains(BloomStats.statKey("id"))))
+      snap.entries(f).stats.contains(BloomStats.statKey("id"))))
     // an even-key source prunes the odd file BEFORE any data is read
     val evenSrc = Seq((500L, "U")).toDF("id", "v")
     val pruned = t.pruneByStats(snap, evenSrc.select("id"), Seq("id"))
@@ -90,7 +90,7 @@ class BloomPruningSpec extends AnyFunSuite {
     t.append(df.coalesce(1))
     val snap = t.currentSnapshot.get
     assert(snap.liveFiles.forall(f =>
-      !snap.fileStats(f).contains(BloomStats.statKey("id"))))
+      !snap.entries(f).stats.contains(BloomStats.statKey("id"))))
     // still correct, just unpruned
     t.merge(Seq((300L, "U")).toDF("id", "v"), Seq("id"))
     assert(t.scan().where($"id" === 300L).select("v").as[String]
@@ -124,6 +124,6 @@ class BloomPruningSpec extends AnyFunSuite {
     t.compact()
     val after = t.currentSnapshot.get
     assert(after.liveFiles.forall(f =>
-      after.fileStats(f).contains(BloomStats.statKey("id"))))
+      after.entries(f).stats.contains(BloomStats.statKey("id"))))
   }
 }

@@ -89,7 +89,7 @@ class IcebergExportSpec extends AnyFunSuite {
     snap.liveFiles.foreach { rel =>
       val abs = byPath.keys.find(_.endsWith(rel)).getOrElse(
         fail(s"manifest lacks $rel"))
-      val info = snap.fileInfo(rel)
+      val info = snap.entries(rel).info
       assert(byPath(abs) == (info.rows, info.bytes))
     }
     // zero-copy: the exported table's file list scans row-identical

@@ -150,7 +150,7 @@ class ManifestIndexSpec extends AnyFunSuite {
     }.get
     val status = scan.relation.location.listFiles(Nil, Nil)
       .flatMap(_.files).find(_.getPath.toString.endsWith(rel)).get
-    assert(status.getLen == snap.fileInfo(rel).bytes,
+    assert(status.getLen == snap.entries(rel).info.bytes,
       "status length must come from the manifest")
     assert(q.count() == 50)
   }

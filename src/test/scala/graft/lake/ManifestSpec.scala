@@ -1,5 +1,7 @@
 package graft.lake
 
+import scala.collection.immutable.VectorMap
+
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -164,7 +166,8 @@ class ManifestSpec extends AnyFunSuite {
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
     val metaDir = new Path(root, LakeTable.METADATA_DIR)
     val orphan = ManifestIO.writeChunk(fs, metaDir,
-      Seq(ManifestEntry("data/x.parquet", 9L, Map.empty, Map.empty, None)))
+      Seq(ManifestEntry("data/x.parquet", 9L, Map.empty, Map.empty,
+        FileInfo(10L, 1L))))
     assert(orphan.startsWith("m-") && orphan.endsWith(".json.gz"), orphan)
     val removed = t.removeOrphanFiles(olderThanMs = 0L)
     assert(removed.contains(s"${LakeTable.METADATA_DIR}/$orphan"),
@@ -335,14 +338,10 @@ class ManifestSpec extends AnyFunSuite {
   test("the planner reuses a partly dead chunk only while every live entry is unchanged") {
     def e(p: String, lo: String = "1") =
       ManifestEntry(p, 2L, Map("id" -> ColStat(lo, "9")), Map.empty,
-        Some(FileInfo(10L, 1L)))
+        FileInfo(10L, 1L))
     val snap = Snapshot(3L, Some(2L), 0L, "delete", Nil, Nil,
-      liveFiles = Seq("a", "b", "c"), schemaJson = "{}",
-      partitionColumns = Nil, properties = Map.empty,
-      fileStats = Seq("a", "b", "c").map(_ -> Map("id" -> ColStat("1", "9")))
-        .toMap,
-      fileSeq = Seq("a", "b", "c").map(_ -> 2L).toMap,
-      fileInfo = Seq("a", "b", "c").map(_ -> FileInfo(10L, 1L)).toMap)
+      entries = Snapshot.index(Seq("a", "b", "c").map(e(_))),
+      schemaJson = "{}", partitionColumns = Nil, properties = Map.empty)
     // one dead entry: kept by name behind a tombstone
     val kept = ManifestIO.plan(snap, Seq("x" -> Seq(e("a"), e("b"), e("d")),
       "y" -> Seq(e("c"))))
@@ -360,9 +359,10 @@ class ManifestSpec extends AnyFunSuite {
       halfDead)
     // past the bound every tombstoned chunk is rewritten: two chunks,
     // each under half dead, with 80 tombstones between them
-    val wide = snap.copy(liveFiles = (0 until 200).map(i => s"l$i"),
-      fileStats = Map.empty, fileSeq = Map.empty, fileInfo = Map.empty)
-    def le(p: String) = ManifestEntry(p, 0L, Map.empty, Map.empty, None)
+    def le(p: String) =
+      ManifestEntry(p, 2L, Map.empty, Map.empty, FileInfo(10L, 1L))
+    val wide = snap.copy(entries =
+      Snapshot.index((0 until 200).map(i => le(s"l$i"))))
     val full = ManifestIO.plan(wide, Seq(
       "x" -> ((0 until 100).map(i => le(s"l$i")) ++
         (0 until 40).map(i => le(s"dead$i"))),
@@ -448,10 +448,11 @@ class ManifestSpec extends AnyFunSuite {
     val entries = Seq(
       ManifestEntry("data/p=1/f1.parquet", 3L,
         Map("id" -> ColStat("1", "9"), "v" -> ColStat("a", "z")),
-        Map("v" -> "v_old"), Some(FileInfo(1234L, 56L))),
-      ManifestEntry("data/f2.parquet", 0L, Map.empty, Map.empty, None),
+        Map("v" -> "v_old"), FileInfo(1234L, 56L)),
+      ManifestEntry("data/f2.parquet", 0L, Map.empty, Map.empty,
+        FileInfo(0L, 0L)),
       ManifestEntry("data/f3.parquet", 7L, Map.empty, Map.empty,
-        Some(FileInfo(10L, -1L))))
+        FileInfo(10L, 4L, Some(100L)), specId = 2L))
     val dir = new Path(TestSpark.tmpDir("chunk-codec"))
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val name = ManifestIO.writeChunk(fs, dir, entries)
@@ -493,19 +494,19 @@ class ManifestSpec extends AnyFunSuite {
       hit.collect().toSeq)
   }
 
-  test("entriesOf/materialize invert each other") {
-    val snap = Snapshot(5L, Some(4L), 1000L, "append",
-      Seq("data/b.parquet"), Nil,
-      liveFiles = Seq("data/a.parquet", "data/b.parquet"),
+  test("materialize keeps chunk order and masks tombstoned entries") {
+    val a = ManifestEntry("data/a.parquet", 4L,
+      Map("id" -> ColStat("1", "2")), Map("v" -> "v0"), FileInfo(98L, 6L))
+    val b = ManifestEntry("data/b.parquet", 5L, Map.empty, Map.empty,
+      FileInfo(99L, 7L))
+    val dead = b.copy(path = "data/dead.parquet")
+    val skel = Snapshot(5L, Some(4L), 1000L, "append",
+      Seq("data/b.parquet"), Nil, entries = VectorMap.empty,
       schemaJson = "{}", partitionColumns = Nil, properties = Map.empty,
-      fileStats = Map("data/a.parquet" -> Map("id" -> ColStat("1", "2"))),
-      fileRenames = Map("data/a.parquet" -> Map("v" -> "v0")),
-      fileSeq = Map("data/a.parquet" -> 4L, "data/b.parquet" -> 5L),
-      fileInfo = Map("data/b.parquet" -> FileInfo(99L, 7L)))
-    val rt = ManifestIO.materialize(snap.copy(liveFiles = Nil,
-      fileStats = Map.empty, fileRenames = Map.empty, fileSeq = Map.empty,
-      fileInfo = Map.empty), ManifestIO.entriesOf(snap))
-    assert(rt == snap)
+      tombstones = Seq(dead.path))
+    val rt = ManifestIO.materialize(skel, Seq(b, dead, a))
+    assert(rt == skel.copy(entries = Snapshot.index(Seq(b, a))))
+    assert(rt.liveFiles == Seq(b.path, a.path))
   }
 
   test("rewriteManifests re-clusters chunks so partition scans skip more") {
@@ -549,5 +550,73 @@ class ManifestSpec extends AnyFunSuite {
     // SQL surface
     val snapId = after.snapshotId
     assert(t.rewriteManifests() == snapId + 1) // idempotent re-run commits
+  }
+
+  test("a chunk entry without its size fails the first cold read, naming the chunk") {
+    val root = freshRoot
+    val t = LakeTable.create(spark, root, spark.range(1).schema)
+    // one file per partition: more entries than an inline chunk holds,
+    // so the append writes a chunk file
+    t.append(spark.range(0L, 70L, 1L, 70).toDF())
+    val chunk = t.currentSnapshot.get.manifests.find(ManifestIO.isChunkFile)
+      .getOrElse(fail("no file-backed chunk"))
+    val f = new java.io.File(s"$root/${LakeTable.METADATA_DIR}/$chunk")
+    val in = new java.util.zip.GZIPInputStream(new java.io.FileInputStream(f))
+    val json = try Snapshot.mapper.readTree(in) finally in.close()
+    json.path("entries").get(0)
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .remove("bytes")
+    val out =
+      new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(f))
+    try out.write(Snapshot.mapper.writeValueAsBytes(json)) finally out.close()
+    val cold = LakeTable.load(spark, root)
+    val e = intercept[IllegalStateException](cold.scan().collect())
+    assert(e.getMessage.contains(chunk) && e.getMessage.contains("size"),
+      e.getMessage)
+    intercept[IllegalStateException](LakeTable.load(spark, root).countRows())
+  }
+
+  test("warm and cold handles agree on every entry across a mixed op sequence") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val root = freshRoot
+    def batch(ids: Range, v: String) =
+      ids.map(i => (i.toLong, s"$v$i", s"p${i % 2}")).toDF("id", "v", "p")
+    val t = LakeTable.create(spark, root, batch(0 until 0, "").schema)
+    def rows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    // a reference for the current content, kept by id
+    var expect = Map.empty[Long, String]
+    def put(ids: Range, v: String): Unit =
+      ids.foreach(i => expect += i.toLong -> s"$i|$v$i|p${i % 2}")
+    def check(step: String): Unit = {
+      val warm = t.currentSnapshot.get
+      val cold = LakeTable.load(spark, root)
+      assert(cold.currentSnapshot.get.entries == warm.entries, step)
+      assert(warm.entries.values.forall(e =>
+        e.seq >= 2L && e.seq <= warm.snapshotId), step)
+      val got = rows(t.scan())
+      assert(got == expect.values.toSeq.sorted, step)
+      assert(rows(cold.scan()) == got, step)
+    }
+    t.append(batch(1 until 21, "a")); put(1 until 21, "a"); check("append")
+    t.merge(batch(15 until 26, "m"), Seq("id")); put(15 until 26, "m")
+    check("copy-on-write merge")
+    t.setProperties(Map(LakeTable.PROP_MERGE_MODE -> "merge-on-read"))
+    t.merge(batch(1 until 6, "r"), Seq("id")); put(1 until 6, "r")
+    check("merge-on-read merge")
+    val morId = t.currentSnapshot.get.snapshotId
+    val morExpect = expect
+    t.renameColumn("v", "w")
+    assert(t.currentSnapshot.get.entries.values
+      .forall(_.renames.get("w").contains("v")))
+    check("rename")
+    t.evolvePartitionSpec(Seq("p"))
+    t.append(batch(30 until 33, "e").withColumnRenamed("v", "w"))
+    put(30 until 33, "e"); check("evolve spec + append")
+    t.rollbackTo(morId); expect = morExpect; check("rollback")
+    assert(t.currentSnapshot.get.entries ==
+      t.snapshot(morId).entries, "rollback restores the target's entries")
+    t.compact(); check("compact")
+    assert(t.scan().where(col("v") === lit("r1")).count() == 1)
   }
 }

@@ -25,7 +25,7 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     // era layouts on disk: old files flat, new files under p=
     val snap = t.currentSnapshot.get
     val (newEra, oldEra) = snap.liveFiles.partition(f =>
-      snap.fileSpec.getOrElse(f, 0L) != 0L)
+      snap.entries(f).specId != 0L)
     assert(oldEra.nonEmpty && newEra.nonEmpty)
     assert(oldEra.forall(!_.contains("p=")))
     assert(newEra.forall(_.contains("p=")))
@@ -72,7 +72,7 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     assert(snap.liveFiles.forall(_.contains("p=")),
       s"compact left old-layout files: ${snap.liveFiles}")
     assert(snap.liveFiles.forall(f =>
-      snap.fileSpec.getOrElse(f, 0L) == snap.currentSpecId))
+      snap.entries(f).specId == snap.currentSpecId))
     assert(t.scan().count() == 40)
   }
 
@@ -159,8 +159,9 @@ class PartitionEvolutionSpec extends AnyFunSuite {
     val snap = t2.currentSnapshot.get
     assert(snap.currentSpecId == 1L)
     assert(snap.specsOrDefault == Map(0L -> Nil, 1L -> Seq("p")))
-    assert(snap.fileSpec.values.toSet == Set(1L))
-    assert(snap.fileSpec.size < snap.liveFiles.size) // era-0 files absent
+    val specIds = snap.entries.values.map(_.specId).toSeq
+    assert(specIds.toSet == Set(0L, 1L))
+    assert(specIds.count(_ == 1L) < snap.liveFiles.size) // era-0 files
     assert(t2.scan().count() == 20)
   }
 }

@@ -78,10 +78,10 @@ class PredicatePruningSpec extends AnyFunSuite {
     // IS NULL prunes NOW: `__nulls__` stats prove zero nulls per file
     // (identity-partition dirs included) — no file can match
     assert(cand($"p".isNull).isEmpty)
-    // …and stays conservative when null counts are absent (legacy files)
-    val noNulls = base.copy(fileStats = base.fileStats.map {
-      case (f, m) => f -> m.filterNot(kv => FileStats.isNullsKey(kv._1))
-    })
+    // …and stays conservative when null counts are absent
+    val noNulls = base.copy(entries = Snapshot.index(base.entries.values
+      .map(e => e.copy(stats =
+        e.stats.filterNot(kv => FileStats.isNullsKey(kv._1))))))
     assert(t.pruneByPredicate(noNulls, $"p".isNull).size ==
       base.liveFiles.size)
     assert(cand($"id".cast("string") === "5").size == base.liveFiles.size)

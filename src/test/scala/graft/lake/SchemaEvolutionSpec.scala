@@ -66,9 +66,8 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     assert(got.toSeq == Seq("x", "y", "z"))
     // three eras, three distinct physical names, one logical column
     val snap = t.currentSnapshot.get
-    val physNames = snap.liveFiles
-      .map(f => snap.fileRenames.getOrElse(f, Map.empty)
-        .getOrElse("c", "c")).toSet
+    val physNames = snap.entries.values
+      .map(_.renames.getOrElse("c", "c")).toSet
     assert(physNames == Set("a", "b", "c"))
   }
 
@@ -345,10 +344,12 @@ class SchemaEvolutionSpec extends AnyFunSuite {
 
   test("snapshot JSON round-trips fileRenames") {
     val snap = Snapshot(3L, Some(2L), 99L, "evolve-schema", Nil, Nil,
-      Seq("data/f1.parquet", "data/f2.parquet"),
-      StructType(Seq(StructField("id", LongType))).json, Nil, Map.empty,
-      fileStats = Map("data/f1.parquet" -> Map("id" -> ColStat("1", "2"))),
-      fileRenames = Map("data/f1.parquet" -> Map("id" -> "old_id")))
+      Snapshot.index(Seq(
+        ManifestEntry("data/f1.parquet", 2L, Map("id" -> ColStat("1", "2")),
+          Map("id" -> "old_id"), FileInfo(10L, 1L)),
+        ManifestEntry("data/f2.parquet", 2L, Map.empty, Map.empty,
+          FileInfo(10L, 1L)))),
+      StructType(Seq(StructField("id", LongType))).json, Nil, Map.empty)
     val got = SnapshotRoundTrip(snap)
     assert(got == snap.copy(manifests = got.manifests))
   }

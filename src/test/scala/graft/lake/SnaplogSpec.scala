@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 import graft.TestSpark
 
 /** The snapshot-summary cache (`metadata/snaplog.json`) behind
@@ -60,5 +62,26 @@ class SnaplogSpec extends AnyFunSuite {
     assert(t.history.count() == afterExpire.size)
     assert(t.snapshotsTable.select(sum($"n_live_files")).head().getLong(0)
       == afterExpire.map(_.nLive).sum)
+  }
+
+  test("expiry rewrites the cache down to the retained snapshots") {
+    val root = TestSpark.tmpDir("snaplog-expire") + "/t"
+    val df = (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v")
+    val t = LakeTable.create(spark, root, df.schema)
+    (1L to 10L).foreach(i => t.append(df.where($"id" === i)))
+    assert(t.history.count() == 11) // caches all eleven summaries
+    val fs = new Path(root).getFileSystem(
+      spark.sessionState.newHadoopConf())
+    val log = new Path(root, "metadata/snaplog.json")
+    def cachedIds: Seq[Long] = {
+      val in = fs.open(log)
+      val n = try Snapshot.mapper.readTree(in) finally in.close()
+      n.path("entries").elements().asScala.map(_.path("id").asLong()).toSeq
+    }
+    assert(cachedIds == (1L to 11L))
+    t.expireSnapshots(1)
+    assert(cachedIds == t.snapshots.map(_.snapshotId))
+    assert(cachedIds == Seq(11L))
+    assert(t.snapshotSummaries == summarize(t))
   }
 }

@@ -13,7 +13,7 @@ object SnapshotRoundTrip {
   def apply(snap: Snapshot): Snapshot = {
     val dir = new Path(TestSpark.tmpDir("snap-codec"))
     val fs = dir.getFileSystem(TestSpark.spark.sessionState.newHadoopConf())
-    val chunk = ManifestIO.writeChunk(fs, dir, ManifestIO.entriesOf(snap))
+    val chunk = ManifestIO.writeChunk(fs, dir, snap.entries.values.toSeq)
     ManifestIO.snapshotFromJson(
       ManifestIO.listToJson(snap.copy(manifests = Seq(chunk))),
       n => ManifestIO.readChunk(fs, new Path(dir, n)), _ => false)

@@ -30,7 +30,7 @@ class SortOrderSpec extends AnyFunSuite {
     assert(base.liveFiles.size > 1, "need multiple files to prove ranges")
     // ranges recorded in the manifest must be pairwise disjoint
     val ranges = base.liveFiles.flatMap(f =>
-      base.fileStats.get(f).flatMap(_.get("id"))
+      base.entries(f).stats.get("id")
         .map(cs => (cs.min.toLong, cs.max.toLong)))
     assert(ranges.size == base.liveFiles.size)
     val sorted = ranges.sortBy(_._1)
@@ -57,7 +57,7 @@ class SortOrderSpec extends AnyFunSuite {
     t.append(df.repartition(4))
     val base = t.currentSnapshot.get
     val ranges = base.liveFiles.flatMap(f =>
-      base.fileStats.get(f).flatMap(_.get("id"))
+      base.entries(f).stats.get("id")
         .map(cs => (cs.min.toLong, cs.max.toLong))).sortBy(_._1)
     // round-robin shuffle → every file spans nearly the whole domain
     val overlaps = ranges.sliding(2).count {
@@ -70,7 +70,7 @@ class SortOrderSpec extends AnyFunSuite {
   private def disjointRanges(t: LakeTable): Seq[(Long, Long)] = {
     val base = t.currentSnapshot.get
     val ranges = base.liveFiles.flatMap(f =>
-      base.fileStats.get(f).flatMap(_.get("id"))
+      base.entries(f).stats.get("id")
         .map(cs => (cs.min.toLong, cs.max.toLong)))
     assert(ranges.size == base.liveFiles.size, "file missing id bounds")
     val sorted = ranges.sortBy(_._1)
@@ -134,7 +134,7 @@ class SortOrderSpec extends AnyFunSuite {
     assert(t.currentSnapshot.get.liveFiles.size == 9)
     val before = t.currentSnapshot.get
     val perFileBytes = before.liveFiles
-      .flatMap(before.fileInfo.get).map(_.bytes).max
+      .map(before.entries(_).info.bytes).max
     // bins of ~3 input files each
     t.binPack(targetFileBytes = perFileBytes * 3 + 1024)
     val after = t.currentSnapshot.get

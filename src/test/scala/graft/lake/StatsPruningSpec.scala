@@ -37,13 +37,15 @@ class StatsPruningSpec extends AnyFunSuite {
     assert(candidates.size == 1,
       s"expected 1 candidate, got ${candidates.size}: $candidates")
     // and it is the file actually holding id=250 (range [200, 299])
-    assert(base.fileStats(candidates.head)("id") == ColStat("200", "299"))
+    assert(base.entries(candidates.head).stats("id") ==
+      ColStat("200", "299"))
   }
 
   test("stats-less legacy manifest keeps the full candidate set") {
     val t = eightFileTable(freshRoot)
     val base = t.currentSnapshot.get
-    val legacy = base.copy(fileStats = Map.empty)
+    val legacy = base.copy(entries = Snapshot.index(
+      base.entries.values.map(_.copy(stats = Map.empty))))
     val src = Seq((250L, "updated")).toDF("id", "v")
     assert(t.pruneByStats(legacy, src, Seq("id")) == legacy.liveFiles)
     // and a merge against such a manifest still produces correct data:
@@ -54,7 +56,7 @@ class StatsPruningSpec extends AnyFunSuite {
       ManifestIO.docName(base.snapshotId))
     val fs = mPath.getFileSystem(spark.sessionState.newHadoopConf())
     val chunk = ManifestIO.writeChunk(fs, metaDir,
-      ManifestIO.entriesOf(legacy))
+      legacy.entries.values.toSeq)
     fs.delete(mPath, false)
     ManifestIO.writeDoc(fs, metaDir, legacy.copy(manifests = Seq(chunk),
       manifestSummaries = Map.empty, tombstones = Nil))
@@ -118,8 +120,8 @@ class StatsPruningSpec extends AnyFunSuite {
     t.append(df.repartition(1))
     val base = t.currentSnapshot.get
     // the NaN-poisoned footer stats must have been dropped for k
-    base.fileStats.values.foreach(cols => assert(!cols.contains("k"),
-      s"NaN-bearing column kept bounds: ${cols.get("k")}"))
+    base.entries.values.foreach(e => assert(!e.stats.contains("k"),
+      s"NaN-bearing column kept bounds: ${e.stats.get("k")}"))
     // so a merge on k=1.0 still finds the file and updates the row
     t.merge(Seq((1.0, "ONE")).toDF("k", "v"), Seq("k"))
     assert(t.scan().where($"v" === "ONE").count() == 1)
@@ -168,9 +170,9 @@ class StatsPruningSpec extends AnyFunSuite {
     // the NaN partition carries no x-stat (never pruned); -0.0 carries
     // the widened [-0.0, 0.0] partition bounds
     val negzeroFile = base.liveFiles.find(_.contains("x=-0.0")).get
-    assert(base.fileStats(negzeroFile)("x") == ColStat("-0.0", "0.0"))
+    assert(base.entries(negzeroFile).stats("x") == ColStat("-0.0", "0.0"))
     val nanFile = base.liveFiles.find(_.contains("x=NaN")).get
-    assert(!base.fileStats.get(nanFile).exists(_.contains("x")),
+    assert(!base.entries(nanFile).stats.contains("x"),
       "NaN partition must record no bounds")
     // a source key +0.0 must keep the -0.0 partition as a candidate and
     // the merge must land the update there
@@ -213,22 +215,19 @@ class StatsPruningSpec extends AnyFunSuite {
       operation = "merge",
       addedFiles = Seq("data/p=a/f1.parquet"),
       removedFiles = Seq("data/p=a/f0.parquet"),
-      liveFiles = Seq("data/p=a/f1.parquet", "data/p=b/f2.parquet"),
+      entries = Snapshot.index(Seq(
+        ManifestEntry("data/p=a/f1.parquet", 7L, Map(
+          "id" -> ColStat("-5", "10"),
+          "s" -> ColStat("aa", "zzé"),
+          "d" -> ColStat("-0.0", "3.14")), Map.empty, FileInfo(4096L, 120L)),
+        ManifestEntry("data/p=b/f2.parquet", 5L,
+          Map("id" -> ColStat("11", "20")), Map.empty, FileInfo(1024L, 9L)))),
       schemaJson = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id",
           org.apache.spark.sql.types.LongType))).json,
       partitionColumns = Seq("p"),
       properties = Map("write.parquet.compression-codec" -> "zstd"),
-      fileStats = Map(
-        "data/p=a/f1.parquet" -> Map(
-          "id" -> ColStat("-5", "10"),
-          "s" -> ColStat("aa", "zzé"),
-          "d" -> ColStat("-0.0", "3.14")),
-        "data/p=b/f2.parquet" -> Map("id" -> ColStat("11", "20"))),
-      posDeleteFiles = Seq(PosDeleteFile("deletes/pd1.parquet", 7L)),
-      fileInfo = Map(
-        "data/p=a/f1.parquet" -> FileInfo(4096L, 120L),
-        "data/p=b/f2.parquet" -> FileInfo(1024L, -1L)))
+      posDeleteFiles = Seq(PosDeleteFile("deletes/pd1.parquet", 7L)))
     val got = SnapshotRoundTrip(snap)
     assert(got == snap.copy(manifests = got.manifests))
   }

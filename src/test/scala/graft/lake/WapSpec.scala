@@ -73,4 +73,30 @@ class WapSpec extends AnyFunSuite {
     t.discardStaged("stale")
     assert(t.stagedIds.isEmpty)
   }
+
+  test("staged and branch previews on a MOR table equal the published read") {
+    val t = LakeTable.create(spark, TestSpark.tmpDir("wap-mor") + "/t",
+      Seq((0L, "")).toDF("id", "v").schema,
+      properties = graft.pipeline.PipelineDefaults.tablePropertiesMor)
+    t.append(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
+    // an outstanding equality delete on id 3
+    t.deleteByKeys(Seq(3L).toDF("id"), Seq("id"))
+    assert(t.currentSnapshot.get.deleteFiles.nonEmpty)
+    def rows(d: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
+      d.as[(Long, String)].collect().toSet
+    t.stageAppend(Seq((3L, "new3"), (4L, "d")).toDF("id", "v"), "s1")
+    t.appendToBranch("br", Seq((3L, "br3")).toDF("id", "v"))
+    // the parked id-3 rows are newer than the delete: previews show them
+    val staged = rows(t.scanStaged("s1"))
+    assert(staged == Set((3L, "new3"), (4L, "d")))
+    assert(rows(t.scanBranch("br")) == Set((1L, "a"), (2L, "b"), (3L, "br3")))
+    val before = rows(t.scan())
+    t.publishStaged("s1")
+    assert(rows(t.scan()) == before ++ staged)
+    val preview = rows(t.scanBranch("br"))
+    t.fastForwardBranch("br")
+    assert(rows(t.scan()) == preview)
+    assert(preview == Set((1L, "a"), (2L, "b"), (3L, "new3"), (4L, "d"),
+      (3L, "br3")))
+  }
 }

@@ -33,7 +33,7 @@ class ZOrderSpec extends AnyFunSuite {
     // random-mix files each cover ~the whole 64x64 grid; z-ordered
     // files cover ~1/16 of it each
     val areas = snap.liveFiles.map { f =>
-      val st = snap.fileStats(f)
+      val st = snap.entries(f).stats
       val (x0, x1) = (st("x").min.toLong, st("x").max.toLong)
       val (y0, y1) = (st("y").min.toLong, st("y").max.toLong)
       (x1 - x0 + 1) * (y1 - y0 + 1)
