@@ -150,36 +150,6 @@ object DeltaExport {
       prev = Some(st), withMeta = false)
   }
 
-  /** Consolidated DV artifacts → per-file deleted positions (driver
-    * bytes ∝ deleted rows / 8 — the artifacts' own planning class).
-    * The artifact's `file` field is the table-relative data path.
-    * Shared with [[IcebergExport]]'s v3 puffin encoding. */
-  private[lake] def dvPositionsByRel(
-      spark: org.apache.spark.sql.SparkSession, tableRoot: String,
-      dvFiles: Seq[DvFile]): Map[String, Array[Long]] =
-    if (dvFiles.isEmpty) Map.empty
-    else spark.read.schema(StructType(Seq(
-        StructField("file", StringType),
-        StructField("dv", ArrayType(LongType)))))
-      .parquet(dvFiles.map(d =>
-        new Path(tableRoot, d.path).toString): _*)
-      .collect().iterator.map { r =>
-        val words = r.getSeq[Long](1)
-        val pos = Array.newBuilder[Long]
-        var w = 0
-        while (w < words.length) {
-          var word = words(w); var bit = 0
-          while (word != 0L) {
-            val t = java.lang.Long.numberOfTrailingZeros(word)
-            bit += t
-            pos += (w.toLong << 6) + bit
-            word = word >>> t >>> 1; bit += 1
-          }
-          w += 1
-        }
-        r.getString(0) -> pos.result()
-      }.filter(_._2.nonEmpty).toMap
-
   private def snapOf(table: LakeTable, atSnapshot: Option[Long]) =
     atSnapshot.map(table.snapshot).getOrElse(
       table.currentSnapshot.getOrElse(throw new IllegalStateException(
@@ -221,7 +191,7 @@ object DeltaExport {
     val m = Snapshot.mapper
 
     val dvByRel: Map[String, Array[Long]] =
-      dvPositionsByRel(spark, table.root, snap.dvFiles)
+      DeleteArtifacts.dvPositionsByRel(spark, table.root, snap.dvFiles)
     def curCard(rel: String): Long =
       dvByRel.get(rel).map(_.length.toLong).getOrElse(0L)
 
@@ -441,15 +411,13 @@ object DeltaExport {
         ).toOption // an expired mid-range snapshot — unknowable
       }
     }
-    def delState(s: Snapshot) =
-      (s.deleteFiles, s.posDeleteFiles, s.dvFiles)
     def noChange(s: Snapshot): Boolean =
       Set("compact", "rewrite-deletes", "rewrite-manifests",
         "set-properties", "unset-properties")(s.operation)
     def insertOnly(s: Snapshot): Boolean =
       s.removedFiles.isEmpty && s.parentId.exists(p =>
         scala.util.Try(table.snapshot(p)).toOption
-          .exists(pp => delState(pp) == delState(s)))
+          .exists(_.deletes == s.deletes))
     val actionDataChange: Boolean =
       rangeSnaps.forall(ss => !ss.forall(noChange))
     val needCdc = cdfEnabled && prev.isDefined &&

@@ -1286,11 +1286,11 @@ object DeltaImport {
   /** Drop rows a deletion vector marks deleted: decode each DV to a
     * packed word bitset, join on the normalized
     * `_metadata.file_path`, and bit-test `_metadata.row_index`
-    * map-side — the shared [[DvFilter]] shape (same gate and
-    * shuffled-join fallback as graft's own L44 DV read path). Decode
-    * runs on EXECUTORS past [[DvFilter.filterDeletedBy]]'s threshold,
-    * so a 10⁶-file foreign table never funnels its DV bytes through
-    * the driver. */
+    * map-side — the shared [[DeleteArtifacts]] shape (same gate and
+    * shuffled-join fallback as graft's own DV read path). Decode runs
+    * on EXECUTORS past [[DeleteArtifacts.filterDeletedBy]]'s
+    * threshold, so a 10⁶-file foreign table never funnels its DV bytes
+    * through the driver. */
   private def applyDvs(spark: SparkSession, tableDir: String,
       adds: Seq[AddFile], base: DataFrame): DataFrame = {
     val dvAdds = adds.filter(_.dv.isDefined)
@@ -1299,7 +1299,7 @@ object DeltaImport {
       spark.sessionState.newHadoopConf())
     val td = tableDir
     val specs = dvAdds.map(a => (canonUri(a.uri), a.dv.get))
-    DvFilter.filterDeletedBy(spark, base,
+    DeleteArtifacts.filterDeletedBy(spark, base,
       regexp_replace(col("_metadata.file_path"),
         "^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/"),
       col("_metadata.row_index"), specs,

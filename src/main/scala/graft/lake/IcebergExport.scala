@@ -188,8 +188,7 @@ object IcebergExport {
     val snap = atSnapshot.map(table.snapshot).getOrElse(
       table.currentSnapshot.getOrElse(throw new IllegalStateException(
         "no committed snapshot to export")))
-    val hasPosDeletes =
-      snap.posDeleteFiles.nonEmpty || snap.dvFiles.nonEmpty
+    val hasPosDeletes = DeleteArtifacts.positional(snap.deletes)
     // a v3 export encodes position deletes as puffin DVs — the
     // consolidated artifacts ARE the blobs; loose position deletes
     // would need the same fold first
@@ -356,9 +355,7 @@ object IcebergExport {
       .flatMap(id => scala.util.Try(table.snapshot(id)).toOption)
       .filter { prev =>
         prev.liveFiles.toSet.subsetOf(snap.liveFiles.toSet) &&
-          prev.deleteFiles == snap.deleteFiles &&
-          prev.posDeleteFiles == snap.posDeleteFiles &&
-          prev.dvFiles == snap.dvFiles
+          prev.deletes == snap.deletes
       }
     val deltaMode = prevSnap.nonEmpty
     val prevLive: Set[String] =
@@ -677,7 +674,7 @@ object IcebergExport {
       if (formatVersion != 3 || snap.dvFiles.isEmpty || deltaMode) Nil
       else {
         val liveSet = snap.liveFiles.toSet
-        val byRel = DeltaExport
+        val byRel = DeleteArtifacts
           .dvPositionsByRel(spark, table.root, snap.dvFiles)
           .filter { case (rel, _) => liveSet(rel) }
         if (byRel.isEmpty) Nil
@@ -707,31 +704,6 @@ object IcebergExport {
       if (!hasPosDeletes || deltaMode || formatVersion == 3) None
       else {
         import org.apache.spark.sql.functions._
-        def relTail(c: org.apache.spark.sql.Column) =
-          regexp_extract(c, "^(?:.*/)?(data/.+)$", 1)
-        val posPairs =
-          if (snap.posDeleteFiles.isEmpty) None
-          else Some(spark.read.schema(StructType(Seq(
-              StructField(LakeTable.POS_FILE_FIELD, StringType),
-              StructField(LakeTable.POS_POS_FIELD, LongType))))
-            .parquet(snap.posDeleteFiles
-              .map(p => new Path(table.root, p.path).toString): _*)
-            .select(relTail(col(LakeTable.POS_FILE_FIELD)).as("f"),
-              col(LakeTable.POS_POS_FIELD).cast("long").as("p")))
-        val dvPairs =
-          if (snap.dvFiles.isEmpty) None
-          else Some(spark.read.schema(StructType(Seq(
-              StructField(LakeTable.DV_FILE_FIELD, StringType),
-              StructField(LakeTable.DV_BITS_FIELD, ArrayType(LongType)))))
-            .parquet(snap.dvFiles
-              .map(d => new Path(table.root, d.path).toString): _*)
-            .select(col(LakeTable.DV_FILE_FIELD).as("f"),
-              posexplode(col(LakeTable.DV_BITS_FIELD)).as(Seq("w", "word")))
-            .select(col("f"), col("w"), explode(expr(
-              "filter(sequence(0, 63), b -> (shiftright(word, b) & 1) = 1)"))
-              .as("b"))
-            .select(col("f"), (col("w") * 64 + col("b")).cast("long")
-              .as("p")))
         // only deletes against LIVE files travel — an entry for a file
         // a later rewrite removed would reference a path absent from
         // the data manifest. Broadcast bound: one ~100-byte relative
@@ -743,8 +715,8 @@ object IcebergExport {
           spark.sparkContext.parallelize(
             snap.liveFiles.map(org.apache.spark.sql.Row(_)), 1),
           StructType(Seq(StructField("f", StringType, nullable = false))))
-        val pairs = (posPairs.toSeq ++ dvPairs.toSeq)
-          .reduce(_ unionByName _)
+        val pairs = DeleteArtifacts.positions(spark, table.root,
+            snap.deletes).get
           .join(broadcast(live), Seq("f"), "left_semi")
         val sorted = pairs
           .select(concat(lit(rootUri + "/"), col("f"))

@@ -762,7 +762,7 @@ object IcebergImport {
     // v3 DELETION VECTORS (puffin blobs): decode each referenced
     // file's blob through the shared frame + roaring codec and drop
     // its rows by the packed-bitmap bit-test on the row ordinal — the
-    // same DvFilter shape (and broadcast gate) as the Delta DV path.
+    // same DeleteArtifacts shape (and broadcast gate) as the Delta DV path.
     val dvDels = tm.deleteEntries.filter(d =>
       d.content == 1 && d.format == "puffin")
     if (dvDels.nonEmpty) {
@@ -790,7 +790,7 @@ object IcebergImport {
       // a puffin file's footer parses once per task, not once per DV
       val footerCache = scala.collection.mutable.Map
         .empty[String, Seq[Puffin.BlobMeta]]
-      df = DvFilter.filterDeletedBy(spark, df, col(F), col(P), specs,
+      df = DeleteArtifacts.filterDeletedBy(spark, df, col(F), col(P), specs,
         (t: (String, String, Long, Long, Long)) => {
           val (uri, ref, off, size, rows) = t
           val p = new Path(uri)

@@ -52,6 +52,7 @@ final class LakeTable private (
     val root: String) {
 
   import LakeTable._
+  import DeleteArtifacts.{ERA_COL, PFILE_COL, PIDX_COL, relTail}
 
   // sessionState.newHadoopConf() folds runtime `spark.conf.set("fs...")`
   // entries on top of the core conf (same resolution as Spark's sources)
@@ -542,8 +543,7 @@ final class LakeTable private (
     * without reading them) fall back to `scan().count()`. */
   def countRows(): Long = {
     val s = current
-    if (s.deleteFiles.isEmpty && s.posDeleteFiles.isEmpty &&
-        s.dvFiles.isEmpty) s.entries.valuesIterator.map(_.info.rows).sum
+    if (s.deletes.isEmpty) s.entries.valuesIterator.map(_.info.rows).sum
     else scan().count()
   }
 
@@ -614,8 +614,9 @@ final class LakeTable private (
     * can — additionally diffs the carried files' visibility in both
     * directions (suppressed pre-image rows as deletes, resurrected rows
     * as inserts) — the one case whose cost is the carried files' size,
-    * same as Iceberg. `compact` is content-neutral by construction and
-    * emits nothing; a schema-changing commit in range (evolve-schema, or
+    * same as Iceberg. `compact` and `rewrite-deletes` (delete-artifact
+    * maintenance) are content-neutral by construction and read and
+    * emit nothing; a schema-changing commit in range (evolve-schema, or
     * a rollback across an evolution) is rejected — a changelog needs one
     * row shape.
     */
@@ -725,8 +726,8 @@ final class LakeTable private (
         tag(LakeTable.exceptAllVariantSafe(preNull, postNull),
           "delete", id))
     }
-    val parts = snaps.filter(s =>
-      s.operation != "compact" && s.operation != "create").flatMap { s =>
+    val parts = snaps.filterNot(s => Seq("compact", "create",
+      "rewrite-deletes").contains(s.operation)).flatMap { s =>
       val prev = snapshot(s.parentId.get)
       val post = readFilesAs(s, s.addedFiles, withLineage = lineage)
       val pre = readFilesAs(prev, s.removedFiles, withLineage = lineage)
@@ -749,11 +750,7 @@ final class LakeTable private (
       // suppress pre-image rows (deletes), removed ones (rollback)
       // resurrect rows (inserts). After-image files are s.addedFiles —
       // excluded here, so an upsert's own inserts are not re-counted.
-      val deleteStateChanged =
-        s.deleteFiles != prev.deleteFiles ||
-          s.posDeleteFiles != prev.posDeleteFiles ||
-          s.dvFiles != prev.dvFiles
-      if (!deleteStateChanged) base
+      if (s.deletes == prev.deletes) base
       else {
         val carried = s.liveFiles.intersect(prev.liveFiles)
         val before = readFilesAs(prev, carried, withLineage = lineage)
@@ -1182,25 +1179,12 @@ final class LakeTable private (
     readFilesAs(current, relFiles, withName = true)
 
   /** Read `relFiles` (entries of `ctx`) under snapshot `ctx`'s schema,
-    * applying its equality-delete and position-delete files
-    * (merge-on-read). Files written before a column rename are read
-    * with their PHYSICAL (as-written) names via their entry's
+    * applying its delete artifacts (merge-on-read, see
+    * [[DeleteArtifacts.apply]]). Files written before a column rename
+    * are read with their PHYSICAL (as-written) names via their entry's
     * `renames` and aliased back — one scan per distinct (mapping,
-    * delete-era, spec) group, unioned; the common no-rename/no-delete
-    * case stays a single scan.
-    *
-    * Equality-delete semantics (≡ Iceberg equality deletes + data
-    * sequence numbers): delete file i (1-based in seq order) suppresses
-    * matching key rows from every data file whose sequence precedes it —
-    * i.e. whose era (count of deletes at-or-before its sequence) is < i.
-    * A merge's own after-image shares the delete's sequence, so it is
-    * never self-suppressed.
-    *
-    * Position-delete semantics (≡ Iceberg v2): a (file_uri, pos) row
-    * suppresses exactly row ordinal `pos` of the named file — applied
-    * via `_metadata.file_path` / `_metadata.row_index` (stable against
-    * file splits) with one anti-join over the unioned delete set, which
-    * AQE broadcasts when small.
+    * equality-delete era, spec) group, unioned; the common
+    * no-rename/no-delete case stays a single scan.
     *
     * With `withPos` the result additionally carries PFILE_COL /
     * PIDX_COL — each surviving row's scan URI and row ordinal (what the
@@ -1216,8 +1200,8 @@ final class LakeTable private (
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out)
     }
     val dels = ctx.deleteFiles.sortBy(_.seq)
-    val needPos = withPos || withLineage || ctx.posDeleteFiles.nonEmpty ||
-      ctx.dvFiles.nonEmpty
+    val needPos = withPos || withLineage ||
+      DeleteArtifacts.positional(ctx.deletes)
     // group additionally by partition-spec era: files of different
     // layouts (hive dirs present/absent/differently shaped) cannot
     // share one scan — Spark's partition discovery would see
@@ -1269,144 +1253,17 @@ final class LakeTable private (
         .select(cols: _*) // stable column order + current names
       if (dels.isEmpty) part else part.withColumn(ERA_COL, lit(e))
     }
-    val data = parts.reduce(_ unionByName _)
-    val eqApplied =
-      if (dels.isEmpty) data
-      else {
-        // one anti-join per distinct (keys, physicalKeys) pair, with
-        // ALL of the pair's artifacts in ONE multi-path scan under a
-        // DECLARED schema — the previous shape unioned N per-file
-        // reads, each paying plan-time footer inference (one tiny
-        // Spark job per outstanding artifact PER SCAN: a MOR stream
-        // re-planned 32 of them every micro-batch). Same fix the
-        // position-delete read below already has. Each file's delete
-        // ERA rides a path→era map literal instead of a per-file
-        // lit column. Declared types are the CURRENT key types: a key
-        // widened after a delete was written reads under the wide type
-        // via the same reader promotions [[LakeTable.canWiden]] admits
-        // (int→long/double, float→double — exactly what ALTER WIDEN
-        // allows; WidenSpec proves the combined case). Splitting on
-        // physicalKeys keeps anti-join semantics: surviving rows must
-        // miss every group, and anti-joins against a partition of the
-        // artifacts compose to the anti-join against their union.
-        var df = data
-        val types = sch.fields.map(f => f.name -> f.dataType).toMap
-        dels.zipWithIndex
-          .groupBy { case (d, _) => (d.keys, d.physicalKeys) }
-          .foreach { case ((keys, physKeys), group) =>
-            val canDeclare = keys.forall(types.contains)
-            val delDF =
-              if (canDeclare) {
-                val delSchema = StructType(physKeys.zip(keys).map {
-                  case (p, k) => StructField(p, types(k))
-                })
-                val eraOf = typedLit(group.map { case (d, i) =>
-                  d.path -> (i + 1)
-                }.toMap)
-                spark.read.schema(delSchema)
-                  .parquet(group.map { case (d, _) =>
-                    new Path(rootPath, d.path).toString }: _*)
-                  .select(physKeys.zip(keys).map { case (p, k) =>
-                    col(p).as(s"__graft_del_$k")
-                  } :+ element_at(eraOf, regexp_extract(
-                    col("_metadata.file_path"),
-                    "^(?:.*/)?(deletes/[^/]+)$", 1)).as(DERA_COL): _*)
-              } else // a delete keyed on a since-dropped column: the
-                // exact per-file inferred read (rare, never hot)
-                group.map { case (d, i) =>
-                  spark.read.parquet(new Path(rootPath, d.path).toString)
-                    .select(physKeys.zip(keys).map { case (p, k) =>
-                      col(p).as(s"__graft_del_$k")
-                    }.toIndexedSeq: _*)
-                    .withColumn(DERA_COL, lit(i + 1))
-                }.reduce(_ unionByName _)
-            val cond = keys.map(k => col(k) === col(s"__graft_del_$k"))
-              .reduce(_ && _) && col(ERA_COL) < col(DERA_COL)
-            df = df.join(delDF, cond, "left_anti")
-          }
-        df.drop(ERA_COL)
-      }
-    // Captured file URIs are ABSOLUTE (that's what _metadata
-    // .file_path yields), but the table can MOVE after capture
-    // (ALTER TABLE … RENAME TO, a warehouse relocation) — so delete
-    // application matches on the table-RELATIVE tail instead. The
-    // `data/` boundary is unambiguous: hive partition dirs always
-    // carry '=', so no other path segment is the bare word `data`,
-    // and the greedy prefix pins the LAST such segment even when
-    // the warehouse path itself contains /data/.
-    def relTail(c: org.apache.spark.sql.Column) =
-      regexp_extract(c, "^(?:.*/)?(data/.+)$", 1)
-    // every position-delete artifact shares ONE schema — read them as
-    // a single multi-path scan with that schema declared, not N
-    // unioned per-file reads each paying plan-time footer inference
-    // (at delete-commit depth the N-union shape made every scan's
-    // PLANNING cost O(outstanding artifacts) driver footer opens)
-    val posDeleteSchema = StructType(Seq(
-      StructField(POS_FILE_FIELD, StringType),
-      StructField(POS_POS_FIELD, LongType)))
-    val posApplied =
-      if (ctx.posDeleteFiles.isEmpty) eqApplied
-      else {
-        val pd = spark.read.schema(posDeleteSchema)
-          .parquet(ctx.posDeleteFiles
-            .map(p => new Path(rootPath, p.path).toString): _*)
-          .select(relTail(col(POS_FILE_FIELD)).as(s"__graft_pd_file"),
-            col(POS_POS_FIELD).as(s"__graft_pd_pos"))
-        eqApplied.join(pd,
-          relTail(col(PFILE_COL)) === col("__graft_pd_file") &&
-            col(PIDX_COL) === col("__graft_pd_pos"),
-          "left_anti")
-      }
-    val dvApplied =
-      if (ctx.dvFiles.isEmpty) posApplied
-      else {
-        // deletion vectors: ONE row per targeted data file (its packed
-        // ordinal bitset), applied as a map-side bit test — no
-        // per-deleted-row join keys, so read cost is independent of
-        // how many rows history has deleted. A row survives unless its
-        // file has a vector AND its ordinal's bit is set; `get()` is
-        // null-safe past the bitmap's tail (bits beyond the last set
-        // word were never set).
-        val dv = spark.read.schema(StructType(Seq(
-            StructField(DV_FILE_FIELD, StringType),
-            StructField(DV_BITS_FIELD, ArrayType(LongType)))))
-          .parquet(ctx.dvFiles
-            .map(d => new Path(rootPath, d.path).toString): _*)
-          .select(col(DV_FILE_FIELD).as("__graft_dv_file"),
-            col(DV_BITS_FIELD).as("__graft_dv_words"))
-        // Broadcast bound: each row is bytes ∝ target file's rows / 8
-        // (~125 KB for a 10⁶-row file), so a delete pattern touching
-        // ~60k+ such files pushes the hint past Spark's 8 GB broadcast
-        // ceiling and materializes on the driver first. The artifact
-        // size was recorded at consolidation time (DvFile.bytes); above
-        // the gate — `spark.graft.lake.dv-broadcast-max-bytes`, default
-        // 1 GB —
-        // fall back to a plain shuffled join keyed on the file tail
-        // (still one slim row per file), same results either way.
-        val dvBytes = ctx.dvFiles.map(_.bytes).sum
-        val dvMax = spark.conf
-          .getOption("spark.graft.lake.dv-broadcast-max-bytes")
-          .map(_.toLong).getOrElse(1L << 30)
-        val dvHinted = if (dvBytes <= dvMax) broadcast(dv) else dv
-        posApplied
-          .join(dvHinted,
-            relTail(col(PFILE_COL)) === col("__graft_dv_file"), "left")
-          .where(col("__graft_dv_words").isNull || coalesce(
-            expr(s"(shiftright(get(__graft_dv_words, " +
-              s"CAST($PIDX_COL / 64 AS INT)), " +
-              s"CAST($PIDX_COL % 64 AS INT)) & 1) = 0"),
-            lit(true)))
-          .drop("__graft_dv_file", "__graft_dv_words")
-      }
+    val applied = DeleteArtifacts(spark, root, ctx,
+      parts.reduce(_ unionByName _))
     val lineageResolved =
-      if (!withLineage) dvApplied
+      if (!withLineage) applied
       else {
         // resolve each row's id: the physical column wins (rewritten
         // files preserved their carried ids there), else
         // first_row_id + position — the Iceberg v3 resolution rule.
         // The (file → first_row_id) map is bounded by the PLANNED
         // files and broadcast; matching is on the table-relative tail
-        // (same move-proof rule as position deletes above).
+        // (the move-proof rule of DeleteArtifacts.relTail).
         val firsts = files.flatMap(f =>
           f.info.firstRowId.map(Row(f.path, _)))
         val fdf = spark.createDataFrame(
@@ -1414,11 +1271,11 @@ final class LakeTable private (
           StructType(Seq(
             StructField("__graft_first_file", StringType, nullable = false),
             StructField("__graft_first_id", LongType, nullable = false))))
-        dvApplied
+        applied
           .join(maybeBroadcastFileList(fdf,
             fileListBytes(firsts.map(_.getString(0)))),
-            regexp_extract(col(PFILE_COL), "^(?:.*/)?(data/.+)$", 1) ===
-              col("__graft_first_file"), "left")
+            relTail(col(PFILE_COL)) === col("__graft_first_file"),
+            "left")
           .withColumn(ROW_ID_COL, coalesce(col(ROW_ID_COL),
             col("__graft_first_id") + col(PIDX_COL)))
           .drop("__graft_first_file", "__graft_first_id")
@@ -1787,8 +1644,7 @@ final class LakeTable private (
     val base = current
     val w = writeDataFiles(distributeForWrite(alignToSchema(df)))
     commit(base, "overwrite", added = w.entries, removed = base.liveFiles,
-      deletesOverride = Some(Nil), posDeletesOverride = Some(Nil),
-      dvOverride = Some(Nil))
+      deletes = Some(Nil))
   }
 
   /** Predicate-scoped overwrite (≡ Delta `replaceWhere` / Iceberg's
@@ -2238,9 +2094,9 @@ final class LakeTable private (
       def attempt(b: Snapshot): Long =
         if (txnWatermarked(b)) b.snapshotId
         else commit(b, op, added = w.entries, removed = removed,
-          deletesOverride =
+          deletes =
             if (eqDeletes.isEmpty) None
-            else Some(b.deleteFiles ++ eqDeletes.map(p =>
+            else Some(b.deletes ++ eqDeletes.map(p =>
               DeleteFile(p, b.snapshotId + 1, keys, keys))),
           propertiesOverride = propsFor(b))
       if (artifact || base.liveFiles.isEmpty && !sourceDecided)
@@ -2287,7 +2143,8 @@ final class LakeTable private (
           .join(srcDel, keys, "left_anti"))
       }
       if (keyDelete && delKeys.isEmpty) return base.snapshotId
-      return commitMerge(after, Nil, writeDeleteFiles(delKeys))
+      return commitMerge(after, Nil,
+        DeleteArtifacts.write(fs, root, delKeys).map(_._1))
     }
 
     // copy-on-write. Affected files: (a) any file that may hold a
@@ -2618,8 +2475,8 @@ final class LakeTable private (
       if (covered.isEmpty && !found) return base.snapshotId
       val delPaths =
         if (!found) Nil
-        else writeDeleteFiles(matched.select(col(PFILE_COL).as(POS_FILE_FIELD),
-          col(PIDX_COL).as(POS_POS_FIELD)))
+        else DeleteArtifacts.write(fs, root,
+          DeleteArtifacts.positionRows(matched)).map(_._1)
       val after = assignments match {
         case Some(a) if found => writeDataFiles(matched.select(
           sch.fields.map(f => a.get(f.name) match {
@@ -2634,7 +2491,7 @@ final class LakeTable private (
       // after-image is new files, racer-independent
       commitWithRetry(base)(posRetrySafe) { b =>
         commit(b, op, added = after.entries, removed = covered,
-          posDeletesOverride = Some(b.posDeleteFiles ++
+          deletes = Some(b.deletes ++
             delPaths.map(p => PosDeleteFile(p, b.snapshotId + 1))))
       }
     } else {
@@ -2684,25 +2541,25 @@ final class LakeTable private (
     val delPaths =
       if (candidates.isEmpty) Nil
       else {
-        val noEq = base.copy(deleteFiles = Nil)
+        val noEq = base.copy(deletes =
+          base.deletes.filterNot(_.isInstanceOf[DeleteFile]))
         val afterPos = readFilesAs(noEq, candidates, withPos = true)
           .select(col(PFILE_COL), col(PIDX_COL))
         val surviving = readFilesAs(base, candidates, withPos = true)
           .select(col(PFILE_COL), col(PIDX_COL))
         val suppressed = afterPos.except(surviving)
-          .select(col(PFILE_COL).as(POS_FILE_FIELD),
-            col(PIDX_COL).as(POS_POS_FIELD))
-        if (suppressed.isEmpty) Nil else writeDeleteFiles(suppressed)
+        if (suppressed.isEmpty) Nil
+        else DeleteArtifacts.write(fs, root,
+          DeleteArtifacts.positionRows(suppressed)).map(_._1)
       }
     commitWithRetry(base)(posRetrySafe) { b =>
       val seq = b.snapshotId + 1
       // clear only the deletes we CONVERTED — a racing merge may have
       // added new equality deletes after our base, and wiping those
       // would un-delete its rows
-      val newer = b.deleteFiles.filterNot(dels.toSet)
+      val converted = dels.toSet[DeleteEntry]
       commit(b, "rewrite-deletes", added = Nil, removed = Nil,
-        deletesOverride = Some(newer),
-        posDeletesOverride = Some(b.posDeleteFiles ++
+        deletes = Some(b.deletes.filterNot(converted) ++
           delPaths.map(p => PosDeleteFile(p, seq))))
     }
   }
@@ -2739,60 +2596,21 @@ final class LakeTable private (
       return base.snapshotId
     val spark0 = spark
     import spark0.implicits._
-    def relTailCol(c: org.apache.spark.sql.Column) =
-      regexp_extract(c, "^(?:.*/)?(data/.+)$", 1)
-    val posPairs =
-      if (base.posDeleteFiles.isEmpty) None
-      else Some(spark.read.schema(StructType(Seq(
-          StructField(POS_FILE_FIELD, StringType),
-          StructField(POS_POS_FIELD, LongType))))
-        .parquet(base.posDeleteFiles
-          .map(p => new Path(rootPath, p.path).toString): _*)
-        .select(relTailCol(col(POS_FILE_FIELD)).as("f"),
-          col(POS_POS_FIELD).cast("long").as("p")))
-    val dvPairs =
-      if (base.dvFiles.isEmpty) None
-      else Some(spark.read.schema(StructType(Seq(
-          StructField(DV_FILE_FIELD, StringType),
-          StructField(DV_BITS_FIELD, ArrayType(LongType)))))
-        .parquet(base.dvFiles
-          .map(d => new Path(rootPath, d.path).toString): _*)
-        .select(col(DV_FILE_FIELD).as("f"),
-          posexplode(col(DV_BITS_FIELD)).as(Seq("w", "word")))
-        .select(col("f"), col("w"),
-          explode(expr(
-            "filter(sequence(0, 63), b -> (shiftright(word, b) & 1) = 1)"))
-            .as("b"))
-        .select(col("f"), (col("w") * 64 + col("b")).cast("long").as("p")))
     val live = spark.createDataset(base.liveFiles).toDF("f")
-    val pairs = (posPairs.toSeq ++ dvPairs.toSeq)
-      .reduce(_ unionByName _)
+    val pairs = DeleteArtifacts.positions(spark, root, base.deletes).get
       .join(maybeBroadcastFileList(live,
         fileListBytes(base.liveFiles)), Seq("f"), "left_semi")
-    // one bitset per file, built per group (a maintenance pass — the
-    // read path never runs this); ordinals are bounded by the file's
-    // row count, so the bitset is bytes ∝ file rows / 8 at worst
-    val dvRows = pairs.as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (f, it) =>
-        val bs = new java.util.BitSet()
-        it.foreach { case (_, p) =>
-          require(p <= Int.MaxValue, s"row ordinal $p out of bitset range")
-          bs.set(p.toInt)
-        }
-        (f, bs.toLongArray.toSeq, bs.cardinality().toLong)
-      }
-      .toDF(DV_FILE_FIELD, DV_BITS_FIELD, "n_deleted")
-    val delPaths = writeDvFiles(dvRows)
+    val delPaths = DeleteArtifacts.writeVectors(fs, root, pairs)
     commitWithRetry(base)(posRetrySafe) { b =>
       val seq = b.snapshotId + 1
       // keep only position deletes a racer added AFTER our base —
-      // everything in the base set is folded into the vector
-      val newer = b.posDeleteFiles.filterNot(base.posDeleteFiles.toSet)
+      // everything in the base set (and every prior vector) is folded
+      // into the new vector
+      val folded = base.posDeleteFiles.toSet[DeleteEntry]
       commit(b, "rewrite-deletes", added = Nil, removed = Nil,
-        posDeletesOverride = Some(newer),
-        dvOverride = Some(delPaths.map { case (p, sz) =>
-          DvFile(p, seq, sz) }))
+        deletes = Some(b.deletes.filterNot(d =>
+          folded(d) || d.isInstanceOf[DvFile]) ++
+          delPaths.map { case (p, sz) => DvFile(p, seq, sz) }))
     }
   }
 
@@ -3113,11 +2931,14 @@ final class LakeTable private (
       e.copy(renames = (e.renames - oldName) + (newName -> phys),
         stats = e.stats.map { case (c, cs) => rekey(c) -> cs })
     }.toSeq
-    val dels = base.deleteFiles.map(d => d.copy(
-      keys = d.keys.map(k => if (k == oldName) newName else k)))
+    val dels = base.deletes.map {
+      case d: DeleteFile => d.copy(
+        keys = d.keys.map(k => if (k == oldName) newName else k))
+      case d => d
+    }
     commit(base, "evolve-schema", added = Nil, removed = Nil,
       restated = restated, schemaJson = Some(newSchema.json),
-      deletesOverride = Some(dels))
+      deletes = Some(dels))
   }
 
   /** Widen a column's type in place (metadata-only commit, ≡ Iceberg
@@ -3795,8 +3616,7 @@ final class LakeTable private (
     val added = writeDataFiles(laidOut.drop(grp)).entries
     // row-conservation guard: a path-normalization miss in the group
     // join would otherwise silently drop whole files
-    if (base.deleteFiles.isEmpty && base.posDeleteFiles.isEmpty &&
-        base.dvFiles.isEmpty) {
+    if (base.deletes.isEmpty) {
       val expectRows = rewritten.map(base.entries(_).info.rows).sum
       val gotRows = added.map(_.info.rows).sum
       require(gotRows == expectRows,
@@ -3805,8 +3625,7 @@ final class LakeTable private (
     }
     val cleared = if ((base.entries -- rewritten).isEmpty) Some(Nil) else None
     commit(base, "compact", added = added, removed = rewritten,
-      deletesOverride = cleared, posDeletesOverride = cleared,
-      dvOverride = cleared)
+      deletes = cleared)
   }
 
   /** Expire snapshots older than the latest `keepLast`, deleting their
@@ -3862,9 +3681,7 @@ final class LakeTable private (
       }
     }
     val keptFiles = kept.flatMap(_.liveFiles).toSet
-    val keptDeletes = kept.flatMap(s =>
-      s.deleteFiles.map(_.path) ++ s.posDeleteFiles.map(_.path) ++
-        s.dvFiles.map(_.path)).toSet
+    val keptDeletes = kept.flatMap(_.deletes.map(_.path)).toSet
     // manifest chunks are shared across snapshots by name — reclaim only
     // those no retained snapshot references
     val keptChunks = kept.flatMap(_.manifests).toSet
@@ -3888,9 +3705,7 @@ final class LakeTable private (
     val doomed: Seq[Path] =
       expired.flatMap(s => s.liveFiles.filterNot(keptFiles)).distinct
         .map(f => new Path(rootPath, f)) ++
-      expired.flatMap(s =>
-          s.deleteFiles.map(_.path) ++ s.posDeleteFiles.map(_.path) ++
-            s.dvFiles.map(_.path))
+      expired.flatMap(_.deletes.map(_.path))
         .distinct.filterNot(keptDeletes).map(f => new Path(rootPath, f)) ++
       doomedChunks.map(n => new Path(metaDir, n)) ++
       expired.map(s => docPath(s.snapshotId))
@@ -3933,9 +3748,7 @@ final class LakeTable private (
       removed = base.liveFiles.filterNot(target.entries.contains),
       restated = target.entries.values.toSeq,
       schemaJson = Some(target.schemaJson),
-      deletesOverride = Some(target.deleteFiles),
-      posDeletesOverride = Some(target.posDeleteFiles),
-      dvOverride = Some(target.dvFiles),
+      deletes = Some(target.deletes),
       // the restored state is exactly the target's → its chunks are
       // reused verbatim and the rollback writes ~zero chunk bytes
       reuseChunksFrom = Seq(target),
@@ -3973,10 +3786,8 @@ final class LakeTable private (
       val p = new Path(rootPath, f)
       fs.exists(p) && fs.getFileStatus(p).getLen != base.entries(f).info.bytes
     }
-    val delMissing =
-      (base.deleteFiles.map(_.path) ++ base.posDeleteFiles.map(_.path) ++
-        base.dvFiles.map(_.path))
-        .filterNot(f => fs.exists(new Path(rootPath, f)))
+    val delMissing = base.deletes.map(_.path)
+      .filterNot(f => fs.exists(new Path(rootPath, f)))
 
     var rows = Seq(
       ("files_exist", missing.isEmpty,
@@ -3987,8 +3798,7 @@ final class LakeTable private (
         else s"size mismatch: ${head(sizeBad)}"),
       ("delete_files_exist", delMissing.isEmpty,
         if (delMissing.isEmpty)
-          s"${base.deleteFiles.size + base.posDeleteFiles.size +
-            base.dvFiles.size} artifacts"
+          s"${base.deletes.size} artifacts"
         else s"missing: ${head(delMissing)}"))
 
     if (deep) {
@@ -4106,8 +3916,7 @@ final class LakeTable private (
     val staged = stagedIds.flatMap(id => readStaged(id)._3.map(_.path))
     val referenced = (retained.flatMap(s =>
       s.liveFiles ++ s.addedFiles ++ s.removedFiles ++
-        s.deleteFiles.map(_.path) ++ s.posDeleteFiles.map(_.path) ++
-        s.dvFiles.map(_.path)) ++
+        s.deletes.map(_.path)) ++
       staged).toSet
     val referencedChunks = retained.flatMap(_.manifests).toSet
     // inclusive: mtimes are whole milliseconds, so debris written in the
@@ -4402,55 +4211,6 @@ final class LakeTable private (
     }
   }
 
-  /** Write an equality-delete key file (tiny: distinct keys only) under
-    * `deletes/`; returns root-relative paths. */
-  private def writeDeleteFiles(keysDf: DataFrame): Seq[String] = {
-    val staging = new Path(rootPath, s".staging-${UUID.randomUUID()}")
-    try {
-      keysDf.write.mode("overwrite")
-        // committer v1 (see writeDataFiles): v2's mid-commit crash
-        // window can strand stale task files that the listing promotes
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(staging.toString)
-      val files = LakeTable.timed("w.list")(listParquet(fs, staging))
-      val delDir = new Path(rootPath, DELETES_DIR)
-      fs.mkdirs(delDir)
-      files.map { f =>
-        val dest = new Path(delDir, f.getName)
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(s"rename $f -> $dest failed")
-        s"$DELETES_DIR/${f.getName}"
-      }
-    } finally fs.delete(staging, true)
-  }
-
-  /** Write ONE deletion-vector artifact under `deletes/` (dv-*.parquet);
-    * returns root-relative paths (a single element — the whole vector
-    * set is one tiny file: one row per targeted data file). */
-  /** Writes the consolidated deletion-vector parquet and returns each
-    * artifact's (table-relative path, on-disk bytes) — the size is
-    * recorded in [[DvFile]] so the read path can size-gate its
-    * broadcast without a plan-time stat. */
-  private def writeDvFiles(dvDf: DataFrame): Seq[(String, Long)] = {
-    val staging = new Path(rootPath, s".staging-${UUID.randomUUID()}")
-    try {
-      dvDf.coalesce(1).write.mode("overwrite")
-        // committer v1 (see writeDataFiles): v2's mid-commit crash
-        // window can strand stale task files that the listing promotes
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(staging.toString)
-      val files = LakeTable.timed("w.list")(listParquet(fs, staging))
-      val delDir = new Path(rootPath, DELETES_DIR)
-      fs.mkdirs(delDir)
-      files.map { f =>
-        val dest = new Path(delDir, s"dv-${f.getName}")
-        if (!fs.rename(f, dest))
-          throw new java.io.IOException(s"rename $f -> $dest failed")
-        (s"$DELETES_DIR/${dest.getName}", fs.getFileStatus(dest).getLen)
-      }
-    } finally fs.delete(staging, true)
-  }
-
   /** `input_file_name()` URI → table-root-relative path. Works on the
     * DECODED filesystem path (partition values may contain spaces etc.;
     * the URI form would leave literal %XX in the stored manifest and
@@ -4478,9 +4238,7 @@ final class LakeTable private (
       added: Seq[ManifestEntry], removed: Seq[String],
       restated: Seq[ManifestEntry] = Nil,
       schemaJson: Option[String] = None,
-      deletesOverride: Option[Seq[DeleteFile]] = None,
-      posDeletesOverride: Option[Seq[PosDeleteFile]] = None,
-      dvOverride: Option[Seq[DvFile]] = None,
+      deletes: Option[Seq[DeleteEntry]] = None,
       reuseChunksFrom: Seq[Snapshot] = Nil,
       specChange: Option[(Seq[String], Long, Map[Long, Seq[String]])] = None,
       propertiesOverride: Option[Map[String, String]] = None,
@@ -4534,9 +4292,9 @@ final class LakeTable private (
       (base.entries -- removed) ++
         (restated.iterator ++ stamped.iterator).map(e => e.path -> e),
       schemaJson.getOrElse(base.schemaJson), pcols, props1,
-      deleteFiles = deletesOverride.getOrElse(base.deleteFiles),
-      posDeleteFiles = posDeletesOverride.getOrElse(base.posDeleteFiles),
-      dvFiles = dvOverride.getOrElse(base.dvFiles),
+      // the ONE construction site of a new delete list: canonical
+      // order, so this warm snapshot equals its decoded cold copy
+      deletes = deletes.fold(base.deletes)(DeleteEntry.canonical),
       partitionSpecs = specs, currentSpecId = curSpec)
     // Chunk the per-file state (see ManifestIO): reuse every parent
     // chunk whose live entries are unchanged, tombstoning its removed
@@ -4923,21 +4681,6 @@ object LakeTable {
   /** Source-side flag of [[LakeTable.merge]]'s `deleteWhen`, evaluated
     * on the raw source before alignment and the join. */
   private val SRC_DELETE_FLAG = "__graft_src_delete"
-  private val ERA_COL = "__graft_era"
-  private val DERA_COL = "__graft_del_era"
-  /** Row-provenance columns a position-aware scan carries (from
-    * `_metadata.file_path` / `_metadata.row_index`). */
-  private val PFILE_COL = "__graft_pos_file"
-  private val PIDX_COL = "__graft_pos_idx"
-  /** Column names INSIDE a position-delete Parquet file (≡ Iceberg's
-    * position-delete schema `file_path`, `pos`). Package-visible so
-    * [[IcebergExport]] can re-encode the artifacts spec-conformantly. */
-  private[lake] val POS_FILE_FIELD = "file_uri"
-  private[lake] val POS_POS_FIELD = "pos"
-  // deletion-vector artifact columns: target file (table-relative) and
-  // its deleted-ordinal bitset packed 64 ordinals per long
-  private[lake] val DV_FILE_FIELD = "file"
-  private[lake] val DV_BITS_FIELD = "dv"
   /** Changelog output columns (≡ Iceberg's `_change_type` etc.). */
   val CHANGE_TYPE_COL = "_change_type"
   val CHANGE_SNAP_COL = "_commit_snapshot_id"

@@ -564,26 +564,22 @@ object ManifestIO {
       partitionColumns = arr("partition_columns"),
       properties = n.path("properties").properties().asScala
         .map(e => e.getKey -> e.getValue.asText()).toMap,
-      deleteFiles =
-        if (!n.has("delete_files")) Nil
-        else n.path("delete_files").elements().asScala.map { o =>
+      // canonical order (see Snapshot.deletes): kind by kind
+      deletes =
+        n.path("delete_files").elements().asScala.map { o =>
           DeleteFile(
             o.path("path").asText(),
             o.path("seq").asLong(),
             o.path("keys").elements().asScala.map(_.asText()).toSeq,
             o.path("physical_keys").elements().asScala.map(_.asText()).toSeq)
-        }.toSeq,
-      posDeleteFiles =
-        if (!n.has("pos_delete_files")) Nil
-        else n.path("pos_delete_files").elements().asScala.map { o =>
+        }.toSeq ++
+        n.path("pos_delete_files").elements().asScala.map { o =>
           PosDeleteFile(o.path("path").asText(), o.path("seq").asLong())
-        }.toSeq,
-      dvFiles =
-        if (!n.has("dv_files")) Nil
-        else n.path("dv_files").elements().asScala.map { o =>
+        } ++
+        n.path("dv_files").elements().asScala.map { o =>
           DvFile(o.path("path").asText(), o.path("seq").asLong(),
             o.path("bytes").asLong())
-        }.toSeq,
+        },
       manifests = arr("manifests"),
       tombstones = arr("tombstones"),
       partitionSpecs =

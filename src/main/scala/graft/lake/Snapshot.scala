@@ -37,28 +37,17 @@ final case class Snapshot(
     schemaJson: String,
     partitionColumns: Seq[String],
     properties: Map[String, String],
-    /** Live equality-delete files (merge-on-read): each suppresses, from
-      * every older data file, the rows whose key columns match any row in
-      * the delete file. Cleared by compaction. */
-    deleteFiles: Seq[DeleteFile] = Nil,
-    /** Live position-delete files (merge-on-read, ≡ Iceberg v2 position
-      * deletes): each is a Parquet file of (file_uri, pos) rows
-      * suppressing row ordinal `pos` of the NAMED data file. No sequence
-      * ordering is needed at read time — a position can only ever target
-      * the immutable file it was captured from. Cleared by compaction
-      * and overwrite (their rewrites drop the targeted files). */
-    posDeleteFiles: Seq[PosDeleteFile] = Nil,
-    /** Live DELETION-VECTOR artifacts (≡ Iceberg v3 deletion vectors /
-      * Delta DVs): each is a Parquet file of (file STRING, dv
-      * ARRAY<BIGINT>, n_deleted BIGINT) rows — one row per targeted
-      * data file, `dv` a bitset over row ordinals packed 64/long
-      * (bit p of word w set ⇔ ordinal w·64+p is deleted). Produced by
-      * [[LakeTable.consolidateDeleteVectors]] folding the accumulated
-      * position-delete files; readers pay ONE broadcast per-file
-      * bitmap lookup however many delete commits history holds.
-      * Cleared by full compaction and overwrite like position
-      * deletes. */
-    dvFiles: Seq[DvFile] = Nil,
+    /** Every live merge-on-read delete artifact, ONE record list (≡
+      * Iceberg's delete-file manifest entries, each with its content
+      * kind): equality deletes ([[DeleteFile]]), position deletes
+      * ([[PosDeleteFile]]) and deletion vectors ([[DvFile]]). Kept in
+      * CANONICAL order ([[DeleteEntry.canonical]]): by kind —
+      * equality, position, vector — and within a kind in commit order,
+      * the order the codec decodes, so a warm handle's list equals a
+      * cold one's. [[DeleteArtifacts]] is the only reader and writer of
+      * the artifacts' on-disk layout and applies them at read time.
+      * Cleared by full compaction and overwrite. */
+    deletes: Seq[DeleteEntry] = Nil,
     /** Names of the immutable manifest CHUNKS (`metadata/m-*.json.gz`
       * files, or `iv<id>-<k>.json.gz` delta chunks inline in a snapshot
       * doc) whose entries back this snapshot's per-file state — the
@@ -96,6 +85,18 @@ final case class Snapshot(
     * row-level delete). */
   def addedRecords: Long = addedFiles.iterator.map(entries(_).info.rows).sum
 
+  /** Live equality-delete files: each suppresses, from every older
+    * data file, the rows whose key columns match any row in the file
+    * (a view of [[deletes]]). */
+  def deleteFiles: Seq[DeleteFile] = deletes.collect { case d: DeleteFile => d }
+
+  /** Live position-delete files (a view of [[deletes]]). */
+  def posDeleteFiles: Seq[PosDeleteFile] =
+    deletes.collect { case d: PosDeleteFile => d }
+
+  /** Live deletion-vector artifacts (a view of [[deletes]]). */
+  def dvFiles: Seq[DvFile] = deletes.collect { case d: DvFile => d }
+
   /** The spec registry with the never-evolved default folded in. */
   def specsOrDefault: Map[Long, Seq[String]] =
     if (partitionSpecs.isEmpty) Map(0L -> partitionColumns)
@@ -124,6 +125,24 @@ final case class FileInfo(bytes: Long, rows: Long,
   * string domain defined by [[FileStats]]. */
 final case class ColStat(min: String, max: String)
 
+/** One live merge-on-read delete artifact (see [[Snapshot.deletes]]):
+  * a parquet file under `deletes/` and the data sequence number of the
+  * snapshot that committed it. */
+sealed trait DeleteEntry {
+  def path: String
+  def seq: Long
+}
+
+object DeleteEntry {
+  /** `ds` in canonical order: by kind (equality, position, vector),
+    * each kind keeping its given order (the sort is stable). */
+  def canonical(ds: Seq[DeleteEntry]): Seq[DeleteEntry] = ds.sortBy {
+    case _: DeleteFile => 0
+    case _: PosDeleteFile => 1
+    case _: DvFile => 2
+  }
+}
+
 /** One equality-delete file (merge-on-read): a Parquet file of key rows
   * that suppresses matching rows in every data file whose data sequence
   * number is below `seq`. `keys` are the CURRENT logical column names
@@ -131,7 +150,7 @@ final case class ColStat(min: String, max: String)
   * written in the file, fixed forever (same indirection as
   * [[ManifestEntry.renames]]). */
 final case class DeleteFile(path: String, seq: Long, keys: Seq[String],
-    physicalKeys: Seq[String])
+    physicalKeys: Seq[String]) extends DeleteEntry
 
 /** One position-delete file (merge-on-read, ≡ Iceberg v2): a Parquet
   * file of (file_uri STRING, pos BIGINT) rows — `file_uri` is the target
@@ -139,7 +158,7 @@ final case class DeleteFile(path: String, seq: Long, keys: Seq[String],
   * `pos` the row ordinal within that physical file. `seq` records the
   * committing snapshot (bookkeeping only — positions bind to immutable
   * files, so application needs no sequence ordering). */
-final case class PosDeleteFile(path: String, seq: Long)
+final case class PosDeleteFile(path: String, seq: Long) extends DeleteEntry
 
 /** One deletion-vector artifact (≡ Iceberg v3 DVs / Delta deletion
   * vectors, parquet-encoded): a Parquet file of
@@ -152,3 +171,4 @@ final case class PosDeleteFile(path: String, seq: Long)
   * recorded at commit so the read path can size-gate its broadcast
   * without a plan-time `getFileStatus`. */
 final case class DvFile(path: String, seq: Long, bytes: Long)
+  extends DeleteEntry

@@ -89,6 +89,34 @@ class ChangelogSpec extends AnyFunSuite {
       (5L, "v5", "delete", 3L), (10L, "v10", "delete", 3L)))
   }
 
+  test("rewrite-deletes is content-neutral: a range through " +
+      "consolidate and convert emits exactly the deletes' rows, and " +
+      "the maintenance snapshot alone reads no data file") {
+    val root = freshRoot
+    val df = (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
+    val t = LakeTable.create(spark, root, df.schema, properties = Map(
+      LakeTable.PROP_DELETE_MODE -> "merge-on-read",
+      LakeTable.PROP_ROW_LINEAGE -> "true"))
+    val s1 = t.append(df.repartition(2))
+    t.deleteByKeys(Seq(4L, 9L).toDF("id"), Seq("id")) // equality
+    t.delete($"id" % 5L === 0L) // position
+    val s4 = t.consolidateDeleteVectors()
+    val s5 = t.convertEqualityDeletes()
+    assert(Seq(s4, s5).map(t.snapshot(_).operation) ==
+      Seq("rewrite-deletes", "rewrite-deletes"))
+    val expect = Seq((4L, "v4", "delete", 3L), (5L, "v5", "delete", 4L),
+      (9L, "v9", "delete", 3L), (10L, "v10", "delete", 4L),
+      (15L, "v15", "delete", 4L), (20L, "v20", "delete", 4L))
+    assert(rows(t.changes(s1, s5)) == expect)
+    assert(rows(t.changesWithLineage(s1, s5)) == expect)
+    Seq(s4, s5).foreach { s =>
+      val cl = t.changes(s - 1, s)
+      assert(cl.inputFiles.isEmpty,
+        s"rewrite-deletes snapshot $s read ${cl.inputFiles.toSeq}")
+      assert(cl.count() == 0)
+    }
+  }
+
   test("compact is content-neutral; schema-changing commits are rejected") {
     val root = freshRoot
     val df = (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v")

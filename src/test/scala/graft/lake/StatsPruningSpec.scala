@@ -227,7 +227,7 @@ class StatsPruningSpec extends AnyFunSuite {
           org.apache.spark.sql.types.LongType))).json,
       partitionColumns = Seq("p"),
       properties = Map("write.parquet.compression-codec" -> "zstd"),
-      posDeleteFiles = Seq(PosDeleteFile("deletes/pd1.parquet", 7L)))
+      deletes = Seq(PosDeleteFile("deletes/pd1.parquet", 7L)))
     val got = SnapshotRoundTrip(snap)
     assert(got == snap.copy(manifests = got.manifests))
   }
