@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.graftlake.EntryFileIndex
 import org.apache.spark.sql.types._
 
 /** One-way EXPORT of a graft table as a Delta Lake table
@@ -357,7 +358,7 @@ object DeltaExport {
     // decoded/literal input only (Path keeps literals, so re-encoding
     // an encoded string would double-escape '%')
     val liveNow = snap.liveFiles.map(rel =>
-      DeltaImport.normUri(absUri(rel)) -> rel).toMap
+      EntryFileIndex.normUri(absUri(rel)) -> rel).toMap
     // previous live adds keyed by canonical path: the verbatim path
     // string to reference in a remove, plus the add's DV descriptor —
     // foreign replayers reconcile file actions on (path,
@@ -365,7 +366,7 @@ object DeltaExport {
     // add's exact descriptor or the stale add stays live over there
     val prevLive: Map[String, (String, Option[DeltaDv.Descriptor])] =
       prev.map(_.adds.map(a =>
-        DeltaImport.canonUri(a.uri) ->
+        EntryFileIndex.canonUri(a.uri) ->
           ((if (a.rawPath.nonEmpty) a.rawPath
             else new Path(a.uri).toUri.toString), a.dv)).toMap)
         .getOrElse(Map.empty)
@@ -377,7 +378,7 @@ object DeltaExport {
     // Delta's DV-update shape is remove(old add) + add(new descriptor)
     // in one commit
     val newRels = snap.liveFiles.filter { rel =>
-      val key = DeltaImport.normUri(absUri(rel))
+      val key = EntryFileIndex.normUri(absUri(rel))
       !prevLive.contains(key) ||
         prevDvCard.getOrElse(key, 0L) != curCard(rel)
     }
@@ -385,7 +386,7 @@ object DeltaExport {
       prevLive.filterNot { case (norm, _) =>
         liveNow.contains(norm) }.values ++
         newRels.flatMap(rel =>
-          prevLive.get(DeltaImport.normUri(absUri(rel))))
+          prevLive.get(EntryFileIndex.normUri(absUri(rel))))
 
     // ---- Change Data Feed classification of the published range.
     // The graft snapshots in (prev publish, this publish] decide what

@@ -6,8 +6,14 @@ import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.graftlake.EntryFileIndex
+import org.apache.spark.sql.graftlake.EntryFileIndex.canonUri
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.types.UTF8String
 
 /** ENGINE-FREE reader of Delta Lake tables (the delta-io protocol's
   * `_delta_log`): no delta-spark jar — the log is versioned JSON (plus
@@ -51,7 +57,7 @@ import org.apache.spark.sql.types._
   *
   * Scale: the log replay is O(log) driver work (checkpoint-seeded and
   * columnar for the add rows, O(delta) steady-state); the scan plans
-  * through [[org.apache.spark.sql.graftlake.DeltaLogFileIndex]] — the
+  * through [[org.apache.spark.sql.graftlake.EntryFileIndex]] — the
   * log's partitionValues become real partition columns (native
   * Catalyst partition pruning + stats file-skipping on pushed
   * filters, no join), the TahoeFileIndex shape. */
@@ -107,21 +113,6 @@ object DeltaImport {
         * `delta.rowTracking` would lose the row-id high-water mark and
         * let a foreign writer re-mint ids). */
       domainMetadata: Map[String, (String, Boolean)] = Map.empty)
-
-  /** Strip scheme/authority variance so paths written by different
-    * qualifiers compare equal (same rule as [[IcebergImport]]). */
-  private[lake] def normUri(s: String): String =
-    s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
-
-  /** CANONICAL join key for matching driver-side file lists against
-    * `_metadata.file_path`: Spark reports the URL-ENCODED `Path.toUri`
-    * form (space → %20, hive-escaped '%' → %25, '+' literal).
-    * INPUT MUST BE THE DECODED/LITERAL PATH FORM — Hadoop Path keeps
-    * literals (no unescaping), so this encodes exactly once; feeding
-    * an already-encoded string would double-escape '%'. Unparseable
-    * input falls back raw (never throws on a hostile log). */
-  private[lake] def canonUri(s: String): String =
-    normUri(scala.util.Try(new Path(s).toUri.toString).getOrElse(s))
 
   /** An add/remove `path` is a table-relative URL-ENCODED path or an
     * absolute URI (Delta PROTOCOL) → the DECODED absolute path reads
@@ -697,7 +688,7 @@ object DeltaImport {
     * fresh/materialized rule, the same resolution graft's own L37
     * lineage and the Iceberg v3 importer use. Plans exactly like
     * [[scan]]: baseRowId rides the file's partition row through the
-    * log-backed index (no join), the materialized column is one extra
+    * entry index (no join), the materialized column is one extra
     * nullable parquet column, and the id is a codegen'd coalesce.
     *
     * Refuses (loudly, never silently wrong ids):
@@ -904,12 +895,10 @@ object DeltaImport {
     // files accumulate per KIND across the whole range, so the plan
     // holds at most THREE scans however many versions the range spans
     // (a per-version union grows the plan linearly — the shape that
-    // breaks at a 10³-version replay); each row's _commit_version
-    // resolves from a slim (file → version) map joined on the row's
-    // normalized source path — one ~100 B row per file, size-gated
-    // broadcast like every other file-list join. The rare path that
-    // legitimately repeats within a kind (removed then re-added inside
-    // the range) gets its own leg, so the map join stays 1:1.
+    // breaks at a 10³-version replay); each file's version rides its
+    // partition row through the entry index, so a path that repeats
+    // within a kind (removed then re-added inside the range) is simply
+    // two entries with their own versions.
     val cdcFiles = Seq.newBuilder[(AddFile, Long)]
     val insFiles = Seq.newBuilder[(AddFile, Long)]
     val delFiles = Seq.newBuilder[(AddFile, Long)]
@@ -960,43 +949,18 @@ object DeltaImport {
         delFiles ++= removes.map(_ -> v)
       }
     }
-    val F = "__cdf_f"
-    def legs(state: TableState, files: Seq[(AddFile, Long)],
-        fixedType: Option[String]): Seq[DataFrame] = {
-      if (files.isEmpty) return Nil
-      def typed(df: DataFrame): DataFrame =
-        fixedType.fold(df)(t => df.withColumn(ct, lit(t)))
-      val byPath = files.groupBy { case (a, _) => canonUri(a.uri) }
-      val (uniq, dup) = files.partition { case (a, _) =>
-        byPath(canonUri(a.uri)).size == 1 }
-      val one: Option[DataFrame] =
-        if (uniq.isEmpty) None
-        else {
-          val vmRows = uniq.map { case (a, v) => Row(canonUri(a.uri), v) }
-          val vmDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(vmRows, 1),
-            StructType(Seq(
-              StructField("__cdf_vf", StringType, nullable = false),
-              StructField(cv, LongType, nullable = false))))
-          val bytes = vmRows.map(r => 64L + r.getString(0).length * 2L).sum
-          val maxB = spark.conf
-            .getOption("spark.graft.delta.cdf-broadcast-max-bytes")
-            .map(_.toLong).getOrElse(1L << 30)
-          val side = if (bytes <= maxB) broadcast(vmDf) else vmDf
-          Some(typed(scanAdds(spark, tableDir, state, uniq.map(_._1),
-              fileKeyCol = Some(F))
-            .join(side, col(F) === col("__cdf_vf"))
-            .drop(F, "__cdf_vf")))
-        }
-      one.toSeq ++ dup.map { case (a, v) =>
-        typed(scanAdds(spark, tableDir, state, Seq(a)))
-          .withColumn(cv, lit(v))
+    def leg(state: TableState, files: Seq[(AddFile, Long)],
+        fixedType: Option[String]): Option[DataFrame] =
+      if (files.isEmpty) None
+      else {
+        val df = scanAdds(spark, tableDir, state, files.map(_._1),
+          commitVersions = Some(files.map(_._2)))
+        Some(fixedType.fold(df)(t => df.withColumn(ct, lit(t))))
       }
-    }
     val outCols = (st.schema.fieldNames :+ ct :+ cv).toIndexedSeq
-    (legs(cdcState, cdcFiles.result(), None) ++
-      legs(st, insFiles.result(), Some("insert")) ++
-      legs(st, delFiles.result(), Some("delete")))
+    (leg(cdcState, cdcFiles.result(), None) ++
+      leg(st, insFiles.result(), Some("insert")) ++
+      leg(st, delFiles.result(), Some("delete")))
       .map(_.select(outCols.map(col): _*))
       .reduceOption(_ unionAll _)
       .getOrElse(spark.createDataFrame(
@@ -1151,13 +1115,13 @@ object DeltaImport {
     out.result()
   }
 
-  /** `fileKeyCol`: when set, the result carries an extra column of
-    * that name holding the row's normalized source-file path — what
-    * [[changeScan]] joins its per-file commit-version map against. */
+  /** `commitVersions` (one per add, when given): the result carries
+    * each row's source-file version as `_commit_version`, a per-file
+    * partition column — what [[changeScan]] reports. */
   private def scanAdds(spark: SparkSession, tableDir: String,
       st: TableState, adds: Seq[AddFile],
-      fileKeyCol: Option[String] = None,
-      rowLineage: Boolean = false): DataFrame = {
+      rowLineage: Boolean = false,
+      commitVersions: Option[Seq[Long]] = None): DataFrame = {
     // row-tracking internals: the materialized row-id column delta
     // writers persist for rewritten rows (physical name, never part
     // of the logical schema), and the per-file baseRowId riding the
@@ -1168,29 +1132,21 @@ object DeltaImport {
       else st.configuration
         .get("delta.rowTracking.materializedRowIdColumnName")
     val BASE = "__delta_base_rid__"
+    val CV = "_commit_version"
     if (adds.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row],
         if (!rowLineage) st.schema
         else StructType(st.schema.fields :+
           StructField("_row_id", LongType, nullable = false)))
-    // log-backed FileIndex (the TahoeFileIndex shape): partition
+    // entry-backed FileIndex (the TahoeFileIndex shape): partition
     // values come from the adds' partitionValues as REAL partition
     // columns — no join — and pushed predicates reach the index, so
     // every consumer (scan, register_delta views, joins) partition-
     // prunes and stats-skips through ordinary Catalyst pushdown.
     val conf = spark.sessionState.newHadoopConf()
-    val planned = adds.map { a =>
-      val p = new Path(a.uri)
-      // a spec add always carries size; a sloppy writer's 0/absent
-      // size would make Spark's split planner skip the file entirely
-      // (zero splits) — stat the real length rather than lose rows
-      val len =
-        if (a.size > 0L) a.size
-        else p.getFileSystem(conf).getFileStatus(p).getLen
-      (a, new org.apache.hadoop.fs.FileStatus(len, false, 1, len,
-        a.modificationTime, p))
-    }
+    val statuses = adds.map(a =>
+      EntryFileIndex.status(conf, a.uri, a.size, a.modificationTime))
     // COLUMN MAPPING (reader v2 / v3 columnMapping): files store
     // PHYSICAL names (mode `name`) or resolve by parquet FIELD ID
     // (mode `id` — parquet.field.id metadata on the read schema).
@@ -1205,45 +1161,45 @@ object DeltaImport {
     val partSet = st.partitionColumns.toSet
     val physOfCol: Map[String, String] =
       st.schema.fields.map(f => f.name -> physName(f)).toMap
-    val readSchema0 =
+    val physical =
       if (!mapped) st.schema
-      else {
-        val physAll = physicalType(st.schema, mode == "id")
-          .asInstanceOf[StructType]
-        StructType(st.schema.fields.zip(physAll.fields).map {
-          case (lf, pf) =>
-            if (partSet(lf.name)) lf // partition cols come from the log
-            else pf
-        })
-      }
+      else physicalType(st.schema, mode == "id").asInstanceOf[StructType]
     // lineage read: the materialized id is ONE extra nullable parquet
     // column (files lacking it — fresh appends — read NULL), and
     // baseRowId is a synthetic partition column (one typed value per
     // file through the index's partition row — no join)
-    val readSchema =
-      if (!rowLineage) readSchema0
-      else StructType(readSchema0.fields ++
-        matCol.map(c => StructField(c, LongType, nullable = true)) :+
-        StructField(BASE, LongType, nullable = true))
-    val partColsAll =
-      if (!rowLineage) st.partitionColumns
-      else st.partitionColumns :+ BASE
-    val base = org.apache.spark.sql.graftlake.DeltaLogFileIndex.dataFrame(
-      spark, new Path(adds.head.uri).getParent.toString, readSchema,
-      partColsAll,
-      planned.map { case (a, fs) =>
-        (fs, st.partitionColumns.map(c =>
-          c -> a.partitionValues.get(
-            if (mapped) physOfCol.getOrElse(c, c) else c).flatten)
-          .toMap ++
-          (if (rowLineage) Map(BASE -> a.baseRowId.map(_.toString))
-          else Map.empty))
-      },
+    val dataSchema = StructType(
+      st.schema.fields.zip(physical.fields)
+        .collect { case (lf, pf) if !partSet(lf.name) => pf } ++
+        matCol.map(c => StructField(c, LongType, nullable = true)))
+    val partSchema = StructType(
+      st.partitionColumns.map(c => st.schema(c).copy(nullable = true)) ++
+        (if (rowLineage) Some(StructField(BASE, LongType)) else None) ++
+        commitVersions.map(_ => StructField(CV, LongType,
+          nullable = false)))
+    // Delta serializes partition values as strings Spark's cast reads
+    // back exactly
+    val tz = Option(SQLConf.get.sessionLocalTimeZone)
+    def typed(raw: Option[String], dt: DataType): Any =
+      raw.map(v => Cast(Literal(UTF8String.fromString(v), StringType),
+        dt, tz).eval()).orNull
+    val versions = commitVersions.map(_.toIndexedSeq)
+    val rows = adds.zipWithIndex.map { case (a, i) =>
+      InternalRow.fromSeq(st.partitionColumns.map(c =>
+        typed(a.partitionValues.get(
+          if (mapped) physOfCol.getOrElse(c, c) else c).flatten,
+          st.schema(c).dataType)) ++
+        (if (rowLineage) Some(a.baseRowId.map(Long.box).orNull)
+        else None) ++
+        versions.map(_(i)))
+    }
+    val base = EntryFileIndex.dataFrame(spark, dataSchema, partSchema,
+      statuses.zip(rows),
       // forced only when a data filter is pushed: per-file stats JSON
       // → graft stat domain. The pushed filters reference the READ
       // schema's (physical) names, so the stat keys translate
       // logical → physical here.
-      () => planned.map { case (a, fs) =>
+      () => adds.zip(statuses).map { case (a, fs) =>
         val logical = addStats(st, a)
         val keyed =
           if (!mapped) logical
@@ -1259,28 +1215,21 @@ object DeltaImport {
       }.toMap,
       fieldIdRead = mapped && mode == "id")
     val dvApplied = applyDvs(spark, tableDir, adds, base)
-    val fileCols = (fileKeyCol.map(c =>
-      regexp_replace(col("_metadata.file_path"),
-        "^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/").as(c)) ++
-      // fresh/materialized resolution: an explicit materialized id
-      // wins; otherwise baseRowId + the row's PHYSICAL position
-      // (_metadata.row_index is pre-DV-filter, per spec — a DV'd
-      // row's deletion never renumbers its survivors)
+    val extraCols =
       (if (!rowLineage) None
-      else Some(coalesce(
-        (matCol.map(col).toSeq :+
-          (col(BASE) + col("_metadata.row_index"))): _*).as("_row_id"))
-      )).toSeq
+      else Some(EntryFileIndex.rowId(matCol.map(col), col(BASE),
+        col("_metadata.row_index")).as("_row_id"))) ++
+        commitVersions.map(_ => col(CV))
     // rename back to the LOGICAL schema: non-struct fields are pure
     // aliases (filters keep pushing through); struct-typed fields use
     // Spark's positional struct cast, which renames nested fields
     // wholesale (a same-type cast optimizes away)
     if (!mapped) dvApplied.select(
-      (st.schema.fieldNames.map(col) ++ fileCols).toIndexedSeq: _*)
+      (st.schema.fieldNames.map(col) ++ extraCols).toIndexedSeq: _*)
     else dvApplied.select((st.schema.fields.map { f =>
       if (partSet(f.name)) col(f.name)
       else col(physOfCol(f.name)).cast(f.dataType).as(f.name)
-    } ++ fileCols).toIndexedSeq: _*)
+    } ++ extraCols).toIndexedSeq: _*)
   }
 
   /** Drop rows a deletion vector marks deleted: decode each DV to a
@@ -1299,9 +1248,7 @@ object DeltaImport {
       spark.sessionState.newHadoopConf())
     val td = tableDir
     val specs = dvAdds.map(a => (canonUri(a.uri), a.dv.get))
-    DeleteArtifacts.filterDeletedBy(spark, base,
-      regexp_replace(col("_metadata.file_path"),
-        "^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/"),
+    DeleteArtifacts.filterDeletedBy(spark, base, EntryFileIndex.fileKey,
       col("_metadata.row_index"), specs,
       (t: (String, DeltaDv.Descriptor)) => {
         val fs = new Path(td).getFileSystem(sconf.value)

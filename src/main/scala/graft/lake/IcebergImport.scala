@@ -7,8 +7,13 @@ import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftlake.EntryFileIndex
+import org.apache.spark.sql.graftlake.EntryFileIndex.{canonUri, normUri,
+  normUriCol}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Engine-free READ of an Iceberg v2 table from its published
   * metadata (https://iceberg.apache.org/spec/) — the inverse half of
@@ -48,21 +53,24 @@ import org.apache.spark.sql.types._
   *
   * Scale: manifests are read driver-side (the same O(files) metadata
   * pass every Iceberg planner makes); data and delete files scan
-  * distributed. The per-file info frame broadcast at the data join is
-  * one short row per live file — ~100 B/file, so even a 10⁶-file
-  * table broadcasts ~100 MB, two orders of magnitude under Spark's
-  * 8 GB hint ceiling — and it already sits materialized on the driver
-  * (it IS the manifest).
+  * distributed. The data scan plans through
+  * [[org.apache.spark.sql.graftlake.EntryFileIndex]], the index Delta
+  * scans use: file sizes come from the manifest (no listing), per-file
+  * facts (data sequence, `first_row_id`, identity values) ride each
+  * file's partition row (no join), and filters pushed into the scan
+  * prune files on the manifest's decoded bounds.
   */
 object IcebergImport {
 
-  /** One live data file: absolute URI, rows, data sequence, the
+  /** One live data file: absolute URI, rows, the manifest's
+    * `file_size_in_bytes`, data sequence, the
     * IDENTITY partition values for the spec it was written under
     * (top-level column name → raw avro value), and its column bounds
     * decoded into graft's stat domain (column name → [[ColStat]],
     * plus `__nulls__<col>` point-stats from null_value_counts) — the
     * form [[PredicatePruning]] consumes directly. */
-  final case class DataEntry(uri: String, rows: Long, seq: Long,
+  final case class DataEntry(uri: String, rows: Long, size: Long,
+      seq: Long,
       identity: Map[String, AnyRef],
       stats: Map[String, ColStat] = Map.empty,
       /** `bucket[N]` partition values: (source column, N, bucket id) —
@@ -95,15 +103,6 @@ object IcebergImport {
         * (column → Spark literal value): pre-evolution files read the
         * column as NULL, which the scan coalesces to the default. */
       defaults: Seq[(String, Any)] = Nil)
-
-  /** Strip `scheme://authority` variance so paths written by different
-    * qualifiers compare equal: `file:/t/x`, `file:///t/x` → `/t/x`;
-    * `s3a://b/k` → `/b/k`. Keep in sync with [[normUriCol]]. */
-  private[lake] def normUri(s: String): String =
-    s.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
-
-  private def normUriCol(c: Column): Column =
-    regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
 
   // ------------------------------------------------------------ metadata
 
@@ -333,6 +332,9 @@ object IcebergImport {
           val df = e.get("data_file").asInstanceOf[GenericRecord]
           val uri = df.get("file_path").toString
           val rows = df.get("record_count").asInstanceOf[Long]
+          // required by the spec; an absent or 0 size stats the file
+          val size = Option(df.get("file_size_in_bytes"))
+            .fold(0L)(_.asInstanceOf[Long])
           // null sequence = inherit the manifest's (spec inheritance)
           val seq = Option(e.get("sequence_number"))
             .map(_.asInstanceOf[Long]).getOrElse(mSeq)
@@ -382,7 +384,7 @@ object IcebergImport {
             val fri = Option(df.getSchema.getField("first_row_id"))
               .flatMap(_ => Option(df.get("first_row_id")))
               .map(_.asInstanceOf[Long])
-            data += DataEntry(uri, rows, seq, ident,
+            data += DataEntry(uri, rows, size, seq, ident,
               derived.toMap ++ entryStats(df, topIdToName, schema),
               buckets.result(), fri)
           } else {
@@ -555,9 +557,9 @@ object IcebergImport {
     bounds ++ nulls
   }
 
-  /** Avro partition value → the Spark EXTERNAL type `createDataFrame`
-    * expects for column type `dt`. */
-  private def externalValue(dt: DataType, v: AnyRef): Any = v match {
+  /** Avro identity partition value → the Catalyst value of column
+    * type `dt` (the file's partition-row form). */
+  private def partitionValue(dt: DataType, v: AnyRef): Any = v match {
     case null => null
     case _ => dt match {
       case LongType => v.asInstanceOf[Number].longValue()
@@ -567,9 +569,8 @@ object IcebergImport {
       case DoubleType => v.asInstanceOf[Number].doubleValue()
       case FloatType => v.asInstanceOf[Number].floatValue()
       case BooleanType => v.asInstanceOf[java.lang.Boolean].booleanValue()
-      case StringType => v.toString
-      case DateType => java.sql.Date.valueOf(
-        java.time.LocalDate.ofEpochDay(v.asInstanceOf[Number].longValue()))
+      case StringType => UTF8String.fromString(v.toString)
+      case DateType => v.asInstanceOf[Number].intValue() // epoch days
       case other => throw new IllegalArgumentException(
         s"identity partition value of type ${other.simpleString} " +
           "is not supported")
@@ -582,7 +583,8 @@ object IcebergImport {
     * semantics (position + sequence-aware equality deletes), identity
     * partition columns filled from manifest metadata. Zero-copy
     * federation: nothing is written; the Iceberg table is queried in
-    * place. */
+    * place. Filters on the result prune files on the manifest bounds
+    * when Catalyst pushes them into the scan. */
   def scan(spark: SparkSession, metadataJsonPath: String,
       atSnapshot: Option[Long] = None,
       withRowLineage: Boolean = false): DataFrame = {
@@ -680,49 +682,28 @@ object IcebergImport {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], outSchema)
     // double-underscore suffixes so a partition column literally named
-    // "f"/"p"/"seq" can never collide with the identity-value columns
-    // (__ice_<col>) joined below
+    // "f"/"p"/"seq" can never collide with the per-file columns
+    // (__ice_<col> for identity values) below
     val F = "__ice_f__"; val P = "__ice_p__"; val SEQ = "__ice_seq__"
+    val FRI = "__ice_fri__"
 
-    // one short driver-side row per live file: normalized path, data
-    // sequence, identity partition values (see scaladoc for the
-    // broadcast bound — O(files) ~100 B rows, already driver-resident)
+    // per-file facts ride each file's partition row through the entry
+    // index (no join): data sequence, first_row_id, identity values
     val identCols: Seq[String] =
       entries.flatMap(_.identity.keys).distinct
         .filter(c => tm.schema.fieldNames.contains(c))
-    val FRI = "__ice_fri__"
-    val infoSchema = StructType(
-      StructField(F, StringType, nullable = false) +:
+    val partSchema = StructType(
       StructField(SEQ, LongType, nullable = false) +:
       StructField(FRI, LongType, nullable = true) +:
       identCols.map(c =>
         tm.schema(c).copy(name = s"__ice_$c", nullable = true)))
-    // CANONICAL (URL-encoded) key — `_metadata.file_path` reports the
-    // Path.toUri form, while manifest strings are usually the writer's
-    // decoded form; re-encoding through the same Hadoop Path encoder
-    // makes the join exact for paths with hive-escaped characters
-    val infoRows = entries.map { e =>
-      Row.fromSeq(DeltaImport.canonUri(e.uri) +: e.seq +:
-        e.firstRowId.map(Long.box).orNull +:
-        identCols.map(c =>
-          externalValue(tm.schema(c).dataType,
-            e.identity.getOrElse(c, null))))
-    }
-    val info = spark.createDataFrame(
-      spark.sparkContext.parallelize(infoRows, 1), infoSchema)
-    // broadcast gate (house rule: every explicit hint is size-gated):
-    // one short row per live file — path + seq + identity values,
-    // ~100 B/file, so 10⁶ files ≈ 100 MB, well under Spark's 8 GB
-    // hint ceiling — but the list arrives from UNTRUSTED metadata
-    // (arbitrary path lengths, arbitrary file counts), so above the
-    // configured bound the hint drops and Spark plans the join freely
-    // (a shuffled join on the path key — still one row per file).
-    val infoBytes = infoRows.iterator
-      .map(r => 64L + r.getString(0).length * 2L).sum
-    val maxBytes = spark.conf
-      .getOption("spark.graft.iceberg.import-broadcast-max-bytes")
-      .map(_.toLong).getOrElse(1L << 30)
-    val infoSide = if (infoBytes <= maxBytes) broadcast(info) else info
+    val conf = spark.sessionState.newHadoopConf()
+    val statuses = entries.map(e =>
+      EntryFileIndex.status(conf, e.uri, e.size, 0L))
+    val rows = entries.map(e => InternalRow.fromSeq(
+      e.seq +: e.firstRowId.map(Long.box).orNull +:
+        identCols.map(c => partitionValue(tm.schema(c).dataType,
+          e.identity.getOrElse(c, null)))))
 
     // lineage reads also project the MATERIALIZED _row_id column:
     // v3 rewrites (compaction, COW) must persist each row's id
@@ -732,11 +713,14 @@ object IcebergImport {
       if (!withRowLineage) tm.schema
       else StructType(tm.schema.fields :+
         StructField("_row_id", LongType, nullable = true))
-    var df = spark.read.schema(readSchema)
-      .parquet(entries.map(_.uri): _*)
-      .withColumn(F, normUriCol(col("_metadata.file_path")))
+    var df = EntryFileIndex.dataFrame(spark, readSchema, partSchema,
+        statuses.zip(rows),
+        // the manifest's decoded bounds — the stats and prover
+        // scanWhere prunes with — serve filters pushed into the scan
+        () => statuses.zip(entries).map { case (st, e) =>
+          st.getPath.toString -> e.stats }.toMap)
+      .withColumn(F, EntryFileIndex.fileKey)
       .withColumn(P, col("_metadata.row_index"))
-      .join(infoSide, F)
     // identity partition columns are metadata-carried (spec-true; data
     // files may or may not store them — prefer the stored value)
     identCols.foreach(c =>
@@ -813,7 +797,7 @@ object IcebergImport {
               "refusing rather than decoding garbage")
           val bytes = Puffin.readBlob(fs, p, off, size,
             blob.compressionCodec)
-          DeltaImport.canonUri(ref) ->
+          canonUri(ref) ->
             Puffin.readDvBlob(bytes, cardinality = Some(rows))
         })
     }
@@ -827,17 +811,16 @@ object IcebergImport {
       // them to the canonical encoded key through a driver-side map
       // over the known data entries (accepting either the raw manifest
       // form or the encoded form — SQL has no URI codec, so the
-      // translation is a tiny keyed join, size-gated like the list)
+      // translation is a tiny keyed join). The map is a local relation
+      // of exact size, so Spark's own broadcast threshold gates it.
       val trans = entries.flatMap { e =>
-        val enc = DeltaImport.canonUri(e.uri)
+        val enc = canonUri(e.uri)
         Seq(normUri(e.uri) -> enc, enc -> enc)
       }.distinct
-      val tdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          trans.map(t => Row(t._1, t._2)), 1),
+      val transSide = spark.createDataFrame(
+        trans.map(t => Row(t._1, t._2)).asJava,
         StructType(Seq(StructField("__ice_raw", StringType),
           StructField("__ice_enc", StringType))))
-      val transSide = if (infoBytes <= maxBytes) broadcast(tdf) else tdf
       val pd = spark.read.schema(StructType(Seq(
           StructField("file_path", StringType),
           StructField("pos", LongType))))
@@ -881,7 +864,8 @@ object IcebergImport {
       // lineage. Survives the DV/position/equality anti-joins above:
       // each row keeps its ordinal within its ORIGINAL file.
       df.select(tm.schema.fieldNames.map(col).toIndexedSeq :+
-        coalesce(col("_row_id"), col(FRI) + col(P),
+        coalesce(EntryFileIndex.rowId(Some(col("_row_id")), col(FRI),
+            col(P)),
           raise_error(concat(lit("file "), col(F), lit(
             " has neither a materialized _row_id column nor an " +
               "explicit first_row_id manifest field — row lineage " +

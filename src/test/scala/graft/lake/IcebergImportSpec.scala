@@ -265,30 +265,6 @@ class IcebergImportSpec extends AnyFunSuite {
     assert(imported.scan().where($"g" === 1).count() == 0)
   }
 
-  test("the file-info broadcast is size-gated: above the bound the " +
-      "hint drops for a plain join — same rows") {
-    val df = (1L to 300L).map(i => (i, s"v$i")).toDF("id", "v")
-    val t = LakeTable.create(spark, TestSpark.tmpDir("iceimp-gate") + "/t",
-      df.schema)
-    t.append(df.repartition(4))
-    val meta = IcebergExport.export(t, TestSpark.tmpDir("iceimp-gate-out"))
-    val expect = rowsOf(t.scan())
-    // under the default gate (1 GB) the tiny file list is hint-broadcast
-    assert(IcebergImport.scan(spark, meta).queryExecution.analyzed
-      .toString.contains("strategy=broadcast"),
-      "small file list keeps the hint")
-    // force the fallback: bound of 0 — hint must drop, rows identical
-    spark.conf.set("spark.graft.iceberg.import-broadcast-max-bytes", "0")
-    try {
-      val gated = IcebergImport.scan(spark, meta)
-      assert(!gated.queryExecution.analyzed.toString
-        .contains("strategy=broadcast"),
-        "above the bound the info join must not carry a broadcast hint")
-      assert(rowsOf(gated) == expect)
-    } finally
-      spark.conf.unset("spark.graft.iceberg.import-broadcast-max-bytes")
-  }
-
   test("uuid columns read as their exact 16 bytes: a REAL parquet " +
       "fixed_len_byte_array(16) + UUID-annotation fixture (what every " +
       "conforming Iceberg writer stores) scans under the binary " +
