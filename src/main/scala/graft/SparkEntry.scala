@@ -1408,10 +1408,8 @@ WHEN NOT MATCHED THEN INSERT *
       val root = tmp("graft-bloom") + "/t"
       val lt = LakeTable.create(s, root, customer.schema, properties =
         Map(LakeTable.PROP_BLOOM_COLUMNS -> "c_custkey"))
-      lt.append(customer.where(xxhash64(col("c_custkey")) % 2 === 0)
-        .coalesce(1))
-      lt.append(customer.where(xxhash64(col("c_custkey")) % 2 =!= 0)
-        .coalesce(1))
+      lt.append(customer.where(xxhash64(col("c_custkey")) % 2 === 0))
+      lt.append(customer.where(xxhash64(col("c_custkey")) % 2 =!= 0))
       lt.merge(customer.where(col("c_custkey") % 100 === 0)
         .withColumn("c_acctbal", col("c_acctbal") * 2), Seq("c_custkey"))
       lt.scan().select(col("c_custkey"),

@@ -1606,15 +1606,13 @@ final class LakeTable private (
     throw new IllegalStateException("unreachable")
   }
 
-  /** Ingest-path write distribution (≡ Iceberg's
-    * `write.distribution-mode=hash`): cluster rows by the table's
-    * partition expressions before a partitioned append/overwrite, so
-    * each hive partition is written by ~one task instead of EVERY task
-    * — without it, a 1000-task ingest into 500 partitions strands up
-    * to 500k tiny files per commit (the small-files problem compaction
-    * then has to clean up). Opt-in (`none` default): the shuffle is a
-    * real cost, and un-partitioned tables or pre-clustered ingests
-    * don't need it. Sort-ordered tables already range-cluster, and
+  /** Ingest-path write distribution. By default (`none`)
+    * [[writeDataFiles]] sizes the input: a write under the target file
+    * size is one task, one file per partition it touches; a larger one
+    * runs ~bytes / target tasks, each writing every partition it sees.
+    * `write.distribution-mode=hash` (≡ Iceberg's) clusters rows by the
+    * partition expressions first — one task per partition at any size,
+    * for the price of a shuffle. Sort-ordered tables range-cluster, and
     * rewriting ops (merge/compact) keep their own partitioning. */
   private def distributeForWrite(df: DataFrame): DataFrame = {
     val fields = partitionFields
@@ -1713,8 +1711,8 @@ final class LakeTable private (
         .collect().map(r => relativize(r.getString(0))).toSeq
     val addedSurv =
       if (affected.isEmpty) NoWrite
-      else writeDataFiles(sizeRewrite(readFilesForRewrite(base, affected)
-        .where(!coalesce(predicate, lit(false))), base, affected))
+      else writeDataFiles(readFilesForRewrite(base, affected).where(
+        !coalesce(predicate, lit(false))), Some(bytesOf(base, affected)))
     commit(base, "overwrite-where", added = addedSurv.entries ++ addedNew,
       removed = covered ++ affected,
       propertiesOverride = txn.map { case (app, v) =>
@@ -1957,39 +1955,12 @@ final class LakeTable private (
     // the cache's materialization + count cost MORE than the reruns.
     val cached = LakeTable.cacheIfExpensive(sourceIn)
     val cacheSource = cached ne sourceIn
-    // WRITE-side view of the source for the copy-on-write plans,
-    // computed lazily AFTER the first consumer (the key-bounds agg,
-    // usually) has materialized the cache: narrow the cached plan to
-    // its SIZE-appropriate width — the cache pins the delta
-    // aggregation's shuffle width, and a broadcast-hash rewrite join
-    // streams that width straight into the written file count (a tiny
-    // delta would fan out one file per partition). coalesce by
-    // measured in-memory bytes — a large source keeps its parallelism
-    // (output sizing). Deferred, the sizing needs its own
-    // count() only when NO prior action touched the cache (the
-    // empty-table insert path).
-    lazy val sizedSource: DataFrame =
-      if (!cacheSource) cached
-      else {
-        val loaded = cached.queryExecution.optimizedPlan.collectFirst {
-          case im: org.apache.spark.sql.execution.columnar
-            .InMemoryRelation => im
-        }.exists(_.cacheBuilder.isCachedColumnBuffersLoaded)
-        if (!loaded) cached.count()
-        val bytes = cached.queryExecution.optimizedPlan.stats
-          .sizeInBytes
-        val target = BigInt(LakeTable.DEFAULT_TARGET_FILE_BYTES)
-        val n = ((bytes + target - 1) / target)
-          .max(1).min(Int.MaxValue).toInt
-        cached.coalesce(n)
-      }
-    try mergeClausesBody(cached, sizedSource, keys, matched, notMatched,
+    try mergeClausesBody(cached, keys, matched, notMatched,
       notMatchedBySource, extraProperties, txn, morOnly)
     finally if (cacheSource) cached.unpersist()
   }
 
-  private def mergeClausesBody(source: DataFrame,
-      sizedSrc: => DataFrame, keys: Seq[String],
+  private def mergeClausesBody(source: DataFrame, keys: Seq[String],
       matched: Seq[MergeWhen], notMatched: Seq[MergeWhen],
       notMatchedBySource: Seq[MergeWhen],
       extraProperties: Map[String, String],
@@ -2107,7 +2078,7 @@ final class LakeTable private (
       // every source row is NOT MATCHED: the insert cascade alone (a
       // delete has nothing to remove and commits nothing)
       if (keyDelete) return base.snapshotId
-      val rows = inserted(sizedSrc)
+      val rows = inserted(source)
       if (extraProperties.isEmpty && txn.isEmpty) return append(rows)
       return commitMerge(
         writeDataFiles(distributeForWrite(alignToSchema(rows))), Nil, Nil)
@@ -2174,7 +2145,7 @@ final class LakeTable private (
       // nothing to rewrite: the insert rows alone (a delete commits
       // nothing)
       if (keyDelete) return base.snapshotId
-      return commitMerge(writeDataFiles(inserted(sizedSrc)), Nil, Nil)
+      return commitMerge(writeDataFiles(inserted(source)), Nil, Nil)
     }
 
     // rewrite ONLY the affected files. NMBS clauses see only the target:
@@ -2192,7 +2163,7 @@ final class LakeTable private (
       df.withColumn(nmbsVal(i, c),
         nmbs(i).assignments.flatMap(_.get(c)).get)
     }.alias("t")
-    val s = sizedSrc.withColumn(SRC_MARK, lit(1)).alias("s")
+    val s = source.withColumn(SRC_MARK, lit(1)).alias("s")
     // plain equality (NOT null-safe): a null key never matches, so
     // null-key source rows are inserts and null-key target rows carry
     // through — consistent with the semi-join locate above
@@ -2237,7 +2208,7 @@ final class LakeTable private (
             .cast(schema(c).dataType).as(c)
         } ++ lineage: _*)
       }
-    commitMerge(writeDataFiles(sizeRewrite(result, base, affected)),
+    commitMerge(writeDataFiles(result, Some(bytesOf(base, affected))),
       affected, Nil)
   }
 
@@ -2247,27 +2218,10 @@ final class LakeTable private (
     located.select(FILE_COL).distinct()
       .collect().map(r => relativize(r.getString(0))).toSeq
 
-  /** Scale-adaptive REWRITE output sizing (guide §6): the rewrite of
-    * `affected` produces ≈ their manifest-recorded bytes (plus the
-    * source delta riding along), so coalesce the write input to
-    * ceil(bytes / target-file-size) partitions — a small rewrite stops
-    * fanning out one tiny file per join task (the join's width is an
-    * artifact of shuffle partitioning, not data size), while a large
-    * one keeps every partition (`coalesce` never raises the count and
-    * never shuffles; at 100 TB the quotient exceeds the plan's width
-    * and this is a no-op). */
-  private def sizeRewrite(df: DataFrame, base: Snapshot,
-      affected: Seq[String]): DataFrame = {
-    val bytes = affected.iterator.map(base.entries(_).info.bytes).sum
-    if (bytes <= 0L) df
-    else {
-      val target = properties.get(LakeTable.PROP_TARGET_FILE_BYTES)
-        .flatMap(v => scala.util.Try(v.toLong).toOption)
-        .filter(_ > 0L).getOrElse(LakeTable.DEFAULT_TARGET_FILE_BYTES)
-      val n = ((bytes + target - 1) / target).min(Int.MaxValue.toLong)
-      df.coalesce(n.toInt.max(1))
-    }
-  }
+  /** The manifest-recorded bytes of `files`: a rewrite writes about
+    * that, and a join's estimate is no bound. */
+  private def bytesOf(base: Snapshot, files: Seq[String]): BigInt =
+    files.iterator.map(f => BigInt(base.entries(f).info.bytes)).sum
 
   /** Stats-based candidate pruning for key-equality operations: a file
     * whose recorded [min, max] for ANY key column is disjoint from the
@@ -2515,7 +2469,7 @@ final class LakeTable private (
       }
       val w =
         if (affected.isEmpty) NoWrite
-        else writeDataFiles(sizeRewrite(rewritten, base, affected))
+        else writeDataFiles(rewritten, Some(bytesOf(base, affected)))
       commit(base, op, added = w.entries, removed = covered ++ affected)
     }
   }
@@ -3373,8 +3327,10 @@ final class LakeTable private (
   /** Whole-table compaction: rewrite every live file into at most
     * `targetFilesPerPartition` files per hive partition (small-file
     * compaction — the maintenance operation an ingest-heavy lakehouse
-    * schedules; content-identical, new snapshot). See
-    * [[rewriteDataFiles]] for the layout. */
+    * schedules; content-identical, new snapshot). Like [[compactWhere]]
+    * it commits nothing when every group is at target and no delete,
+    * old schema / spec era or sort order is left to apply. See
+    * [[rewriteDataFiles]]. */
   def compact(targetFilesPerPartition: Int = 1): Long =
     compact(targetFilesPerPartition, Nil)
 
@@ -3399,7 +3355,12 @@ final class LakeTable private (
           "orderable stat domain)")
     }
     val base = current
-    if (base.liveFiles.isEmpty) base.snapshotId
+    val settled = clusterBy.isEmpty && sortOrderColumns.isEmpty &&
+      base.deletes.isEmpty && base.entries.valuesIterator.forall(e =>
+        e.renames.isEmpty && e.specId == base.currentSpecId) &&
+      base.liveFiles.groupBy(rewriteGroupOf(base, _)).values
+        .forall(_.size <= targetFilesPerPartition)
+    if (base.liveFiles.isEmpty || settled) base.snapshotId
     else rewriteDataFiles("compact", base, Seq(base.liveFiles),
       targetFilesPerPartition, clusterBy)
   }
@@ -4046,11 +4007,12 @@ final class LakeTable private (
 
   /** Write df's rows as new Parquet data files (hive-partitioned when the
     * table has a partition spec) via a staging dir, then move each file
-    * under data/. Returns the table-root-relative paths of the new files
-    * plus their per-column bounds (read from the fresh Parquet footers —
-    * cost ∝ commit size, see [[FileStats]]). File names carry Spark's task
-    * UUIDs — unique across commits. */
-  private def writeDataFiles(df: DataFrame): WriteResult = labeled("write") {
+    * under data/, its input sized first ([[LakeTable.sizedForWrite]];
+    * `bytes`: a rewrite's known size). Returns the table-root-relative
+    * paths of the new files plus their per-column bounds (read from the
+    * fresh Parquet footers — cost ∝ commit size, see [[FileStats]]). */
+  private def writeDataFiles(df: DataFrame,
+      bytes: Option[BigInt] = None): WriteResult = labeled("write") {
     val staging = new Path(rootPath, s".staging-${UUID.randomUUID()}")
     val conf = df.sparkSession.conf
     val tsTypeKey = "spark.sql.parquet.outputTimestampType"
@@ -4061,13 +4023,16 @@ final class LakeTable private (
       // Restored below — the shared session's unrelated Parquet writes
       // must not silently change encoding.
       conf.set(tsTypeKey, "TIMESTAMP_MICROS")
+      val sized = LakeTable.sizedForWrite(df, bytes, properties
+        .get(PROP_TARGET_FILE_BYTES).flatMap(_.toLongOption)
+        .filter(_ > 0L).getOrElse(DEFAULT_TARGET_FILE_BYTES))
       // local (in-partition) sort keeps every write path's file ranges
       // as tight as its partitioning allows — appends add the global
       // range-repartition, rewrites/compaction keep their own
       // partitioning and still benefit
       val sorted = sortOrderColumns match {
-        case Nil => df
-        case cols => df.sortWithinPartitions(cols.map(col): _*)
+        case Nil => sized
+        case cols => sized.sortWithinPartitions(cols.map(col): _*)
       }
       val codec = properties.getOrElse(PROP_COMPRESSION, "snappy")
       val sch = schema
@@ -4597,8 +4562,8 @@ object LakeTable {
       StructField("bytes", LongType),
       StructField("rows", LongType)))))))
   val PROP_COMPRESSION = "write.parquet.compression-codec"
-  /** Rewrite-output file size goal (≡ Iceberg
-    * `write.target-file-size-bytes`); see sizeRewrite. */
+  /** Output file size goal of every data-file write (≡ Iceberg
+    * `write.target-file-size-bytes`); see [[sizedForWrite]]. */
   val PROP_TARGET_FILE_BYTES = "write.target-file-size-bytes"
   val DEFAULT_TARGET_FILE_BYTES: Long = 128L * 1024 * 1024
   /** Comma-separated sort columns (≡ Iceberg sort orders): appends
@@ -4714,6 +4679,41 @@ object LakeTable {
     * Comparison-only callers (salts, change tests) never restore. */
   private[lake] def comparableCol(name: String, dt: DataType): Column =
     if (containsVariant(dt)) to_json(col(name)) else col(name)
+
+  /** Output sizing of every data-file write (≡ what Iceberg's write
+    * distribution and Delta's optimized writes do to file counts, minus
+    * their shuffle): `coalesce` — narrow, no job, never widening — to
+    * ceil(bytes / `target`) tasks, `bytes` being the caller's known size
+    * else [[estimatedBytes]]. A deliberate width (a repartition or
+    * coalesce on the plan's spine: the caller's own, a sort-order
+    * append, hash distribution, a compaction layout) is kept. */
+  private[lake] def sizedForWrite(df: DataFrame, bytes: Option[BigInt],
+      target: Long): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    def deliberate(p: LogicalPlan): Boolean = p match {
+      case _: Repartition | _: RepartitionByExpression => true
+      case _: Project | _: Filter | _: SubqueryAlias | Sort(_, false, _, _) =>
+        deliberate(p.children.head)
+      case _ => false
+    }
+    if (deliberate(df.queryExecution.analyzed)) df
+    else bytes.orElse(estimatedBytes(df))
+      .map(b => (b + target - 1) / target).filter(_ < Int.MaxValue)
+      .fold(df)(n => df.coalesce(n.toInt.max(1)))
+  }
+
+  /** Catalyst's size estimate of `df` (what Spark trusts for broadcast
+    * decisions), or None when it is no upper bound: the plan can grow
+    * rows (explode, typed `flatMap` / `mapPartitions` / group functions). */
+  private[lake] def estimatedBytes(df: DataFrame): Option[BigInt] = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    val qe = df.queryExecution
+    if (qe.analyzed.exists {
+      case _: Generate | _: MapPartitions | _: MapGroups | _: CoGroup |
+          _: FlatMapGroupsWithState => true
+      case _ => false
+    }) None else Some(qe.optimizedPlan.stats.sizeInBytes)
+  }
 
   /** Persist `df` (MEMORY_AND_DISK) when its plan is genuinely
     * expensive to recompute AND it will be consumed by several

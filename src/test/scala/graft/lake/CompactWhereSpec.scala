@@ -46,6 +46,31 @@ class CompactWhereSpec extends AnyFunSuite {
     assert(t.compactWhere(col("id") > 10000L) == head)
   }
 
+  test("whole-table compact of already-compact groups commits nothing; " +
+      "a delete artifact or clusterBy still rewrites") {
+    val df = (1L to 400L).map(i => (i, i % 4, s"v$i")).toDF("id", "p", "v")
+    val t = LakeTable.create(spark, TestSpark.tmpDir("cw-whole") + "/t",
+      df.schema, partitionBy = Seq("p"),
+      properties = Map(LakeTable.PROP_DELETE_MODE -> "merge-on-read"))
+    t.append(df.repartition(2))
+    val head = t.currentSnapshotId.get
+    assert(t.currentSnapshot.get.liveFiles.size == 8)
+    assert(t.compact(2) == head)
+    assert(t.compact(1) != head)
+    val compacted = t.currentSnapshotId.get
+    assert(t.currentSnapshot.get.liveFiles.size == 4)
+    assert(t.compact() == compacted)
+    // Z-ordering is a layout change even at one file per group
+    assert(t.compact(1, Seq("id")) != compacted)
+    // a position delete is folded by the rewrite, not left outstanding
+    t.delete(col("id") === 7L)
+    assert(t.currentSnapshot.get.deletes.nonEmpty)
+    val deleted = t.currentSnapshotId.get
+    assert(t.compact() != deleted)
+    assert(t.currentSnapshot.get.deletes.isEmpty)
+    assert(t.scan().count() == 399L)
+  }
+
   test("outstanding MOR deletes: rewritten rows fold, untouched files keep theirs") {
     val df = (1L to 100L).map(i => (i, i % 2, s"v$i")).toDF("id", "p", "v")
     val t = LakeTable.create(spark, TestSpark.tmpDir("cw-mor") + "/t",

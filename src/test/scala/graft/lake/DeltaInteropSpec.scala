@@ -1341,7 +1341,7 @@ class DeltaInteropSpec extends AnyFunSuite {
     val t = LakeTable.create(spark, s"$base/t", src.schema,
       partitionBy = Seq("g"),
       properties = Map(LakeTable.PROP_PUBLISH_CDF -> "true"))
-    t.append(src)
+    t.append(src.repartition(4)) // several files per partition to compact
     DeltaExport.publish(t, s"$base/d")                    // version 0
     t.merge(Seq((3L, "u", 0L), (6L, "u", 0L)).toDF("id", "v", "g"),
       Seq("id"))

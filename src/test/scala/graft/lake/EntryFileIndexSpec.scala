@@ -1,9 +1,6 @@
 package graft.lake
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
@@ -39,36 +36,6 @@ class EntryFileIndexSpec extends AnyFunSuite {
         s.dataFilters))
       .flatMap(_.files.map(f => EntryFileIndex.normUri(f.getPath.toString)))
       .toSet
-
-  /** Spark jobs `body` launches from this thread (its job group); a
-    * sentinel job flushes the asynchronous listener bus first. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"efi-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          seen.add(Option(e.properties.getProperty(
-            "spark.job.description")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "")
-    try {
-      body
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains("sentinel") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("sentinel"), "listener bus did not flush")
-      seen.asScala.count(_ != "sentinel")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** A partitioned merge-on-read v3 Iceberg export with row lineage, a
     * deletion vector and an equality delete, over ≥ 33 data files. */
@@ -113,7 +80,7 @@ class EntryFileIndexSpec extends AnyFunSuite {
       "(sizes come from the manifest, nothing is listed)") {
     val (_, meta) = morLineage
     assert(IcebergImport.load(meta, conf).dataEntries.size >= 33)
-    assert(jobsDuring(IcebergImport.scan(spark, meta,
+    assert(TestSpark.jobsDuring(IcebergImport.scan(spark, meta,
       withRowLineage = true).queryExecution.executedPlan) == 0)
   }
 

@@ -556,8 +556,9 @@ class ManifestSpec extends AnyFunSuite {
     val root = freshRoot
     val t = LakeTable.create(spark, root, spark.range(1).schema)
     // one file per partition: more entries than an inline chunk holds,
-    // so the append writes a chunk file
-    t.append(spark.range(0L, 70L, 1L, 70).toDF())
+    // so the append writes a chunk file (an explicit width: output
+    // sizing would write these 70 rows as one file)
+    t.append(spark.range(0L, 70L, 1L, 70).toDF().coalesce(70))
     val chunk = t.currentSnapshot.get.manifests.find(ManifestIO.isChunkFile)
       .getOrElse(fail("no file-backed chunk"))
     val f = new java.io.File(s"$root/${LakeTable.METADATA_DIR}/$chunk")
