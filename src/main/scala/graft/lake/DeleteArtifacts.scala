@@ -6,7 +6,10 @@ import scala.reflect.ClassTag
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftlake.EntryFileIndex
+import org.apache.spark.sql.graftlake.GraftManifestFileIndex.SEQ_COL
 import org.apache.spark.sql.types._
 
 /** The merge-on-read delete artifacts ([[Snapshot.deletes]]) on disk:
@@ -47,9 +50,8 @@ private[graft] object DeleteArtifacts {
     * `_metadata.file_path` / `_metadata.row_index`). */
   private[lake] val PFILE_COL = "__graft_pos_file"
   private[lake] val PIDX_COL = "__graft_pos_idx"
-  /** A data-file group's equality-delete era (see [[apply]]). */
-  private[lake] val ERA_COL = "__graft_era"
-  private val DERA_COL = "__graft_del_era"
+  /** An equality-delete row's sequence number (see [[apply]]). */
+  private val DSEQ_COL = "__graft_del_seq"
 
   /** A data file's URI → its table-relative path (`data/…`). Captured
     * file URIs are ABSOLUTE (that's what `_metadata.file_path` yields),
@@ -188,17 +190,19 @@ private[graft] object DeleteArtifacts {
   }
 
   /** Apply snapshot `ctx`'s delete artifacts to `frame`, a scan of its
-    * data files (under `ctx`'s schema) that carries [[ERA_COL]] when
+    * data files (under `ctx`'s schema) that carries each row's file's
+    * data sequence number ([[GraftManifestFileIndex.SEQ_COL]]) when
     * `ctx` has equality deletes and [[PFILE_COL]] / [[PIDX_COL]] when it
-    * has positional ones; returns the surviving rows without
-    * [[ERA_COL]].
+    * has positional ones; returns the surviving rows without the
+    * sequence column.
     *
-    * Equality deletes (≡ Iceberg equality deletes + data sequence
-    * numbers): delete file i (1-based in seq order) suppresses matching
-    * key rows from every data file whose sequence precedes it — i.e.
-    * whose era (count of deletes at-or-before its sequence) is < i. A
-    * merge's own after-image shares the delete's sequence, so it is
-    * never self-suppressed.
+    * Equality deletes (≡ Iceberg's scan-planning rule): a delete file
+    * of sequence s suppresses matching key rows in every data file of
+    * data sequence number strictly below s, so a merge's after-image,
+    * sharing its delete's sequence, survives. Both sequences are
+    * per-file partition columns of their scans: one anti-join on
+    * `keys equal && data seq < delete seq`, no per-file or per-commit
+    * literal, and one delete broadcast for every data scan.
     *
     * Position deletes (≡ Iceberg v2): a (file_uri, pos) row suppresses
     * exactly row ordinal `pos` of the named file — applied via the
@@ -210,58 +214,44 @@ private[graft] object DeleteArtifacts {
     * gated on the artifacts' recorded [[DvFile.bytes]]. */
   def apply(spark: SparkSession, root: String, ctx: Snapshot,
       frame: DataFrame): DataFrame = {
-    val dels = ctx.deleteFiles.sortBy(_.seq)
+    val dels = ctx.deleteFiles
     val eqApplied =
       if (dels.isEmpty) frame
       else {
         // one anti-join per distinct (keys, physicalKeys) pair, with
-        // ALL of the pair's artifacts in ONE multi-path scan under a
-        // DECLARED schema (see posPairs). Each file's delete ERA rides
-        // a path→era map literal instead of a per-file lit column.
-        // Declared types are the CURRENT key types: a key widened
-        // after a delete was written reads under the wide type via the
-        // same reader promotions [[LakeTable.canWiden]] admits
-        // (int→long/double, float→double — exactly what ALTER WIDEN
-        // allows; WidenSpec proves the combined case). Splitting on
-        // physicalKeys keeps anti-join semantics: surviving rows must
-        // miss every group, and anti-joins against a partition of the
-        // artifacts compose to the anti-join against their union.
+        // ALL of the pair's artifacts in ONE multi-file scan under a
+        // DECLARED schema (see posPairs), each file's sequence number
+        // its partition row (EntryFileIndex). Keys are live columns
+        // (dropColumn refuses a delete's key). Declared types are the
+        // CURRENT key types: a key widened after a delete was written
+        // reads under the wide type via the same reader promotions
+        // [[LakeTable.canWiden]] admits (int→long/double, float→double
+        // — exactly what ALTER WIDEN allows; WidenSpec proves the
+        // combined case). Splitting on physicalKeys keeps anti-join
+        // semantics: surviving rows must miss every group, and
+        // anti-joins against a partition of the artifacts compose to
+        // the anti-join against their union.
         val sch = DataType.fromJson(ctx.schemaJson).asInstanceOf[StructType]
         val types = sch.fields.map(f => f.name -> f.dataType).toMap
-        var df = frame
-        dels.zipWithIndex
-          .groupBy { case (d, _) => (d.keys, d.physicalKeys) }
-          .foreach { case ((keys, physKeys), group) =>
-            val canDeclare = keys.forall(types.contains)
-            val delDF =
-              if (canDeclare) {
-                val delSchema = StructType(physKeys.zip(keys).map {
-                  case (p, k) => StructField(p, types(k))
-                })
-                val eraOf = typedLit(group.map { case (d, i) =>
-                  d.path -> (i + 1)
-                }.toMap)
-                spark.read.schema(delSchema)
-                  .parquet(uris(root, group.map(_._1)): _*)
-                  .select(physKeys.zip(keys).map { case (p, k) =>
-                    col(p).as(s"__graft_del_$k")
-                  } :+ element_at(eraOf, regexp_extract(
-                    col("_metadata.file_path"),
-                    "^(?:.*/)?(deletes/[^/]+)$", 1)).as(DERA_COL): _*)
-              } else // a delete keyed on a since-dropped column: the
-                // exact per-file inferred read (rare, never hot)
-                group.map { case (d, i) =>
-                  spark.read.parquet(new Path(root, d.path).toString)
-                    .select(physKeys.zip(keys).map { case (p, k) =>
-                      col(p).as(s"__graft_del_$k")
-                    }.toIndexedSeq: _*)
-                    .withColumn(DERA_COL, lit(i + 1))
-                }.reduce(_ unionByName _)
+        val conf = spark.sparkContext.hadoopConfiguration
+        dels.groupBy(d => (d.keys, d.physicalKeys))
+          .foldLeft(frame) { case (df, ((keys, physKeys), group)) =>
+            val delDF = EntryFileIndex.dataFrame(spark,
+                StructType(physKeys.zip(keys).map { case (p, k) =>
+                  StructField(p, types(k))
+                }),
+                StructType(Seq(StructField(DSEQ_COL, LongType))),
+                group.map(d => EntryFileIndex.status(conf,
+                  new Path(root, d.path).toString, 0L, 0L) ->
+                  InternalRow(d.seq)),
+                () => Map.empty)
+              .select(physKeys.zip(keys).map { case (p, k) =>
+                col(p).as(s"__graft_del_$k")
+              } :+ col(DSEQ_COL): _*)
             val cond = keys.map(k => col(k) === col(s"__graft_del_$k"))
-              .reduce(_ && _) && col(ERA_COL) < col(DERA_COL)
-            df = df.join(delDF, cond, "left_anti")
-          }
-        df.drop(ERA_COL)
+              .reduce(_ && _) && col(SEQ_COL) < col(DSEQ_COL)
+            df.join(delDF, cond, "left_anti")
+          }.drop(SEQ_COL)
       }
     val pos = ctx.posDeleteFiles
     val posApplied =

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path,
   RawLocalFileSystem}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftlake.GraftManifestFileIndex
+import org.apache.spark.sql.graftlake.{EntryFileIndex, GraftManifestFileIndex}
 import org.apache.spark.sql.types._
 
 import scala.collection.immutable.VectorMap
@@ -52,7 +52,8 @@ final class LakeTable private (
     val root: String) {
 
   import LakeTable._
-  import DeleteArtifacts.{ERA_COL, PFILE_COL, PIDX_COL, relTail}
+  import DeleteArtifacts.{PFILE_COL, PIDX_COL}
+  import GraftManifestFileIndex.{FRI_COL, SEQ_COL}
 
   // sessionState.newHadoopConf() folds runtime `spark.conf.set("fs...")`
   // entries on top of the core conf (same resolution as Spark's sources)
@@ -197,25 +198,6 @@ final class LakeTable private (
     * the columns dynamic partition overwrite replaces by. */
   def identityPartitionColumns: Seq[String] =
     partitionFields.filter(_.isIdentity).map(_.source)
-
-  /** Hint-broadcast a driver-built ONE-ROW-PER-FILE frame, dropping
-    * the hint above a byte bound (house rule: every explicit broadcast
-    * hint is size-gated). These frames are path + a few fixed fields —
-    * MBs at 10⁶ files — but a 10⁸-file table pushes past Spark's 8 GB
-    * hint ceiling, so above `spark.graft.lake.filelist-broadcast-max-
-    * bytes` (default 1 GB) the hint drops and Spark plans the join
-    * freely (still one slim row per file on the shuffled side). */
-  private def maybeBroadcastFileList(df: DataFrame,
-      estBytes: Long): DataFrame = {
-    val max = spark.conf
-      .getOption("spark.graft.lake.filelist-broadcast-max-bytes")
-      .map(_.toLong).getOrElse(1L << 30)
-    if (estBytes <= max) broadcast(df) else df
-  }
-
-  /** Estimated broadcast bytes of one short row per file path. */
-  private def fileListBytes(paths: Iterable[String]): Long =
-    paths.iterator.map(64L + _.length * 2L).sum
 
   private def partitionFields: Seq[PartitionSpec.Field] =
     PartitionSpec.parseAll(current.partitionColumns)
@@ -1182,16 +1164,20 @@ final class LakeTable private (
     * applying its delete artifacts (merge-on-read, see
     * [[DeleteArtifacts.apply]]). Files written before a column rename
     * are read with their PHYSICAL (as-written) names via their entry's
-    * `renames` and aliased back — one scan per distinct (mapping,
-    * equality-delete era, spec) group, unioned; the common
-    * no-rename/no-delete case stays a single scan.
+    * `renames` and aliased back — one scan per distinct (mapping, spec)
+    * group, unioned; the common no-rename case stays a single scan.
+    * Per-file facts ride each scan's file index as hidden partition
+    * columns ([[GraftManifestFileIndex]]): the data sequence number
+    * when `ctx` has equality deletes, `first_row_id` on a lineage read.
     *
     * With `withPos` the result additionally carries PFILE_COL /
     * PIDX_COL — each surviving row's scan URI and row ordinal (what the
-    * MOR predicate DELETE/UPDATE capture as new position deletes). */
+    * MOR predicate DELETE/UPDATE capture as new position deletes) — and
+    * each of `perFile`'s columns, a per-file value of the row's file. */
   private def readFilesAs(ctx: Snapshot, relFiles: Seq[String],
       withName: Boolean = false, withPos: Boolean = false,
-      withLineage: Boolean = false): DataFrame = {
+      withLineage: Boolean = false,
+      perFile: Seq[(StructField, ManifestEntry => Any)] = Nil): DataFrame = {
     val sch = DataType.fromJson(ctx.schemaJson).asInstanceOf[StructType]
     if (relFiles.isEmpty) {
       val out =
@@ -1199,18 +1185,18 @@ final class LakeTable private (
         else StructType(sch.fields :+ StructField(ROW_ID_COL, LongType))
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out)
     }
-    val dels = ctx.deleteFiles.sortBy(_.seq)
-    val needPos = withPos || withLineage ||
-      DeleteArtifacts.positional(ctx.deletes)
+    val needPos = withPos || DeleteArtifacts.positional(ctx.deletes)
+    val carried = perFile ++ (if (ctx.deleteFiles.isEmpty) Nil
+      else Seq(StructField(SEQ_COL, LongType) -> ((f: ManifestEntry) => f.seq)))
+    val fileColumns = carried ++ (if (!withLineage) Nil
+      else Seq(StructField(FRI_COL, LongType) ->
+        ((f: ManifestEntry) => f.info.firstRowId.map(Long.box).orNull)))
     // group additionally by partition-spec era: files of different
     // layouts (hive dirs present/absent/differently shaped) cannot
     // share one scan — Spark's partition discovery would see
     // conflicting directory structures
-    val files = relFiles.map(ctx.entries)
-    val groups = files.groupBy(f =>
-      (f.renames, if (dels.isEmpty) 0 else dels.count(_.seq <= f.seq),
-        f.specId))
-    val parts = groups.toSeq.map { case ((mapping, e, specId), group) =>
+    val groups = relFiles.map(ctx.entries).groupBy(f => (f.renames, f.specId))
+    val parts = groups.toSeq.map { case ((mapping, specId), group) =>
       // default-column metadata stays OUT of the physical scan schema:
       // the default is applied by THIS layer's projection below —
       // leaving EXISTS_DEFAULT on the scan schema would wake Spark's
@@ -1229,7 +1215,7 @@ final class LakeTable private (
         stripDefaults(f.copy(name = mapping.getOrElse(f.name, f.name)))) ++
         // lineage: declare the physical _row_id column — REWRITTEN
         // files carry it (preserved ids), any other file reads null
-        // and resolves to first_row_id + position downstream
+        // and resolves to first_row_id + position below
         (if (withLineage) Seq(StructField(ROW_ID_COL, LongType)) else Nil))
       val cols = sch.fields.map { f =>
         val phys = mapping.getOrElse(f.name, f.name)
@@ -1244,44 +1230,24 @@ final class LakeTable private (
           case _ => col(phys).as(f.name)
         }
       }.toSeq ++
-        (if (withLineage) Seq(col(ROW_ID_COL)) else Nil) ++
+        // lineage: the physical column wins (rewritten files preserved
+        // their carried ids there), else first_row_id + position — the
+        // Iceberg v3 resolution rule
+        (if (withLineage) Seq(EntryFileIndex.rowId(Some(col(ROW_ID_COL)),
+          col(FRI_COL), col("_metadata.row_index")).as(ROW_ID_COL))
+        else Nil) ++
+        carried.map(c => col(c._1.name)) ++
         (if (withName) Seq(input_file_name().as(FILE_COL)) else Nil) ++
         (if (needPos) Seq(col("_metadata.file_path").as(PFILE_COL),
           col("_metadata.row_index").as(PIDX_COL)) else Nil)
-      val part = prunedParquetScan(ctx, group, physSchema, sch, mapping,
-          specId)
+      prunedParquetScan(ctx, group, physSchema, sch, mapping, specId,
+          fileColumns)
         .select(cols: _*) // stable column order + current names
-      if (dels.isEmpty) part else part.withColumn(ERA_COL, lit(e))
     }
     val applied = DeleteArtifacts(spark, root, ctx,
       parts.reduce(_ unionByName _))
-    val lineageResolved =
-      if (!withLineage) applied
-      else {
-        // resolve each row's id: the physical column wins (rewritten
-        // files preserved their carried ids there), else
-        // first_row_id + position — the Iceberg v3 resolution rule.
-        // The (file → first_row_id) map is bounded by the PLANNED
-        // files and broadcast; matching is on the table-relative tail
-        // (the move-proof rule of DeleteArtifacts.relTail).
-        val firsts = files.flatMap(f =>
-          f.info.firstRowId.map(Row(f.path, _)))
-        val fdf = spark.createDataFrame(
-          spark.sparkContext.parallelize(firsts, 1),
-          StructType(Seq(
-            StructField("__graft_first_file", StringType, nullable = false),
-            StructField("__graft_first_id", LongType, nullable = false))))
-        applied
-          .join(maybeBroadcastFileList(fdf,
-            fileListBytes(firsts.map(_.getString(0)))),
-            relTail(col(PFILE_COL)) === col("__graft_first_file"),
-            "left")
-          .withColumn(ROW_ID_COL, coalesce(col(ROW_ID_COL),
-            col("__graft_first_id") + col(PIDX_COL)))
-          .drop("__graft_first_file", "__graft_first_id")
-      }
-    if (needPos && !withPos) lineageResolved.drop(PFILE_COL, PIDX_COL)
-    else lineageResolved
+    if (needPos && !withPos) applied.drop(PFILE_COL, PIDX_COL)
+    else applied
   }
 
   // ------------------------------------------------------------------ writes
@@ -2043,10 +2009,14 @@ final class LakeTable private (
         val v = w.assignments.flatMap(_.get(c)).getOrElse(default)
         when(idx === lit(i), v).otherwise(rest)
       }
+    // whether some clause of `clauses` applies (decided here when there
+    // is none: no index compares with the empty cascade's -1)
+    def anyApplies(clauses: Seq[MergeWhen], idx: Column): Column =
+      if (clauses.isEmpty) lit(false) else idx =!= -1
     // the NOT MATCHED cascade over the source alone: the insert rows
     def inserted(src: DataFrame): DataFrame = {
       val idx = firstIdx(nm)
-      src.alias("s").where(idx =!= -1).select(fields.map { c =>
+      src.alias("s").where(anyApplies(nm, idx)).select(fields.map { c =>
         valueFor(nm, idx, c, lit(null)).cast(schema(c).dataType).as(c)
       }: _*)
     }
@@ -2199,7 +2169,7 @@ final class LakeTable private (
         val iIdx = firstIdx(nm)
         val keep =
           (isMatched && keepFor(m, mIdx)) ||
-          (isSrcOnly && iIdx =!= -1) ||
+          (isSrcOnly && anyApplies(nm, iIdx)) ||
           (!isMatched && !isSrcOnly && nmbsKeep)
         joined.where(keep).select(fields.map { c =>
           when(isMatched, valueFor(m, mIdx, c, col(s"t.$c")))
@@ -2550,10 +2520,17 @@ final class LakeTable private (
       return base.snapshotId
     val spark0 = spark
     import spark0.implicits._
+    // one short row per live file, hint-broadcast unless its estimate
+    // passes spark.graft.lake.filelist-broadcast-max-bytes (default
+    // 1 GB; house rule: every explicit broadcast hint is size-gated —
+    // a 10⁸-file table would pass Spark's 8 GB hint ceiling)
     val live = spark.createDataset(base.liveFiles).toDF("f")
+    val liveBytes = base.liveFiles.iterator.map(64L + _.length * 2L).sum
     val pairs = DeleteArtifacts.positions(spark, root, base.deletes).get
-      .join(maybeBroadcastFileList(live,
-        fileListBytes(base.liveFiles)), Seq("f"), "left_semi")
+      .join(if (liveBytes > spark.conf.getOption(
+          "spark.graft.lake.filelist-broadcast-max-bytes")
+          .fold(1L << 30)(_.toLong)) live else broadcast(live),
+        Seq("f"), "left_semi")
     val delPaths = DeleteArtifacts.writeVectors(fs, root, pairs)
     commitWithRetry(base)(posRetrySafe) { b =>
       val seq = b.snapshotId + 1
@@ -2956,6 +2933,11 @@ final class LakeTable private (
     val sch = schema
     require(sch.fieldNames.contains(name), s"no column $name")
     requireNoConstraintOn(name, "drop")
+    // a live equality delete matches on its key columns: dropping one
+    // would leave the delete nothing to match (compact folds it in)
+    require(!base.deleteFiles.exists(_.keys.contains(name)),
+      s"cannot drop column $name: a live equality delete is keyed on it " +
+        "(compact first)")
     require(!specSources.contains(name),
       s"cannot drop partition source column $name " +
         "(of the current or a historical spec era)")
@@ -2980,7 +2962,8 @@ final class LakeTable private (
     * API. */
   private def prunedParquetScan(ctx: Snapshot, files: Seq[ManifestEntry],
       physSchema: StructType, logicalSchema: StructType,
-      mapping: Map[String, String], specId: Long): DataFrame = {
+      mapping: Map[String, String], specId: Long,
+      fileColumns: Seq[(StructField, ManifestEntry => Any)]): DataFrame = {
     val relFiles = files.map(_.path)
     val statuses = files.map(f => new FileStatus(f.info.bytes, false, 1,
       DefaultBlockSize, 0L, fs.makeQualified(new Path(rootPath, f.path))))
@@ -3145,9 +3128,14 @@ final class LakeTable private (
         logicalCond, f.stats, types, f.info.rows))
       if (proven) Some(kept.map(factsOf)) else None
     }
-    GraftManifestFileIndex.dataFrame(spark,
+    val fileValues =
+      if (fileColumns.isEmpty) Map.empty[Path, Seq[Any]]
+      else files.zip(statuses).map { case (f, st) =>
+        st.getPath -> fileColumns.map(_._2(f)) }.toMap
+    GraftManifestFileIndex.dataFrame(new GraftManifestFileIndex(spark,
       Map("basePath" -> dataDir.toString), physSchema, statuses, pruner,
-      bucketSpec, knownRows, knownProofs, knownFacts, knownFilteredFacts)
+      knownRows, knownProofs, knownFacts, knownFilteredFacts,
+      StructType(fileColumns.map(_._1)), fileValues), bucketSpec)
   }
 
   /** Bloom pruning for pushed literal equalities (the read-side twin of
@@ -3506,29 +3494,16 @@ final class LakeTable private (
     val numParts = math.max(1L, groups.map(g =>
         g.map(rewriteGroupOf(base, _)).distinct.size.toLong)
       .sum * target).min(100000L).toInt
-    val read = readFilesAs(base, rewritten, withName = groups.size > 1,
-      withLineage = rowLineageEnabled)
+    // group id per source file: a per-file column of the rewrite's scan
     val grp = "__graft_group"
-    val (data, groupKey) =
-      if (groups.size == 1) (read, Nil)
-      else {
-        // group id per source file. Matching key is the bare fs PATH —
-        // the scan's input_file_name() spells the scheme as
-        // `file:///data/…` while Hadoop Path.toString spells
-        // `file:/data/…`, so both sides normalize to the scheme-less
-        // path before the join.
-        val spark0 = spark
-        import spark0.implicits._
-        val pathGroups = groups.zipWithIndex.flatMap { case (fls, i) =>
-          fls.map(f =>
-            fs.makeQualified(new Path(rootPath, f)).toUri.getPath -> i)
-        }.toDF("__graft_path", grp)
-        (read.withColumn("__graft_path",
-            regexp_replace(col(FILE_COL), "^[A-Za-z0-9+.-]+:/+", "/"))
-          .join(maybeBroadcastFileList(pathGroups,
-            fileListBytes(rewritten)), Seq("__graft_path"))
-          .drop(FILE_COL, "__graft_path"), Seq(col(grp)))
-      }
+    val groupOf = groups.zipWithIndex.flatMap { case (fls, i) =>
+      fls.map(_ -> i) }.toMap
+    val (perFile, groupKey) =
+      if (groups.size == 1) (Nil, Nil)
+      else (Seq(StructField(grp, IntegerType) ->
+        ((f: ManifestEntry) => groupOf(f.path))), Seq(col(grp)))
+    val data = readFilesAs(base, rewritten, withLineage = rowLineageEnabled,
+      perFile = perFile)
     val layoutKey = groupKey ++ partExprs
     val laidOut =
       if (clusterBy.nonEmpty) {
@@ -3575,8 +3550,7 @@ final class LakeTable private (
         data.repartition(numParts, (layoutKey :+ salt): _*)
       }
     val added = writeDataFiles(laidOut.drop(grp)).entries
-    // row-conservation guard: a path-normalization miss in the group
-    // join would otherwise silently drop whole files
+    // row-conservation guard: a rewrite must carry every row it read
     if (base.deletes.isEmpty) {
       val expectRows = rewritten.map(base.entries(_).info.rows).sum
       val gotRows = added.map(_.info.rows).sum

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BasePredicate, BoundReference, Expression, Predicate}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -59,15 +59,8 @@ class EntryFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val bound = partitionFilters.filter(_.deterministic)
-      .reduceOption(And).map { f =>
-        Predicate.createInterpreted(f.transform {
-          case a: AttributeReference =>
-            val i = partitionSchema.fieldIndex(a.name)
-            BoundReference(i, partitionSchema(i).dataType,
-              nullable = true)
-        })
-      }
+    val bound = EntryFileIndex.rowPredicate(partitionFilters,
+      partitionSchema)
     val afterPart = groups.filter { case (row, _) =>
       bound.forall(_.eval(row)) }
     val det = dataFilters.filter(_.deterministic)
@@ -101,6 +94,18 @@ object EntryFileIndex {
     * qualifiers compare equal: `file:/t/x`, `file:///t/x` → `/t/x`;
     * `s3a://b/k` → `/b/k`. */
   def normUri(s: String): String = s.replaceFirst(SchemeAuthority, "/")
+
+  /** The deterministic `filters`' conjunction, evaluated against a
+    * partition row of `schema` (attributes bound by name). */
+  def rowPredicate(filters: Seq[Expression],
+      schema: StructType): Option[BasePredicate] =
+    filters.filter(_.deterministic).reduceOption(And).map { f =>
+      Predicate.createInterpreted(f.transform {
+        case a: AttributeReference =>
+          val i = schema.fieldIndex(a.name)
+          BoundReference(i, schema(i).dataType, nullable = true)
+      })
+    }
 
   /** [[normUri]] as a column expression. */
   def normUriCol(c: Column): Column = regexp_replace(c, SchemeAuthority, "/")

@@ -5,7 +5,9 @@ import scala.collection.mutable.LinkedHashMap
 import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, NoopCache, PartitionDirectory, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -36,14 +38,21 @@ import org.apache.spark.sql.types.StructType
   * [[PartitioningAwareFileIndex.inferPartitioning]] — value parsing,
   * escaping, and timezone handling are Spark's, not reimplemented.
   *
+  * Per-file facts ride the partition row as hidden `fileColumns` after
+  * the inferred ones: `__graft_seq` (the entry's data sequence number,
+  * when equality deletes apply) and `__graft_fri` (its `first_row_id`,
+  * on a lineage read). [[listFiles]] splits each directory by its
+  * files' `fileValues`, so a scan carries them with no join and no
+  * per-file literal — [[EntryFileIndex]]'s mechanism for foreign scans.
+  *
   * This class lives under `org.apache.spark.sql` because the file-index
   * extension surface is `private[sql]` — the standard shim technique
   * Spark table formats use (Delta ships `org.apache.spark.sql.delta`).
   */
 class GraftManifestFileIndex(
-    spark: SparkSession,
-    parameters: Map[String, String],
-    userSchema: StructType,
+    val spark: SparkSession,
+    val options: Map[String, String],
+    val schema: StructType,
     statuses: Seq[FileStatus],
     prune: Seq[Expression] => (Path => Boolean),
     /** Exact total rows across `statuses` per the manifest's footer
@@ -56,11 +65,10 @@ class GraftManifestFileIndex(
       * [[graft.lake.ColumnProof]]). Lazily forced — only a plan that
       * [[graft.lake.ManifestAggRule]] can rewrite pays the fold over
       * per-file stats. */
-    knownColumnProofs: () => Map[String, graft.lake.ColumnProof] =
-      () => Map.empty,
+    knownColumnProofs: () => Map[String, graft.lake.ColumnProof],
     /** Thunk producing per-file facts for the GROUPED metadata
       * rewrite. Lazily forced. */
-    knownFileFacts: () => Seq[graft.lake.FileFacts] = () => Nil,
+    knownFileFacts: () => Seq[graft.lake.FileFacts],
     /** FILTERED facts for the metadata rewrite of
       * `SELECT min/max/count … WHERE cond`: given the condition in this
       * scan's physical column names, returns per-file facts for exactly
@@ -68,11 +76,12 @@ class GraftManifestFileIndex(
       * PROVES the split (every possibly-matching file is proven
       * all-match via bounds + null counts, every other file provably
       * holds no match). None = not provable; the query runs normally. */
-    knownFilteredFacts: Expression => Option[Seq[graft.lake.FileFacts]] =
-      _ => None)
+    knownFilteredFacts: Expression => Option[Seq[graft.lake.FileFacts]],
+    fileColumns: StructType,
+    fileValues: Map[Path, Seq[Any]])
   extends PartitioningAwareFileIndex(
-    spark.asInstanceOf[classic.SparkSession], parameters,
-    Some(userSchema), NoopCache) {
+    spark.asInstanceOf[classic.SparkSession], options,
+    Some(schema.asNullable), NoopCache) {
 
   /** Forced at most once, and only by [[graft.lake.ManifestAggRule]]. */
   lazy val columnProofs: Map[String, graft.lake.ColumnProof] =
@@ -107,6 +116,9 @@ class GraftManifestFileIndex(
   private lazy val cachedPartitionSpec: PartitionSpec = inferPartitioning()
   override def partitionSpec(): PartitionSpec = cachedPartitionSpec
 
+  override def partitionSchema: StructType =
+    StructType(super.partitionSchema.fields ++ fileColumns.fields)
+
   /** Spark's listing (partition-directory pruning via
     * `partitionFilters`, file-name filters) first, then the manifest
     * verdict per surviving file. Empty directories are dropped — a
@@ -115,45 +127,59 @@ class GraftManifestFileIndex(
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val base = super.listFiles(partitionFilters, dataFilters)
     val deterministic = dataFilters.filter(_.deterministic)
-    if (deterministic.isEmpty) return base
-    val keep = prune(deterministic)
-    base.map(pd => pd.copy(files = pd.files.filter(f => keep(f.getPath))))
-      .filter(_.files.nonEmpty)
+    val pruned =
+      if (deterministic.isEmpty) base
+      else {
+        val keep = prune(deterministic)
+        base.map(pd => pd.copy(files = pd.files.filter(f => keep(f.getPath))))
+          .filter(_.files.nonEmpty)
+      }
+    if (fileColumns.isEmpty) pruned else splitByFileValues(pruned,
+      partitionFilters)
+  }
+
+  /** Each directory split by its files' `fileValues`, appended to its
+    * row. Spark's listing prunes on inferred columns only and the scan
+    * re-applies no partition filter: file-column filters apply here. */
+  private def splitByFileValues(dirs: Seq[PartitionDirectory],
+      partitionFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    val inferred = super.partitionSchema
+    val bound = EntryFileIndex.rowPredicate(partitionFilters.filter(
+      _.references.exists(a => fileColumns.fieldNames.contains(a.name))),
+      partitionSchema)
+    dirs.flatMap { pd =>
+      val dir = pd.values.toSeq(inferred)
+      val byValues = pd.files.groupBy(f => fileValues(f.getPath))
+      pd.files.map(f => fileValues(f.getPath)).distinct.map(vs =>
+        PartitionDirectory(InternalRow.fromSeq(dir ++ vs), byValues(vs)))
+    }.filter(pd => bound.forall(_.eval(pd.values)))
   }
 }
 
 object GraftManifestFileIndex {
 
-  /** A parquet scan DataFrame over `statuses` whose planning consults
-    * the manifest: identical plan shape to `spark.read.parquet` (a
-    * [[LogicalRelation]] over [[HadoopFsRelation]] — `_metadata`
+  /** Hidden per-file column: the entry's data sequence number. */
+  val SEQ_COL = "__graft_seq"
+  /** Hidden per-file column: the entry's `first_row_id` (null when the
+    * file has none). */
+  val FRI_COL = "__graft_fri"
+
+  /** A parquet scan DataFrame over `index`'s files whose planning
+    * consults the manifest: identical plan shape to `spark.read.parquet`
+    * (a [[LogicalRelation]] over [[HadoopFsRelation]] — `_metadata`
     * columns, `input_file_name`, whole-stage codegen all behave the
-    * same) but with [[GraftManifestFileIndex]] as the file listing. */
-  def dataFrame(spark: SparkSession, parameters: Map[String, String],
-      schema: StructType, statuses: Seq[FileStatus],
-      prune: Seq[Expression] => (Path => Boolean),
-      bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec]
-        = None,
-      knownRowCount: Long,
-      knownColumnProofs: () => Map[String, graft.lake.ColumnProof] =
-        () => Map.empty,
-      knownFileFacts: () => Seq[graft.lake.FileFacts] = () => Nil,
-      knownFilteredFacts: Expression => Option[Seq[graft.lake.FileFacts]] =
-        _ => None): DataFrame = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    // file sources always read under a nullable schema (DataFrameReader
-    // applies `asNullable` to user schemas; a file CAN hold nulls
-    // regardless of what the caller believes) — without this a
-    // non-nullable long column would silently read nulls as 0
-    val fullSchema = schema.asNullable
-    val index = new GraftManifestFileIndex(cs, parameters, fullSchema,
-      statuses, prune, knownRowCount, knownColumnProofs, knownFileFacts,
-      knownFilteredFacts)
+    * same) but with [[GraftManifestFileIndex]] as the file listing.
+    * The index's schema reads nullable, as DataFrameReader reads user
+    * schemas: a file CAN hold nulls whatever the caller believes, and a
+    * non-nullable long column would silently read them as 0. */
+  def dataFrame(index: GraftManifestFileIndex,
+      bucketSpec: Option[BucketSpec]): DataFrame = {
+    val cs = index.spark.asInstanceOf[classic.SparkSession]
     val partNames = index.partitionSchema.fieldNames.toSet
-    val dataSchema =
-      StructType(fullSchema.fields.filterNot(f => partNames(f.name)))
+    val dataSchema = StructType(
+      index.schema.asNullable.fields.filterNot(f => partNames(f.name)))
     val relation = HadoopFsRelation(index, index.partitionSchema,
-      dataSchema, bucketSpec, new ParquetFileFormat, parameters)(cs)
+      dataSchema, bucketSpec, new ParquetFileFormat, index.options)(cs)
     classic.Dataset.ofRows(cs, LogicalRelation(relation))
   }
 }
